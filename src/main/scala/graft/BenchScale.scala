@@ -1217,9 +1217,7 @@ object BenchScale {
     // section-scoped re-runs may never have built the max corpus; the
     // report must degrade to null, not crash at the finish line (r11)
     def countOrNull(path: String): String =
-      if (graft.streaming.StoreRead.hasParquetData(spark, path))
-        spark.read.parquet(path).count().toString
-      else "null"
+      graft.streaming.BatchStore.read(spark, path).fold("null")(_.count().toString)
     val ladder = factors.sorted
     val sorted = times.keys.toSeq.sorted
     val qNames = {

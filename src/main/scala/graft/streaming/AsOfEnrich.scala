@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** s27: streaming as-of enrichment — the online form of q09, closing the
   * last reference-semantic join that had no streamed twin: the
@@ -53,11 +52,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * carry a tail like any key; their purchases keep NULL click_ts by the
   * operator's own NULL-key contract (q09's discipline).
   *
-  * Replay safety is s24's argument verbatim: a re-run of batch b reads
-  * only tails with batch_id < b (its own previous writes invisible),
-  * recomputes byte-identically, and dynamic overwrite replaces its own
-  * partitions in both sinks.
-  *
   * Batch-parity law (StreamingSpec): when each user's events arrive in
   * nondecreasing ts order across batches, [[enriched]] EQUALS batch q09
   * on the concatenated log row-for-row.
@@ -81,15 +75,8 @@ object AsOfEnrich {
     * Highest-batch_id row below `batchId`; schema-stable empty frame
     * before any write. */
   private[graft] def readTails(spark: SparkSession, tailDir: String,
-      batchId: Long): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, tailDir)) return emptyTails(spark)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-    spark.read.parquet(tailDir)
-      .filter(col("batch_id") < batchId) // replay: never see own tails
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("click_ts"), col("click2_ts"), col("hwm_ts"))
-  }
+      batchId: Long): DataFrame =
+    BatchStore.latest(spark, tailDir, Seq("user_id"), batchId)(emptyTails(spark))
 
   /** One micro-batch of (event_id, user_id, event_type, ts): enrich the
     * batch's purchases as-of the carried click state, advance the tails,
@@ -98,12 +85,10 @@ object AsOfEnrich {
       batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
-    // bound the LWW read: fold committed tail partitions into the base
-    // every TailCompactEvery batches (top-of-batch, so a replay of THIS
-    // batch reads the base = state through batchId − 1, unchanged);
+    // bound the LWW read: fold committed tail partitions into the base;
     // enrichDir is append-once facts and never folds
-    if (batchId > 0 && batchId % StoreRead.TailCompactEvery == 0)
-      StoreRead.compactLww(spark, tailDir, Seq("user_id"), batchId)
+    if (BatchStore.foldDue(batchId))
+      BatchStore.fold(spark, tailDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
     // only the batch's users can match or advance; everyone else's tail
     // stays live in an older partition untouched. No pin despite two
@@ -147,12 +132,7 @@ object AsOfEnrich {
         "user_id", "ts", "ts", Seq("ts" -> "click_ts"), inclusive = false)
       .select(col("event_id"), col("user_id"),
         col("ts").as("purchase_ts"), col("click_ts"))
-    enrichedBatch
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(enrichDir)
+    BatchStore.write(enrichedBatch, enrichDir, batchId)
     // new tail = EVERY batch user: the two latest distinct click ts now
     // known + the advanced order mark (the gate proved this batch's max
     // ts is each touched user's new high water). The top-2 distinct of
@@ -173,7 +153,7 @@ object AsOfEnrich {
         max(when(col("rn") === 2, col("ts"))).as("batch_click2"))
     val cands = array(col("batch_click"), col("batch_click2"),
       col("old_click"), col("old_click2"))
-    hwNew
+    val newTails = hwNew
       .join(top2, col("hu") <=> col("cu"), "left")
       .join(tails.select(col("user_id"), col("click_ts").as("old_click"),
           col("click2_ts").as("old_click2")),
@@ -183,27 +163,18 @@ object AsOfEnrich {
         col("new_click").as("click_ts"),
         array_max(filter(cands, x => x < col("new_click"))).as("click2_ts"),
         col("hwm_ts"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tailDir)
+    BatchStore.write(newTails, tailDir, batchId)
   }
 
   /** The q09-shaped enrichment over every purchase ingested so far —
     * row-for-row equal to batch q09 on the concatenated log under
     * in-order arrival. Schema-stable empty frame before any write. */
-  def enriched(spark: SparkSession, enrichDir: String): DataFrame = {
-    val rows =
-      if (!StoreRead.hasParquetData(spark, enrichDir))
-        spark.range(0).select(col("id").as("event_id"), col("id").as("user_id"),
-          lit(null).cast("timestamp").as("purchase_ts"),
-          lit(null).cast("timestamp").as("click_ts"))
-      else
-        spark.read.parquet(enrichDir)
-          .select(col("event_id"), col("user_id"), col("purchase_ts"), col("click_ts"))
-    rows.orderBy(col("event_id"))
-  }
+  def enriched(spark: SparkSession, enrichDir: String): DataFrame =
+    BatchStore.readOr(spark, enrichDir)(spark.range(0).select(col("id").as("event_id"),
+        col("id").as("user_id"), lit(null).cast("timestamp").as("purchase_ts"),
+        lit(null).cast("timestamp").as("click_ts")))
+      .select(col("event_id"), col("user_id"), col("purchase_ts"), col("click_ts"))
+      .orderBy(col("event_id"))
 
   /** The live click state a dashboard polls: latest click per user. */
   def clickState(spark: SparkSession, tailDir: String): DataFrame =
@@ -211,16 +182,4 @@ object AsOfEnrich {
       .filter(col("click_ts").isNotNull)
       .select(col("user_id"), col("click_ts"))
       .orderBy(col("user_id"))
-
-  /** Wire a streaming (event_id, user_id, event_type, ts) source into
-    * the enrichment loop. */
-  def start(events: DataFrame, tailDir: String, enrichDir: String,
-      checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, tailDir, enrichDir, batchId)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Stats
 
@@ -19,9 +18,7 @@ import graft.queries.Stats
   * the (ts, event_id, value) struct (the (ts, event_id) total order is
   * unique, so merges can never tie on the value), high/low are min/max,
   * n and the decimal volume are sums. Parity therefore holds under ANY
-  * batch split with no arrival-order assumption, and replay of batch b
-  * recomputes byte-identical partials and dynamic-overwrites its own
-  * batch_id partition (the standard replay no-op argument).
+  * batch split with no arrival-order assumption.
   *
   * Scale posture: per batch ONE map-side-combined aggregate of the batch
   * only; the store grows one calendar-bounded partition per batch
@@ -40,31 +37,14 @@ object BarStats {
     * → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    Stats.barPartials(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(Stats.barPartials(batch), storeDir, batchId)
   }
 
   /** The q159-shaped bar report over everything ingested so far —
     * row-for-row equal to batch q159 on the concatenated log under ANY
     * batch split. */
   def bars(spark: SparkSession, storeDir: String): DataFrame = {
-    val partials =
-      if (!StoreRead.hasParquetData(spark, storeDir)) emptyPartials(spark)
-      else spark.read.parquet(storeDir).drop("batch_id")
+    val partials = BatchStore.readOr(spark, storeDir)(emptyPartials(spark)).drop("batch_id")
     Stats.finishBars(Stats.mergeBars(partials))
   }
-
-  /** Wire a streaming (event_id, ts, event_type, value) source in. */
-  def start(events: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

@@ -1,0 +1,172 @@
+package graft.streaming
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+
+/** The on-disk layout every streaming store shares, held in one place.
+  *
+  * A store is a parquet directory partitioned by `batch_id`. Micro-batch
+  * b writes its rows to partition `batch_id=b`; a fold writes the base
+  * partition `batch_id=-1`, which sorts below every future batch. Three
+  * properties follow from the layout, and every store relies on them:
+  *
+  *  - Replay is a no-op. [[write]] uses dynamic partition overwrite, so
+  *    an at-least-once re-run of batch b replaces its own partition
+  *    instead of appending beside the first attempt. A batch that reads
+  *    prior state reads only `batch_id < b` ([[before]], [[latest]]);
+  *    partitions below b are immutable once b starts (Structured
+  *    Streaming commits b−1 first), so a re-run never sees its own
+  *    writes and recomputes the same rows.
+  *  - The fold writes the base before it deletes. [[fold]] lands the new
+  *    base, then deletes the folded partitions. At every point between,
+  *    each read resolves to the rows the base holds (the winning
+  *    partition still exists, or the base is now its only copy), and a
+  *    crashed fold re-runs to the same base. Additive stores, where a
+  *    duplicate row would double-count, instead stamp the base with a
+  *    `covered_upto` watermark: [[live]] hides covered partitions the
+  *    moment the base commits, and [[sweep]] is pure cleanup.
+  *  - An empty store reads as a schema-stable empty frame. A directory
+  *    that was never written, or one holding only `_SUCCESS` (a dynamic
+  *    overwrite whose rows were all filtered out), has no parquet footer
+  *    to read; [[readOr]] and [[latest]] return the caller's empty frame
+  *    instead of throwing. */
+object BatchStore {
+
+  /** Batches between two automatic folds of a store. */
+  val FoldEvery = 8L
+
+  /** Whether batch `batchId` folds its store first: every [[FoldEvery]]
+    * batches, at the top of the batch, so a replay of it reads the base
+    * (state through batchId − 1, as the unfolded read gave it). */
+  def foldDue(batchId: Long): Boolean = batchId > 0 && batchId % FoldEvery == 0
+
+  /** Write `df` as partition `batch_id=batchId` of `dir`, replacing that
+    * partition and no other. */
+  def write(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(dir)
+
+  /** Every stored row with its batch_id; None while the store holds no
+    * parquet data. */
+  def read(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (hasParquetData(spark, dir)) Some(spark.read.parquet(dir)) else None
+
+  /** [[read]], or `empty` while the store holds no parquet data. */
+  def readOr(spark: SparkSession, dir: String)(empty: => DataFrame): DataFrame =
+    read(spark, dir).getOrElse(empty)
+
+  /** The rows of batches before `batchId` — what batch `batchId` may
+    * read of prior state. */
+  def before(spark: SparkSession, dir: String, batchId: Long)(empty: => DataFrame): DataFrame =
+    read(spark, dir).fold(empty)(_.filter(col("batch_id") < batchId))
+
+  /** Each key's row from its highest batch before `beforeBatch`, without
+    * batch_id: the read of a keyed last-writer-wins store. */
+  def latest(spark: SparkSession, dir: String, keys: Seq[String], beforeBatch: Long)(
+      empty: => DataFrame): DataFrame =
+    read(spark, dir).fold(empty)(all => lastWins(keys)(all.filter(col("batch_id") < beforeBatch)))
+
+  /** Keep each key's row with the highest batch_id and drop batch_id.
+    * NULL keys form one group. */
+  def lastWins(keys: Seq[String])(rows: DataFrame): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("batch_id").desc)
+    rows.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .drop("rn", "batch_id")
+  }
+
+  /** Fold every batch partition below `upToBatch`, plus the previous
+    * base, into one new base partition, then delete the folded batch
+    * partitions. `resolve` receives those rows (batch_id included) and
+    * returns the rows the base keeps, without batch_id. A no-op when no
+    * batch partition lies below `upToBatch`. */
+  def fold(spark: SparkSession, dir: String, upToBatch: Long)(
+      resolve: DataFrame => DataFrame): Unit =
+    if (partitionsBelow(spark, dir, upToBatch).nonEmpty) {
+      val base = resolve(spark.read.parquet(dir)
+          .filter(col("batch_id").cast("long") < upToBatch)) // incl. the previous base (−1)
+        .localCheckpoint(true) // pin: the overwrite below rewrites the source path
+      write(base, dir, -1L)
+      sweep(spark, dir, upToBatch)
+    }
+
+  /** Delete the batch partitions 0 ≤ batch_id < `below`. */
+  def sweep(spark: SparkSession, dir: String, below: Long): Unit = {
+    val fs = fileSystem(spark, new Path(dir))
+    partitionsBelow(spark, dir, below).foreach(p => fs.delete(p, true))
+  }
+
+  /** An additive store's coverage watermark: the base partition's
+    * covered_upto, 0 when no base exists. One row, so [[live]] can
+    * broadcast it without a driver round-trip. Readers, fold guards and
+    * sweeps must all use this one aggregate: if they disagreed, a read
+    * would double-count or a sweep would over-delete. */
+  private def coveredUptoFrame(all: DataFrame): DataFrame =
+    all.filter(col("batch_id") === -1L)
+      .agg(coalesce(max(col("covered_upto")), lit(0L)).as("_upto"))
+
+  /** [[coveredUptoFrame]] as a driver value. */
+  def coveredUpto(all: DataFrame): Long =
+    coveredUptoFrame(all).collect()(0).getLong(0)
+
+  /** The rows of an additive store a reader may count: the base plus the
+    * batch partitions it does not cover. */
+  def live(all: DataFrame): DataFrame =
+    all.crossJoin(broadcast(coveredUptoFrame(all)))
+      .filter(col("batch_id") === -1L || col("batch_id") >= col("_upto"))
+      .drop("_upto")
+
+  /** Delete the batch partitions an additive store's base covers. */
+  def sweepCovered(spark: SparkSession, dir: String): Unit =
+    read(spark, dir).foreach(all => sweep(spark, dir, coveredUpto(all)))
+
+  /** Run `processBatch(batch, batchId)` on every micro-batch of `source`,
+    * checkpointed at `checkpointDir`. */
+  def start(source: DataFrame, checkpointDir: String)(
+      processBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    writer(source)(processBatch)
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .start()
+
+  /** The unstarted form of [[start]], for callers that set their own
+    * checkpoint and trigger. */
+  def writer(source: DataFrame)(processBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    source.writeStream.foreachBatch(processBatch)
+
+  private def fileSystem(spark: SparkSession, path: Path): FileSystem =
+    FileSystem.get(path.toUri, spark.sparkContext.hadoopConfiguration)
+
+  /** True iff `dir` exists and holds at least one parquet data file,
+    * searching partition directories recursively. Metadata files
+    * (`_SUCCESS`, `.*.crc`, …) do not count. */
+  private def hasParquetData(spark: SparkSession, dir: String): Boolean = {
+    val path = new Path(dir)
+    val fs = fileSystem(spark, path)
+    if (!fs.exists(path)) return false
+    val it = fs.listFiles(path, true)
+    while (it.hasNext) {
+      val n = it.next().getPath.getName
+      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
+        return true
+    }
+    false
+  }
+
+  /** The partition directories `batch_id=b` of `dir` with 0 ≤ b < `below`. */
+  private def partitionsBelow(spark: SparkSession, dir: String, below: Long): Seq[Path] = {
+    val path = new Path(dir)
+    val fs = fileSystem(spark, path)
+    if (!fs.exists(path)) return Seq.empty
+    fs.listStatus(path).toSeq.map(_.getPath).filter { p =>
+      p.getName.startsWith("batch_id=") &&
+        p.getName.stripPrefix("batch_id=").toLongOption.exists(b => b >= 0 && b < below)
+    }
+  }
+}

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Stats
 
@@ -26,12 +25,9 @@ import graft.queries.Stats
   * q184's scaladoc documents (CI ~24 % narrower at planted n = 20k,
   * StatsSpec's measured A/B) is exactly what buys streamability.
   *
-  * Replay safety is the additive-store argument (s16/s26/s29): a re-run
-  * of batch b recomputes byte-identical bucket partials and
-  * dynamic-overwrites its own batch_id partition — the merged read
-  * cannot tell. Compaction, if ever needed, is s21's watermark fold
-  * (partials are pointwise-summable); the store is already bounded at
-  * ≤ types × 10⁴ rows per batch regardless of batch volume.
+  * Compaction, if ever needed, is s21's watermark fold (partials are
+  * pointwise-summable); the store is already bounded at ≤ types × 10⁴
+  * rows per batch regardless of batch volume.
   */
 object BootstrapMonitor {
 
@@ -43,12 +39,7 @@ object BootstrapMonitor {
     * h60-bucket) count/cent-sum partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    Stats.bucketsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(Stats.bucketsOf(batch), storeDir, batchId)
   }
 
   /** The q184-shaped bootstrap CI over everything ingested so far —
@@ -56,22 +47,9 @@ object BootstrapMonitor {
     * batch split (bucket merge is associative and commutative; the
     * kernel sees only the merged panel). */
   def ci(spark: SparkSession, storeDir: String): DataFrame = {
-    val buckets =
-      if (!StoreRead.hasParquetData(spark, storeDir)) emptyBuckets(spark)
-      else spark.read.parquet(storeDir)
-        .groupBy(col("event_type"), col("h"))
-        .agg(sum(col("cnt")).as("cnt"), sum(col("sum_c")).as("sum_c"))
+    val buckets = BatchStore.readOr(spark, storeDir)(emptyBuckets(spark))
+      .groupBy(col("event_type"), col("h"))
+      .agg(sum(col("cnt")).as("cnt"), sum(col("sum_c")).as("sum_c"))
     Stats.ciOfBuckets(buckets)
   }
-
-  /** Wire a streaming (event_type, event_id, value) source into the
-    * loop. */
-  def start(events: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Dsl.{h60, ratio4}
 
@@ -21,12 +20,9 @@ import graft.ops.Dsl.{h60, ratio4}
   *
   * ORDER-GATED (the s23/s24 family): batch b's decisions read the
   * consumed totals of batches < b, so recovery must replay batches in
-  * order — exactly what a checkpointed foreachBatch provides. Replay
-  * safety: re-running batch b with the same prior store recomputes a
-  * byte-identical decision (hash order is deterministic, the prior sum
-  * is read fresh) and dynamic-overwrites its OWN batch_id partitions in
-  * both the store and the accept log — the s24/s26 crash-window
-  * discipline verbatim.
+  * order — exactly what a checkpointed foreachBatch provides. A re-run
+  * of batch b recomputes a byte-identical decision: hash order is
+  * deterministic, and the prior sum is read fresh.
   *
   * Single-batch parity: with budgets = q80's `mixBudgets` panel over the
   * same corpus, one batch admits EXACTLY q145's set (the law pins this
@@ -50,15 +46,12 @@ object BudgetAdmission {
       storeDir: String, acceptDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val prior =
-      if (StoreRead.hasParquetData(spark, storeDir))
-        spark.read.parquet(storeDir)
-          .filter(col("batch_id") < batchId)
-          .groupBy(col("source"))
-          .agg(sum(col("batch_tokens")).as("consumed"))
-      else
-        spark.range(0).select(col("id").cast("string").as("source"),
-          col("id").as("consumed"))
+    val prior = BatchStore.read(spark, storeDir)
+      .map(_.filter(col("batch_id") < batchId)
+        .groupBy(col("source"))
+        .agg(sum(col("batch_tokens")).as("consumed")))
+      .getOrElse(spark.range(0).select(col("id").cast("string").as("source"),
+        col("id").as("consumed")))
     val w = Window.partitionBy(col("source"))
       .orderBy(col("hk"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -74,43 +67,25 @@ object BudgetAdmission {
       // feeds BOTH writes below (accept log + store partial) — pin the
       // decision once so the two can't diverge (r9 pinning discipline)
       .localCheckpoint(true)
-    admitted
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(acceptDir)
-    admitted
-      .groupBy(col("source"))
-      .agg(sum(col("n_tok")).as("batch_tokens"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(admitted, acceptDir, batchId)
+    BatchStore.write(admitted.groupBy(col("source")).agg(sum(col("n_tok")).as("batch_tokens")),
+      storeDir, batchId)
   }
 
   /** Everything admitted so far (the training-set manifest). */
   def admittedDocs(spark: SparkSession, acceptDir: String): DataFrame =
-    if (StoreRead.hasParquetData(spark, acceptDir))
-      spark.read.parquet(acceptDir)
-        .select(col("source"), col("doc_id"), col("n_tok"))
-    else
-      spark.range(0).select(col("id").cast("string").as("source"),
-        col("id").as("doc_id"), col("id").as("n_tok"))
+    BatchStore.readOr(spark, acceptDir)(spark.range(0).select(
+        col("id").cast("string").as("source"), col("id").as("doc_id"), col("id").as("n_tok")))
+      .select(col("source"), col("doc_id"), col("n_tok"))
 
   /** The q145-shaped audit panel: per source, consumed tokens vs budget
     * and the fill rate (NULL on a zero budget) — read from the store
     * partials alone, never re-scanning the accept log. */
   def audit(spark: SparkSession, storeDir: String, budgets: DataFrame): DataFrame = {
-    val consumed =
-      if (StoreRead.hasParquetData(spark, storeDir))
-        spark.read.parquet(storeDir)
-          .groupBy(col("source"))
-          .agg(sum(col("batch_tokens")).as("consumed_tokens"))
-      else
-        spark.range(0).select(col("id").cast("string").as("source"),
-          col("id").as("consumed_tokens"))
+    val consumed = BatchStore.readOr(spark, storeDir)(spark.range(0).select(
+        col("id").cast("string").as("source"), col("id").as("batch_tokens")))
+      .groupBy(col("source"))
+      .agg(sum(col("batch_tokens")).as("consumed_tokens"))
     budgets.select(col("source"), col("planned_tokens"))
       .join(consumed, Seq("source"), "left")
       .select(col("source"), col("planned_tokens"),
@@ -120,15 +95,4 @@ object BudgetAdmission {
           .otherwise(lit(null).cast("double")).as("fill4"))
       .orderBy(col("source"))
   }
-
-  /** Wire a streaming (source, doc_id, n_tok) source into the loop. */
-  def start(docs: DataFrame, budgets: DataFrame, storeDir: String,
-      acceptDir: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, budgets, storeDir, acceptDir, batchId)
-      }
-      .start()
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.ChangeData
 
@@ -18,20 +16,19 @@ import graft.queries.ChangeData
   * diff cannot drift on the change predicate or the row shape.
   *
   * Store layout (the s15/s17 discipline): `stateDir` holds the LWW
-  * winner per user in batch_id partitions (read = highest-batch_id row
-  * per key; folded by [[StoreRead.compactLww]]); `cdcDir` is the feed —
-  * append-only change rows in the emitting batch's own partition.
+  * winner per user (read = highest-batch_id row per key); `cdcDir` is
+  * the feed — append-only change rows in the emitting batch's own
+  * partition.
   *
   * NOT order-gated (the s16/s21/s26 additive family's freedom, for the
   * state half): LWW by (ts, event_id) is a commutative max, so the
-  * stored state converges to batch q27 under ANY arrival order, and a
-  * replay of batch b reads only batch_id < b and dynamic-overwrites its
-  * own partitions byte-identically. The feed rows themselves DO depend
-  * on arrival grouping — a CDF is by definition "what changed relative
-  * to what I had" — but composable exactly: [[netted]] collapses any
-  * contiguous run of batches to first-pre-image → last-post-image, and
-  * the StreamingSpec law pins that the netted feed over the post-cutoff
-  * batches EQUALS batch q152's diff row for row.
+  * stored state converges to batch q27 under ANY arrival order. The
+  * feed rows themselves DO depend on arrival grouping — a CDF is by
+  * definition "what changed relative to what I had" — but composable
+  * exactly: [[netted]] collapses any contiguous run of batches to
+  * first-pre-image → last-post-image, and the StreamingSpec law pins
+  * that the netted feed over the post-cutoff batches EQUALS batch q152's
+  * diff row for row.
   *
   * Per batch the work is one map-side-combined aggregate of the batch
   * (its per-key winner), one LWW read of the touched keys' stored rows
@@ -49,16 +46,8 @@ object ChangeFeed {
   /** Current LWW winner per user: highest-batch_id state row below
     * `batchId`. Schema-stable empty frame before any write. */
   private[graft] def readState(spark: SparkSession, stateDir: String,
-      batchId: Long): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, stateDir)) return emptyState(spark)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-    spark.read.parquet(stateDir)
-      .filter(col("batch_id") < batchId) // replay: never see own writes
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-        col("value"))
-  }
+      batchId: Long): DataFrame =
+    BatchStore.latest(spark, stateDir, Seq("user_id"), batchId)(emptyState(spark))
 
   /** One micro-batch of (user_id, event_id, event_type, ts, value):
     * emit the change rows and advance the stored winners. */
@@ -66,8 +55,8 @@ object ChangeFeed {
       batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
-    if (batchId > 0 && batchId % StoreRead.TailCompactEvery == 0)
-      StoreRead.compactLww(spark, stateDir, Seq("user_id"), batchId)
+    if (BatchStore.foldDue(batchId))
+      BatchStore.fold(spark, stateDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val img = struct(col("ts"), col("event_id"), col("event_type"), col("value"))
     // the batch's own per-key winner: ONE map-side-combined aggregate
     val batchWin = batch
@@ -90,23 +79,14 @@ object ChangeFeed {
       // feeds the cdc write and the state write (r9 pinning discipline:
       // the dynamic overwrite below must not re-read a lazy plan)
       .localCheckpoint(true)
-    ChangeData.cdcRows(pairs)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(cdcDir)
+    BatchStore.write(ChangeData.cdcRows(pairs), cdcDir, batchId)
     // advance ONLY the moved keys — an unchanged key's winner stays live
     // in its older partition
-    pairs
+    val moved = pairs
       .filter(col("old").isNull || col("old.event_id") =!= col("nw.event_id"))
       .select(col("user_id"), col("nw.ts").as("ts"), col("nw.event_id").as("event_id"),
         col("nw.event_type").as("event_type"), col("nw.value").as("value"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(stateDir)
+    BatchStore.write(moved, stateDir, batchId)
   }
 
   /** The q27-shaped current state over everything ingested so far. */
@@ -117,20 +97,18 @@ object ChangeFeed {
 
   /** The raw feed: every change row ever emitted, with its batch_id.
     * Schema-stable empty frame before the first write. */
-  def feed(spark: SparkSession, cdcDir: String): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, cdcDir))
-      return spark.range(0).select(col("id").as("user_id"), lit("").as("change"),
+  def feed(spark: SparkSession, cdcDir: String): DataFrame =
+    BatchStore.readOr(spark, cdcDir)(spark.range(0).select(col("id").as("user_id"),
+        lit("").as("change"),
         col("id").as("old_event_id"), lit("").as("old_event_type"),
         lit(0.0).as("old_value"), lit(null).cast("timestamp").as("old_ts"),
         col("id").as("new_event_id"), lit("").as("new_event_type"),
         lit(0.0).as("new_value"), lit(null).cast("timestamp").as("new_ts"),
-        col("id").as("batch_id"))
-    spark.read.parquet(cdcDir)
+        col("id").as("batch_id")))
       .select(col("user_id"), col("change"),
         col("old_event_id"), col("old_event_type"), col("old_value"), col("old_ts"),
         col("new_event_id"), col("new_event_type"), col("new_value"), col("new_ts"),
         col("batch_id").cast("long").as("batch_id"))
-  }
 
   /** Net a contiguous run of feed batches to one change per key — the
     * compaction every CDF consumer applies before merging: pre-image of
@@ -157,16 +135,4 @@ object ChangeFeed {
         col("last.new_value").as("new_value"),
         col("last.new_ts").as("new_ts"))
       .orderBy(col("user_id"))
-
-  /** Wire a streaming (user_id, event_id, event_type, ts, value) source
-    * into the feed loop. */
-  def start(events: DataFrame, stateDir: String, cdcDir: String,
-      checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, stateDir, cdcDir, batchId)
-      }
-      .start()
 }

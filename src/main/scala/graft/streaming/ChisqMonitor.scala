@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Stats
 
@@ -16,9 +15,7 @@ import graft.queries.Stats
   * exactly once.
   *
   * Additive family: MAX partials merge under ANY batch split (a user's
-  * conversion may land in any batch — the merged flag is the same);
-  * replay of batch b recomputes byte-identical partials and
-  * dynamic-overwrites its own batch_id partition.
+  * conversion may land in any batch — the merged flag is the same).
   *
   * Scale posture: per batch ONE map-side-combined per-user aggregate of
   * the batch only; the read merges O(users) flag partials into the
@@ -34,33 +31,16 @@ object ChisqMonitor {
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    Stats.userConv(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(Stats.userConv(batch), storeDir, batchId)
   }
 
   /** The q165-shaped experiment readout over everything ingested so far
     * — row-for-row equal to batch q165 on the concatenated log under ANY
     * batch split. */
   def readout(spark: SparkSession, storeDir: String): DataFrame = {
-    val conv =
-      if (!StoreRead.hasParquetData(spark, storeDir)) emptyConv(spark)
-      else spark.read.parquet(storeDir)
-        .groupBy(col("user_id"))
-        .agg(max(col("conv")).as("conv"))
+    val conv = BatchStore.readOr(spark, storeDir)(emptyConv(spark))
+      .groupBy(col("user_id"))
+      .agg(max(col("conv")).as("conv"))
     Stats.chisqOfConv(conv)
   }
-
-  /** Wire a streaming (user_id, event_type) source into the loop. */
-  def start(events: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

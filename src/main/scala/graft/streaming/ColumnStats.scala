@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.ZOrder
 
@@ -15,8 +14,7 @@ import graft.queries.ZOrder
   * q180 runs, whose own histogram aggregate makes merged partials
   * indistinguishable from raw rows.
   *
-  * Additive family: parity under ANY batch split, replay
-  * dynamic-overwrites its own batch_id partition. The boundary STRUCTURE
+  * Additive family: parity under ANY batch split. The boundary STRUCTURE
   * is not mergeable (one hot batch moves every quantile — the s47 rank
   * argument for order statistics), so the store holds mergeable counts
   * and the two-phase-prefix boundaries re-derive at read.
@@ -34,12 +32,7 @@ object ColumnStats {
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(batch.groupBy(col("v")).agg(count(lit(1)).as("cnt")), storeDir, batchId)
   }
 
   /** The q180-shaped equi-depth histogram over everything ingested so
@@ -47,20 +40,8 @@ object ColumnStats {
     * under ANY batch split (the merged counts enter through the kernel's
     * own (v, cnt) histogram seam). */
   def stats(spark: SparkSession, storeDir: String): DataFrame = {
-    val merged =
-      if (!StoreRead.hasParquetData(spark, storeDir)) emptyCounts(spark)
-      else spark.read.parquet(storeDir)
-        .groupBy(col("v")).agg(sum(col("cnt")).as("cnt"))
+    val merged = BatchStore.readOr(spark, storeDir)(emptyCounts(spark))
+      .groupBy(col("v")).agg(sum(col("cnt")).as("cnt"))
     ZOrder.equiDepthStatsOfCounts(merged)
   }
-
-  /** Wire a streaming single-column source into the loop. */
-  def start(rows: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

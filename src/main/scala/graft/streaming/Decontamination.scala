@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Text
 
@@ -28,10 +27,8 @@ import graft.queries.Text
   * results are complete — no cross-batch state at all: the operator is
   * STATELESS, the cheapest kind of streaming operator to run at scale.
   *
-  * REPLAY SAFETY: the verdict is a pure function of (batch contents,
-  * static bench index), and the sink is batch_id-partitioned with
-  * dynamic-partition-overwrite (the s14 discipline), so an at-least-once
-  * re-run rewrites its own partition with identical rows.
+  * The verdict is a pure function of (batch contents, static bench
+  * index), so a replay rewrites its own partition with identical rows.
   *
   * StreamingSpec pins: streamed audit over N batches == batch q67 (and
   * therefore q101, which shares q67's oracle) on the same corpus;
@@ -66,37 +63,15 @@ object Decontamination {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= Text.ContamMinShared)
 
-  /** foreachBatch body: audit + replay-safe partitioned write. */
+  /** foreachBatch body: audit → the batch's own partition. */
   private[graft] def processBatch(batch: DataFrame, bench: BenchIndex,
       auditDir: String, batchId: Long): Unit =
-    auditBatch(batch, bench)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(auditDir)
+    BatchStore.write(auditBatch(batch, bench), auditDir, batchId)
 
-  /** The accumulated audit (all batches). Schema-stable empty frame
-    * when no batch has written yet OR every batch so far was clean (an
-    * all-clean batch's dynamic overwrite leaves only `_SUCCESS`, no
-    * footers — advisor r8; see [[StoreRead.hasParquetData]]). */
+  /** The accumulated audit (all batches); empty while every batch so far
+    * was clean. */
   def readAudit(spark: SparkSession, auditDir: String): DataFrame =
-    if (!StoreRead.hasParquetData(spark, auditDir))
-      spark.range(0).select(col("id").as("train_doc"),
-        col("id").as("bench_doc"), col("id").as("n_shared"))
-    else
-      spark.read.parquet(auditDir)
-        .select(col("train_doc"), col("bench_doc"), col("n_shared"))
-
-  /** Wire a streaming (doc_id, text, …) train-doc source into the audit
-    * loop against a fixed benchmark index. */
-  def start(trainDocs: DataFrame, bench: BenchIndex,
-      auditDir: String, checkpointDir: String): StreamingQuery =
-    trainDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, bench, auditDir, batchId)
-      }
-      .start()
+    BatchStore.readOr(spark, auditDir)(spark.range(0).select(col("id").as("train_doc"),
+        col("id").as("bench_doc"), col("id").as("n_shared")))
+      .select(col("train_doc"), col("bench_doc"), col("n_shared"))
 }

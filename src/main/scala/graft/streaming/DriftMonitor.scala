@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Stats
 
@@ -22,13 +21,10 @@ import graft.queries.Stats
   * the live feed and reads the matrix between batches — "is yesterday's
   * value distribution drifting from today's?" without an O(log) rescan.
   *
-  * Replay safety is the additive-store argument (s16/s21/s26): a re-run
-  * of batch b recomputes byte-identical counts and dynamic-overwrites
-  * its own batch_id partition — the summed read cannot tell. The store
-  * grows one quantization-bounded partition per batch (distinct
-  * (type, value) pairs, NOT batch rows — the 2-decimal value grid bounds
-  * it regardless of volume); folding old partitions into a base is
-  * s21's watermark compaction verbatim (counts are pointwise-summable).
+  * The store grows one quantization-bounded partition per batch
+  * (distinct (type, value) pairs, NOT batch rows — the 2-decimal value
+  * grid bounds it regardless of volume); folding old partitions into a
+  * base is s21's watermark compaction (counts are pointwise-summable).
   *
   * Scale posture: per batch ONE (type, value)-keyed map-side-combined
   * aggregate of the batch only; the drift read is one shuffle over the
@@ -94,33 +90,25 @@ object DriftMonitor {
     * the drift/IQR reads simply merge across it. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch.select(col("event_type"),
+    val partials = batch.select(col("event_type"),
         to_date(date_trunc("day", col("ts"))).as("d"), col("value"))
       .groupBy(col("event_type"), col("d"), col("value"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("covered_upto", lit(null).cast("long"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(partials, storeDir, batchId)
   }
 
-  /** Store rows a reader may count: the base (batch_id = −1) plus batch
-    * partitions the base does not already cover (s16/s21's watermark
-    * read — folded-but-unswept partitions are invisible the instant the
-    * new base commits). */
-  private def liveRows(all: DataFrame): DataFrame = {
-    val upto = StoreRead.coveredUptoFrame(all)
-    all.crossJoin(broadcast(upto))
-      .filter(col("batch_id") === -1L || col("batch_id") >= col("_upto"))
-      .drop("_upto")
-  }
-
+  /** The store's countable rows: the base plus the batch partitions it
+    * does not cover ([[BatchStore.live]]). */
   private def storeCounts(spark: SparkSession, storeDir: String): DataFrame =
-    if (!StoreRead.hasParquetData(spark, storeDir)) emptyCounts(spark)
-    else liveRows(spark.read.parquet(storeDir))
+    BatchStore.read(spark, storeDir).map(BatchStore.live).getOrElse(emptyCounts(spark))
       .select(col("event_type"), col("d"), col("value"), col("cnt"))
+
+  /** The merged (event_type, value) histogram the d-merging reads share. */
+  private def valueCounts(spark: SparkSession, storeDir: String): DataFrame =
+    storeCounts(spark, storeDir)
+      .groupBy(col("event_type"), col("value"))
+      .agg(sum(col("cnt")).as("cnt"))
 
   /** Phase 1 of compaction: fold the base and every batch partition
     * below `upToBatch` into a new base with covered_upto = upToBatch,
@@ -129,58 +117,40 @@ object DriftMonitor {
     * Counts are exact integers, so the fold commutes with every
     * d-merging read; only the bands read narrows (to the horizon). */
   def foldBase(spark: SparkSession, storeDir: String, upToBatch: Long,
-      horizonDays: Int = BandHorizonDays): Unit = {
-    if (!StoreRead.hasParquetData(spark, storeDir)) return
-    val all = spark.read.parquet(storeDir)
-    // a regressed watermark would re-expose covered-but-unswept batch
-    // partitions to liveRows (double count on every d-merging read) —
-    // fail loudly instead (r16 advisor; read the same way sweepFolded
-    // reads it)
-    val current = StoreRead.coveredUpto(all)
-    require(upToBatch >= current,
-      s"s29 foldBase: upToBatch $upToBatch < current covered_upto $current — " +
-        "a regressed watermark re-exposes folded batch partitions")
-    val live = liveRows(all)
-    val folded = live
-      .filter(col("batch_id") === -1L || col("batch_id") < upToBatch)
-      .select(col("event_type"), col("d"), col("value"), col("cnt"))
-    // horizon anchor = the newest day across ALL live rows (the class
-    // doc's "store's newest day"), not just the folded frame's — a
-    // partial fold with newer unfolded batches must not shift the band
-    // horizon backwards (r16 advisor doc/code alignment)
-    val cutoff = Option(
-      live.agg(date_sub(max(col("d")), horizonDays)).collect()(0).getDate(0))
-    val dropped = cutoff.fold(folded) { c =>
-      folded.withColumn("d",
-        when(col("d") >= lit(c), col("d")).otherwise(lit(null).cast("date")))
+      horizonDays: Int = BandHorizonDays): Unit =
+    BatchStore.read(spark, storeDir).foreach { all =>
+      // a regressed watermark would re-expose covered-but-unswept batch
+      // partitions to the live read (double count on every d-merging
+      // read) — fail loudly instead
+      val current = BatchStore.coveredUpto(all)
+      require(upToBatch >= current,
+        s"s29 foldBase: upToBatch $upToBatch < current covered_upto $current — " +
+          "a regressed watermark re-exposes folded batch partitions")
+      val live = BatchStore.live(all)
+      val folded = live
+        .filter(col("batch_id") === -1L || col("batch_id") < upToBatch)
+        .select(col("event_type"), col("d"), col("value"), col("cnt"))
+      // horizon anchor = the newest day across ALL live rows (the class
+      // doc's "store's newest day"), not just the folded frame's — a
+      // partial fold with newer unfolded batches must not shift the band
+      // horizon backwards
+      val cutoff = Option(
+        live.agg(date_sub(max(col("d")), horizonDays)).collect()(0).getDate(0))
+      val dropped = cutoff.fold(folded) { c =>
+        folded.withColumn("d",
+          when(col("d") >= lit(c), col("d")).otherwise(lit(null).cast("date")))
+      }
+      val newBase = dropped
+        .groupBy(col("event_type"), col("d"), col("value"))
+        .agg(sum(col("cnt")).as("cnt"))
+        .localCheckpoint(true) // pin: the overwrite below rewrites the source path
+      BatchStore.write(newBase.withColumn("covered_upto", lit(upToBatch)), storeDir, -1L)
     }
-    val newBase = dropped
-      .groupBy(col("event_type"), col("d"), col("value"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .localCheckpoint(true) // pin: the overwrite below rewrites the source path
-    newBase
-      .withColumn("covered_upto", lit(upToBatch))
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-  }
 
   /** Phase 2: garbage-collect covered batch partitions (pure cleanup —
     * can crash, re-run, or never run without moving any read). */
-  def sweepFolded(spark: SparkSession, storeDir: String): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val dir = new Path(storeDir)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val covered = StoreRead.coveredUpto(spark.read.parquet(storeDir))
-    fs.listStatus(dir).map(_.getPath).filter { p =>
-      p.getName.startsWith("batch_id=") &&
-        scala.util.Try(p.getName.stripPrefix("batch_id=").toLong)
-          .toOption.exists(v => v >= 0 && v < covered)
-    }.foreach(p => fs.delete(p, true))
-  }
+  def sweepFolded(spark: SparkSession, storeDir: String): Unit =
+    BatchStore.sweepCovered(spark, storeDir)
 
   /** The maintainer fold: see the class doc for why this runs on the
     * band-retention schedule rather than processBatch's cadence. */
@@ -194,9 +164,7 @@ object DriftMonitor {
     * row-for-row equal to batch q135 on the concatenated log under ANY
     * batch split (the count merge is associative and commutative). */
   def drift(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.ksOfCounts(storeCounts(spark, storeDir)
-      .groupBy(col("event_type"), col("value"))
-      .agg(sum(col("cnt")).as("cnt")))
+    Stats.ksOfCounts(valueCounts(spark, storeDir))
 
   /** s45: the SECOND read of this store — q168's Tukey box-plot profile
     * and 1.5·IQR outlier counts over the same merged value histogram,
@@ -206,9 +174,7 @@ object DriftMonitor {
     * equal to batch q168 under ANY batch split; replay no-op inherits
     * from the shared store. */
   def iqr(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.iqrOfValueCounts(storeCounts(spark, storeDir)
-      .groupBy(col("event_type"), col("value"))
-      .agg(sum(col("cnt")).as("cnt")))
+    Stats.iqrOfValueCounts(valueCounts(spark, storeDir))
 
   /** s55: the FOURTH read of this store — q182's winsorized robust-mean
     * profile (p05/p95 clip, clipped count/sum/4-dec mean) over the same
@@ -220,9 +186,7 @@ object DriftMonitor {
     * compaction invariance inherit from the shared store (it never looks
     * at d). */
   def winsorized(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.winsorizedOfValueCounts(storeCounts(spark, storeDir)
-      .groupBy(col("event_type"), col("value"))
-      .agg(sum(col("cnt")).as("cnt")))
+    Stats.winsorizedOfValueCounts(valueCounts(spark, storeDir))
 
   /** s57: the FIFTH read of this store — q188's median + MAD robust
     * dispersion panel over the same merged value histogram, through the
@@ -231,9 +195,7 @@ object DriftMonitor {
     * compaction invariance inherit from the shared store (the read
     * never looks at d). */
   def mad(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.madOfValueCounts(storeCounts(spark, storeDir)
-      .groupBy(col("event_type"), col("value"))
-      .agg(sum(col("cnt")).as("cnt")))
+    Stats.madOfValueCounts(valueCounts(spark, storeDir))
 
   /** s48: the THIRD read of this store — q179's daily p10/p50/p90 value
     * bands over the calendar-sliced histogram, through the SAME
@@ -248,14 +210,4 @@ object DriftMonitor {
       .filter(col("d").isNotNull)
       .groupBy(col("event_type"), col("d"), col("value"))
       .agg(sum(col("cnt")).as("cnt")))
-
-  /** Wire a streaming (event_type, ts, value) source into the loop. */
-  def start(events: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

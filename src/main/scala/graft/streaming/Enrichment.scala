@@ -48,7 +48,7 @@ object Enrichment {
     * foreachBatch-merge shape s04's projection upsert already uses. */
   def enrichRefreshing(stream: DataFrame, dimPath: String)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    BatchStore.writer(stream) { (batch, batchId) =>
       val dim = batch.sparkSession.read.parquet(dimPath)
       sink(enrich(batch, dim), batchId)
     }

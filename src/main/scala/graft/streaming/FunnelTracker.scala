@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** s25: streaming funnel tracking — the online form of q62, the last
   * event-journey family member to get a streaming twin (q62 funnel /
@@ -28,10 +26,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * rules out. So the four timestamps are the fold's entire state and
   * dropped events are dead weight, the s23/s24 left-fold argument.
   *
-  * Store layout and replay safety are s24's verbatim: tails LWW by
-  * batch_id in batch_id partitions; a re-run of batch b reads only tails
-  * with batch_id < b (its own previous writes invisible), recomputes
-  * byte-identically, and dynamic overwrite replaces its own partition.
+  * Store layout is s24's: tails LWW by batch_id.
   *
   * Batch-parity law (StreamingSpec): when each user's events arrive in
   * ts order across batches, [[funnelState]] EQUALS batch q62 on the
@@ -68,17 +63,8 @@ object FunnelTracker {
     * user never entered) plus the order mark: highest-batch_id tail row
     * below `batchId`. Schema-stable empty frame before any write. */
   private[graft] def readTailsFull(spark: SparkSession, tailDir: String,
-      batchId: Long): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, tailDir)) return emptyTails(spark)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-    spark.read.parquet(tailDir)
-      .filter(col("batch_id") < batchId) // replay: never see own tails
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("t_signup"), col("t_view"),
-        col("t_click"), col("t_purchase"), col("stages_completed"),
-        col("hwm_ts"))
-  }
+      batchId: Long): DataFrame =
+    BatchStore.latest(spark, tailDir, Seq("user_id"), batchId)(emptyTails(spark))
 
   /** Live funnel tuple per funnel-ENTERED user — the read-path face
     * (q62's row set: hwm-only rows are store bookkeeping, not funnel
@@ -96,10 +82,8 @@ object FunnelTracker {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
     // bound the LWW read: fold committed tail partitions into the base
-    // every TailCompactEvery batches (top-of-batch, so a replay of THIS
-    // batch reads the base = state through batchId − 1, unchanged)
-    if (batchId > 0 && batchId % StoreRead.TailCompactEvery == 0)
-      StoreRead.compactLww(spark, tailDir, Seq("user_id"), batchId)
+    if (BatchStore.foldDue(batchId))
+      BatchStore.fold(spark, tailDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("user_id"), col("event_type"), col("ts"))
     // only the batch's users can advance; everyone else's tail stays
     // live in an older partition untouched. NULL-safe semi join: the
@@ -151,16 +135,12 @@ object FunnelTracker {
     // proved this batch's max ts is each touched user's new high water
     val hwNew = ev.groupBy(col("user_id").as("hu"))
       .agg(max(col("ts")).as("hwm_ts"))
-    hwNew.join(state, col("hu") <=> state("user_id"), "left")
+    val newTails = hwNew.join(state, col("hu") <=> state("user_id"), "left")
       .select(col("hu").as("user_id"), col("t_signup"), col("t_view"),
         col("t_click"), col("t_purchase"),
         coalesce(col("stages_completed"), lit(0)).as("stages_completed"),
         col("hwm_ts"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tailDir)
+    BatchStore.write(newTails, tailDir, batchId)
   }
 
   /** The q62-shaped funnel over everything ingested so far — row-for-row
@@ -176,14 +156,4 @@ object FunnelTracker {
       .groupBy(col("stages_completed"))
       .agg(count(lit(1)).as("n_users"))
       .orderBy(col("stages_completed"))
-
-  /** Wire a streaming (user_id, event_type, ts) source into the loop. */
-  def start(events: DataFrame, tailDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, tailDir, batchId)
-      }
-      .start()
 }

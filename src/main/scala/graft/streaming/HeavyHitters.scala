@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Dsl.freqSketch
 
@@ -18,21 +17,12 @@ import graft.ops.Dsl.freqSketch
   * N/(m+1) present) survives ANY merge tree shape, which is exactly what
   * licenses folding per-batch sketches written at different times.
   *
-  * REPLAY SAFETY follows s14's partition discipline (a re-run overwrites
-  * its own batch_id partition with recomputed content), but the store
-  * here is ADDITIVE — a duplicated row changes sums, where s14's
-  * semi-join key set shrugged duplicates off. Compaction therefore cannot
-  * use s14's "write base, then delete, duplicates harmless" ordering:
-  * a crash between the base write and the partition deletes would leave
-  * a batch counted twice. Instead the base partition (batch_id = −1)
-  * carries a COVERAGE WATERMARK (`covered_upto`): readers take the base
-  * plus only batch partitions ≥ covered_upto, so folded-but-not-yet-
-  * deleted partitions are invisible the moment the new base commits, and
-  * the delete sweep is pure garbage collection that can crash, re-run, or
-  * never run without changing a single merged count. [[foldBase]] (write
-  * the new base) and [[sweepFolded]] (delete covered partitions) are
-  * split so the StreamingSpec law can hold the crash window open and
-  * assert the merged sketch is identical at every point.
+  * The store is ADDITIVE — a duplicated row changes sums — so it folds
+  * with the coverage watermark (`covered_upto`, see [[BatchStore]]), not
+  * by write-then-delete. [[foldBase]] (write the new base) and
+  * [[sweepFolded]] (delete covered partitions) are split so the
+  * StreamingSpec law can hold the crash window open and assert the
+  * merged sketch is identical at every point.
   *
   * Scale posture: per batch the shuffle is the m-counter sketch merge
   * tree (constant state per partition — the q88 argument, now paid per
@@ -45,40 +35,24 @@ object HeavyHitters {
   /** Counter budget m — error ≤ N/(m+1) over the whole stream. */
   val Counters = 256
 
-  /** Fold the store every this-many batches (s14's cadence). */
-  val CompactEvery = 8L
-
   /** One micro-batch: sketch the batch's tokens, land them in this
-    * batch's own partition (replay = recompute + overwrite, idempotent).
-    * In the eviction regime a re-run's counter VALUES can differ with
-    * partitioning, but the overwrite replaces the whole partition, so the
-    * store never mixes two attempts — the merged bound still holds. */
+    * batch's own partition. In the eviction regime a re-run's counter
+    * VALUES can differ with partitioning, but the overwrite replaces the
+    * whole partition, so the store never mixes two attempts — the merged
+    * bound still holds. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long,
       m: Int = Counters): Unit = {
     if (batch.isEmpty) return
-    if (batchId > 0 && batchId % CompactEvery == 0)
+    if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId, m)
-    batch
+    val sketch = batch
       .select(explode(split(col("text"), " ")).as("token"))
       .filter(length(col("token")) >= 1)
       .agg(freqSketch(col("token"), m).as("sk"))
       .select(explode(col("sk")).as("e"))
       .select(col("e.token").as("token"), col("e.est").as("est"),
-        lit(null).cast("long").as("covered_upto"),
-        lit(batchId).as("batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-  }
-
-  /** Store rows a reader may count: the base plus batch partitions the
-    * base does NOT already cover. The watermark is joined in as a
-    * broadcast single-row aggregate so the whole read stays declarative. */
-  private def liveRows(all: DataFrame): DataFrame = {
-    val upto = StoreRead.coveredUptoFrame(all)
-    all.crossJoin(broadcast(upto))
-      .filter(col("batch_id") === -1L || col("batch_id") >= col("_upto"))
+        lit(null).cast("long").as("covered_upto"))
+    BatchStore.write(sketch, storeDir, batchId)
   }
 
   /** The PODS'12 merge over a (token, est) frame: pointwise sum, subtract
@@ -97,7 +71,7 @@ object HeavyHitters {
 
   /** The queryable merged sketch over everything admitted so far. */
   def merged(spark: SparkSession, storeDir: String, m: Int = Counters): DataFrame =
-    mergeSketch(liveRows(spark.read.parquet(storeDir)), m)
+    mergeSketch(BatchStore.live(spark.read.parquet(storeDir)), m)
 
   /** Phase 1 of compaction: fold the base and every batch partition in
     * [old watermark, upToBatch) into a new base with
@@ -109,59 +83,29 @@ object HeavyHitters {
     * eviction regime (distinct tokens ≤ m) the threshold is 0 and the
     * fold is exactly the pointwise sum. */
   def foldBase(spark: SparkSession, storeDir: String, upToBatch: Long,
-      m: Int = Counters): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val dir = new Path(storeDir)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val all = spark.read.parquet(storeDir)
-    // a regressed watermark would re-expose covered-but-unswept batch
-    // partitions to liveRows (double count) — fail loudly (r16 advisor)
-    val current = StoreRead.coveredUpto(all)
-    require(upToBatch >= current,
-      s"s16 foldBase: upToBatch $upToBatch < current covered_upto $current — " +
-        "a regressed watermark re-exposes folded batch partitions")
-    val newBase = mergeSketch(
-      liveRows(all).filter(col("batch_id") === -1L || col("batch_id") < upToBatch), m)
-      .localCheckpoint(true) // pin: the overwrite below rewrites the source path
-    newBase
-      .select(col("token"), col("est"),
-        lit(upToBatch).as("covered_upto"), lit(-1L).as("batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-  }
+      m: Int = Counters): Unit =
+    BatchStore.read(spark, storeDir).foreach { all =>
+      // a regressed watermark would re-expose covered-but-unswept batch
+      // partitions to the live read (double count) — fail loudly
+      val current = BatchStore.coveredUpto(all)
+      require(upToBatch >= current,
+        s"s16 foldBase: upToBatch $upToBatch < current covered_upto $current — " +
+          "a regressed watermark re-exposes folded batch partitions")
+      val newBase = mergeSketch(
+        BatchStore.live(all).filter(col("batch_id") === -1L || col("batch_id") < upToBatch), m)
+        .localCheckpoint(true) // pin: the overwrite below rewrites the source path
+      BatchStore.write(newBase.select(col("token"), col("est"),
+        lit(upToBatch).as("covered_upto")), storeDir, -1L)
+    }
 
   /** Phase 2: garbage-collect batch partitions the base now covers. Pure
     * cleanup — the watermark already hides them from every reader. */
-  def sweepFolded(spark: SparkSession, storeDir: String): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val dir = new Path(storeDir)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val covered = StoreRead.coveredUpto(spark.read.parquet(storeDir))
-    fs.listStatus(dir).map(_.getPath).filter { p =>
-      p.getName.startsWith("batch_id=") &&
-        scala.util.Try(p.getName.stripPrefix("batch_id=").toLong)
-          .toOption.exists(v => v >= 0 && v < covered)
-    }.foreach(p => fs.delete(p, true))
-  }
+  def sweepFolded(spark: SparkSession, storeDir: String): Unit =
+    BatchStore.sweepCovered(spark, storeDir)
 
   def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long,
       m: Int = Counters): Unit = {
     foldBase(spark, storeDir, upToBatch, m)
     sweepFolded(spark, storeDir)
   }
-
-  /** Wire a streaming (doc_id, text, …) source into the sketch loop. */
-  def start(docs: DataFrame, storeDir: String, checkpointDir: String,
-      m: Int = Counters): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId, m)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Dsl.h60
 import graft.queries.{Dedup, Text}
@@ -40,41 +39,27 @@ import graft.queries.{Dedup, Text}
   * filtered to the batch's band keys by the join, never collected, and
   * grows by exactly the survivors' keys.
   *
-  * REPLAY SAFETY (what makes "transaction" an earned word): foreachBatch
-  * is at-least-once — a batch can re-run after any partial failure. The
-  * admission decision is a pure function of (batch contents, store
-  * partitions with batch_id < this batch), because (1) every sink is
-  * PARTITIONED BY batch_id and written with dynamic-partition-overwrite,
-  * so a re-run REPLACES its own partition instead of appending next to
-  * the first attempt's rows, and (2) the store read filters
-  * batch_id < batchId, so a re-run never left-semi-joins the batch
-  * against its OWN just-stored band keys (which would flip its accepts
-  * to rejects). Partitions below the current batch are immutable —
-  * Structured Streaming starts batch N only after N−1 committed — so
-  * replays recompute bit-identical decisions and overwrite partitions
-  * with identical content: idempotent end to end (pinned in
-  * StreamingSpec by running the same batch twice).
+  * REPLAY SAFETY: the admission decision is a pure function of (batch
+  * contents, store partitions with batch_id < this batch), so a re-run
+  * never left-semi-joins the batch against its OWN just-stored band keys
+  * (which would flip its accepts to rejects), and every sink replaces
+  * its own partition (pinned in StreamingSpec by running the same batch
+  * twice).
   *
-  * The store would otherwise accrete one small partition per batch
-  * forever; every CompactEvery batches [[compactStore]] folds all
-  * committed partitions into the single base partition batch_id = −1
-  * (still < every future batchId, so the read filter keeps seeing it).
-  * Every failure point of the fold preserves the store's KEY SET —
-  * duplicate keys across base and not-yet-deleted partitions are
-  * harmless to a left-semi — so compaction can never change an
-  * admission decision (the StreamingSpec law).
+  * Every [[BatchStore.FoldEvery]] batches [[compactStore]] folds the
+  * store into its base partition. Duplicate keys across the base and
+  * not-yet-deleted partitions are harmless to a left-semi, so no point
+  * of the fold changes the store's KEY SET, and compaction can never
+  * change an admission decision (the StreamingSpec law).
   */
 object IncrementalDedup {
-
-  /** Fold the store's base partition every this-many batches. */
-  val CompactEvery = 8L
 
   /** One micro-batch admission transaction. Exposed for direct testing. */
   def processBatch(batch: DataFrame, storeDir: String,
       acceptDir: String, rejectDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
-    if (batchId > 0 && batchId % CompactEvery == 0)
+    if (BatchStore.foldDue(batchId))
       compactStore(spark, storeDir, batchId)
     val sh = Text.shinglesOf(batch)
       .select(col("doc_id"), (h60(col("shingle")) % Dedup.P).as("hm"))
@@ -85,17 +70,9 @@ object IncrementalDedup {
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val bands = Dedup.bandKeys(Dedup.signatures(sh)).localCheckpoint(true)
     try {
-      // probe through hasParquetData, not a catch: Spark's missing-path
-      // error class has shifted across releases (AnalysisException vs
-      // FileNotFoundException — bit us on the first-ever read of a fresh
-      // store root), and the explicit probe is the same discipline every
-      // other store module uses
-      val store =
-        if (!StoreRead.hasParquetData(spark, storeDir))
-          spark.emptyDataFrame.select(lit(0).as("band_id"), lit("").as("bk")).limit(0)
-        else spark.read.parquet(storeDir)
-          .filter(col("batch_id") < batchId) // replay: never see own keys
-          .select(col("band_id"), col("bk"))
+      val store = BatchStore.before(spark, storeDir, batchId)(
+          spark.emptyDataFrame.select(lit(0).as("band_id"), lit("").as("bk")).limit(0))
+        .select(col("band_id"), col("bk"))
       val hitStore = bands
         .join(store, Seq("band_id", "bk"), "left_semi")
         .select(col("doc_id"))
@@ -107,15 +84,9 @@ object IncrementalDedup {
         .select(col("a.doc_id").as("doc_id"))
       // eager pin: feeds the anti/semi/anti join trio below (r9 sweep)
       val rejected = hitStore.union(hitBatch).distinct().localCheckpoint(true)
-      def writeOwnPartition(df: DataFrame, dir: String): Unit =
-        df.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(dir)
-      writeOwnPartition(batch.join(rejected, Seq("doc_id"), "left_anti"), acceptDir)
-      writeOwnPartition(batch.join(rejected, Seq("doc_id"), "left_semi"), rejectDir)
-      writeOwnPartition(bands.join(rejected, Seq("doc_id"), "left_anti"), storeDir)
+      BatchStore.write(batch.join(rejected, Seq("doc_id"), "left_anti"), acceptDir, batchId)
+      BatchStore.write(batch.join(rejected, Seq("doc_id"), "left_semi"), rejectDir, batchId)
+      BatchStore.write(bands.join(rejected, Seq("doc_id"), "left_anti"), storeDir, batchId)
     } finally {
       // free this batch's checkpoint blocks (and nothing else's); the
       // blocks are dead — the batch is committed — so the per-RDD
@@ -129,48 +100,8 @@ object IncrementalDedup {
     }
   }
 
-  /** Fold every committed store partition (0 ≤ batch_id < upToBatch) plus
-    * the previous base into ONE distinct-keyed base partition
-    * (batch_id = −1), then delete the folded per-batch partitions — the
-    * Layout-compaction step wired into the admission loop. Failure
-    * analysis, by write order: the base overwrite completes BEFORE any
-    * per-batch partition is deleted, so at every intermediate point the
-    * store's key set over batches < upToBatch is a superset of what one
-    * clean pass would leave (extra duplicates at worst, never a missing
-    * key), and a re-run folds the leftovers — admission decisions are
-    * invariant under crash + retry anywhere in this method. The read is
-    * localCheckpoint-pinned before the overwrite touches the same path. */
-  def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val dir = new Path(storeDir)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val folded = fs.listStatus(dir).map(_.getPath).filter { p =>
-      p.getName.startsWith("batch_id=") &&
-        scala.util.Try(p.getName.stripPrefix("batch_id=").toLong)
-          .toOption.exists(v => v >= 0 && v < upToBatch)
-    }
-    if (folded.isEmpty) return
-    val base = spark.read.parquet(storeDir)
-      .filter(col("batch_id") < upToBatch) // includes the previous base (−1)
-      .drop("batch_id").distinct()
-      .localCheckpoint(true) // pin: the overwrite below rewrites the source path
-    base.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-    folded.foreach(p => fs.delete(p, true))
-  }
-
-  /** Wire a streaming (doc_id, text, …) source into the admission loop. */
-  def start(docs: DataFrame, storeDir: String, acceptDir: String,
-      rejectDir: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, acceptDir, rejectDir, batchId)
-      }
-      .start()
+  /** Fold every committed partition below `upToBatch` into one
+    * distinct-keyed base partition. */
+  def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
+    BatchStore.fold(spark, storeDir, upToBatch)(_.drop("batch_id").distinct())
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Text
 
@@ -16,30 +15,16 @@ import graft.queries.Text
   * `foreachBatch` writes each micro-batch's term frequencies — computed
   * by the SAME [[Text.termFrequencies]] kernel q91 uses, so batch and
   * stream tokenize identically by construction — as the batch's own
-  * `batch_id` partition. Unlike s14's admission transaction, the upsert
-  * never READS the store: a batch's postings are a pure function of the
-  * batch, so the write is the whole transaction and s14's
-  * `batch_id < current` read filter has nothing to guard. REPLAY SAFETY
-  * is therefore just the s14 write discipline: partition by batch_id +
-  * dynamic-partition-overwrite, so an at-least-once re-run REPLACES its
-  * own partition with bit-identical rows instead of appending beside
-  * the first attempt's.
+  * partition. Unlike s14's admission transaction, the upsert never READS
+  * the store: a batch's postings are a pure function of the batch, so
+  * the write is the whole transaction.
   *
   * A doc_id re-submitted in a later batch is an UPDATE: the read view
   * resolves last-writer-wins per doc (keep the rows of the doc's max
   * batch_id — q27's LWW projection discipline applied to postings), so
-  * stale postings of the superseded version never reach the index.
-  *
-  * The store accretes one partition per batch; every [[CompactEvery]]
-  * batches [[compactStore]] folds all committed partitions into the
-  * single base partition batch_id = −1 (still below every future batch).
-  * The fold RESOLVES LWW physically (superseded doc versions are dropped,
-  * not carried), and every failure point preserves the read view: the
-  * base overwrite completes BEFORE any per-batch partition is deleted,
-  * and until a doc's winning partition is deleted the view's LWW picks
-  * that partition's rows — which are exactly what the base stored for
-  * the doc — so a crash + re-run anywhere in the fold leaves the index
-  * unchanged (the StreamingSpec law).
+  * stale postings of the superseded version never reach the index. The
+  * fold ([[compactStore]]) resolves LWW physically: superseded doc
+  * versions are dropped, not carried.
   *
   * Scale posture: per batch, work is ONE map-side-combined aggregation of
   * the batch's token stream and an append-sized partition write — the
@@ -49,33 +34,30 @@ import graft.queries.Text
   * vocab × avg-df, the same frame q91 aggregates. */
 object IncrementalIndex {
 
-  /** Fold the store's base partition every this-many batches. */
-  val CompactEvery = 8L
-
   /** One micro-batch upsert. Exposed for direct testing. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    if (batchId > 0 && batchId % CompactEvery == 0)
+    if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)
-    Text.termFrequencies(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(Text.termFrequencies(batch), storeDir, batchId)
   }
 
-  /** The store's current posting rows after per-doc LWW resolution —
-    * (token, doc_id, tf), one version per doc. */
-  private def currentPostings(spark: SparkSession, storeDir: String): DataFrame = {
+  /** Per-doc LWW over store rows: every (token, doc_id, tf) row of each
+    * doc's max batch_id. */
+  private def lastVersion(rows: DataFrame): DataFrame = {
     val wd = Window.partitionBy(col("doc_id"))
-    spark.read.parquet(storeDir)
+    rows
       .select(col("token"), col("doc_id"), col("tf"),
         col("batch_id").cast("long").as("batch_id"))
       .withColumn("mx", max(col("batch_id")).over(wd))
       .filter(col("batch_id") === col("mx"))
       .select(col("token"), col("doc_id"), col("tf"))
   }
+
+  /** The store's current posting rows after per-doc LWW resolution —
+    * (token, doc_id, tf), one version per doc. */
+  private def currentPostings(spark: SparkSession, storeDir: String): DataFrame =
+    lastVersion(spark.read.parquet(storeDir))
 
   /** The index as q91 would report it over the streamed corpus: the q91
     * aggregation applied to the LWW-resolved store (the batch-parity law
@@ -84,43 +66,10 @@ object IncrementalIndex {
   def readIndex(spark: SparkSession, storeDir: String): DataFrame =
     Text.indexOf(currentPostings(spark, storeDir))
 
-  /** Fold every committed store partition (0 ≤ batch_id < upToBatch) plus
-    * the previous base into ONE LWW-resolved base partition
-    * (batch_id = −1), then delete the folded per-batch partitions.
-    * Failure analysis, by write order: the base lands BEFORE any delete,
-    * so at every intermediate point each doc's max surviving batch_id
-    * holds exactly the rows the resolved base holds for it (either the
-    * winning partition still exists, or the base — now the doc's only
-    * copy — holds the winner's rows), and the read view is invariant; a
-    * re-run folds the leftovers to the same base. The read is
-    * localCheckpoint-pinned before the overwrite touches the same path. */
-  def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val dir = new Path(storeDir)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val folded = fs.listStatus(dir).map(_.getPath).filter { p =>
-      p.getName.startsWith("batch_id=") &&
-        scala.util.Try(p.getName.stripPrefix("batch_id=").toLong)
-          .toOption.exists(v => v >= 0 && v < upToBatch)
-    }
-    if (folded.isEmpty) return
-    val wd = Window.partitionBy(col("doc_id"))
-    val base = spark.read.parquet(storeDir)
-      .select(col("token"), col("doc_id"), col("tf"),
-        col("batch_id").cast("long").as("batch_id"))
-      .filter(col("batch_id") < upToBatch) // includes the previous base (−1)
-      .withColumn("mx", max(col("batch_id")).over(wd))
-      .filter(col("batch_id") === col("mx"))
-      .select(col("token"), col("doc_id"), col("tf"))
-      .localCheckpoint(true) // pin: the overwrite below rewrites the source path
-    base.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-    folded.foreach(p => fs.delete(p, true))
-  }
+  /** Fold every committed partition below `upToBatch` into one
+    * LWW-resolved base partition. */
+  def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
+    BatchStore.fold(spark, storeDir, upToBatch)(lastVersion)
 
   /** s18: BM25 search served FROM the incremental store — the query-time
     * read path that makes s15 an index rather than an archive. Document
@@ -149,14 +98,4 @@ object IncrementalIndex {
       .select(col("doc_id"), col("token"), col("tf"))
     Text.bm25Rank(tf, dl)
   }
-
-  /** Wire a streaming (doc_id, text, …) source into the upsert loop. */
-  def start(docs: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

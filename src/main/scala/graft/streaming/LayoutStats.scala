@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.ZOrder
 
@@ -19,10 +18,7 @@ import graft.queries.ZOrder
   * (s16/s21/s26), the engine's strongest replay class: no arrival-order
   * assumption at all.
   *
-  * Replay safety: a re-run of batch b recomputes byte-identical partials
-  * and dynamic-overwrites its own batch_id partition — the merged read
-  * cannot tell (s26's argument verbatim). Compaction is s21's watermark
-  * fold when partition count demands it.
+  * Compaction is s21's watermark fold when partition count demands it.
   *
   * Scale posture: per batch ONE map-side-combined aggregate of the batch
   * at 2^ZBucketBits cardinality (each task emits ≤ 64 partial rows); the
@@ -38,28 +34,21 @@ object LayoutStats {
   def processBatch(batch: DataFrame, dom: DataFrame, storeDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    ZOrder.bucketed(batch.select(col("ck"), col("day")), dom)
+    val partials = ZOrder.bucketed(batch.select(col("ck"), col("day")), dom)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"),
         min(col("ck")).as("min_ck"), max(col("ck")).as("max_ck"),
         min(col("day")).as("min_day"), max(col("day")).as("max_day"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(partials, storeDir, batchId)
   }
 
   /** The q149-shaped panel over everything ingested so far: merge the
     * partials, re-derive the scan verdict — row-for-row the batch q149
     * on the concatenated input (any split). */
-  def envelopePanel(spark: SparkSession, storeDir: String): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, storeDir))
-      return spark.range(0).select(col("id").as("bucket"), col("id").as("n"),
-        col("id").as("min_ck"), col("id").as("max_ck"),
-        col("id").as("min_day"), col("id").as("max_day"),
-        lit(true).as("would_scan"))
-    spark.read.parquet(storeDir)
+  def envelopePanel(spark: SparkSession, storeDir: String): DataFrame =
+    BatchStore.readOr(spark, storeDir)(spark.range(0).select(col("id").as("bucket"),
+        col("id").as("n"), col("id").as("min_ck"), col("id").as("max_ck"),
+        col("id").as("min_day"), col("id").as("max_day")))
       .groupBy(col("bucket"))
       .agg(sum(col("n")).as("n"),
         min(col("min_ck")).as("min_ck"), max(col("max_ck")).as("max_ck"),
@@ -68,16 +57,4 @@ object LayoutStats {
         !(col("max_ck") < ZOrder.RectCkLo || col("min_ck") > ZOrder.RectCkHi ||
           col("max_day") < ZOrder.RectDayLo || col("min_day") > ZOrder.RectDayHi))
       .orderBy(col("bucket"))
-  }
-
-  /** Wire a streaming (ck, day) source into the maintenance loop. */
-  def start(dims: DataFrame, dom: DataFrame, storeDir: String,
-      checkpointDir: String): StreamingQuery =
-    dims.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, dom, storeDir, batchId)
-      }
-      .start()
 }

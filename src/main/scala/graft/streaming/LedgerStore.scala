@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** s26: streaming ledger reconciliation — the online form of q115's
   * full-outer projection-pair audit: events arrive in micro-batches and
@@ -17,13 +16,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * presence/NULL discipline and the null-user one-row-per-side semantics
   * included, parity by construction.
   *
-  * Replay safety is s16/s21's additive-store argument: a re-run of batch
-  * b recomputes byte-identical partials and dynamic-overwrites its own
-  * batch_id partition — the summed read cannot tell. The store grows one
-  * user-cardinality-bounded partition per batch; folding old partitions
-  * into a base is s21's watermark compaction verbatim (the partials are
-  * pointwise-summable), applied when the partition count, not this
-  * logic, demands it.
+  * The store grows one user-cardinality-bounded partition per batch;
+  * the partials are pointwise-summable, so s21's watermark fold applies
+  * when the partition count demands it.
   *
   * Scale posture: per batch ONE user_id-keyed map-side-combined
   * aggregate of the batch only; the panel read is one shuffle over the
@@ -41,45 +36,31 @@ object LedgerStore {
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch.filter(col("event_type").isin("click", "purchase"))
+    val partials = batch.filter(col("event_type").isin("click", "purchase"))
       .groupBy(col("user_id"))
       .agg(
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("p"),
         sum(when(col("event_type") === "purchase",
           col("value").cast("decimal(18,4)"))).as("pv"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(partials, storeDir, batchId)
   }
 
   /** The q115-shaped reconciliation over everything ingested so far —
     * row-for-row equal to batch q115 on the concatenated log under ANY
     * batch split (the partial merge is associative and commutative). */
-  def ledger(spark: SparkSession, storeDir: String): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, storeDir)) return emptyLedger(spark)
-    val totals = spark.read.parquet(storeDir)
-      .groupBy(col("user_id"))
-      .agg(sum(col("c")).as("c"), sum(col("p")).as("p"), sum(col("pv")).as("pv"))
-      // feeds both sides of the full-outer below (r9 pinning discipline)
-      .localCheckpoint(true)
-    val clicks = totals.filter(col("c") > 0L)
-      .select(col("user_id"), col("c").as("n_clicks"))
-    val purchases = totals.filter(col("p") > 0L)
-      .select(col("user_id"), col("p").as("n_purchases"),
-        col("pv").cast("double").as("purchase_value"))
-    graft.queries.Relational.reconcile(clicks, purchases)
-  }
-
-  /** Wire a streaming (user_id, event_type, value) source into the loop. */
-  def start(events: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
+  def ledger(spark: SparkSession, storeDir: String): DataFrame =
+    BatchStore.read(spark, storeDir).fold(emptyLedger(spark)) { all =>
+      val totals = all
+        .groupBy(col("user_id"))
+        .agg(sum(col("c")).as("c"), sum(col("p")).as("p"), sum(col("pv")).as("pv"))
+        // feeds both sides of the full-outer below (r9 pinning discipline)
+        .localCheckpoint(true)
+      val clicks = totals.filter(col("c") > 0L)
+        .select(col("user_id"), col("c").as("n_clicks"))
+      val purchases = totals.filter(col("p") > 0L)
+        .select(col("user_id"), col("p").as("n_purchases"),
+          col("pv").cast("double").as("purchase_value"))
+      graft.queries.Relational.reconcile(clicks, purchases)
+    }
 }

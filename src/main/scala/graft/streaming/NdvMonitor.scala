@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** s52: streaming NDV (distinct-count) monitor — the sketch twin of the
   * exact monitors (s29 value counts, s36 daily counts): per-event-type
@@ -30,8 +29,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * one lgK everywhere, DataSketches' union is register-wise max, i.e.
   * sketch(A ∪ B) = sketch(A) ∪ sketch(B) exactly); (2) small-cardinality
   * exactness — below the sparse-mode threshold the estimate IS the
-  * exact distinct count (planted); (3) replay no-op — a re-run batch
-  * dynamic-overwrites its own partition with identical sketch bytes.
+  * exact distinct count (planted); (3) replay no-op.
   *
   * Scale posture: per batch ONE map-side-combined sketch aggregate at
   * event-type cardinality; read = one union shuffle over KB-sized rows.
@@ -54,23 +52,16 @@ object NdvMonitor {
     * partial → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch.groupBy(col("event_type"))
-      .agg(expr(s"hll_sketch_agg(user_id, $LgK)").as("sketch"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(batch.groupBy(col("event_type"))
+      .agg(expr(s"hll_sketch_agg(user_id, $LgK)").as("sketch")), storeDir, batchId)
   }
 
   /** Distinct-user estimate per event type over everything ingested so
     * far — equal to the one-shot sketch estimate on the concatenated
     * log under ANY batch split (the union-merge law). */
   def ndv(spark: SparkSession, storeDir: String): DataFrame = {
-    val sk =
-      if (!StoreRead.hasParquetData(spark, storeDir)) emptySketches(spark)
-      else spark.read.parquet(storeDir)
-    sk.groupBy(col("event_type"))
+    BatchStore.readOr(spark, storeDir)(emptySketches(spark))
+      .groupBy(col("event_type"))
       // allowDifferentLgConfigK=false: every sketch in the store is
       // written at the one LgK above; a foreign-width sketch must fail
       // the read loudly rather than silently downsize the union and
@@ -89,14 +80,4 @@ object NdvMonitor {
       .select(col("event_type"),
         expr("hll_sketch_estimate(sketch)").as("ndv_users"))
       .orderBy(col("event_type"))
-
-  /** Wire a streaming (event_type, user_id) source into the loop. */
-  def start(events: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Dsl.h60
 import graft.queries.{Dedup, Text}
@@ -37,11 +36,6 @@ import graft.queries.{Dedup, Text}
   * between the two writes is healed by the checkpoint replaying the
   * whole batch.
   *
-  * Replay safety: prior state is read as `batch_id < current` (partition
-  * pruning on the store layout), so a re-run of batch b sees the same
-  * prior view, recomputes byte-identical bands/decisions, and dynamic-
-  * overwrites its own partitions — the merged reads cannot tell.
-  *
   * Scale posture: per batch ONE signature aggregate over the BATCH's
   * shingles (MinHashSig map-side partials — the q34 build, never the
   * history), one left-semi of the batch's ≤ docs×Bands band rows
@@ -73,22 +67,17 @@ object NearDupAdmission {
       batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val prior =
-      if (!StoreRead.hasParquetData(spark, storeDir)) emptyBands(spark)
-      else spark.read.parquet(storeDir)
-        .filter(col("batch_id") < batchId)
-        .select(col("doc_id"), col("band_id"), col("bk"))
+    val prior = BatchStore.before(spark, storeDir, batchId)(emptyBands(spark))
+      .select(col("doc_id"), col("band_id"), col("bk"))
     // order gate (bounded driver probe over the SIDE store — one skinny
     // row per prior batch, never the band index): admission is
     // order-relative
     val mm = batch.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
     val (low, high) = (mm.getLong(0), mm.getLong(1))
     val hd = hwmDir(storeDir)
-    val hw =
-      if (!StoreRead.hasParquetData(spark, hd)) null
-      else spark.read.parquet(hd)
-        .filter(col("batch_id") < batchId)
-        .agg(max(col("hwm"))).collect()(0)
+    val hw = BatchStore.read(spark, hd)
+      .map(_.filter(col("batch_id") < batchId).agg(max(col("hwm"))).collect()(0))
+      .filterNot(_.isNullAt(0)).map(_.getLong(0))
     // pre-r16 store detection (r16 advisor): band data from earlier
     // batches with NO _hwm sibling means the side store was never
     // written — a null hwm would silently open the order gate. Fail
@@ -97,14 +86,14 @@ object NearDupAdmission {
     // in normal operation the probe never runs (hwm rows exist the
     // moment prior bands do — foreachBatch replays a batch that crashed
     // between the two writes).
-    if ((hw == null || hw.isNullAt(0)) && !prior.isEmpty)
+    if (hw.isEmpty && !prior.isEmpty)
       throw new IllegalStateException(
         s"s53 order gate: band store $storeDir has pre-batch-$batchId data but the " +
           s"_hwm side store has no covering row — pre-r16 store format; rebuild by " +
           "replaying the document log through processBatch")
-    if (hw != null && !hw.isNullAt(0) && low <= hw.getLong(0))
+    for (h <- hw if low <= h)
       throw new IllegalStateException(
-        s"s53 order gate: batch $batchId min doc_id $low <= high-water ${hw.getLong(0)}")
+        s"s53 order gate: batch $batchId min doc_id $low <= high-water $h")
     val bands = bandsOf(batch).localCheckpoint(true)
     val priorHit = bands
       .join(prior.select(col("band_id"), col("bk")), Seq("band_id", "bk"), "left_semi")
@@ -117,26 +106,16 @@ object NearDupAdmission {
     val rejected = priorHit.union(inBatchHit).distinct()
     val admitted = batch.select(col("doc_id")).distinct()
       .join(rejected, Seq("doc_id"), "left_anti")
-    bands.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    admitted.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(acceptDir)
+    BatchStore.write(bands, storeDir, batchId)
+    BatchStore.write(admitted, acceptDir, batchId)
     // gate side state last: already-computed batch max as a literal row
-    spark.range(1).select(lit(high).as("hwm"), lit(batchId).as("batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(hd)
+    BatchStore.write(spark.range(1).select(lit(high).as("hwm")), hd, batchId)
   }
 
   /** Every admitted doc_id so far. */
   def admitted(spark: SparkSession, acceptDir: String): DataFrame =
-    if (!StoreRead.hasParquetData(spark, acceptDir))
-      spark.range(0).select(col("id").as("doc_id"))
-    else spark.read.parquet(acceptDir).select(col("doc_id")).orderBy(col("doc_id"))
+    BatchStore.readOr(spark, acceptDir)(spark.range(0).select(col("id").as("doc_id")))
+      .select(col("doc_id")).orderBy(col("doc_id"))
 
   /** The batch reference the parity law compares against: over the
     * concatenated corpus, a doc is admitted iff no band bucket is
@@ -152,15 +131,4 @@ object NearDupAdmission {
       .join(dup, Seq("doc_id"), "left_anti")
       .orderBy(col("doc_id"))
   }
-
-  /** Wire a streaming (doc_id, text) source into the loop. */
-  def start(docs: DataFrame, storeDir: String, acceptDir: String,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, acceptDir, batchId)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Text
 
@@ -23,15 +22,8 @@ import graft.queries.Text
   *      aggregation over the batch's shingle volume);
   *   2. LEFT-ANTI join against the store read FILTERED to
   *      batch_id < current — survivors are globally new;
-  *   3. append survivors as the batch's own partition (dynamic-partition
-  *      overwrite), and write the per-doc audit (doc_id, ns, n_new) to
-  *      the audit sink the same way.
-  *
-  * REPLAY SAFETY follows s14's argument, not s15's: the decision READS
-  * the store, but only partitions with batch_id < current — immutable by
-  * the time batch N runs (Structured Streaming commits N−1 first) — so a
-  * re-run recomputes bit-identical novelty and overwrites its own
-  * partitions with identical content.
+  *   3. append survivors as the batch's own partition, and write the
+  *      per-doc audit (doc_id, ns, n_new) to the audit sink the same way.
   *
   * Scale posture: per batch, work is one aggregation of the batch's
   * shingles plus one anti-join of the batch's DISTINCT hashes (uniform
@@ -70,71 +62,32 @@ object Novelty {
       .distinct()
       .localCheckpoint(true)
     val firstSeers = sh.groupBy(col("hm")).agg(min(col("doc_id")).as("fmin"))
-    val prior = priorStore(spark, storeDir, batchId)
+    // replays must not see their own (or any later) partition
+    val prior = BatchStore.before(spark, storeDir, batchId)(
+        spark.range(0).select(col("id").as("hm")))
+      .select(col("hm"))
     val fresh = firstSeers.join(prior, Seq("hm"), "left_anti")
       .localCheckpoint(true) // the store write below extends the source dir
-    fresh.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(fresh, storeDir, batchId)
     val ns = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
     val newPerDoc = fresh.groupBy(col("fmin").as("doc_id"))
       .agg(count(lit(1)).as("n_new"))
-    batch.select(col("doc_id")).distinct()
+    val audit = batch.select(col("doc_id")).distinct()
       .join(ns, Seq("doc_id"), "left")
       .join(newPerDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("ns"), lit(0L)).as("ns"),
         coalesce(col("n_new"), lit(0L)).as("n_new"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(auditDir)
+    BatchStore.write(audit, auditDir, batchId)
   }
 
-  /** The store restricted to batches committed BEFORE `batchId` —
-    * replays must not see their own (or any later) partition. Empty
-    * schema-stable frame when the store does not exist yet. */
-  private def priorStore(spark: SparkSession, storeDir: String, batchId: Long): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir))
-      spark.range(0).select(col("id").as("hm"))
-    else
-      spark.read.parquet(storeDir)
-        .filter(col("batch_id").cast("long") < batchId)
-        .select(col("hm"))
-  }
-
-  /** The per-doc novelty audit accumulated so far (every batch).
-    * Schema-stable empty frame before the first write — same guard as
-    * the flagged Decontamination/VectorStats readers (advisor r8). */
+  /** The per-doc novelty audit accumulated so far (every batch). */
   def readAudit(spark: SparkSession, auditDir: String): DataFrame =
-    if (!StoreRead.hasParquetData(spark, auditDir))
-      spark.range(0).select(col("id").as("doc_id"), col("id").as("ns"),
-        col("id").as("n_new"))
-    else
-      spark.read.parquet(auditDir).select(col("doc_id"), col("ns"), col("n_new"))
+    BatchStore.readOr(spark, auditDir)(spark.range(0).select(col("id").as("doc_id"),
+        col("id").as("ns"), col("id").as("n_new")))
+      .select(col("doc_id"), col("ns"), col("n_new"))
 
   /** The first-seer universe seen so far (== Σ n_new by construction). */
-  def universeSize(spark: SparkSession, storeDir: String): Long = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) 0L else spark.read.parquet(storeDir).count()
-  }
-
-  /** Wire a streaming (doc_id, text, …) source into the novelty loop. */
-  def start(docs: DataFrame, storeDir: String, auditDir: String,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, auditDir, batchId)
-      }
-      .start()
+  def universeSize(spark: SparkSession, storeDir: String): Long =
+    BatchStore.read(spark, storeDir).fold(0L)(_.count())
 }

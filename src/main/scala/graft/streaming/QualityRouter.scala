@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Text
 
@@ -25,8 +24,8 @@ import graft.queries.Text
   * StreamingSpec law) is by construction.
   *
   * STATELESS: the verdict is a pure function of (batch, frozen
-  * artifact) — no store is read — so replay safety is just the s14
-  * write discipline (batch_id partitions + dynamic-partition-overwrite).
+  * artifact) — no store is read — so a replay rewrites its own
+  * partition with identical rows.
   *
   * StreamingSpec pins: per-bucket counts over a 3-batch stream of the
   * reference corpus equal q108's panel; replay no-op; a document made
@@ -55,29 +54,13 @@ object QualityRouter {
           .when(col("avg_neg_logp") <= frozen.t2, "middle")
           .otherwise("tail").as("bucket"))
 
-  /** foreachBatch body: route + replay-safe partitioned write. */
+  /** foreachBatch body: route → the batch's own partition. */
   private[graft] def processBatch(batch: DataFrame, frozen: Frozen,
       outDir: String, batchId: Long): Unit =
-    routeBatch(batch, frozen)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
+    BatchStore.write(routeBatch(batch, frozen), outDir, batchId)
 
   /** Everything routed so far. */
   def readRouted(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("n_bigrams"), col("avg_neg_logp"), col("bucket"))
-
-  /** Wire a streaming (doc_id, text, …) source into the router. */
-  def start(docs: DataFrame, frozen: Frozen,
-      outDir: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, frozen, outDir, batchId)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Stats
 
@@ -15,9 +14,7 @@ import graft.queries.Stats
   * q173/q174 run (the kernels' own per-customer aggregate makes the
   * merged partials indistinguishable from raw rows).
   *
-  * Additive family: parity under ANY batch split, replay
-  * dynamic-overwrites its own batch_id partition byte-identically. The
-  * rank structure (who sits in which decile) is NOT mergeable — a
+  * Additive family: parity under ANY batch split. The rank structure (who sits in which decile) is NOT mergeable — a
   * customer's rank moves every time anyone spends — which is exactly why
   * the store holds the mergeable cent sums and the two-phase prefix
   * ranks are derived at read (the s39/s41 boundary argument, here for
@@ -37,17 +34,13 @@ object RevenueMonitor {
     * the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch.groupBy(col("o_custkey")).agg(sum(col("cents")).as("cents"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(batch.groupBy(col("o_custkey")).agg(sum(col("cents")).as("cents")),
+      storeDir, batchId)
   }
 
   private def merged(spark: SparkSession, storeDir: String): DataFrame =
-    if (!StoreRead.hasParquetData(spark, storeDir)) emptyRows(spark)
-    else spark.read.parquet(storeDir).select(col("o_custkey"), col("cents"))
+    BatchStore.readOr(spark, storeDir)(emptyRows(spark))
+      .select(col("o_custkey"), col("cents"))
 
   /** q173-shaped Gini over everything ingested so far. */
   def gini(spark: SparkSession, storeDir: String): DataFrame =
@@ -56,14 +49,4 @@ object RevenueMonitor {
   /** q174-shaped Lorenz decile table over everything ingested so far. */
   def deciles(spark: SparkSession, storeDir: String): DataFrame =
     Stats.revenueDeciles(merged(spark, storeDir))
-
-  /** Wire a streaming (o_custkey, cents) source into the loop. */
-  def start(orders: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    orders.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

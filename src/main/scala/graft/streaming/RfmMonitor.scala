@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Behavior
 
@@ -22,9 +21,8 @@ import graft.queries.Behavior
   * Note the quantile boundaries are DERIVED, not stored: quantiles are
   * not mergeable statistics, so the read recomputes them from the merged
   * metrics — which stay one row per (user, batch-partial), never
-  * event-scale. Replay of batch b recomputes byte-identical partials and
-  * dynamic-overwrites its own partition; folding old partitions is s21's
-  * watermark compaction (MAX/SUM partials are pointwise-mergeable).
+  * event-scale. Folding old partitions is s21's watermark compaction
+  * (MAX/SUM partials are pointwise-mergeable).
   *
   * Scale posture: per batch ONE map-side-combined per-user aggregate of
   * the batch only (`Behavior.rfmMetrics` — the shared kernel); the read
@@ -42,36 +40,19 @@ object RfmMonitor {
     * metric partials → its own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    Behavior.rfmMetrics(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(Behavior.rfmMetrics(batch), storeDir, batchId)
   }
 
   /** The merged per-user metric frame over everything ingested. */
-  private[graft] def metrics(spark: SparkSession, storeDir: String): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, storeDir)) return emptyMetrics(spark)
-    spark.read.parquet(storeDir)
+  private[graft] def metrics(spark: SparkSession, storeDir: String): DataFrame =
+    BatchStore.readOr(spark, storeDir)(emptyMetrics(spark))
       .groupBy(col("user_id"))
       .agg(max(col("last_ts")).as("last_ts"), sum(col("frequency")).as("frequency"),
         sum(col("cents")).as("cents"))
-  }
 
   /** The q156-shaped segment grid over everything ingested so far —
     * row-for-row equal to batch q156 on the concatenated log under ANY
     * batch split. */
   def segments(spark: SparkSession, storeDir: String): DataFrame =
     Behavior.rfmSegments(metrics(spark, storeDir))
-
-  /** Wire a streaming (user_id, ts, value) source into the loop. */
-  def start(events: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** s24: streaming SCD2 projection history — the online form of q113,
   * completing the projection family's symmetry: q27 (latest state) has
@@ -16,12 +15,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * key-set store discipline.
   *
   * Store layout: `tailDir` holds the open intervals, LWW by batch_id
-  * (the s15/s17 read rule) in batch_id partitions; `closedDir` holds
-  * closed intervals — immutable once written, appended in the batch's
-  * own partition. Replay safety is s23's argument verbatim: a re-run of
-  * batch b reads only tails with batch_id < b (its own previous writes
-  * invisible), recomputes byte-identically — processBatch never reads
-  * closedDir at all — and dynamic overwrite replaces its own partitions.
+  * (the s15/s17 read rule); `closedDir` holds closed intervals —
+  * immutable once written, appended in the batch's own partition, and
+  * never read by processBatch.
   *
   * Per batch the work is ONE shuffle on user_id: the stored tails of the
   * touched users (a left-semi-filtered LWW read) union the batch's
@@ -61,16 +57,8 @@ object Scd2History {
     * highest-batch_id tail row below `batchId`. Schema-stable empty
     * frame before any write. */
   private[graft] def readTailsFull(spark: SparkSession, tailDir: String,
-      batchId: Long): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, tailDir)) return emptyTails(spark)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-    spark.read.parquet(tailDir)
-      .filter(col("batch_id") < batchId) // replay: never see own tails
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_id"), col("status"), col("valid_from"),
-        col("hwm_ts"), col("hwm_eid"))
-  }
+      batchId: Long): DataFrame =
+    BatchStore.latest(spark, tailDir, Seq("user_id"), batchId)(emptyTails(spark))
 
   /** Live open interval per user — the read-path face (no mark). */
   private[graft] def readTails(spark: SparkSession, tailDir: String,
@@ -85,12 +73,10 @@ object Scd2History {
       batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
-    // bound the LWW read: fold committed tail partitions into the base
-    // every TailCompactEvery batches (top-of-batch, so a replay of THIS
-    // batch reads the base = state through batchId − 1, unchanged);
+    // bound the LWW read: fold committed tail partitions into the base;
     // closedDir is append-only facts and never folds
-    if (batchId > 0 && batchId % StoreRead.TailCompactEvery == 0)
-      StoreRead.compactLww(spark, tailDir, Seq("user_id"), batchId)
+    if (BatchStore.foldDue(batchId))
+      BatchStore.fold(spark, tailDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("user_id"), col("event_id"),
       col("event_type").as("status"), col("ts"))
     // only the batch's users can change state; everyone else's tail
@@ -141,12 +127,7 @@ object Scd2History {
       // the dynamic overwrite below rewrites paths a lazy plan might
       // re-read (r9 pinning discipline)
       .localCheckpoint(true)
-    intervals.filter(col("valid_to").isNotNull)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(closedDir)
+    BatchStore.write(intervals.filter(col("valid_to").isNotNull), closedDir, batchId)
     // new high-water mark per touched user = this batch's max (ts,
     // event_id) — the gate above proved every stored mark sits below it
     val hwNew = ev.groupBy(col("user_id").as("hu"))
@@ -154,14 +135,8 @@ object Scd2History {
       .select(col("hu"), col("mx.ts").as("hwm_ts"), col("mx.event_id").as("hwm_eid"))
     val openTails = intervals.filter(col("valid_to").isNull)
       .select(col("user_id"), col("event_id"), col("status"), col("valid_from"))
-    openTails
-      .join(hwNew, openTails("user_id") <=> hwNew("hu"))
-      .drop("hu")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tailDir)
+    BatchStore.write(openTails.join(hwNew, openTails("user_id") <=> hwNew("hu")).drop("hu"),
+      tailDir, batchId)
   }
 
   /** The q113-shaped history over everything ingested so far: all closed
@@ -169,30 +144,13 @@ object Scd2History {
     * R10's not-yet-ended discipline). Schema-stable empty frame before
     * the first write. */
   def history(spark: SparkSession, tailDir: String, closedDir: String): DataFrame = {
-    val closed =
-      if (!StoreRead.hasParquetData(spark, closedDir))
-        emptyTails(spark)
-          .select(col("user_id"), col("event_id"), col("status"), col("valid_from"))
-          .withColumn("valid_to", lit(null).cast("timestamp"))
-      else
-        spark.read.parquet(closedDir)
-          .select(col("user_id"), col("event_id"), col("status"),
-            col("valid_from"), col("valid_to"))
+    val closed = BatchStore.readOr(spark, closedDir)(
+        emptyTails(spark).withColumn("valid_to", lit(null).cast("timestamp")))
+      .select(col("user_id"), col("event_id"), col("status"),
+        col("valid_from"), col("valid_to"))
     val open = readTails(spark, tailDir, Long.MaxValue)
       .withColumn("valid_to", lit(null).cast("timestamp"))
     closed.unionByName(open)
       .orderBy(col("user_id"), col("valid_from"), col("event_id"))
   }
-
-  /** Wire a streaming (user_id, event_id, event_type, ts) source into
-    * the history loop. */
-  def start(events: DataFrame, tailDir: String, closedDir: String,
-      checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, tailDir, closedDir, batchId)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Stats
 
@@ -21,12 +20,9 @@ import graft.queries.Stats
   * (drift), q149→s33 (layout), q151→s36 (forecast) — every batch
   * monitoring query has a store-maintained face.
   *
-  * Replay safety is the additive-store argument verbatim (s16/s21/s26):
-  * a re-run of batch b recomputes byte-identical counts and
-  * dynamic-overwrites its own batch_id partition. The store grows one
-  * (types × days)-bounded partition per batch — calendar-bounded, never
-  * volume-bounded; folding old partitions is s21's watermark compaction
-  * (counts are pointwise-summable).
+  * The store grows one (types × days)-bounded partition per batch —
+  * calendar-bounded, never volume-bounded; folding old partitions is
+  * s21's watermark compaction (counts are pointwise-summable).
   *
   * Scale posture: per batch ONE map-side-combined aggregate of the
   * batch only; the read is one shuffle over ≤ types × days ×
@@ -42,10 +38,11 @@ import graft.queries.Stats
   */
 object SeasonalMonitor {
 
+  /** The stored partial schema: `sum_v` is the sum of decimal(18,4). */
   private def emptyDaily(spark: SparkSession): DataFrame =
     spark.range(0).select(lit("").as("event_type"),
       lit(null).cast("date").as("d"), lit(0L).as("n"),
-      lit(0.0).as("sum_v"))
+      lit(null).cast("decimal(28,4)").as("sum_v"))
 
   /** One micro-batch of (event_type, ts, value): exact per-(type, day)
     * counts AND the exact DECIMAL value sum → the batch's own partition.
@@ -56,24 +53,19 @@ object SeasonalMonitor {
     * holt read too). */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch
+    val partials = batch
       .select(col("event_type"), to_date(date_trunc("day", col("ts"))).as("d"),
         col("value"))
       .groupBy(col("event_type"), col("d"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,4)")).as("sum_v"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(partials, storeDir, batchId)
   }
 
   /** The merged (event_type, d, n, sum_v) daily panel — the dailyOf
     * equivalence every read below starts from. */
   private def mergedDaily(spark: SparkSession, storeDir: String): DataFrame =
-    if (!StoreRead.hasParquetData(spark, storeDir)) emptyDaily(spark)
-    else spark.read.parquet(storeDir)
+    BatchStore.readOr(spark, storeDir)(emptyDaily(spark))
       .groupBy(col("event_type"), col("d"))
       .agg(sum(col("n")).as("n"), sum(col("sum_v")).cast("double").as("sum_v"))
 
@@ -92,14 +84,9 @@ object SeasonalMonitor {
     * under ANY batch split; replay no-op inherits from the shared
     * store. */
   def decayed(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.decayedEngagement(
-      if (!StoreRead.hasParquetData(spark, storeDir))
-        spark.range(0).select(lit("").as("event_type"),
-          lit(null).cast("date").as("d"),
-          lit(null).cast("decimal(18,4)").as("sum_v"))
-      else spark.read.parquet(storeDir)
-        .groupBy(col("event_type"), col("d"))
-        .agg(sum(col("sum_v")).as("sum_v")))
+    Stats.decayedEngagement(BatchStore.readOr(spark, storeDir)(emptyDaily(spark))
+      .groupBy(col("event_type"), col("d"))
+      .agg(sum(col("sum_v")).as("sum_v")))
 
   /** s43: the THIRD read — q167's Holt level/trend smoothing over the
     * same merged panel, through the SAME `Stats.holtOf` kernel. The
@@ -161,14 +148,4 @@ object SeasonalMonitor {
     * count-merge argument verbatim. Replay no-op inherits. */
   def mannKendall(spark: SparkSession, storeDir: String): DataFrame =
     Stats.mannKendallOf(mergedDaily(spark, storeDir))
-
-  /** Wire a streaming (event_type, ts) source into the loop. */
-  def start(events: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Pack
 
@@ -15,13 +14,10 @@ import graft.queries.Pack
   * discipline with the tiniest possible store.
   *
   * Store layout (tailDir): one row per shard updated this batch —
-  * (shard_id, fill, bin, batch_id) in the batch's own partition; the
+  * (shard_id, fill, bin, max_doc) in the batch's own partition; the
   * live tail per shard is the row with the highest batch_id (LWW, the
-  * s15/s17 read rule). Assignments land in assignDir partitioned by
-  * batch_id. Replay safety: a re-run of batch b reads only tails with
-  * batch_id < b — its own previous writes are invisible — recomputes
-  * byte-identical output, and dynamic overwrite replaces its own
-  * partitions (StreamingSpec pins the no-op).
+  * s15/s17 read rule). Assignments land in assignDir, one partition per
+  * batch.
   *
   * Batch-parity law (StreamingSpec): when documents arrive in doc_id
   * order (each batch's ids after the previous batch's), the accumulated
@@ -48,18 +44,15 @@ import graft.queries.Pack
 object SequencePacker {
 
   /** Live (shard_id → (fill, bin, max_doc)) tails: highest-batch_id row
-    * per shard below `batchId`. Empty map before any write (StoreRead
-    * guard). `max_doc` is the shard's doc_id high-water mark — the
-    * enforcement handle of the arrival-order contract. */
+    * per shard below `batchId`; empty before any write. `max_doc` is
+    * the shard's doc_id high-water mark — the enforcement handle of the
+    * arrival-order contract. */
   private[graft] def readTails(spark: SparkSession, tailDir: String,
       batchId: Long): Map[Long, (Long, Long, Long)] = {
-    if (!StoreRead.hasParquetData(spark, tailDir)) return Map.empty
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("shard_id")).orderBy(col("batch_id").desc)
-    spark.read.parquet(tailDir)
-      .filter(col("batch_id") < batchId) // replay: never see own tails
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    import spark.implicits._
+    // a local empty frame: collecting it runs no job
+    val empty = Seq.empty[(Long, Long, Long, Long)].toDF("shard_id", "fill", "bin", "max_doc")
+    BatchStore.latest(spark, tailDir, Seq("shard_id"), batchId)(empty)
       .select(col("shard_id"), col("fill"), col("bin"), col("max_doc"))
       .collect() // O(shards) rows — bounded driver state by design
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -74,10 +67,8 @@ object SequencePacker {
     if (batch.isEmpty) return
     import spark.implicits._
     // bound the LWW read: fold committed tail partitions into the base
-    // every TailCompactEvery batches (top-of-batch, so a replay of THIS
-    // batch reads the base = state through batchId − 1, unchanged)
-    if (batchId > 0 && batchId % StoreRead.TailCompactEvery == 0)
-      StoreRead.compactLww(spark, tailDir, Seq("shard_id"), batchId)
+    if (BatchStore.foldDue(batchId))
+      BatchStore.fold(spark, tailDir, batchId)(BatchStore.lastWins(Seq("shard_id")))
     val tails = readTails(spark, tailDir, batchId)
     // arrival-order gate: O(shards) per-shard minima vs the stored
     // high-water marks, checked BEFORE any sink write so a violating
@@ -127,41 +118,27 @@ object SequencePacker {
       // the dynamic overwrite below rewrites paths a lazy plan might
       // re-read (r9 pinning discipline)
       .localCheckpoint(true)
-    asg.select(col("shard_id"), col("doc_id"), col("t"), col("bin_id"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(assignDir)
+    BatchStore.write(asg.select(col("shard_id"), col("doc_id"), col("t"), col("bin_id")),
+      assignDir, batchId)
     // new tail per touched shard = state after that shard's LAST doc,
     // plus the shard's new doc_id high-water mark (the order gate above
     // guarantees it's this batch's max — all stored docs sit below it)
-    asg.groupBy(col("shard_id"))
+    val newTails = asg.groupBy(col("shard_id"))
       .agg(max_by(struct(col("fill_after").as("fill"), col("bin_id").as("bin")),
         col("doc_id")).as("m"),
         max(col("doc_id")).as("max_doc"))
       .select(col("shard_id"), col("m").getField("fill").as("fill"),
         col("m").getField("bin").as("bin"), col("max_doc"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tailDir)
+    BatchStore.write(newTails, tailDir, batchId)
   }
 
   /** The q96-shaped summary over everything packed so far: bins span
     * batches, so the aggregate keys on (shard_id, bin_id) across all
     * assignment partitions. Schema-stable empty frame before the first
     * write. */
-  def packedSummary(spark: SparkSession, assignDir: String): DataFrame = {
-    val rows =
-      if (!StoreRead.hasParquetData(spark, assignDir))
-        spark.range(0).select(col("id").as("shard_id"), col("id").as("doc_id"),
-          col("id").as("t"), col("id").as("bin_id"))
-      else
-        spark.read.parquet(assignDir)
-          .select(col("shard_id"), col("doc_id"), col("t"), col("bin_id"))
-    rows
+  def packedSummary(spark: SparkSession, assignDir: String): DataFrame =
+    BatchStore.readOr(spark, assignDir)(spark.range(0).select(col("id").as("shard_id"),
+        col("id").as("doc_id"), col("id").as("t"), col("id").as("bin_id")))
       .groupBy(col("shard_id"), col("bin_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("t")).as("bin_tokens"),
@@ -169,16 +146,4 @@ object SequencePacker {
         max(col("doc_id")).as("max_doc"))
       .withColumn("fill4", graft.ops.Dsl.ratio4(col("bin_tokens"), lit(Pack.PackContext)))
       .orderBy(col("shard_id"), col("bin_id"))
-  }
-
-  /** Wire a streaming (doc_id, text, …) source into the packing loop. */
-  def start(docs: DataFrame, tailDir: String, assignDir: String,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, tailDir, assignDir, batchId)
-      }
-      .start()
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.{Windows => WindowsQ}
 
@@ -30,9 +29,7 @@ import graft.queries.{Windows => WindowsQ}
   *
   * Store layout: `openDir` = per-user open session, LWW by batch_id
   * (doubles as the order high-water mark via its `last` struct);
-  * `closedDir` = closed sessions in the batch's own partition. Replay of
-  * batch b reads only batch_id < b and dynamic-overwrites both of its
-  * partitions byte-identically.
+  * `closedDir` = closed sessions in the batch's own partition.
   *
   * Read: [[flow]] = q178's `Windows.flowOf` finisher over closed ∪ open —
   * row-for-row equal to batch q178 on the log so far, INCLUDING the
@@ -55,15 +52,8 @@ object SessionTracker {
 
   /** Per-user open session: highest-batch_id state row below `batchId`. */
   private def readOpen(spark: SparkSession, openDir: String,
-      batchId: Long): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, openDir)) return emptyOpen(spark)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-    spark.read.parquet(openDir)
-      .filter(col("batch_id") < batchId) // replay: never see own state
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("first"), col("last"), col("n_events"))
-  }
+      batchId: Long): DataFrame =
+    BatchStore.latest(spark, openDir, Seq("user_id"), batchId)(emptyOpen(spark))
 
   /** One micro-batch of (user_id, event_id, event_type, ts): merge its
     * sessions with the open state, close what time has closed, advance
@@ -72,8 +62,8 @@ object SessionTracker {
       batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
-    if (batchId > 0 && batchId % StoreRead.TailCompactEvery == 0)
-      StoreRead.compactLww(spark, openDir, Seq("user_id"), batchId)
+    if (BatchStore.foldDue(batchId))
+      BatchStore.fold(spark, openDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
     val stored = readOpen(spark, openDir, batchId)
     val batchUsers = ev.select(col("user_id").as("bu")).distinct()
@@ -113,42 +103,18 @@ object SessionTracker {
     val ranked = merged.withColumn("rn",
       row_number().over(Window.partitionBy(col("user_id")).orderBy(col("sid").desc)))
       .localCheckpoint(true) // one evaluation feeds both writes
-    ranked.filter(col("rn") > 1)
-      .select(col("user_id"), col("first"), col("last"), col("n_events"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(closedDir)
-    ranked.filter(col("rn") === 1)
-      .select(col("user_id"), col("first"), col("last"), col("n_events"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(openDir)
+    val session = Seq("user_id", "first", "last", "n_events").map(col)
+    BatchStore.write(ranked.filter(col("rn") > 1).select(session: _*), closedDir, batchId)
+    BatchStore.write(ranked.filter(col("rn") === 1).select(session: _*), openDir, batchId)
   }
 
   /** The q178-shaped flow report over everything ingested so far —
     * closed sessions plus the currently-open ones, exactly the horizon
     * batch q178 sees. */
   def flow(spark: SparkSession, openDir: String, closedDir: String): DataFrame = {
-    val closed =
-      if (!StoreRead.hasParquetData(spark, closedDir)) emptyOpen(spark)
-      else spark.read.parquet(closedDir)
-        .select(col("user_id"), col("first"), col("last"), col("n_events"))
+    val closed = BatchStore.readOr(spark, closedDir)(emptyOpen(spark))
+      .select(col("user_id"), col("first"), col("last"), col("n_events"))
     val open = readOpen(spark, openDir, Long.MaxValue)
     WindowsQ.flowOf(closed.unionByName(open))
   }
-
-  /** Wire a streaming (user_id, event_id, event_type, ts) source in. */
-  def start(events: DataFrame, openDir: String, closedDir: String,
-      checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, openDir, closedDir, batchId)
-      }
-      .start()
 }

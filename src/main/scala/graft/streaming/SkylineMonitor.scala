@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Skyline
 
@@ -14,8 +13,7 @@ import graft.queries.Skyline
   * SAME `Skyline.frontierOfCounts` finisher, so the dominance definition
   * exists exactly once.
   *
-  * Additive family: counts merge by SUM under ANY batch split; replay
-  * dynamic-overwrites its own batch_id partition byte-identically. The
+  * Additive family: counts merge by SUM under ANY batch split. The
   * frontier itself is NOT mergeable (a point can be knocked off by a
   * later batch's better point — which is exactly why the store holds the
   * domain-bounded candidate counts, never the frontier), but the
@@ -37,33 +35,17 @@ object SkylineMonitor {
     * own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch.groupBy(col("qty"), col("price")).agg(count(lit(1)).as("n"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(batch.groupBy(col("qty"), col("price")).agg(count(lit(1)).as("n")),
+      storeDir, batchId)
   }
 
   /** The q163-shaped frontier over everything ingested so far —
     * row-for-row equal to batch q163 on the concatenated input under ANY
     * batch split. */
   def frontier(spark: SparkSession, storeDir: String): DataFrame = {
-    val counts =
-      if (!StoreRead.hasParquetData(spark, storeDir)) emptyCounts(spark)
-      else spark.read.parquet(storeDir)
-        .groupBy(col("qty"), col("price"))
-        .agg(sum(col("n")).as("n"))
+    val counts = BatchStore.readOr(spark, storeDir)(emptyCounts(spark))
+      .groupBy(col("qty"), col("price"))
+      .agg(sum(col("n")).as("n"))
     Skyline.frontierOfCounts(counts)
   }
-
-  /** Wire a streaming (qty, price) source into the loop. */
-  def start(rows: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Behavior
 
@@ -18,8 +17,7 @@ import graft.queries.Behavior
   * with no arrival-order assumption — a user's first-purchase time is
   * the MIN over batches of per-batch MINs regardless of which batch saw
   * it first (MIN ignores the null partials of batches where the user
-  * didn't purchase). Replay of batch b recomputes byte-identical
-  * partials and dynamic-overwrites its own batch_id partition.
+  * didn't purchase).
   *
   * The censoring semantics come out right BY CONSTRUCTION online: a user
   * who hasn't purchased yet has a null tp across all partials and is
@@ -45,34 +43,17 @@ object SurvivalMonitor {
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    Behavior.userSpans(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(Behavior.userSpans(batch), storeDir, batchId)
   }
 
   /** The q164-shaped hazard table over everything ingested so far —
     * row-for-row equal to batch q164 on the concatenated log under ANY
     * batch split. */
   def hazard(spark: SparkSession, storeDir: String): DataFrame = {
-    val spans =
-      if (!StoreRead.hasParquetData(spark, storeDir)) emptySpans(spark)
-      else spark.read.parquet(storeDir)
-        .groupBy(col("user_id"))
-        .agg(min(col("t0")).as("t0"), min(col("tp")).as("tp"),
-          max(col("tend")).as("tend"))
+    val spans = BatchStore.readOr(spark, storeDir)(emptySpans(spark))
+      .groupBy(col("user_id"))
+      .agg(min(col("t0")).as("t0"), min(col("tp")).as("tp"),
+        max(col("tend")).as("tend"))
     Behavior.hazardOfSpans(spans)
   }
-
-  /** Wire a streaming (user_id, ts, event_type) source into the loop. */
-  def start(events: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

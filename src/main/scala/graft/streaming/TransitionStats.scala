@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Behavior
 
@@ -27,9 +25,7 @@ import graft.queries.Behavior
   * tail IS the order high-water mark — no separate mark column needed,
   * unlike s24 whose tail keeps its OPENING event); `countsDir` = additive
   * per-(batch, pair) count partials in the batch's own partition, merged
-  * by SUM at read (the s16/s21/s26 additive-store discipline). Replay of
-  * batch b reads only batch_id < b and dynamic-overwrites its own
-  * partitions byte-identically.
+  * by SUM at read (the s16/s21/s26 additive-store discipline).
   *
   * Per batch: one window pass over tail ∪ batch (the touched users
   * only), a ≤ |types|²-cardinality aggregate, and two bounded writes —
@@ -44,15 +40,8 @@ object TransitionStats {
 
   /** Per-user last event: highest-batch_id tail row below `batchId`. */
   private[graft] def readTails(spark: SparkSession, tailDir: String,
-      batchId: Long): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, tailDir)) return emptyTails(spark)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-    spark.read.parquet(tailDir)
-      .filter(col("batch_id") < batchId) // replay: never see own tails
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-  }
+      batchId: Long): DataFrame =
+    BatchStore.latest(spark, tailDir, Seq("user_id"), batchId)(emptyTails(spark))
 
   /** One micro-batch of (user_id, event_id, event_type, ts): emit its
     * pair counts (boundary pair included) and advance the tails. */
@@ -60,8 +49,8 @@ object TransitionStats {
       batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
-    if (batchId > 0 && batchId % StoreRead.TailCompactEvery == 0)
-      StoreRead.compactLww(spark, tailDir, Seq("user_id"), batchId)
+    if (BatchStore.foldDue(batchId))
+      BatchStore.fold(spark, tailDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
     val stored = readTails(spark, tailDir, batchId)
     val batchUsers = ev.select(col("user_id").as("bu")).distinct()
@@ -88,51 +77,28 @@ object TransitionStats {
           .mkString("; "))
     // q153's OWN pair kernel over tail ∪ batch: the tail sorts first
     // under the gated order, contributing exactly the boundary pair
-    Behavior.transitionCounts(storedTouched.unionByName(ev))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(countsDir)
+    BatchStore.write(Behavior.transitionCounts(storedTouched.unionByName(ev)),
+      countsDir, batchId)
     // new tail per touched user = the batch's max (ts, event_id) event
     // (the gate proved it dominates the stored tail)
-    ev.groupBy(col("user_id"))
+    val newTails = ev.groupBy(col("user_id"))
       .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("mx"))
       .select(col("user_id"), col("mx.event_type").as("event_type"),
         col("mx.ts").as("ts"), col("mx.event_id").as("event_id"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tailDir)
+    BatchStore.write(newTails, tailDir, batchId)
   }
 
   /** Merged pair counts over everything ingested: SUM of the additive
     * partials (associative and commutative — any split merges equal). */
-  private[graft] def counts(spark: SparkSession, countsDir: String): DataFrame = {
-    if (!StoreRead.hasParquetData(spark, countsDir))
-      return spark.range(0).select(lit("").as("from_type"), lit("").as("to_type"),
-        col("id").as("n_transitions"))
-    spark.read.parquet(countsDir)
+  private[graft] def counts(spark: SparkSession, countsDir: String): DataFrame =
+    BatchStore.readOr(spark, countsDir)(spark.range(0).select(lit("").as("from_type"),
+        lit("").as("to_type"), col("id").as("n_transitions")))
       .groupBy(col("from_type"), col("to_type"))
       .agg(sum(col("n_transitions")).as("n_transitions"))
-  }
 
   /** The q153-shaped matrix over everything ingested so far — the shared
     * [[Behavior.transitionProbs]] finisher on the merged panel. */
   def transitions(spark: SparkSession, countsDir: String): DataFrame =
     Behavior.transitionProbs(counts(spark, countsDir))
       .orderBy(col("from_type"), col("to_type"))
-
-  /** Wire a streaming (user_id, event_id, event_type, ts) source into
-    * the maintenance loop. */
-  def start(events: DataFrame, tailDir: String, countsDir: String,
-      checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, tailDir, countsDir, batchId)
-      }
-      .start()
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Dsl.{cosine, round4}
 import graft.queries.Vectors
@@ -19,16 +18,11 @@ import graft.queries.Vectors
   * `foreachBatch` assigns each batch against the broadcast codebook with
   * the SAME [[Vectors.assign]] kernel the batch queries use (one
   * tie-break definition — csim DESC, cell ASC — everywhere), and writes
-  * (vec_id, cell, embedding) into the batch's own `batch_id` partition.
-  * Like s15 and unlike s14, the upsert never reads the store (a batch's
-  * assignments are a pure function of batch × codebook), so replay
-  * safety is the write discipline alone: dynamic-partition-overwrite of
-  * the batch's own partition. A re-streamed vec_id is an UPDATE — the
-  * read view resolves last-writer-wins per vec_id, and compaction folds
-  * the store to one LWW-resolved base partition with s15's crash
-  * argument (base commits before any delete; an undeleted winner
-  * partition carries exactly the rows the base stored for it, so every
-  * intermediate state reads identically).
+  * (vec_id, cell, embedding) into the batch's own partition. Like s15
+  * and unlike s14, the upsert never reads the store (a batch's
+  * assignments are a pure function of batch × codebook). A re-streamed
+  * vec_id is an UPDATE — the read view resolves last-writer-wins per
+  * vec_id, and compaction folds the store to one LWW-resolved base.
   *
   * Scale posture: per batch, work is one broadcast-codebook map-side
   * similarity pass + one row_number shuffle on vec_id (batch-sized, not
@@ -40,35 +34,33 @@ import graft.queries.Vectors
   * unchanged if a deployment's cells grow hot. */
 object VectorIndex {
 
-  /** Fold the store's base partition every this-many batches. */
-  val CompactEvery = 8L
-
   /** One micro-batch upsert: assign against the static codebook, land in
     * this batch's own partition. Exposed for direct testing. */
   def processBatch(batch: DataFrame, cells: DataFrame, storeDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    if (batchId > 0 && batchId % CompactEvery == 0)
+    if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)
-    Vectors.assign(batch.select(col("vec_id"), col("embedding")), cells)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    BatchStore.write(Vectors.assign(batch.select(col("vec_id"), col("embedding")), cells),
+      storeDir, batchId)
   }
 
-  /** The index's current membership after per-vector LWW resolution —
-    * (vec_id, embedding, cell), one version per vector. */
-  def currentMembers(spark: SparkSession, storeDir: String): DataFrame = {
+  /** Per-vector LWW over store rows: each vec_id's row of its max
+    * batch_id. */
+  private def lastVersion(rows: DataFrame): DataFrame = {
     val wv = Window.partitionBy(col("vec_id"))
-    spark.read.parquet(storeDir)
+    rows
       .select(col("vec_id"), col("embedding"), col("cell"),
         col("batch_id").cast("long").as("batch_id"))
       .withColumn("mx", max(col("batch_id")).over(wv))
       .filter(col("batch_id") === col("mx"))
       .select(col("vec_id"), col("embedding"), col("cell"))
   }
+
+  /** The index's current membership after per-vector LWW resolution —
+    * (vec_id, embedding, cell), one version per vector. */
+  def currentMembers(spark: SparkSession, storeDir: String): DataFrame =
+    lastVersion(spark.read.parquet(storeDir))
 
   /** q56's probe against the streamed store: the stored vector `qId`
     * ranks the codebook cells, its NProbe nearest are semi-joined against
@@ -90,47 +82,8 @@ object VectorIndex {
       .limit(k)
   }
 
-  /** Fold every committed store partition (0 ≤ batch_id < upToBatch) plus
-    * the previous base into ONE LWW-resolved base partition
-    * (batch_id = −1), then delete the folded partitions — s15's fold with
-    * s15's failure analysis (the base lands before any delete; every
-    * intermediate state's per-vector max-batch rows equal the base's). */
-  def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val dir = new Path(storeDir)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val folded = fs.listStatus(dir).map(_.getPath).filter { p =>
-      p.getName.startsWith("batch_id=") &&
-        scala.util.Try(p.getName.stripPrefix("batch_id=").toLong)
-          .toOption.exists(v => v >= 0 && v < upToBatch)
-    }
-    if (folded.isEmpty) return
-    val wv = Window.partitionBy(col("vec_id"))
-    val base = spark.read.parquet(storeDir)
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        col("batch_id").cast("long").as("batch_id"))
-      .filter(col("batch_id") < upToBatch) // includes the previous base (−1)
-      .withColumn("mx", max(col("batch_id")).over(wv))
-      .filter(col("batch_id") === col("mx"))
-      .select(col("vec_id"), col("embedding"), col("cell"))
-      .localCheckpoint(true) // pin: the overwrite below rewrites the source path
-    base.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-    folded.foreach(p => fs.delete(p, true))
-  }
-
-  /** Wire a streaming (vec_id, embedding, …) source into the index. */
-  def start(vecs: DataFrame, cells: DataFrame, storeDir: String,
-      checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, cells, storeDir, batchId)
-      }
-      .start()
+  /** Fold every committed partition below `upToBatch` into one
+    * LWW-resolved base partition. */
+  def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
+    BatchStore.fold(spark, storeDir, upToBatch)(lastVersion)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.Vectors
 
@@ -17,15 +16,10 @@ import graft.queries.Vectors
   * the merge has no precision question and commutes with any batch
   * split).
   *
-  * The store is ADDITIVE, so replay safety and compaction follow s16's
-  * discipline, not s14's: a re-run overwrites its own batch_id partition
-  * with recomputed identical content, and compaction's base partition
-  * (batch_id = −1) carries the covered_upto WATERMARK — readers take the
-  * base plus batch partitions ≥ covered_upto, so folded-but-undeleted
-  * partitions go invisible the instant the new base commits and the
-  * delete sweep is pure GC (can crash, re-run, or never run without
-  * changing a single stat). [[foldBase]]/[[sweepFolded]] are split so
-  * StreamingSpec can hold the crash window open.
+  * The store is ADDITIVE, so compaction follows s16's coverage
+  * watermark (see [[BatchStore]]), not s14's write-then-delete.
+  * [[foldBase]]/[[sweepFolded]] are split so StreamingSpec can hold the
+  * crash window open.
   *
   * Scale posture: per batch the shuffle is dim-cardinality partials
   * (64 rows) regardless of batch size — the cheapest possible store
@@ -33,31 +27,16 @@ import graft.queries.Vectors
   * the base; the merged read is an aggregate over that bounded frame. */
 object VectorStats {
 
-  /** Fold the store every this-many batches (s14/s16's cadence). */
-  val CompactEvery = 8L
-
   private def partialCols = Seq("i", "n", "n_pos", "sq", "mnq", "mxq").map(col)
 
   /** One micro-batch: exact partials → own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    if (batchId > 0 && batchId % CompactEvery == 0)
+    if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)
-    Vectors.statPartials(batch)
-      .select(partialCols :+ lit(null).cast("long").as("covered_upto")
-        :+ lit(batchId).as("batch_id"): _*)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-  }
-
-  /** Store rows a reader may count: base + batch partitions the base does
-    * not already cover (s16's watermark read). */
-  private def liveRows(all: DataFrame): DataFrame = {
-    val upto = StoreRead.coveredUptoFrame(all)
-    all.crossJoin(broadcast(upto))
-      .filter(col("batch_id") === -1L || col("batch_id") >= col("_upto"))
+    val partials = Vectors.statPartials(batch)
+      .select(partialCols :+ lit(null).cast("long").as("covered_upto"): _*)
+    BatchStore.write(partials, storeDir, batchId)
   }
 
   /** Pointwise combine of partial rows — exact, associative,
@@ -74,13 +53,11 @@ object VectorStats {
     * frame flows through combine+finalize, so the schema is derived from
     * the one real path, not duplicated here. */
   def stats(spark: SparkSession, storeDir: String): DataFrame = {
-    val rows =
-      if (!StoreRead.hasParquetData(spark, storeDir))
-        spark.range(0).select(
-          col("id").cast("int").as("i"), col("id").as("n"),
-          col("id").as("n_pos"), col("id").as("sq"),
-          col("id").as("mnq"), col("id").as("mxq"))
-      else liveRows(spark.read.parquet(storeDir))
+    val rows = BatchStore.read(spark, storeDir).map(BatchStore.live).getOrElse(
+      spark.range(0).select(
+        col("id").cast("int").as("i"), col("id").as("n"),
+        col("id").as("n_pos"), col("id").as("sq"),
+        col("id").as("mnq"), col("id").as("mxq")))
     Vectors.statFinalize(combine(rows))
   }
 
@@ -89,56 +66,27 @@ object VectorStats {
     * upToBatch. Readers stop seeing the folded partitions the moment
     * this commits (watermark filter) — no double count regardless of
     * when the sweep runs. */
-  def foldBase(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val dir = new Path(storeDir)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val all = spark.read.parquet(storeDir)
-    // a regressed watermark would re-expose covered-but-unswept batch
-    // partitions to liveRows (double count) — fail loudly (r16 advisor)
-    val current = StoreRead.coveredUpto(all)
-    require(upToBatch >= current,
-      s"s21 foldBase: upToBatch $upToBatch < current covered_upto $current — " +
-        "a regressed watermark re-exposes folded batch partitions")
-    val newBase = combine(
-      liveRows(all).filter(col("batch_id") === -1L || col("batch_id") < upToBatch))
-      .localCheckpoint(true) // pin: the overwrite below rewrites the source path
-    newBase
-      .select(partialCols :+ lit(upToBatch).as("covered_upto")
-        :+ lit(-1L).as("batch_id"): _*)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-  }
+  def foldBase(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
+    BatchStore.read(spark, storeDir).foreach { all =>
+      // a regressed watermark would re-expose covered-but-unswept batch
+      // partitions to the live read (double count) — fail loudly
+      val current = BatchStore.coveredUpto(all)
+      require(upToBatch >= current,
+        s"s21 foldBase: upToBatch $upToBatch < current covered_upto $current — " +
+          "a regressed watermark re-exposes folded batch partitions")
+      val newBase = combine(
+        BatchStore.live(all).filter(col("batch_id") === -1L || col("batch_id") < upToBatch))
+        .localCheckpoint(true) // pin: the overwrite below rewrites the source path
+      BatchStore.write(newBase.select(partialCols :+ lit(upToBatch).as("covered_upto"): _*),
+        storeDir, -1L)
+    }
 
   /** Phase 2: garbage-collect covered batch partitions (pure cleanup). */
-  def sweepFolded(spark: SparkSession, storeDir: String): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val dir = new Path(storeDir)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val covered = StoreRead.coveredUpto(spark.read.parquet(storeDir))
-    fs.listStatus(dir).map(_.getPath).filter { p =>
-      p.getName.startsWith("batch_id=") &&
-        scala.util.Try(p.getName.stripPrefix("batch_id=").toLong)
-          .toOption.exists(v => v >= 0 && v < covered)
-    }.foreach(p => fs.delete(p, true))
-  }
+  def sweepFolded(spark: SparkSession, storeDir: String): Unit =
+    BatchStore.sweepCovered(spark, storeDir)
 
   def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
     foldBase(spark, storeDir, upToBatch)
     sweepFolded(spark, storeDir)
   }
-
-  /** Wire a streaming (vec_id, embedding, …) source into the stats loop. */
-  def start(vectors: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, storeDir, batchId)
-      }
-      .start()
 }

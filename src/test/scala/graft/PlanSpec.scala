@@ -616,6 +616,7 @@ class PlanSpec extends SparkSpec {
           concat(lit("B"), lpad((col("id") % 2000).cast("string"), 4, "0")).as("p_brand"))
       val out = graft.queries.Basket.basketPairs(li, brands)
       assert(out.count() > 0)
+      out.collect() // finalize the adaptive plan of `out` itself, not count()'s
       val finalPlan = out.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"AQE did not split q160's hot-basket self-join:\n${finalPlan.take(2000)}")

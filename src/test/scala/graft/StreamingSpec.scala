@@ -35,8 +35,10 @@ class StreamingSpec extends SparkSpec {
     val textB = "completely different content about spark structured streaming dedup state"
     val textC = "a third unrelated document mentioning parquet columnar storage layouts"
     val input = MemoryStream[(Long, String)]
-    val query = graft.streaming.IncrementalDedup.start(
-      input.toDF().toDF("doc_id", "text"), storeDir, acceptDir, rejectDir, ckptDir)
+    val query = graft.streaming.BatchStore.start(input.toDF().toDF("doc_id", "text"), ckptDir) {
+      (batch, batchId) => graft.streaming.IncrementalDedup.processBatch(
+        batch, storeDir, acceptDir, rejectDir, batchId)
+    }
     try {
       // batch 1: doc 1 = A, doc 2 = exact copy of A (same signature ->
       // same buckets -> rejected by the smaller-id rule), doc 3 = B
@@ -142,8 +144,9 @@ class StreamingSpec extends SparkSpec {
       graft.streaming.IncrementalIndex.readIndex(spark, storeDir)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     val input = MemoryStream[(Long, String)]
-    val query = graft.streaming.IncrementalIndex.start(
-      input.toDF().toDF("doc_id", "text"), storeDir, ckptDir)
+    val query = graft.streaming.BatchStore.start(input.toDF().toDF("doc_id", "text"), ckptDir) {
+      (batch, batchId) => graft.streaming.IncrementalIndex.processBatch(batch, storeDir, batchId)
+    }
     try {
       input.addData((1L, textA), (2L, textB))
       query.processAllAvailable()
@@ -1459,7 +1462,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("tail-store compaction (s23/s24/s25/s27): parity across the fold; store stays O(keys); crash window invisible; gates survive") {
-    import graft.streaming.StoreRead
+    import graft.streaming.BatchStore
     def partNames(dir: String): Set[String] = {
       val f = new java.io.File(dir)
       if (!f.exists()) Set.empty
@@ -1472,9 +1475,9 @@ class StreamingSpec extends SparkSpec {
       } else java.nio.file.Files.copy(src.toPath, dst.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    // ten batches cross the TailCompactEvery = 8 boundary: batch 8's
+    // ten batches cross the FoldEvery = 8 boundary: batch 8's
     // top-of-batch fold leaves {base, 8, 9} — O(keys) + tail partitions
-    assert(StoreRead.TailCompactEvery == 8L, "test assumes the 8-batch cadence")
+    assert(BatchStore.FoldEvery == 8L, "test assumes the 8-batch cadence")
 
     // ---- s23 (shard-keyed tails) + the crash-window law
     locally {
@@ -1504,7 +1507,7 @@ class StreamingSpec extends SparkSpec {
       processBatch(slice(9), td, ad, 9L) // reads through the leftover
       val want = packedSummary(spark, ad).collect().toSeq
       // re-run of the crashed fold clears the leftover, view unchanged
-      StoreRead.compactLww(spark, td, Seq("shard_id"), 9L)
+      BatchStore.fold(spark, td, 9L)(BatchStore.lastWins(Seq("shard_id")))
       assert(partNames(td) == Set("batch_id=-1", "batch_id=9"))
       assert(packedSummary(spark, ad).collect().toSeq == want)
       // parity with batch q96 across fold + leftover + refold
@@ -2745,5 +2748,148 @@ class StreamingSpec extends SparkSpec {
     processBatch(ord.filter(pmod(col("o_orderkey"), lit(3)) === 1L), storeDir, 1L)
     assert(rows(gini(spark, storeDir)) == wantG, "replay changed the Gini")
     SparkEntry.clearGraftCaches(spark)
+  }
+
+  test("empty-store law: every store read is empty with its one-batch schema, before any write and over a _SUCCESS-only store") {
+    import graft.streaming._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{size, split}
+    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
+    val docs = graft.tables.Tables.documents(spark, sf001).localCheckpoint(true)
+    val orders = graft.tables.Tables.orders(spark, sf001)
+    val cents = (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long")
+    val dims = graft.queries.ZOrder.ordersDims(spark, sf001).localCheckpoint(true)
+    val dom = graft.queries.ZOrder.domainOf(dims).localCheckpoint(true)
+    val tok = docs.select(col("source"), col("doc_id"),
+      size(split(col("text"), " ")).cast("long").as("n_tok"))
+    val budgets = graft.queries.Sampling.mixBudgets(tok.select(col("source"), col("n_tok")))
+      .localCheckpoint(true)
+    lazy val bench = Decontamination.benchIndexOf(docs.filter(col("source") === "src0"))
+    // (store, its sub-directories, one real batch 0, its reads); every
+    // path is relative to a fresh root per store state
+    type Dir = String => String
+    val laws: Seq[(String, Seq[String], Dir => Unit, Seq[(String, Dir => DataFrame)])] = Seq(
+      ("ledger", Seq("s"), d => LedgerStore.processBatch(ev, d("s"), 0L),
+        Seq("ledger" -> (d => LedgerStore.ledger(spark, d("s"))))),
+      ("ndv", Seq("s"), d => NdvMonitor.processBatch(ev, d("s"), 0L),
+        Seq("ndv" -> (d => NdvMonitor.ndv(spark, d("s"))))),
+      ("bootstrap", Seq("s"), d => BootstrapMonitor.processBatch(ev, d("s"), 0L),
+        Seq("ci" -> (d => BootstrapMonitor.ci(spark, d("s"))))),
+      ("rfm", Seq("s"), d => RfmMonitor.processBatch(ev, d("s"), 0L),
+        Seq("segments" -> (d => RfmMonitor.segments(spark, d("s"))))),
+      ("seasonal", Seq("s"), d => SeasonalMonitor.processBatch(ev, d("s"), 0L),
+        Seq("baseline" -> (d => SeasonalMonitor.baseline(spark, d("s"))),
+          "decayed" -> (d => SeasonalMonitor.decayed(spark, d("s"))),
+          "holt" -> (d => SeasonalMonitor.holt(spark, d("s"))))),
+      ("chisq", Seq("s"), d => ChisqMonitor.processBatch(ev, d("s"), 0L),
+        Seq("readout" -> (d => ChisqMonitor.readout(spark, d("s"))))),
+      ("bars", Seq("s"), d => BarStats.processBatch(ev, d("s"), 0L),
+        Seq("bars" -> (d => BarStats.bars(spark, d("s"))))),
+      ("survival", Seq("s"), d => SurvivalMonitor.processBatch(ev, d("s"), 0L),
+        Seq("hazard" -> (d => SurvivalMonitor.hazard(spark, d("s"))))),
+      ("drift", Seq("s"), d => DriftMonitor.processBatch(ev, d("s"), 0L),
+        Seq("drift" -> (d => DriftMonitor.drift(spark, d("s"))),
+          "bands" -> (d => DriftMonitor.bands(spark, d("s"))))),
+      ("colstats", Seq("s"), d => ColumnStats.processBatch(orders.select(cents.as("v")), d("s"), 0L),
+        Seq("stats" -> (d => ColumnStats.stats(spark, d("s"))))),
+      ("skyline", Seq("s"), d => SkylineMonitor.processBatch(graft.tables.Tables.lineitem(spark, sf001)
+          .select(col("l_quantity").as("qty"), col("l_extendedprice").as("price")), d("s"), 0L),
+        Seq("frontier" -> (d => SkylineMonitor.frontier(spark, d("s"))))),
+      ("revenue", Seq("s"), d => RevenueMonitor.processBatch(
+          orders.select(col("o_custkey"), cents.as("cents")), d("s"), 0L),
+        Seq("gini" -> (d => RevenueMonitor.gini(spark, d("s"))),
+          "deciles" -> (d => RevenueMonitor.deciles(spark, d("s"))))),
+      ("layout", Seq("s"), d => LayoutStats.processBatch(dims, dom, d("s"), 0L),
+        Seq("envelopePanel" -> (d => LayoutStats.envelopePanel(spark, d("s"))))),
+      ("vectorstats", Seq("s"), d => VectorStats.processBatch(
+          graft.tables.Tables.embeddings(spark, sf001), d("s"), 0L),
+        Seq("stats" -> (d => VectorStats.stats(spark, d("s"))))),
+      ("decontamination", Seq("a"), d => Decontamination.processBatch(
+          docs.filter(col("source") =!= "src0"), bench, d("a"), 0L),
+        Seq("readAudit" -> (d => Decontamination.readAudit(spark, d("a"))))),
+      ("novelty", Seq("s", "a"), d => Novelty.processBatch(docs, d("s"), d("a"), 0L),
+        Seq("readAudit" -> (d => Novelty.readAudit(spark, d("a"))))),
+      ("neardup", Seq("s", "a"), d => NearDupAdmission.processBatch(
+          docs.select(col("doc_id"), col("text")), d("s"), d("a"), 0L),
+        Seq("admitted" -> (d => NearDupAdmission.admitted(spark, d("a"))))),
+      ("budget", Seq("s", "a"), d => BudgetAdmission.processBatch(tok, budgets, d("s"), d("a"), 0L),
+        Seq("admittedDocs" -> (d => BudgetAdmission.admittedDocs(spark, d("a"))),
+          "audit" -> (d => BudgetAdmission.audit(spark, d("s"), budgets)))),
+      ("packer", Seq("t", "a"), d => SequencePacker.processBatch(
+          docs.select(col("doc_id"), col("text")), d("t"), d("a"), 0L),
+        Seq("packedSummary" -> (d => SequencePacker.packedSummary(spark, d("a"))))),
+      ("transitions", Seq("t", "c"), d => TransitionStats.processBatch(ev, d("t"), d("c"), 0L),
+        Seq("transitions" -> (d => TransitionStats.transitions(spark, d("c"))))),
+      ("sessions", Seq("o", "c"), d => SessionTracker.processBatch(ev, d("o"), d("c"), 0L),
+        Seq("flow" -> (d => SessionTracker.flow(spark, d("o"), d("c"))))),
+      ("funnel", Seq("t"), d => FunnelTracker.processBatch(ev, d("t"), 0L),
+        Seq("funnelState" -> (d => FunnelTracker.funnelState(spark, d("t"))),
+          "funnelSummary" -> (d => FunnelTracker.funnelSummary(spark, d("t"))))),
+      ("asof", Seq("t", "e"), d => AsOfEnrich.processBatch(ev, d("t"), d("e"), 0L),
+        Seq("enriched" -> (d => AsOfEnrich.enriched(spark, d("e"))),
+          "clickState" -> (d => AsOfEnrich.clickState(spark, d("t"))))),
+      ("changefeed", Seq("s", "c"), d => ChangeFeed.processBatch(ev, d("s"), d("c"), 0L),
+        Seq("state" -> (d => ChangeFeed.state(spark, d("s"))),
+          "feed" -> (d => ChangeFeed.feed(spark, d("c"))))),
+      ("scd2", Seq("t", "c"), d => Scd2History.processBatch(ev, d("t"), d("c"), 0L),
+        Seq("history" -> (d => Scd2History.history(spark, d("t"), d("c"))))))
+    // reads whose empty answer is a fixed panel, not zero rows: a global
+    // aggregate's one NULL-margin row (batch q165/q173 on an empty log)
+    // and the budget audit's one zero-consumption row per budgeted source
+    val panels = Set("chisq.readout", "revenue.gini", "budget.audit")
+    def schemaOf(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    for ((store, subdirs, write, reads) <- laws) {
+      val never = tmpDir(s"empty-$store-never")
+      val onlySuccess = tmpDir(s"empty-$store-success")
+      subdirs.foreach { s =>
+        Files.createDirectories(Paths.get(onlySuccess, s))
+        Files.createFile(Paths.get(onlySuccess, s, "_SUCCESS"))
+      }
+      val written = tmpDir(s"empty-$store-written")
+      write(s => s"$written/$s")
+      for ((read, f) <- reads) {
+        val want = schemaOf(f(s => s"$written/$s"))
+        val emptyRows =
+          if (panels(s"$store.$read")) f(s => s"$never/$s").collect().toSeq else Seq.empty
+        for ((state, root) <- Seq("never written" -> never, "_SUCCESS only" -> onlySuccess)) {
+          val df = f(s => s"$root/$s")
+          if (df.collect().toSeq != emptyRows) failures += s"$store.$read ($state): rows"
+          if (schemaOf(df) != want)
+            failures += s"$store.$read ($state): schema ${schemaOf(df)} != $want"
+        }
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+    SparkEntry.clearGraftCaches(spark)
+  }
+
+  test("layout law: the batch-partition layout and the foreachBatch wiring live only in BatchStore") {
+    // PlanSpec-style allowlist over the sources: each token may appear in
+    // code (comments ignored) only in the files listed for it
+    val allowed = Map(
+      "partitionOverwriteMode" -> Set("BatchStore.scala"),
+      "hasParquetData" -> Set("BatchStore.scala"),
+      "listStatus" -> Set("BatchStore.scala"),
+      "fs.delete" -> Set("BatchStore.scala"),
+      "foreachBatch" -> Set("BatchStore.scala", "BnplPipeline.scala", "BillProjection.scala"))
+    val dir = new java.io.File("src/main/scala/graft/streaming")
+    val files = Option(dir.listFiles()).getOrElse(Array.empty).filter(_.getName.endsWith(".scala"))
+    assert(files.length > 30, s"streaming sources not found under ${dir.getAbsolutePath}")
+    def code(line: String): String = {
+      val t = line.trim
+      if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
+      else line.split(" //", 2)(0)
+    }
+    val found = files.toSeq.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val text = try src.getLines().map(code).mkString("\n") finally src.close()
+      allowed.keys.filter(text.contains).map(_ -> f.getName)
+    }
+    val outside = found.filterNot { case (tok, file) => allowed(tok)(file) }
+    assert(outside.isEmpty,
+      s"layout code outside BatchStore — call BatchStore instead: ${outside.mkString(", ")}")
+    val stale = allowed.keys.filterNot(tok => found.contains(tok -> "BatchStore.scala"))
+    assert(stale.isEmpty, s"BatchStore no longer holds: ${stale.mkString(", ")}")
   }
 }
