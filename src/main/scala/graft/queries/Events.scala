@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Dsl._
@@ -106,43 +106,46 @@ object Events {
     * each stage's timestamp the EARLIEST event of that type strictly after
     * the previous stage (not merely "user did all four"): the conversion
     * query behind the reference's event cascade, and the label-building
-    * shape of a behavioral training pipeline.
-    *
-    * Scale posture: each stage is filter → co-keyed join → grouped MIN.
-    * Every join and aggregation keys on user_id — no cross-key re-shuffle
-    * anywhere (each stage shuffles only its own filtered, strictly
-    * shrinking slice of the stream; funnels only lose users), and the tiny
-    * stage tables broadcast into the final assembly. Nothing is ever
-    * windowed over the raw stream. MIN of timestamps is exact — no float
-    * discipline needed; `stages_completed` counts the non-null stage
-    * times. */
+    * shape of a behavioral training pipeline. Ordered by user_id; the
+    * work is [[funnel]]. */
   def q62(spark: SparkSession, sfDir: String): DataFrame =
-    funnel(Tables.events(spark, sfDir))
+    funnel(Tables.events(spark, sfDir)).orderBy(col("user_id"))
 
-  /** q62 core on a plain DataFrame (user_id, event_type, ts, …) so
-    * SemanticsSpec can pin the strictly-after boundary on planted rows. */
+  /** q62's unordered core on a plain DataFrame (user_id, event_type, ts,
+    * …): one row per user with a signup event.
+    *
+    * Scale posture: ONE hash exchange on user_id. The four funnel event
+    * types are shuffled once, and stacked partition-only windows over that
+    * exchange compute each stage as MIN(ts) over the user's events of the
+    * stage type strictly after the previous stage. A window buffers a
+    * user's rows in Spark's spilling row buffer, so a hot user costs disk,
+    * not heap. The oracle's equi-join chain never matches a NULL user_id
+    * past signup; the `user_id IS NOT NULL` guard on the later stages
+    * keeps the NULL-user group stranded there too.
+    * MIN of timestamps is exact; `stages_completed` counts the non-null
+    * stage times. */
   private[graft] def funnel(events: DataFrame): DataFrame = {
-    val ev = events.select(col("user_id"), col("event_type"), col("ts"))
-    def stage(evType: String, prev: DataFrame, prevCol: String, outCol: String): DataFrame =
-      ev.filter(col("event_type") === evType)
-        .join(prev.select(col("user_id"), col(prevCol)), Seq("user_id"))
-        .filter(col("ts") > col(prevCol))
-        .groupBy(col("user_id"))
-        .agg(min(col("ts")).as(outCol))
-    val s = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("t_signup"))
-    val v = stage("view", s, "t_signup", "t_view")
-    val c = stage("click", v, "t_view", "t_click")
-    val p = stage("purchase", c, "t_click", "t_purchase")
-    s.join(v, Seq("user_id"), "left")
-      .join(c, Seq("user_id"), "left")
-      .join(p, Seq("user_id"), "left")
+    val w = Window.partitionBy(col("user_id"))
+    def stage(evType: String, prev: String): Column =
+      min(when(col("event_type") === evType && col("user_id").isNotNull &&
+        col("ts") > col(prev), col("ts"))).over(w)
+    events.select(col("user_id"), col("event_type"), col("ts"))
+      .filter(col("event_type").isin("signup", "view", "click", "purchase"))
+      .withColumn("t_signup", min(when(col("event_type") === "signup", col("ts"))).over(w))
+      .withColumn("t_view", stage("view", "t_signup"))
+      .withColumn("t_click", stage("click", "t_view"))
+      .withColumn("t_purchase", stage("purchase", "t_click"))
+      // the users with a signup row, one row each (every row of a user
+      // carries the same stage times)
+      .filter(col("event_type") === "signup")
+      .groupBy(col("user_id"))
+      .agg(min(col("t_signup")).as("t_signup"), min(col("t_view")).as("t_view"),
+        min(col("t_click")).as("t_click"), min(col("t_purchase")).as("t_purchase"))
       .select(col("user_id"), col("t_signup"), col("t_view"), col("t_click"),
         col("t_purchase"),
         (lit(1) + col("t_view").isNotNull.cast("int") +
           col("t_click").isNotNull.cast("int") +
           col("t_purchase").isNotNull.cast("int")).as("stages_completed"))
-      .orderBy(col("user_id"))
   }
 
   /** q87 proximity window: ± this many microseconds (1 hour). */

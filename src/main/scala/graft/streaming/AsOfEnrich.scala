@@ -84,7 +84,6 @@ object AsOfEnrich {
   def processBatch(batch: DataFrame, tailDir: String, enrichDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return
     // bound the LWW read: fold committed tail partitions into the base;
     // enrichDir is append-once facts and never folds
     if (BatchStore.foldDue(batchId))

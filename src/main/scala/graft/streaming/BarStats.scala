@@ -36,7 +36,6 @@ object BarStats {
   /** One micro-batch of (event_id, ts, event_type, value): q159 partials
     * → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     BatchStore.write(Stats.barPartials(batch), storeDir, batchId)
   }
 

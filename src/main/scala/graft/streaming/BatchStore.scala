@@ -15,7 +15,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   *
   *  - Replay is a no-op. [[write]] uses dynamic partition overwrite, so
   *    an at-least-once re-run of batch b replaces its own partition
-  *    instead of appending beside the first attempt. A batch that reads
+  *    instead of appending beside the first attempt. An empty frame
+  *    writes no partition, so a store whose kernel is keyed ingests an
+  *    empty micro-batch as a no-op without probing it first. A batch that reads
   *    prior state reads only `batch_id < b` ([[before]], [[latest]]);
   *    partitions below b are immutable once b starts (Structured
   *    Streaming commits b−1 first), so a re-run never sees its own

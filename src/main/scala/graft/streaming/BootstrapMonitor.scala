@@ -38,7 +38,6 @@ object BootstrapMonitor {
   /** One micro-batch of (event_type, event_id, value): exact per-(type,
     * h60-bucket) count/cent-sum partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     BatchStore.write(Stats.bucketsOf(batch), storeDir, batchId)
   }
 

@@ -44,7 +44,6 @@ object BudgetAdmission {
     * partial. */
   def processBatch(batch: DataFrame, budgets: DataFrame,
       storeDir: String, acceptDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     val prior = BatchStore.read(spark, storeDir)
       .map(_.filter(col("batch_id") < batchId)

@@ -54,7 +54,6 @@ object ChangeFeed {
   def processBatch(batch: DataFrame, stateDir: String, cdcDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       BatchStore.fold(spark, stateDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val img = struct(col("ts"), col("event_id"), col("event_type"), col("value"))

@@ -30,7 +30,6 @@ object ChisqMonitor {
   /** One micro-batch of (user_id, event_type): per-user conversion-flag
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     BatchStore.write(Stats.userConv(batch), storeDir, batchId)
   }
 

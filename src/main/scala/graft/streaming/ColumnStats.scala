@@ -31,7 +31,6 @@ object ColumnStats {
   /** One micro-batch of single-long-column `v`: per-value count
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     BatchStore.write(batch.groupBy(col("v")).agg(count(lit(1)).as("cnt")), storeDir, batchId)
   }
 

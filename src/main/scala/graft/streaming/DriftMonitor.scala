@@ -89,7 +89,6 @@ object DriftMonitor {
     * in r14 so the same store serves the calendar-sliced band read (s48);
     * the drift/IQR reads simply merge across it. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val partials = batch.select(col("event_type"),
         to_date(date_trunc("day", col("ts"))).as("d"), col("value"))
       .groupBy(col("event_type"), col("d"), col("value"))

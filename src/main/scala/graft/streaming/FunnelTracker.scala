@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions._
   * t_purchase) — one row per funnel-entered user, the s24 tail-store
   * discipline with the funnel tuple as the tail.
   *
-  * The per-batch kernel IS batch q62 (`graft.queries.Events.funnel` —
-  * one stage-chain definition everywhere): the stored tail is expanded
-  * back into one synthetic event per completed stage and unioned with
-  * the batch's events, and the kernel re-derives the tuple. That
+  * The per-batch kernel IS batch q62's unordered core
+  * (`graft.queries.Events.funnel` — one stage-chain definition
+  * everywhere, one user_id exchange, no final sort for a result the store
+  * checkpoints): the stored tail is expanded back into one synthetic
+  * event per completed stage and unioned with the batch's events, and
+  * the kernel re-derives the tuple ([[advance]]). That
   * reconstruction is exact under in-order arrival: the strict-chain
   * filters (`ts > t_prev`) make each stage timestamp FINAL the moment it
   * is set (a later event can never produce an earlier qualifying ts),
@@ -26,7 +28,8 @@ import org.apache.spark.sql.functions._
   * rules out. So the four timestamps are the fold's entire state and
   * dropped events are dead weight, the s23/s24 left-fold argument.
   *
-  * Store layout is s24's: tails LWW by batch_id.
+  * Store layout is s24's: tails LWW by batch_id. An empty batch writes
+  * no partition, so it leaves every read as it was.
   *
   * Batch-parity law (StreamingSpec): when each user's events arrive in
   * ts order across batches, [[funnelState]] EQUALS batch q62 on the
@@ -80,32 +83,30 @@ object FunnelTracker {
     * users' funnels, write the new tails to the batch's own partition. */
   def processBatch(batch: DataFrame, tailDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return
     // bound the LWW read: fold committed tail partitions into the base
     if (BatchStore.foldDue(batchId))
       BatchStore.fold(spark, tailDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("user_id"), col("event_type"), col("ts"))
+    // the batch's users with their ts range, one aggregate read by the
+    // tail prune, the arrival-order gate and the new marks (pinned: an
+    // aggregate-rooted plan, safe to checkpoint)
+    val span = ev.groupBy(col("user_id").as("hu"))
+      .agg(min(col("ts")).as("mn"), max(col("ts")).as("hwm_new"))
+      .localCheckpoint(true)
     // only the batch's users can advance; everyone else's tail stays
     // live in an older partition untouched. NULL-safe semi join: the
     // null-user group carries a tail like any key (it enters the funnel
     // at signup and strands there — the kernel's own semantics).
     val stored = readTailsFull(spark, tailDir, batchId)
-    val batchUsers = ev.select(col("user_id").as("bu")).distinct()
-    // no pin despite two consumers (gate + synth): the frame is a
-    // join-rooted plan (checkpointing those poisons captured constraints
-    // for the later union — the r8 UnionBase.rewriteConstraints find)
-    // and the LWW window over an O(users) store is cheap to run twice
-    val tails = stored
-      .join(batchUsers, stored("user_id") <=> batchUsers("bu"), "left_semi")
+    val tails = stored.join(span, stored("user_id") <=> span("hu"), "left_semi")
     // arrival-order gate: every batch event must sit at or above the
     // touched user's stored hwm_ts — checked BEFORE any sink write so a
     // violating batch leaves the store untouched (nondecreasing, not
     // strict: the fold is tie-safe — see the class doc)
-    val bad = ev.groupBy(col("user_id")).agg(min(col("ts")).as("mn"))
-      .join(tails.select(col("user_id").as("hu"), col("hwm_ts")),
-        col("user_id") <=> col("hu"))
+    val bad = span
+      .join(tails.select(col("user_id"), col("hwm_ts")), col("hu") <=> col("user_id"))
       .filter(col("mn") < col("hwm_ts"))
-      .select(col("user_id"), col("mn"), col("hwm_ts"))
+      .select(col("hu"), col("mn"), col("hwm_ts"))
       .limit(3).collect()
     if (bad.nonEmpty) throw new IllegalStateException(
       s"s25 arrival-order contract violated in batch $batchId (a late " +
@@ -113,9 +114,26 @@ object FunnelTracker {
         "silently break): " +
         bad.map(r => s"user ${r.get(0)}: batch min ts ${r.get(1)} < high-water ${r.get(2)}")
           .mkString("; "))
-    // tail → one synthetic event per completed stage; the stored chain
-    // is strictly increasing (the kernel's own filters built it), so the
-    // kernel re-derives the identical tuple from it
+    // eager pin before the dynamic overwrite of the directory the plan
+    // itself reads (r9 pinning discipline)
+    val state = advance(tails, ev).localCheckpoint(true)
+    // new tail = EVERY batch user: funnel tuple where entered (NULL
+    // stages otherwise) + the advanced order mark — the gate above
+    // proved this batch's max ts is each touched user's new high water
+    val newTails = span.join(state, col("hu") <=> state("user_id"), "left")
+      .select(col("hu").as("user_id"), col("t_signup"), col("t_view"),
+        col("t_click"), col("t_purchase"),
+        coalesce(col("stages_completed"), lit(0)).as("stages_completed"),
+        col("hwm_new").as("hwm_ts"))
+    BatchStore.write(newTails, tailDir, batchId)
+  }
+
+  /** The funnel tuples of the batch's users: batch q62's unordered
+    * kernel over their stored tails, each expanded back into one
+    * synthetic event per completed stage, ∪ the batch's events. The
+    * stored chain is strictly increasing (the kernel's own filters built
+    * it), so the kernel re-derives the identical tuple from it. */
+  private[graft] def advance(tails: DataFrame, ev: DataFrame): DataFrame = {
     val synth = tails.select(col("user_id"), explode(array(
         struct(lit("signup").as("event_type"), col("t_signup").as("ts")),
         struct(lit("view").as("event_type"), col("t_view").as("ts")),
@@ -125,22 +143,7 @@ object FunnelTracker {
       .filter(col("e.ts").isNotNull)
       .select(col("user_id"), col("e.event_type").as("event_type"),
         col("e.ts").as("ts"))
-    // batch q62's kernel over tail-as-events ∪ batch — ONE user_id
-    // shuffle family; eager pin before the dynamic overwrite of the
-    // directory the plan itself reads (r9 pinning discipline)
-    val state = graft.queries.Events.funnel(synth.unionByName(ev))
-      .localCheckpoint(true)
-    // new tail = EVERY batch user: funnel tuple where entered (NULL
-    // stages otherwise) + the advanced order mark — the gate above
-    // proved this batch's max ts is each touched user's new high water
-    val hwNew = ev.groupBy(col("user_id").as("hu"))
-      .agg(max(col("ts")).as("hwm_ts"))
-    val newTails = hwNew.join(state, col("hu") <=> state("user_id"), "left")
-      .select(col("hu").as("user_id"), col("t_signup"), col("t_view"),
-        col("t_click"), col("t_purchase"),
-        coalesce(col("stages_completed"), lit(0)).as("stages_completed"),
-        col("hwm_ts"))
-    BatchStore.write(newTails, tailDir, batchId)
+    graft.queries.Events.funnel(synth.unionByName(ev))
   }
 
   /** The q62-shaped funnel over everything ingested so far — row-for-row

@@ -42,6 +42,8 @@ object HeavyHitters {
     * bound still holds. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long,
       m: Int = Counters): Unit = {
+    // kept: the token sketch is a global aggregate, and at a fold
+    // boundary an empty batch would still advance the covered_upto watermark
     if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId, m)

@@ -58,6 +58,8 @@ object IncrementalDedup {
   def processBatch(batch: DataFrame, storeDir: String,
       acceptDir: String, rejectDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
+    // kept: the store's readers parse the raw directory with no
+    // empty-store fallback, so it stays outside the empty-batch law
     if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(spark, storeDir, batchId)

@@ -36,6 +36,8 @@ object IncrementalIndex {
 
   /** One micro-batch upsert. Exposed for direct testing. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
+    // kept: the store's readers parse the raw directory with no
+    // empty-store fallback, so it stays outside the empty-batch law
     if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)

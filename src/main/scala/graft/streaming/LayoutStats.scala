@@ -33,7 +33,6 @@ object LayoutStats {
     * column stats), broadcast at one row. */
   def processBatch(batch: DataFrame, dom: DataFrame, storeDir: String,
       batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val partials = ZOrder.bucketed(batch.select(col("ck"), col("day")), dom)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"),

@@ -35,7 +35,6 @@ object LedgerStore {
   /** One micro-batch of (user_id, event_type, value): exact per-user
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val partials = batch.filter(col("event_type").isin("click", "purchase"))
       .groupBy(col("user_id"))
       .agg(

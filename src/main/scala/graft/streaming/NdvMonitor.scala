@@ -51,7 +51,6 @@ object NdvMonitor {
   /** One micro-batch of (event_type, user_id): per-type HLL sketch
     * partial → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     BatchStore.write(batch.groupBy(col("event_type"))
       .agg(expr(s"hll_sketch_agg(user_id, $LgK)").as("sketch")), storeDir, batchId)
   }

@@ -65,6 +65,8 @@ object NearDupAdmission {
     * admissions + the gate's hwm row to their own batch_id partitions. */
   def processBatch(batch: DataFrame, storeDir: String, acceptDir: String,
       batchId: Long): Unit = {
+    // kept: the order gate and the high-water row need the batch's min
+    // and max doc_id, which an empty batch does not have
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val prior = BatchStore.before(spark, storeDir, batchId)(emptyBands(spark))

@@ -33,7 +33,6 @@ object RevenueMonitor {
   /** One micro-batch of (o_custkey, cents): per-customer sum partials →
     * the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     BatchStore.write(batch.groupBy(col("o_custkey")).agg(sum(col("cents")).as("cents")),
       storeDir, batchId)
   }

@@ -39,7 +39,6 @@ object RfmMonitor {
   /** One micro-batch of (user_id, ts, value): the batch's own per-user
     * metric partials → its own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     BatchStore.write(Behavior.rfmMetrics(batch), storeDir, batchId)
   }
 

@@ -72,7 +72,6 @@ object Scd2History {
   def processBatch(batch: DataFrame, tailDir: String, closedDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return
     // bound the LWW read: fold committed tail partitions into the base;
     // closedDir is append-only facts and never folds
     if (BatchStore.foldDue(batchId))

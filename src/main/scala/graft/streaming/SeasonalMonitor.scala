@@ -52,7 +52,6 @@ object SeasonalMonitor {
     * split (r14: widened from counts-only so the one store serves the
     * holt read too). */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val partials = batch
       .select(col("event_type"), to_date(date_trunc("day", col("ts"))).as("d"),
         col("value"))

@@ -64,7 +64,6 @@ object SequencePacker {
   def processBatch(batch: DataFrame, tailDir: String, assignDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return
     import spark.implicits._
     // bound the LWW read: fold committed tail partitions into the base
     if (BatchStore.foldDue(batchId))

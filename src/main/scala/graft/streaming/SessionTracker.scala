@@ -61,7 +61,6 @@ object SessionTracker {
   def processBatch(batch: DataFrame, openDir: String, closedDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       BatchStore.fold(spark, openDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("user_id"), col("event_id"), col("event_type"), col("ts"))

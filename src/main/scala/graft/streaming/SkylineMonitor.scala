@@ -34,7 +34,6 @@ object SkylineMonitor {
   /** One micro-batch of (qty, price): per-point counts → the batch's
     * own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     BatchStore.write(batch.groupBy(col("qty"), col("price")).agg(count(lit(1)).as("n")),
       storeDir, batchId)
   }

@@ -42,7 +42,6 @@ object SurvivalMonitor {
   /** One micro-batch of (user_id, ts, event_type): per-user span
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     BatchStore.write(Behavior.userSpans(batch), storeDir, batchId)
   }
 

@@ -48,7 +48,6 @@ object TransitionStats {
   def processBatch(batch: DataFrame, tailDir: String, countsDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       BatchStore.fold(spark, tailDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("user_id"), col("event_id"), col("event_type"), col("ts"))

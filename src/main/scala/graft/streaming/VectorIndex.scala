@@ -38,6 +38,8 @@ object VectorIndex {
     * this batch's own partition. Exposed for direct testing. */
   def processBatch(batch: DataFrame, cells: DataFrame, storeDir: String,
       batchId: Long): Unit = {
+    // kept: the store's readers parse the raw directory with no
+    // empty-store fallback, so it stays outside the empty-batch law
     if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)

@@ -31,6 +31,8 @@ object VectorStats {
 
   /** One micro-batch: exact partials → own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
+    // kept: at a fold boundary an empty batch would still advance the
+    // covered_upto watermark
     if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)

@@ -629,6 +629,51 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** Every operator of the plan that ran, descending into adaptive query
+    * stages (the final plan, read after an action). */
+  private def executedNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => q +: walk(q.plan)
+      case other => other +: other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("q62: the funnel core runs over ONE user_id exchange; FunnelTracker's kernel has no range partition") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions.{col, lit}
+    SparkEntry.clearGraftCaches(spark)
+    val ev = graft.tables.Tables.events(spark, sf001)
+    val core = graft.queries.Events.funnel(ev)
+    assert(core.collect().nonEmpty)
+    val nodes = executedNodes(core)
+    val shuffles = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(shuffles.size == 1, s"the funnel core should shuffle once:\n${core.queryExecution.executedPlan}")
+    shuffles.head match {
+      case HashPartitioning(Seq(a: AttributeReference), _) =>
+        assert(a.name == "user_id", s"funnel exchange keyed on ${a.name}")
+      case other => fail(s"funnel exchange is not a hash partition on user_id: $other")
+    }
+    assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeExec]), "the funnel core broadcasts")
+    // the kernel the store checkpoints, over a stored tail and a batch
+    val stage = lit(null).cast("timestamp")
+    val kernel = graft.streaming.FunnelTracker.advance(
+      spark.range(0).select(col("id").as("user_id"), stage.as("t_signup"), stage.as("t_view"),
+        stage.as("t_click"), stage.as("t_purchase")),
+      ev.select("user_id", "event_type", "ts"))
+    assert(kernel.collect().nonEmpty)
+    val ranges = executedNodes(kernel).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.isEmpty, s"FunnelTracker's kernel sorts what it checkpoints:\n${kernel.queryExecution.executedPlan}")
+    SparkEntry.clearGraftCaches(spark)
+  }
+
   test("output-type law: no query emits a raw DECIMAL output column") {
     // The driver hashes canonicalized cell STRINGS, where DECIMAL(38,0)
     // `123` and BIGINT `123` render differently even when the values are

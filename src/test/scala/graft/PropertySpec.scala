@@ -481,4 +481,39 @@ class PropertySpec extends SparkSpec {
     assert(a.sameElements(b), "corpus: fold vs HOF twin drifted")
     SparkEntry.clearGraftCaches(spark)
   }
+
+  test("q62 law: the windowed funnel == a strict-chain fold over ts-sorted events, null users and ties included") {
+    // the reference: each user's events in ts order (input order within a
+    // tie), one pass; a stage is set by the first event of its type
+    // strictly after the previous stage, and a NULL user never gets past
+    // signup (the equi-join chain's semantics)
+    val order = Vector("signup", "view", "click", "purchase")
+    def reference(rows: Seq[(Option[Long], String, Long)]) =
+      rows.groupBy(_._1).toSeq.flatMap { case (user, evs) =>
+        val stages = evs.sortBy(_._3).foldLeft(Vector.empty[Long]) { case (st, (_, tpe, t)) =>
+          val k = st.length
+          if (k < order.length && tpe == order(k) && (k == 0 || (user.nonEmpty && t > st.last)))
+            st :+ t
+          else st
+        }
+        if (stages.isEmpty) None
+        else Some((user, (0 until 4).map(i => stages.lift(i)), stages.length))
+      }.toSet
+    val rowGen = Gen.listOf(for {
+      user <- Gen.frequency(1 -> Gen.const(Option.empty[Long]), 5 -> Gen.choose(1L, 4L).map(Some(_)))
+      tpe <- Gen.oneOf(order :+ "login" :+ "refund")
+      t <- Gen.choose(0L, 8L) // small range forces ties
+    } yield (user, tpe, t)).map(_.take(40))
+    for (seed <- 1 to Samples) {
+      val rows = draw(rowGen, 6200L + seed)
+      val df = rows.map { case (u, tpe, t) => (u, tpe, new Timestamp(t * 1000)) }
+        .toDF("user_id", "event_type", "ts")
+      val got = graft.queries.Events.funnel(df).collect().map { r =>
+        val stages = (1 to 4).map(i => Option(r.getTimestamp(i)).map(_.getTime / 1000))
+        (Option(r.get(0)).map(_.asInstanceOf[Long]), stages, r.getInt(5))
+      }
+      assert(got.length == got.map(_._1).distinct.length, s"seed=$seed: a user got two rows")
+      assert(got.toSet == reference(rows), s"seed=$seed rows=$rows")
+    }
+  }
 }

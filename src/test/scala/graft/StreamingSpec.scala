@@ -3,7 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.streaming.{BnplPipeline, Envelope, EventStats}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.DataType
 
 /** Streaming e2e — the reference's manual runbook (readme:98-151) replayed
   * against the Structured Streaming pipeline (SURVEY.md §5.2.4):
@@ -2750,9 +2752,16 @@ class StreamingSpec extends SparkSpec {
     SparkEntry.clearGraftCaches(spark)
   }
 
-  test("empty-store law: every store read is empty with its one-batch schema, before any write and over a _SUCCESS-only store") {
+  /** One store under the store laws: its sub-directories, one real
+    * batch 0 with the ingest that feeds it, and its reads. Every path is
+    * relative to a fresh root per store state. */
+  private case class StoreLaw(store: String, subdirs: Seq[String],
+      batch: DataFrame,
+      ingest: (DataFrame, String => String, Long) => Unit,
+      reads: Seq[(String, (String => String) => DataFrame)])
+
+  private def storeLaws(): Seq[StoreLaw] = {
     import graft.streaming._
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{size, split}
     val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
     val docs = graft.tables.Tables.documents(spark, sf001).localCheckpoint(true)
@@ -2765,81 +2774,90 @@ class StreamingSpec extends SparkSpec {
     val budgets = graft.queries.Sampling.mixBudgets(tok.select(col("source"), col("n_tok")))
       .localCheckpoint(true)
     lazy val bench = Decontamination.benchIndexOf(docs.filter(col("source") === "src0"))
-    // (store, its sub-directories, one real batch 0, its reads); every
-    // path is relative to a fresh root per store state
-    type Dir = String => String
-    val laws: Seq[(String, Seq[String], Dir => Unit, Seq[(String, Dir => DataFrame)])] = Seq(
-      ("ledger", Seq("s"), d => LedgerStore.processBatch(ev, d("s"), 0L),
+    Seq(
+      StoreLaw("ledger", Seq("s"), ev, (b, d, i) => LedgerStore.processBatch(b, d("s"), i),
         Seq("ledger" -> (d => LedgerStore.ledger(spark, d("s"))))),
-      ("ndv", Seq("s"), d => NdvMonitor.processBatch(ev, d("s"), 0L),
+      StoreLaw("ndv", Seq("s"), ev, (b, d, i) => NdvMonitor.processBatch(b, d("s"), i),
         Seq("ndv" -> (d => NdvMonitor.ndv(spark, d("s"))))),
-      ("bootstrap", Seq("s"), d => BootstrapMonitor.processBatch(ev, d("s"), 0L),
+      StoreLaw("bootstrap", Seq("s"), ev, (b, d, i) => BootstrapMonitor.processBatch(b, d("s"), i),
         Seq("ci" -> (d => BootstrapMonitor.ci(spark, d("s"))))),
-      ("rfm", Seq("s"), d => RfmMonitor.processBatch(ev, d("s"), 0L),
+      StoreLaw("rfm", Seq("s"), ev, (b, d, i) => RfmMonitor.processBatch(b, d("s"), i),
         Seq("segments" -> (d => RfmMonitor.segments(spark, d("s"))))),
-      ("seasonal", Seq("s"), d => SeasonalMonitor.processBatch(ev, d("s"), 0L),
+      StoreLaw("seasonal", Seq("s"), ev, (b, d, i) => SeasonalMonitor.processBatch(b, d("s"), i),
         Seq("baseline" -> (d => SeasonalMonitor.baseline(spark, d("s"))),
           "decayed" -> (d => SeasonalMonitor.decayed(spark, d("s"))),
           "holt" -> (d => SeasonalMonitor.holt(spark, d("s"))))),
-      ("chisq", Seq("s"), d => ChisqMonitor.processBatch(ev, d("s"), 0L),
+      StoreLaw("chisq", Seq("s"), ev, (b, d, i) => ChisqMonitor.processBatch(b, d("s"), i),
         Seq("readout" -> (d => ChisqMonitor.readout(spark, d("s"))))),
-      ("bars", Seq("s"), d => BarStats.processBatch(ev, d("s"), 0L),
+      StoreLaw("bars", Seq("s"), ev, (b, d, i) => BarStats.processBatch(b, d("s"), i),
         Seq("bars" -> (d => BarStats.bars(spark, d("s"))))),
-      ("survival", Seq("s"), d => SurvivalMonitor.processBatch(ev, d("s"), 0L),
+      StoreLaw("survival", Seq("s"), ev, (b, d, i) => SurvivalMonitor.processBatch(b, d("s"), i),
         Seq("hazard" -> (d => SurvivalMonitor.hazard(spark, d("s"))))),
-      ("drift", Seq("s"), d => DriftMonitor.processBatch(ev, d("s"), 0L),
+      StoreLaw("drift", Seq("s"), ev, (b, d, i) => DriftMonitor.processBatch(b, d("s"), i),
         Seq("drift" -> (d => DriftMonitor.drift(spark, d("s"))),
           "bands" -> (d => DriftMonitor.bands(spark, d("s"))))),
-      ("colstats", Seq("s"), d => ColumnStats.processBatch(orders.select(cents.as("v")), d("s"), 0L),
+      StoreLaw("colstats", Seq("s"), orders.select(cents.as("v")),
+        (b, d, i) => ColumnStats.processBatch(b, d("s"), i),
         Seq("stats" -> (d => ColumnStats.stats(spark, d("s"))))),
-      ("skyline", Seq("s"), d => SkylineMonitor.processBatch(graft.tables.Tables.lineitem(spark, sf001)
-          .select(col("l_quantity").as("qty"), col("l_extendedprice").as("price")), d("s"), 0L),
+      StoreLaw("skyline", Seq("s"), graft.tables.Tables.lineitem(spark, sf001)
+          .select(col("l_quantity").as("qty"), col("l_extendedprice").as("price")),
+        (b, d, i) => SkylineMonitor.processBatch(b, d("s"), i),
         Seq("frontier" -> (d => SkylineMonitor.frontier(spark, d("s"))))),
-      ("revenue", Seq("s"), d => RevenueMonitor.processBatch(
-          orders.select(col("o_custkey"), cents.as("cents")), d("s"), 0L),
+      StoreLaw("revenue", Seq("s"), orders.select(col("o_custkey"), cents.as("cents")),
+        (b, d, i) => RevenueMonitor.processBatch(b, d("s"), i),
         Seq("gini" -> (d => RevenueMonitor.gini(spark, d("s"))),
           "deciles" -> (d => RevenueMonitor.deciles(spark, d("s"))))),
-      ("layout", Seq("s"), d => LayoutStats.processBatch(dims, dom, d("s"), 0L),
+      StoreLaw("layout", Seq("s"), dims, (b, d, i) => LayoutStats.processBatch(b, dom, d("s"), i),
         Seq("envelopePanel" -> (d => LayoutStats.envelopePanel(spark, d("s"))))),
-      ("vectorstats", Seq("s"), d => VectorStats.processBatch(
-          graft.tables.Tables.embeddings(spark, sf001), d("s"), 0L),
+      StoreLaw("vectorstats", Seq("s"), graft.tables.Tables.embeddings(spark, sf001),
+        (b, d, i) => VectorStats.processBatch(b, d("s"), i),
         Seq("stats" -> (d => VectorStats.stats(spark, d("s"))))),
-      ("decontamination", Seq("a"), d => Decontamination.processBatch(
-          docs.filter(col("source") =!= "src0"), bench, d("a"), 0L),
+      StoreLaw("decontamination", Seq("a"), docs.filter(col("source") =!= "src0"),
+        (b, d, i) => Decontamination.processBatch(b, bench, d("a"), i),
         Seq("readAudit" -> (d => Decontamination.readAudit(spark, d("a"))))),
-      ("novelty", Seq("s", "a"), d => Novelty.processBatch(docs, d("s"), d("a"), 0L),
+      StoreLaw("novelty", Seq("s", "a"), docs, (b, d, i) => Novelty.processBatch(b, d("s"), d("a"), i),
         Seq("readAudit" -> (d => Novelty.readAudit(spark, d("a"))))),
-      ("neardup", Seq("s", "a"), d => NearDupAdmission.processBatch(
-          docs.select(col("doc_id"), col("text")), d("s"), d("a"), 0L),
+      StoreLaw("neardup", Seq("s", "a"), docs.select(col("doc_id"), col("text")),
+        (b, d, i) => NearDupAdmission.processBatch(b, d("s"), d("a"), i),
         Seq("admitted" -> (d => NearDupAdmission.admitted(spark, d("a"))))),
-      ("budget", Seq("s", "a"), d => BudgetAdmission.processBatch(tok, budgets, d("s"), d("a"), 0L),
+      StoreLaw("budget", Seq("s", "a"), tok,
+        (b, d, i) => BudgetAdmission.processBatch(b, budgets, d("s"), d("a"), i),
         Seq("admittedDocs" -> (d => BudgetAdmission.admittedDocs(spark, d("a"))),
           "audit" -> (d => BudgetAdmission.audit(spark, d("s"), budgets)))),
-      ("packer", Seq("t", "a"), d => SequencePacker.processBatch(
-          docs.select(col("doc_id"), col("text")), d("t"), d("a"), 0L),
+      StoreLaw("packer", Seq("t", "a"), docs.select(col("doc_id"), col("text")),
+        (b, d, i) => SequencePacker.processBatch(b, d("t"), d("a"), i),
         Seq("packedSummary" -> (d => SequencePacker.packedSummary(spark, d("a"))))),
-      ("transitions", Seq("t", "c"), d => TransitionStats.processBatch(ev, d("t"), d("c"), 0L),
+      StoreLaw("transitions", Seq("t", "c"), ev,
+        (b, d, i) => TransitionStats.processBatch(b, d("t"), d("c"), i),
         Seq("transitions" -> (d => TransitionStats.transitions(spark, d("c"))))),
-      ("sessions", Seq("o", "c"), d => SessionTracker.processBatch(ev, d("o"), d("c"), 0L),
+      StoreLaw("sessions", Seq("o", "c"), ev,
+        (b, d, i) => SessionTracker.processBatch(b, d("o"), d("c"), i),
         Seq("flow" -> (d => SessionTracker.flow(spark, d("o"), d("c"))))),
-      ("funnel", Seq("t"), d => FunnelTracker.processBatch(ev, d("t"), 0L),
+      StoreLaw("funnel", Seq("t"), ev, (b, d, i) => FunnelTracker.processBatch(b, d("t"), i),
         Seq("funnelState" -> (d => FunnelTracker.funnelState(spark, d("t"))),
           "funnelSummary" -> (d => FunnelTracker.funnelSummary(spark, d("t"))))),
-      ("asof", Seq("t", "e"), d => AsOfEnrich.processBatch(ev, d("t"), d("e"), 0L),
+      StoreLaw("asof", Seq("t", "e"), ev, (b, d, i) => AsOfEnrich.processBatch(b, d("t"), d("e"), i),
         Seq("enriched" -> (d => AsOfEnrich.enriched(spark, d("e"))),
           "clickState" -> (d => AsOfEnrich.clickState(spark, d("t"))))),
-      ("changefeed", Seq("s", "c"), d => ChangeFeed.processBatch(ev, d("s"), d("c"), 0L),
+      StoreLaw("changefeed", Seq("s", "c"), ev,
+        (b, d, i) => ChangeFeed.processBatch(b, d("s"), d("c"), i),
         Seq("state" -> (d => ChangeFeed.state(spark, d("s"))),
           "feed" -> (d => ChangeFeed.feed(spark, d("c"))))),
-      ("scd2", Seq("t", "c"), d => Scd2History.processBatch(ev, d("t"), d("c"), 0L),
+      StoreLaw("scd2", Seq("t", "c"), ev,
+        (b, d, i) => Scd2History.processBatch(b, d("t"), d("c"), i),
         Seq("history" -> (d => Scd2History.history(spark, d("t"), d("c"))))))
+  }
+
+  private def schemaOf(df: DataFrame) =
+    df.schema.map(f => f.name -> f.dataType)
+
+  test("empty-store law: every store read is empty with its one-batch schema, before any write and over a _SUCCESS-only store") {
     // reads whose empty answer is a fixed panel, not zero rows: a global
     // aggregate's one NULL-margin row (batch q165/q173 on an empty log)
     // and the budget audit's one zero-consumption row per budgeted source
     val panels = Set("chisq.readout", "revenue.gini", "budget.audit")
-    def schemaOf(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    for ((store, subdirs, write, reads) <- laws) {
+    for (StoreLaw(store, subdirs, batch, ingest, reads) <- storeLaws()) {
       val never = tmpDir(s"empty-$store-never")
       val onlySuccess = tmpDir(s"empty-$store-success")
       subdirs.foreach { s =>
@@ -2847,7 +2865,7 @@ class StreamingSpec extends SparkSpec {
         Files.createFile(Paths.get(onlySuccess, s, "_SUCCESS"))
       }
       val written = tmpDir(s"empty-$store-written")
-      write(s => s"$written/$s")
+      ingest(batch, s => s"$written/$s", 0L)
       for ((read, f) <- reads) {
         val want = schemaOf(f(s => s"$written/$s"))
         val emptyRows =
@@ -2864,6 +2882,49 @@ class StreamingSpec extends SparkSpec {
     SparkEntry.clearGraftCaches(spark)
   }
 
+  test("empty-batch law: an empty micro-batch, first or later, and its replay leave every read as it was") {
+    // the stores that still return early on an empty batch (the guard law
+    // below names them and why); every other store ingests it
+    val guarded = Set("vectorstats", "neardup")
+    // rows as a multiset: a read need not be ordered
+    def bag(df: DataFrame) =
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    val laws = storeLaws().filterNot(l => guarded(l.store))
+    assert(laws.size == 23)
+    for (StoreLaw(store, _, batch, ingest, reads) <- laws) {
+      val empty = batch.filter(org.apache.spark.sql.functions.lit(false))
+      def snapshot(root: String): Seq[(Map[Row, Int], Seq[(String, DataType)])] =
+        reads.map { case (_, f) =>
+          val df = f(s => s"$root/$s")
+          (bag(df), schemaOf(df))
+        }
+      def check(what: String, root: String, want: Seq[(Map[Row, Int], Seq[(String, DataType)])]): Unit =
+        for ((((read, _), (rows, schema)), (wantRows, wantSchema)) <- reads.zip(snapshot(root)).zip(want)) {
+          if (rows != wantRows) failures += s"$store.$read ($what): rows"
+          if (schema != wantSchema) failures += s"$store.$read ($what): schema $schema != $wantSchema"
+        }
+      // a real batch 0, then an empty batch 1, then its replay
+      val later = tmpDir(s"emptybatch-$store-later")
+      ingest(batch, s => s"$later/$s", 0L)
+      val afterReal = snapshot(later)
+      ingest(empty, s => s"$later/$s", 1L)
+      check("empty batch 1", later, afterReal)
+      ingest(empty, s => s"$later/$s", 1L)
+      check("empty batch 1 replayed", later, afterReal)
+      // an empty batch 0 into a fresh store, then its replay: the store
+      // reads like one that was never written
+      val never = snapshot(tmpDir(s"emptybatch-$store-never"))
+      val first = tmpDir(s"emptybatch-$store-first")
+      ingest(empty, s => s"$first/$s", 0L)
+      check("empty batch 0", first, never)
+      ingest(empty, s => s"$first/$s", 0L)
+      check("empty batch 0 replayed", first, never)
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+    SparkEntry.clearGraftCaches(spark)
+  }
+
   test("layout law: the batch-partition layout and the foreachBatch wiring live only in BatchStore") {
     // PlanSpec-style allowlist over the sources: each token may appear in
     // code (comments ignored) only in the files listed for it
@@ -2873,6 +2934,12 @@ class StreamingSpec extends SparkSpec {
       "listStatus" -> Set("BatchStore.scala"),
       "fs.delete" -> Set("BatchStore.scala"),
       "foreachBatch" -> Set("BatchStore.scala", "BnplPipeline.scala", "BillProjection.scala"))
+    // an empty batch writes no partition (BatchStore.write), so a store
+    // returns early on one only where it would otherwise change a read or
+    // fail; each such store states why in a `// kept:` comment
+    val guard = "isEmpty) return"
+    val guarded = Set("BnplPipeline.scala", "HeavyHitters.scala", "NearDupAdmission.scala",
+      "VectorStats.scala", "IncrementalDedup.scala", "IncrementalIndex.scala", "VectorIndex.scala")
     val dir = new java.io.File("src/main/scala/graft/streaming")
     val files = Option(dir.listFiles()).getOrElse(Array.empty).filter(_.getName.endsWith(".scala"))
     assert(files.length > 30, s"streaming sources not found under ${dir.getAbsolutePath}")
@@ -2881,15 +2948,30 @@ class StreamingSpec extends SparkSpec {
       if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
       else line.split(" //", 2)(0)
     }
-    val found = files.toSeq.flatMap { f =>
+    val sources = files.toSeq.map { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
-      val text = try src.getLines().map(code).mkString("\n") finally src.close()
-      allowed.keys.filter(text.contains).map(_ -> f.getName)
+      val lines = try src.getLines().toVector finally src.close()
+      (f.getName, lines)
+    }
+    val found = sources.flatMap { case (name, lines) =>
+      val text = lines.map(code).mkString("\n")
+      allowed.keys.filter(text.contains).map(_ -> name)
     }
     val outside = found.filterNot { case (tok, file) => allowed(tok)(file) }
     assert(outside.isEmpty,
       s"layout code outside BatchStore — call BatchStore instead: ${outside.mkString(", ")}")
     val stale = allowed.keys.filterNot(tok => found.contains(tok -> "BatchStore.scala"))
     assert(stale.isEmpty, s"BatchStore no longer holds: ${stale.mkString(", ")}")
+    val guards = sources.flatMap { case (name, lines) =>
+      lines.indices.filter(i => code(lines(i)).contains(guard)).map(i => (name, lines, i))
+    }
+    val unlisted = guards.map(_._1).filterNot(guarded)
+    assert(unlisted.isEmpty,
+      s"empty-batch guard in a store whose empty write is a no-op: ${unlisted.mkString(", ")}")
+    assert(guards.map(_._1).toSet == guarded,
+      s"allowlisted stores without a guard: ${(guarded -- guards.map(_._1)).mkString(", ")}")
+    val unstated = guards.collect { case (name, lines, i)
+        if name != "BnplPipeline.scala" && !lines.slice(i - 3, i).exists(_.trim.startsWith("// kept:")) => name }
+    assert(unstated.isEmpty, s"empty-batch guard without a `// kept:` reason: ${unstated.mkString(", ")}")
   }
 }
