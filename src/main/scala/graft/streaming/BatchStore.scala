@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
@@ -34,7 +34,26 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   *    that was never written, or one holding only `_SUCCESS` (a dynamic
   *    overwrite whose rows were all filtered out), has no parquet footer
   *    to read; [[readOr]] and [[latest]] return the caller's empty frame
-  *    instead of throwing. */
+  *    instead of throwing.
+  *
+  * A keyed tail store carries, per key, the state its left fold needs
+  * (an open interval, a funnel tuple, a last event) as an LWW row. Each
+  * batch reads only the tails of the keys it touches ([[touchedTail]]).
+  * Where the fold is order-sensitive, the store enforces an
+  * arrival-order contract ([[gatedTail]]) instead of assuming it:
+  *
+  *  - The tail row carries the key's high-water mark in the store's
+  *    order, and the gate rejects a batch whose per-key minimum reaches
+  *    it, with an IllegalStateException raised before any sink write, so
+  *    a rejected batch leaves every read as it was.
+  *  - The contract is strict (a minimum at the mark is rejected) where
+  *    a tie could re-order or re-pair state, and nondecreasing (only a
+  *    minimum below the mark is rejected) where the kernel's own strict
+  *    filters make a tie harmless.
+  *  - A replay of batch b checks against the marks as of b−1, as its
+  *    reads do, so it passes wherever the first attempt passed.
+  *  - A NULL key is an ordinary key: its tail is pruned, gated and
+  *    advanced like any other, as the batch kernels group it. */
 object BatchStore {
 
   /** Batches between two automatic folds of a store. */
@@ -82,6 +101,57 @@ object BatchStore {
       .filter(col("rn") === 1)
       .drop("rn", "batch_id")
   }
+
+  /** What batch `batchId` reads of a keyed LWW tail store: the store is
+    * folded first when [[foldDue]], then each key's row from its highest
+    * batch below batchId ([[latest]]). */
+  def tail(spark: SparkSession, dir: String, key: String, batchId: Long)(
+      empty: => DataFrame): DataFrame = {
+    if (foldDue(batchId)) fold(spark, dir, batchId)(lastWins(Seq(key)))
+    latest(spark, dir, Seq(key), batchId)(empty)
+  }
+
+  /** [[tail]], pruned to the keys in the `key` column of `touched`: only
+    * the batch's keys can change state, everyone else's tail stays live
+    * in an older partition. Null-safe, so the NULL key keeps its tail. */
+  def touchedTail(spark: SparkSession, dir: String, key: String, batchId: Long,
+      touched: DataFrame)(empty: => DataFrame): DataFrame =
+    tail(spark, dir, key, batchId)(empty)
+      .join(touched.select(col(key).as("_touched")), col(key) <=> col("_touched"), "left_semi")
+
+  /** A keyed tail store's arrival-order contract: `mark` is the tail
+    * row's high-water mark, compared with the batch's per-key minimum in
+    * the same order; `strict` rejects a minimum at the mark, otherwise
+    * only one below it. `why` says what a late event would break. */
+  final case class Arrival(store: String, why: String, mark: Column, strict: Boolean)
+
+  /** Run `body` on the [[touchedTail]] of the keys of `mins` (columns
+    * `key` and `mn`, the batch's per-key minimum in `arrival`'s order)
+    * once the batch has passed the arrival gate. The tail is evaluated
+    * once: persisted, first computed by the gate's single-branch collect,
+    * then read by `body` from the cache, and released when `body`
+    * returns. */
+  def gatedTail[T](spark: SparkSession, dir: String, key: String, batchId: Long,
+      mins: DataFrame, arrival: Arrival)(empty: => DataFrame)(body: DataFrame => T): T = {
+    val tail = touchedTail(spark, dir, key, batchId, mins)(empty).persist()
+    try {
+      val cmp = if (arrival.strict) "<=" else "<"
+      val late = mins
+        .join(tail.select(col(key).as("_k"), arrival.mark.as("_mark")), col(key) <=> col("_k"))
+        .filter(if (arrival.strict) col("mn") <= col("_mark") else col("mn") < col("_mark"))
+        .select(col(key), col("mn"), col("_mark"))
+        .limit(3).collect()
+      if (late.nonEmpty) throw violation(arrival.store, batchId, arrival.why,
+        late.toSeq.map(r => s"$key ${r.get(0)}: batch min ${r.get(1)} $cmp mark ${r.get(2)}"))
+      body(tail)
+    } finally tail.unpersist()
+  }
+
+  /** The error a store's arrival gate raises for batch `batchId`. */
+  def violation(store: String, batchId: Long, why: String,
+      found: Seq[String]): IllegalStateException =
+    new IllegalStateException(
+      s"$store arrival-order contract violated in batch $batchId ($why): ${found.mkString("; ")}")
 
   /** Fold every batch partition below `upToBatch`, plus the previous
     * base, into one new base partition, then delete the folded batch

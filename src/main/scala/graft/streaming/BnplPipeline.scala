@@ -83,12 +83,18 @@ class BnplPipeline(
 
   /** The derived-promise self-loop's publish: back into the event
     * directory (default) or the injected broker. */
-  private def republish(batch: DataFrame): Unit =
-    broker.map(_._2).getOrElse { (b: DataFrame) =>
+  private def republish(batch: DataFrame): Unit = {
+    // persist first: the batch's subtree holds the stateful dedup, and
+    // each publish reads it twice (emptiness probe, append)
+    val derived = batch.persist()
+    try broker.map(_._2).getOrElse { (b: DataFrame) =>
       // batch (not streaming-sink) append: no _spark_metadata, so the
-      // file source lists the new files like any producer's.
+      // file source lists the new files like any producer's. The guard
+      // stays: an empty json append still writes a 0-byte part file,
+      // which the file source would list forever.
       if (!b.isEmpty) b.write.mode(SaveMode.Append).json(eventsDir)
-    }.apply(batch)
+    }.apply(derived) finally derived.unpersist()
+  }
 
   /** s05 + s06: event-time watermark, then exactly-once-per-event_id. */
   private def deduped: DataFrame =

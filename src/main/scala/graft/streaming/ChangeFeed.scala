@@ -38,36 +38,26 @@ import graft.queries.ChangeData
   */
 object ChangeFeed {
 
+  /** The LWW winner per user. */
   private def emptyState(spark: SparkSession): DataFrame =
     spark.range(0).select(col("id").as("user_id"),
       lit(null).cast("timestamp").as("ts"), col("id").as("event_id"),
       lit("").as("event_type"), lit(0.0).as("value"))
 
-  /** Current LWW winner per user: highest-batch_id state row below
-    * `batchId`. Schema-stable empty frame before any write. */
-  private[graft] def readState(spark: SparkSession, stateDir: String,
-      batchId: Long): DataFrame =
-    BatchStore.latest(spark, stateDir, Seq("user_id"), batchId)(emptyState(spark))
-
   /** One micro-batch of (user_id, event_id, event_type, ts, value):
     * emit the change rows and advance the stored winners. */
   def processBatch(batch: DataFrame, stateDir: String, cdcDir: String,
       batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (BatchStore.foldDue(batchId))
-      BatchStore.fold(spark, stateDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val img = struct(col("ts"), col("event_id"), col("event_type"), col("value"))
     // the batch's own per-key winner: ONE map-side-combined aggregate
     val batchWin = batch
       .select(col("user_id"), img.as("bw"))
       .groupBy(col("user_id"))
       .agg(max(col("bw")).as("bw"))
-    // stored winners of the touched keys only (null-safe left-semi prune:
-    // the log carries NULL users and q27 treats them as one ordinary key)
-    val stored = readState(spark, stateDir, batchId)
-    val storedTouched = stored
-      .join(batchWin.select(col("user_id").as("bu")),
-        stored("user_id") <=> col("bu"), "left_semi")
+    // stored winners of the touched keys only (q27 treats the NULL user
+    // as one ordinary key)
+    val storedTouched = BatchStore.touchedTail(batch.sparkSession, stateDir, "user_id", batchId,
+        batchWin)(emptyState(batch.sparkSession))
       .select(col("user_id").as("su"), img.as("old"))
     // old = stored image (null when first seen); nw = LWW max of the two
     // (greatest skips the null old) — commutative, so arrival order can
@@ -75,8 +65,8 @@ object ChangeFeed {
     val pairs = batchWin
       .join(storedTouched, col("user_id") <=> col("su"), "left_outer")
       .select(col("user_id"), col("old"), greatest(col("old"), col("bw")).as("nw"))
-      // feeds the cdc write and the state write (r9 pinning discipline:
-      // the dynamic overwrite below must not re-read a lazy plan)
+      // feeds the cdc write and the state write; the dynamic overwrite
+      // below must not re-read a lazy plan
       .localCheckpoint(true)
     BatchStore.write(ChangeData.cdcRows(pairs), cdcDir, batchId)
     // advance ONLY the moved keys — an unchanged key's winner stays live
@@ -90,7 +80,7 @@ object ChangeFeed {
 
   /** The q27-shaped current state over everything ingested so far. */
   def state(spark: SparkSession, stateDir: String): DataFrame =
-    readState(spark, stateDir, Long.MaxValue)
+    BatchStore.latest(spark, stateDir, Seq("user_id"), Long.MaxValue)(emptyState(spark))
       .select(col("user_id"), col("event_type"), col("value"), col("ts"))
       .orderBy(col("user_id"))
 

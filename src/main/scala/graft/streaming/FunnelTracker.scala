@@ -37,19 +37,14 @@ import org.apache.spark.sql.functions._
   * kernel's equi-joins strand null users at the signup stage in BOTH
   * forms — same kernel, same semantics).
   *
-  * The arrival-order contract is ENFORCED, not assumed (r9/r10 verdict
-  * item 2): the store keeps one row per user EVER SEEN (funnel-entered
-  * or not — a user whose first events precede their signup has
-  * discardable events but a mark that must still advance), carrying the
-  * user's max event ts as `hwm_ts`, and [[processBatch]] rejects —
-  * IllegalStateException, before any sink write — a batch carrying an
-  * event strictly below a seen user's mark. NONDECREASING is the precise
-  * contract (not strictly increasing): the fold is tie-safe because
-  * every stage filter is strict (`ts > t_prev`), so an event tying the
-  * mark can neither qualify retroactively nor lower a stage minimum —
-  * the s25 out-of-order law pins both directions. Replay stays legal:
-  * a re-run of batch b checks against the marks as of b-1 (its own
-  * writes invisible), exactly like its reads.
+  * Arrival order (BatchStore's contract, nondecreasing): the store keeps
+  * one row per user EVER SEEN, funnel-entered or not (a user whose first
+  * events precede their signup has discardable events but a mark that
+  * must still advance), carrying the user's max event ts as `hwm_ts`. A
+  * tie at the mark is admitted: every stage filter is strict
+  * (`ts > t_prev`), so an event tying the mark can neither qualify
+  * retroactively nor lower a stage minimum; the s25 out-of-order law pins
+  * both directions.
   */
 object FunnelTracker {
 
@@ -62,19 +57,16 @@ object FunnelTracker {
       lit(0).as("stages_completed"),
       lit(null).cast("timestamp").as("hwm_ts"))
 
-  /** One row per user ever seen — funnel tuple (NULL t_signup if the
-    * user never entered) plus the order mark: highest-batch_id tail row
-    * below `batchId`. Schema-stable empty frame before any write. */
-  private[graft] def readTailsFull(spark: SparkSession, tailDir: String,
-      batchId: Long): DataFrame =
-    BatchStore.latest(spark, tailDir, Seq("user_id"), batchId)(emptyTails(spark))
+  private val arrival = BatchStore.Arrival("s25",
+    "a late event could qualify discarded history; q62 parity would silently break",
+    col("hwm_ts"), strict = false)
 
   /** Live funnel tuple per funnel-ENTERED user — the read-path face
     * (q62's row set: hwm-only rows are store bookkeeping, not funnel
     * state). */
   private[graft] def readTails(spark: SparkSession, tailDir: String,
       batchId: Long): DataFrame =
-    readTailsFull(spark, tailDir, batchId)
+    BatchStore.latest(spark, tailDir, Seq("user_id"), batchId)(emptyTails(spark))
       .filter(col("t_signup").isNotNull)
       .select(col("user_id"), col("t_signup"), col("t_view"),
         col("t_click"), col("t_purchase"), col("stages_completed"))
@@ -82,10 +74,6 @@ object FunnelTracker {
   /** One micro-batch of (user_id, event_type, ts): advance the touched
     * users' funnels, write the new tails to the batch's own partition. */
   def processBatch(batch: DataFrame, tailDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    // bound the LWW read: fold committed tail partitions into the base
-    if (BatchStore.foldDue(batchId))
-      BatchStore.fold(spark, tailDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("user_id"), col("event_type"), col("ts"))
     // the batch's users with their ts range, one aggregate read by the
     // tail prune, the arrival-order gate and the new marks (pinned: an
@@ -93,39 +81,22 @@ object FunnelTracker {
     val span = ev.groupBy(col("user_id").as("hu"))
       .agg(min(col("ts")).as("mn"), max(col("ts")).as("hwm_new"))
       .localCheckpoint(true)
-    // only the batch's users can advance; everyone else's tail stays
-    // live in an older partition untouched. NULL-safe semi join: the
-    // null-user group carries a tail like any key (it enters the funnel
-    // at signup and strands there — the kernel's own semantics).
-    val stored = readTailsFull(spark, tailDir, batchId)
-    val tails = stored.join(span, stored("user_id") <=> span("hu"), "left_semi")
-    // arrival-order gate: every batch event must sit at or above the
-    // touched user's stored hwm_ts — checked BEFORE any sink write so a
-    // violating batch leaves the store untouched (nondecreasing, not
-    // strict: the fold is tie-safe — see the class doc)
-    val bad = span
-      .join(tails.select(col("user_id"), col("hwm_ts")), col("hu") <=> col("user_id"))
-      .filter(col("mn") < col("hwm_ts"))
-      .select(col("hu"), col("mn"), col("hwm_ts"))
-      .limit(3).collect()
-    if (bad.nonEmpty) throw new IllegalStateException(
-      s"s25 arrival-order contract violated in batch $batchId (a late " +
-        "event could qualify discarded history; q62 parity would " +
-        "silently break): " +
-        bad.map(r => s"user ${r.get(0)}: batch min ts ${r.get(1)} < high-water ${r.get(2)}")
-          .mkString("; "))
-    // eager pin before the dynamic overwrite of the directory the plan
-    // itself reads (r9 pinning discipline)
-    val state = advance(tails, ev).localCheckpoint(true)
-    // new tail = EVERY batch user: funnel tuple where entered (NULL
-    // stages otherwise) + the advanced order mark — the gate above
-    // proved this batch's max ts is each touched user's new high water
-    val newTails = span.join(state, col("hu") <=> state("user_id"), "left")
-      .select(col("hu").as("user_id"), col("t_signup"), col("t_view"),
-        col("t_click"), col("t_purchase"),
-        coalesce(col("stages_completed"), lit(0)).as("stages_completed"),
-        col("hwm_new").as("hwm_ts"))
-    BatchStore.write(newTails, tailDir, batchId)
+    BatchStore.gatedTail(batch.sparkSession, tailDir, "user_id", batchId,
+        span.select(col("hu").as("user_id"), col("mn")), arrival)(
+        emptyTails(batch.sparkSession)) { tails =>
+      // eager pin before the dynamic overwrite of the directory the plan
+      // itself reads
+      val state = advance(tails, ev).localCheckpoint(true)
+      // new tail = EVERY batch user: funnel tuple where entered (NULL
+      // stages otherwise) + the advanced order mark — the gate proved
+      // this batch's max ts is each touched user's new high water
+      val newTails = span.join(state, col("hu") <=> state("user_id"), "left")
+        .select(col("hu").as("user_id"), col("t_signup"), col("t_view"),
+          col("t_click"), col("t_purchase"),
+          coalesce(col("stages_completed"), lit(0)).as("stages_completed"),
+          col("hwm_new").as("hwm_ts"))
+      BatchStore.write(newTails, tailDir, batchId)
+    }
   }
 
   /** The funnel tuples of the batch's users: batch q62's unordered

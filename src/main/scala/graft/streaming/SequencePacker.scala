@@ -25,16 +25,10 @@ import graft.queries.Pack
   * the concatenated corpus, because next-fit is a left fold and the
   * carried tail is its entire state.
   *
-  * The arrival-order contract is ENFORCED, not assumed (r9 verdict item
-  * 2 / r10 item 2): each tail carries the shard's doc_id high-water mark
-  * and [[processBatch]] rejects — IllegalStateException, before any sink
-  * write — a batch containing a doc at or below a touched shard's mark.
-  * Next-fit is NOT order-insensitive (a doc appended late lands in a
-  * later bin than the batch fold would have put it), so a violating
-  * batch must die at the boundary rather than silently diverge from the
-  * q96 parity the store promises. Replay stays legal: a re-run of batch
-  * b checks against the marks as of b-1 (its own writes invisible),
-  * exactly like its reads.
+  * Arrival order (BatchStore's contract, strict, in doc_id order): each
+  * tail carries the shard's doc_id high-water mark `max_doc`. Next-fit
+  * is order-sensitive: a doc appended late lands in a later bin than the
+  * batch fold would have put it.
   *
   * Scale posture: per batch, one hash shuffle of the batch's documents
   * on shard_id + a within-partition sort + the linear iterator fold
@@ -43,36 +37,23 @@ import graft.queries.Pack
   * O(shards) — the same bounded driver state the q94 probe holds. */
 object SequencePacker {
 
-  /** Live (shard_id → (fill, bin, max_doc)) tails: highest-batch_id row
-    * per shard below `batchId`; empty before any write. `max_doc` is
-    * the shard's doc_id high-water mark — the enforcement handle of the
-    * arrival-order contract. */
-  private[graft] def readTails(spark: SparkSession, tailDir: String,
-      batchId: Long): Map[Long, (Long, Long, Long)] = {
-    import spark.implicits._
-    // a local empty frame: collecting it runs no job
-    val empty = Seq.empty[(Long, Long, Long, Long)].toDF("shard_id", "fill", "bin", "max_doc")
-    BatchStore.latest(spark, tailDir, Seq("shard_id"), batchId)(empty)
-      .select(col("shard_id"), col("fill"), col("bin"), col("max_doc"))
-      .collect() // O(shards) rows — bounded driver state by design
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-  }
-
   /** One micro-batch of (doc_id, text, …): assign bins continuing from
     * the stored tails, write assignments + new tails to own partitions. */
   def processBatch(batch: DataFrame, tailDir: String, assignDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    // bound the LWW read: fold committed tail partitions into the base
-    if (BatchStore.foldDue(batchId))
-      BatchStore.fold(spark, tailDir, batchId)(BatchStore.lastWins(Seq("shard_id")))
-    val tails = readTails(spark, tailDir, batchId)
-    // arrival-order gate: O(shards) per-shard minima vs the stored
-    // high-water marks, checked BEFORE any sink write so a violating
-    // batch leaves both stores untouched (one map-side aggregate over
-    // the batch; the collect is O(shards), the q94-probe bound)
+    // live (shard_id → (fill, bin, max_doc)) tails, O(shards) rows
+    // collected by design; a local empty frame collects without a job
+    val tails = BatchStore.tail(spark, tailDir, "shard_id", batchId)(
+        Seq.empty[(Long, Long, Long, Long)].toDF("shard_id", "fill", "bin", "max_doc"))
+      .select(col("shard_id"), col("fill"), col("bin"), col("max_doc"))
+      .collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toMap
+    // kept: the gate compares per-shard batch minima with the collected
+    // map the fold is seeded from (O(shards), no join, no job while the
+    // store is empty), not with BatchStore.gatedTail's distributed tail
     if (tails.nonEmpty) {
       val violations = batch
         .select((col("doc_id") % Pack.PackShards).as("shard_id"), col("doc_id"))
@@ -83,10 +64,8 @@ object SequencePacker {
             s"shard $s: doc $d <= high-water $maxDoc"
           }
         }
-      if (violations.nonEmpty) throw new IllegalStateException(
-        s"s23 arrival-order contract violated in batch $batchId (next-fit " +
-          s"is order-sensitive; q96 parity would silently break): " +
-          violations.take(3).mkString("; "))
+      if (violations.nonEmpty) throw BatchStore.violation("s23", batchId,
+        "next-fit is order-sensitive; q96 parity would silently break", violations.take(3).toSeq)
     }
     val asg = batch
       .select((col("doc_id") % Pack.PackShards).as("shard_id"), col("doc_id"),
@@ -115,7 +94,7 @@ object SequencePacker {
       .toDF("shard_id", "doc_id", "t", "bin_id", "fill_after")
       // eager pin: feeds the assignment write AND the tail aggregate, and
       // the dynamic overwrite below rewrites paths a lazy plan might
-      // re-read (r9 pinning discipline)
+      // re-read
       .localCheckpoint(true)
     BatchStore.write(asg.select(col("shard_id"), col("doc_id"), col("t"), col("bin_id")),
       assignDir, batchId)

@@ -9,11 +9,10 @@ import graft.queries.{Windows => WindowsQ}
 /** s49: streaming SESSION tracking — q178's entry→exit flow maintained as
   * events land, the continuously-sessionizing job every event platform
   * runs (a session is open until time proves it closed, so state is
-  * intrinsic). ORDER-GATED family (s23/s24/s31/s35): sessionization is
-  * order-sensitive across batches — a late event could bridge two
-  * already-split sessions — so each user's events must arrive in
-  * (ts, event_id) order across batches, enforced at the boundary BEFORE
-  * any write.
+  * intrinsic). ORDER-GATED family (BatchStore's arrival-order contract,
+  * strict, in (ts, event_id) order): sessionization is order-sensitive
+  * across batches — a late event could bridge two already-split
+  * sessions.
   *
   * The batch seam is the interesting part: a session can SPAN batches.
   * Each batch sessionizes its own events through q178's OWN
@@ -50,61 +49,43 @@ object SessionTracker {
       lit(null).cast("timestamp").as("ts"), col("id").as("event_id"),
       lit("").as("event_type")))
 
-  /** Per-user open session: highest-batch_id state row below `batchId`. */
-  private def readOpen(spark: SparkSession, openDir: String,
-      batchId: Long): DataFrame =
-    BatchStore.latest(spark, openDir, Seq("user_id"), batchId)(emptyOpen(spark))
+  private val arrival = BatchStore.Arrival("s49",
+    "sessionization is order-sensitive; a late event could bridge already-split sessions",
+    struct(col("last.ts"), col("last.event_id")), strict = true)
 
   /** One micro-batch of (user_id, event_id, event_type, ts): merge its
     * sessions with the open state, close what time has closed, advance
     * the state. */
   def processBatch(batch: DataFrame, openDir: String, closedDir: String,
       batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (BatchStore.foldDue(batchId))
-      BatchStore.fold(spark, openDir, batchId)(BatchStore.lastWins(Seq("user_id")))
     val ev = batch.select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-    val stored = readOpen(spark, openDir, batchId)
-    val batchUsers = ev.select(col("user_id").as("bu")).distinct()
-    val storedTouched = stored
-      .join(batchUsers, stored("user_id") <=> col("bu"), "left_semi")
-    // arrival-order gate (s35's argument): every batch event must sit
-    // strictly above the touched user's open session's last event — a
-    // late event could bridge sessions the kernel already split
-    val bad = ev.groupBy(col("user_id"))
+    val mins = ev.groupBy(col("user_id"))
       .agg(min(struct(col("ts"), col("event_id"))).as("mn"))
-      .join(storedTouched.select(col("user_id").as("hu"),
-          struct(col("last.ts"), col("last.event_id")).as("hw")),
-        col("user_id") <=> col("hu"))
-      .filter(col("mn") <= col("hw"))
-      .limit(3).collect()
-    if (bad.nonEmpty) throw new IllegalStateException(
-      s"s49 arrival-order contract violated in batch $batchId " +
-        "(sessionization is order-sensitive; a late event could bridge " +
-        "already-split sessions): " +
-        bad.map(r => s"user ${r.get(0)}").mkString("; "))
-    // q178's own kernel over the batch, then the seam merge: segments
-    // (open state ∪ batch sessions) chain together wherever the gap
-    // between last and next-first events is within the session gap
-    val segs = storedTouched.unionByName(WindowsQ.sessionize(ev))
-    val wU = Window.partitionBy(col("user_id")).orderBy(col("first.ts"), col("first.event_id"))
-    val merged = segs
-      .withColumn("prev_last", lag(col("last"), 1).over(wU))
-      .withColumn("new_s",
-        when(col("prev_last").isNull ||
-          unix_micros(col("first.ts")) - unix_micros(col("prev_last.ts")) > GapMicros,
-          1L).otherwise(0L))
-      .withColumn("sid", sum(col("new_s")).over(
-        wU.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min(col("first")).as("first"), max(col("last")).as("last"),
-        sum(col("n_events")).as("n_events"))
-    val ranked = merged.withColumn("rn",
-      row_number().over(Window.partitionBy(col("user_id")).orderBy(col("sid").desc)))
-      .localCheckpoint(true) // one evaluation feeds both writes
-    val session = Seq("user_id", "first", "last", "n_events").map(col)
-    BatchStore.write(ranked.filter(col("rn") > 1).select(session: _*), closedDir, batchId)
-    BatchStore.write(ranked.filter(col("rn") === 1).select(session: _*), openDir, batchId)
+    BatchStore.gatedTail(batch.sparkSession, openDir, "user_id", batchId, mins, arrival)(
+        emptyOpen(batch.sparkSession)) { open =>
+      // q178's own kernel over the batch, then the seam merge: segments
+      // (open state ∪ batch sessions) chain together wherever the gap
+      // between last and next-first events is within the session gap
+      val segs = open.unionByName(WindowsQ.sessionize(ev))
+      val wU = Window.partitionBy(col("user_id")).orderBy(col("first.ts"), col("first.event_id"))
+      val merged = segs
+        .withColumn("prev_last", lag(col("last"), 1).over(wU))
+        .withColumn("new_s",
+          when(col("prev_last").isNull ||
+            unix_micros(col("first.ts")) - unix_micros(col("prev_last.ts")) > GapMicros,
+            1L).otherwise(0L))
+        .withColumn("sid", sum(col("new_s")).over(
+          wU.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy(col("user_id"), col("sid"))
+        .agg(min(col("first")).as("first"), max(col("last")).as("last"),
+          sum(col("n_events")).as("n_events"))
+      val ranked = merged.withColumn("rn",
+        row_number().over(Window.partitionBy(col("user_id")).orderBy(col("sid").desc)))
+        .localCheckpoint(true) // one evaluation feeds both writes
+      val session = Seq("user_id", "first", "last", "n_events").map(col)
+      BatchStore.write(ranked.filter(col("rn") > 1).select(session: _*), closedDir, batchId)
+      BatchStore.write(ranked.filter(col("rn") === 1).select(session: _*), openDir, batchId)
+    }
   }
 
   /** The q178-shaped flow report over everything ingested so far —
@@ -113,7 +94,7 @@ object SessionTracker {
   def flow(spark: SparkSession, openDir: String, closedDir: String): DataFrame = {
     val closed = BatchStore.readOr(spark, closedDir)(emptyOpen(spark))
       .select(col("user_id"), col("first"), col("last"), col("n_events"))
-    val open = readOpen(spark, openDir, Long.MaxValue)
+    val open = BatchStore.latest(spark, openDir, Seq("user_id"), Long.MaxValue)(emptyOpen(spark))
     WindowsQ.flowOf(closed.unionByName(open))
   }
 }
