@@ -2,8 +2,9 @@ package graft.streaming
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode,
+  TimerValues, TTLConfig, ValueState}
 
 /** A materialized member-bill row — the engine-native form of the MySQL
   * `member_bills` table (readme:83-93). */
@@ -19,9 +20,9 @@ case class Bill(
 
 /** s04 as *keyed arbitrary state*: the last-writer-wins bill projection
   * (R7 insert / R8 update, consumer/consumer.go:205-220) held in the
-  * engine's state store instead of re-merged parquet (the foreachBatch
-  * variant lives in BnplPipeline.upsertBills — same semantics, different
-  * storage contract).
+  * engine's state store — one `transformWithState` operator with a named,
+  * schema'd ValueState per bill_id (requires the RocksDB state store
+  * provider), optionally with an overdue-reminder timer per bill (s13).
   *
   * Scale posture: state is partitioned by bill_id across executors, and
   * with the RocksDB provider (rocksdbjni ships here; exercised in
@@ -54,39 +55,10 @@ object BillProjection {
       }
     }
 
-  /** Apply one micro-batch's events for one bill to its GroupState. */
-  def update(billId: String, events: Iterator[RawEvent], state: GroupState[Bill]): Iterator[Bill] = {
-    val cur = fold(state.getOption.orNull, events)
-    if (cur == null) Iterator.empty
-    else { state.update(cur); Iterator.single(cur) }
-  }
-
   /** The streaming projection: emits the updated bill row per key per
     * batch (OutputMode.Update — the changelog a downstream sink merges). */
-  def apply(events: Dataset[RawEvent]): Dataset[Bill] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(e => e.event_type == Envelope.MemberBillCreated ||
-                   e.event_type == Envelope.PaymentCompleted)
-      .groupByKey(_.bill_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** The same projection on Spark 4's transformWithState operator — the
-    * current-generation arbitrary-state API (requires the RocksDB state
-    * store provider): state lives in a named, schema'd ValueState the
-    * engine can evolve/inspect, instead of an opaque GroupState blob.
-    * Semantics identical to [[apply]] (same fold; asserted in
-    * StatefulSpec). */
-  def applyTws(events: Dataset[RawEvent]): Dataset[Bill] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(e => e.event_type == Envelope.MemberBillCreated ||
-                   e.event_type == Envelope.PaymentCompleted)
-      .groupByKey(_.bill_id)
-      .transformWithState(new BillProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update)
-  }
+  def applyTws(events: Dataset[RawEvent]): Dataset[Bill] =
+    project(events, TimeMode.None(), None)
 
   /** s13: the projection PLUS overdue reminders via state-store TIMERS —
     * the capability the GroupState generation cannot express (its timeouts
@@ -100,22 +72,12 @@ object BillProjection {
     * row (main.go SSE notify) and has nothing time-driven; this is the
     * deadline-driven follow-up a real BNPL collections flow needs.
     *
-    * Scale posture identical to [[applyTws]] — per-key RocksDB state,
-    * timers partitioned with their keys — plus one timer per unpaid bill,
-    * deleted on payment, so timer cardinality is bounded by live unpaid
-    * bills, not stream length. Alert rows do not touch the stored
-    * projection: state keeps status='unpaid' (a reminder is output, not a
-    * state transition), so the projection stays last-writer-wins
-    * identical to every other s04 form. */
-  def applyTwsReminders(events: Dataset[RawEvent], reminderDelayMs: Long): Dataset[Bill] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(e => e.event_type == Envelope.MemberBillCreated ||
-                   e.event_type == Envelope.PaymentCompleted)
-      .groupByKey(_.bill_id)
-      .transformWithState(new BillReminderProcessor(reminderDelayMs),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(), OutputMode.Update)
-  }
+    * Timer cardinality is bounded by live unpaid bills, not stream
+    * length. Alert rows do not touch the stored projection: state keeps
+    * status='unpaid' (a reminder is output, not a state transition). */
+  def applyTwsReminders(events: Dataset[RawEvent], reminderDelayMs: Long): Dataset[Bill] =
+    project(events, TimeMode.ProcessingTime(),
+      Some((timers, _) => timers.getCurrentProcessingTimeInMs() + reminderDelayMs))
 
   /** s13 on EVENT-TIME timers — the collections-deadline semantics done
     * right: a bill's reminder is due `reminderDelayMs` after the bill's
@@ -129,51 +91,38 @@ object BillProjection {
     * (consumer/consumer.go:64). Requires the caller-visible watermark on
     * `ts`; `watermarkDelay` bounds how out-of-order the event log may be. */
   def applyTwsRemindersEventTime(events: Dataset[RawEvent], reminderDelayMs: Long,
-      watermarkDelay: String = "0 seconds"): Dataset[Bill] = {
+      watermarkDelay: String = "0 seconds"): Dataset[Bill] =
+    project(events.withWatermark("ts", watermarkDelay), TimeMode.EventTime(),
+      Some((_, bill) => bill.updated_at.getTime + reminderDelayMs))
+
+  private def project(events: Dataset[RawEvent], timeMode: TimeMode,
+      reminder: Option[(TimerValues, Bill) => Long]): Dataset[Bill] = {
     import events.sparkSession.implicits._
     events
-      .withWatermark("ts", watermarkDelay)
       .filter(e => e.event_type == Envelope.MemberBillCreated ||
                    e.event_type == Envelope.PaymentCompleted)
       .groupByKey(_.bill_id)
-      .transformWithState(new BillReminderProcessorEventTime(reminderDelayMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update)
+      .transformWithState(new BillProcessor(reminder), timeMode, OutputMode.Update)
   }
 }
 
-/** transformWithState processor for the bill projection: one ValueState[Bill]
-  * per bill_id, updated by the shared BillProjection.fold. */
-class BillProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[String, RawEvent, Bill] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-
-  @transient private var state: ValueState[Bill] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[Bill]("bill", Encoders.product[Bill], TTLConfig.NONE)
-
-  override def handleInputRows(billId: String, rows: Iterator[RawEvent],
-      timerValues: TimerValues): Iterator[Bill] = {
-    val cur = BillProjection.fold(if (state.exists()) state.get() else null, rows)
-    if (cur == null) Iterator.empty
-    else { state.update(cur); Iterator.single(cur) }
-  }
-}
-
-/** [[BillProjection.applyTwsReminders]]'s processor: the shared fold plus a
-  * per-bill overdue timer. Timer lifecycle: register when a bill ENTERS
-  * 'unpaid' (not on every event — and the fold's INSERT-only create arm
-  * guarantees a re-delivered create never re-enters 'unpaid', so the
-  * guard holds across batches, not just within one), delete all pending
-  * timers when it flips to 'paid', alert from handleExpiredTimer only if
-  * still unpaid at expiry (state may have flipped between registration
-  * and firing in the same batch window — the re-check, not the deletion,
-  * is the correctness guard; deletion just keeps the timer store from
-  * growing). */
-class BillReminderProcessor(reminderDelayMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, RawEvent, Bill] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimeMode, TimerValues, TTLConfig, ValueState}
+/** The bill projection's processor: one ValueState[Bill] per bill_id,
+  * updated by the shared [[BillProjection.fold]], plus an optional overdue
+  * reminder: a function giving the timer instant (epoch ms) for a bill that
+  * just entered 'unpaid'. With no reminder the timer API is never touched.
+  *
+  * Timer lifecycle: register when a bill ENTERS 'unpaid' (not on every
+  * event — and the fold's INSERT-only create arm guarantees a re-delivered
+  * create never re-enters 'unpaid', so the guard holds across batches, not
+  * just within one), delete all pending timers when it flips to 'paid',
+  * alert from handleExpiredTimer only if still unpaid at expiry (state may
+  * have flipped between registration and firing in the same batch window
+  * — the re-check, not the deletion, is the correctness guard; deletion
+  * just keeps the timer store from growing). The alert's updated_at is the
+  * timer instant, so event-time alerts are bit-identical across replays of
+  * the same backlog (the StatefulSpec determinism law). */
+class BillProcessor(reminder: Option[(TimerValues, Bill) => Long])
+    extends StatefulProcessor[String, RawEvent, Bill] {
 
   @transient private var state: ValueState[Bill] = _
 
@@ -187,52 +136,13 @@ class BillReminderProcessor(reminderDelayMs: Long)
     if (cur == null) Iterator.empty
     else {
       state.update(cur)
-      if (cur.status == "unpaid" && (prev == null || prev.status != "unpaid"))
-        getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + reminderDelayMs)
-      if (cur.status == "paid" && prev != null && prev.status == "unpaid")
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-      Iterator.single(cur)
-    }
-  }
-
-  override def handleExpiredTimer(billId: String, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[Bill] = {
-    if (state.exists() && state.get().status == "unpaid")
-      Iterator.single(state.get().copy(status = "overdue",
-        updated_at = new Timestamp(expiredTimerInfo.getExpiryTimeInMs())))
-    else Iterator.empty
-  }
-}
-
-/** [[BillProjection.applyTwsRemindersEventTime]]'s processor — identical
-  * lifecycle to [[BillReminderProcessor]] with one change that carries all
-  * the semantics: the timer instant is EVENT time (the bill's create ts +
-  * delay, read from the folded row's updated_at) instead of the current
-  * processing time, so firing is a pure function of the event log and the
-  * watermark. The emitted alert's updated_at is that same deadline —
-  * bit-identical across replays of the same backlog (the StatefulSpec
-  * determinism law). */
-class BillReminderProcessorEventTime(reminderDelayMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, RawEvent, Bill] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimeMode, TimerValues, TTLConfig, ValueState}
-
-  @transient private var state: ValueState[Bill] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[Bill]("bill", Encoders.product[Bill], TTLConfig.NONE)
-
-  override def handleInputRows(billId: String, rows: Iterator[RawEvent],
-      timerValues: TimerValues): Iterator[Bill] = {
-    val prev = if (state.exists()) state.get() else null
-    val cur = BillProjection.fold(prev, rows)
-    if (cur == null) Iterator.empty
-    else {
-      state.update(cur)
-      if (cur.status == "unpaid" && (prev == null || prev.status != "unpaid"))
-        getHandle.registerTimer(cur.updated_at.getTime + reminderDelayMs) // event time
-      if (cur.status == "paid" && prev != null && prev.status == "unpaid")
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
+      reminder.foreach { deadline =>
+        val wasUnpaid = prev != null && prev.status == "unpaid"
+        if (cur.status == "unpaid" && !wasUnpaid)
+          getHandle.registerTimer(deadline(timerValues, cur))
+        if (cur.status == "paid" && wasUnpaid)
+          getHandle.listTimers().foreach(getHandle.deleteTimer)
+      }
       Iterator.single(cur)
     }
   }

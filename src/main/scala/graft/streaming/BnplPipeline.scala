@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -27,15 +27,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Scale posture: every stage is keyed (user_id / bill_id) — nothing
   * depends on the reference's single-shard global order
   * (producer/producer.go:24); watermarks bound all state. The bill
-  * projection DEFAULTS to keyed state (BillProjection.applyTws on the
-  * RocksDB provider): per batch only the *changed* bills flow out as a
-  * changelog and are merged into the serving parquet — state size is
-  * bounded by live keys, merge cost by changed keys. The
-  * full-table parquet rewrite (upsertBills) remains as the explicit
-  * fallback for environments without a state store.
+  * projection is keyed state (BillProjection.applyTws on the RocksDB
+  * provider): per batch only the *changed* bills flow out as a changelog
+  * and are merged into the serving parquet — state size is bounded by
+  * live keys, merge cost by changed keys.
   *
-  * @param billsViaKeyedState true (default) = s04 through
-  *   transformWithState/RocksDB; false = per-batch parquet MERGE fallback.
   * @param onUpdate change-notification callback (batchId, userIds) — the
   *   content-free "update" broadcast of consumer/consumer.go:177-180 /
   *   main.go:57-73, upgraded to carry the affected keys (driver-side list
@@ -55,7 +51,6 @@ class BnplPipeline(
     eventsDir: String,
     stateDir: String,
     trigger: Trigger = Trigger.ProcessingTime(0L),
-    billsViaKeyedState: Boolean = true,
     onUpdate: (Long, Seq[String]) => Unit = (_, _) => (),
     broker: Option[(DataFrame, DataFrame => Unit)] = None) {
 
@@ -167,35 +162,19 @@ class BnplPipeline(
     // MemberBillCreated inserts status='unpaid' (consumer/consumer.go:207),
     // PaymentCompleted flips status/paid_date for an EXISTING bill only
     // (UPDATE … WHERE id=?, consumer/consumer.go:214-220 — a no-op when
-    // the bill is unknown).
-    //
-    // Default path: BillProjection.applyTws holds the projection in keyed
-    // RocksDB state; each batch emits only the CHANGED bills, merged into
-    // the serving parquet by key (O(changed) state work per batch).
-    // Fallback path: upsertBills re-merges the whole parquet per batch —
-    // O(total state) I/O, kept for state-store-less environments.
-    val billsQ = if (billsViaKeyedState) {
-      if (!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-            .exists(_.contains("RocksDB")))
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      import spark.implicits._
-      BillProjection.applyTws(ev.as[RawEvent])
-        .writeStream
-        .outputMode("update")
-        .foreachBatch { (changelog: org.apache.spark.sql.Dataset[Bill], batchId: Long) =>
-          mergeBillsChangelog(changelog.toDF(), batchId)
-        }
-        .option("checkpointLocation", ckpt("bills"))
-        .trigger(trigger)
-        .queryName("bnpl_member_bills")
-        .start()
-    } else ev
-      .filter(col("event_type") === MemberBillCreated ||
-              col("event_type") === PaymentCompleted)
+    // the bill is unknown). BillProjection.applyTws holds the projection
+    // in keyed RocksDB state; each batch emits only the CHANGED bills,
+    // merged into the serving parquet by key (O(changed) state work per
+    // batch).
+    if (!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+          .exists(_.contains("RocksDB")))
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val billsQ = BillProjection.applyTws(ev.as(Encoders.product[RawEvent]))
       .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBills(batch, batchId)
+      .outputMode("update")
+      .foreachBatch { (changelog: Dataset[Bill], batchId: Long) =>
+        mergeBillsChangelog(changelog.toDF(), batchId)
       }
       .option("checkpointLocation", ckpt("bills"))
       .trigger(trigger)
@@ -240,8 +219,8 @@ class BnplPipeline(
     queries
   }
 
-  /** Merge a keyed-state changelog into the serving parquet (s04 default
-    * path): each changelog row is already the bill's full post-fold state
+  /** Merge a keyed-state changelog into the serving parquet (s04): each
+    * changelog row is already the bill's full post-fold state
     * (BillProjection emits one row per changed key per batch), so the merge
     * is replace-by-key — no window over the full table, no event
     * interpretation here. On a real cluster this is a Delta/Iceberg
@@ -255,63 +234,12 @@ class BnplPipeline(
     val log = changelog.persist()
     try {
       if (!log.isEmpty) {
-        val merged = currentBills
+        val merged = BatchStore.readOr(spark, billsDir)(spark.emptyDataset(Encoders.product[Bill]).toDF())
           .join(log.select(col("id")).distinct(), Seq("id"), "left_anti")
           .unionByName(log)
         swapBills(merged, batchId)
       }
     } finally log.unpersist()
-  }
-
-  /** Per-batch MERGE into the member_bills parquet (s04 fallback for
-    * state-store-less environments). Local-FS stand-in for Delta MERGE:
-    * read current, apply the batch's inserts and updates last-writer-wins
-    * by (ts, kind), atomically swap directories — O(total state) I/O per
-    * batch, which is why the keyed-state path is the default. */
-  private def upsertBills(batch: DataFrame, batchId: Long): Unit = {
-    import Envelope._
-    if (batch.isEmpty) return
-    val current = currentBills
-
-    val inserts = batch.filter(col("event_type") === MemberBillCreated)
-      .select(
-        col("bill_id").as("id"), col("promise_id"), col("user_id"),
-        col("amount"),
-        lit("unpaid").as("status"),
-        to_date(col("issued_date"), "yyyy-MM-dd").as("issued_date"),
-        lit(null).cast("date").as("paid_date"),
-        col("ts").as("updated_at"))
-
-    val payments = batch.filter(col("event_type") === PaymentCompleted)
-      .select(col("bill_id").as("id"),
-        to_date(col("paid_date"), "yyyy-MM-dd").as("new_paid_date"),
-        col("ts").as("pay_ts"))
-
-    // inserts first (a bill created and paid in the same batch resolves in
-    // event order), then payments applied only to known bills.
-    val withInserts = current.unionByName(inserts)
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("id")).orderBy(col("updated_at").desc)))
-      .filter(col("rn") === 1).drop("rn")
-
-    val merged = withInserts.as("b")
-      .join(payments.as("p"), col("b.id") === col("p.id"), "left_outer")
-      .select(col("b.id"), col("b.promise_id"), col("b.user_id"), col("b.amount"),
-        when(col("p.new_paid_date").isNotNull, lit("paid"))
-          .otherwise(col("b.status")).as("status"),
-        col("b.issued_date"),
-        coalesce(col("p.new_paid_date"), col("b.paid_date")).as("paid_date"),
-        coalesce(col("p.pay_ts"), col("b.updated_at")).as("updated_at"))
-
-    swapBills(merged, batchId)
-  }
-
-  private def currentBills: DataFrame = {
-    val fs = new java.io.File(billsDir)
-    if (fs.exists() && fs.listFiles() != null && fs.listFiles().nonEmpty)
-      spark.read.parquet(billsDir)
-    else emptyBills
   }
 
   /** Atomic-enough projection swap on local FS: write aside, then move
@@ -325,13 +253,6 @@ class BnplPipeline(
     }
     new java.io.File(tmp).renameTo(target)
   }
-
-  private def emptyBills: DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "id string, promise_id string, user_id string, amount bigint, " +
-        "status string, issued_date date, paid_date date, updated_at timestamp"))
 
   /** Drain the self-loop to quiescence: derived promise events written in
     * round N are consumed in round N+1 (two broker hops in the reference,

@@ -20,63 +20,21 @@ class StatefulSpec extends SparkSpec {
     RawEvent(id, tpe, Timestamp.valueOf(ts), null, user, amount, promise, bill,
       null, null, issued, paid)
 
-  test("keyed bill state: insert 'unpaid', payment flips, unknown bill payment is a no-op (RocksDB)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      val input = MemoryStream[RawEvent]
-      val query = BillProjection(input.toDS()).writeStream
-        .format("memory")
-        .queryName("bills_state")
-        .outputMode(OutputMode.Update)
-        .option("checkpointLocation", tmpDir("bills-state-ckpt"))
-        .start()
-      try {
-        // batch 1: the bill is issued (readme:130-134)
-        input.addData(ev("e1", Envelope.MemberBillCreated, "2024-03-01 10:00:00",
-          bill = "b1", promise = "p1", user = "u1", amount = 4000L, issued = "2024-04-01"))
-        query.processAllAvailable()
-        val afterInsert = spark.table("bills_state").collect()
-        assert(afterInsert.length == 1)
-        assert(afterInsert(0).getAs[String]("status") == "unpaid")
-        assert(afterInsert(0).isNullAt(afterInsert(0).fieldIndex("paid_date")))
-
-        // batch 2: payment for an UNKNOWN bill → no state, no output row
-        // (UPDATE … WHERE id=? matches nothing, consumer/consumer.go:214-220)
-        input.addData(ev("e2", Envelope.PaymentCompleted, "2024-03-01 10:01:00",
-          bill = "b-unknown", user = "u1", paid = "2024-04-02"))
-        query.processAllAvailable()
-        assert(spark.table("bills_state").collect().length == 1)
-
-        // batch 3: payment for b1 → state flips to paid across batches
-        // (state survived in RocksDB between micro-batches)
-        input.addData(ev("e3", Envelope.PaymentCompleted, "2024-03-01 10:02:00",
-          bill = "b1", user = "u1", paid = "2024-04-02"))
-        query.processAllAvailable()
-        val rows = spark.table("bills_state").collect()
-          .filter(_.getAs[String]("id") == "b1")
-          .sortBy(_.getAs[Timestamp]("updated_at").getTime)
-        val last = rows.last
-        assert(last.getAs[String]("status") == "paid")
-        assert(last.getAs[java.sql.Date]("paid_date").toString == "2024-04-02")
-        assert(last.getAs[Long]("amount") == 4000L) // carried, not re-read
-      } finally query.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+  /** Run `body` on the RocksDB state store provider, restoring the
+    * session's provider setting afterwards. */
+  private def withRocksDb(body: => Unit): Unit = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
     }
   }
 
   test("transformWithState variant produces the same projection (Spark 4 API, RocksDB)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val input = MemoryStream[RawEvent]
@@ -87,33 +45,42 @@ class StatefulSpec extends SparkSpec {
         .option("checkpointLocation", tmpDir("bills-tws-ckpt"))
         .start()
       try {
+        // batch 1: the bill is issued (readme:130-134)
         input.addData(
           ev("e1", Envelope.MemberBillCreated, "2024-03-01 10:00:00",
             bill = "b1", promise = "p1", user = "u1", amount = 4000L, issued = "2024-04-01"))
         query.processAllAvailable()
+        val afterInsert = spark.table("bills_tws").collect()
+        assert(afterInsert.length == 1)
+        assert(afterInsert(0).getAs[String]("status") == "unpaid")
+        assert(afterInsert(0).isNullAt(afterInsert(0).fieldIndex("paid_date")))
+
+        // batch 2: payment for an UNKNOWN bill → no state, no output row
+        // (UPDATE … WHERE id=? matches nothing, consumer/consumer.go:214-220)
         input.addData(ev("e2", Envelope.PaymentCompleted, "2024-03-01 10:01:00",
+          bill = "b-unknown", user = "u1", paid = "2024-04-02"))
+        query.processAllAvailable()
+        assert(spark.table("bills_tws").collect().length == 1)
+
+        // batch 3: payment for b1 → state flips to paid across batches
+        // (state survived in RocksDB between micro-batches)
+        input.addData(ev("e3", Envelope.PaymentCompleted, "2024-03-01 10:02:00",
           bill = "b1", user = "u1", paid = "2024-04-02"))
         query.processAllAvailable()
         val rows = spark.table("bills_tws").collect()
           .sortBy(_.getAs[Timestamp]("updated_at").getTime)
         assert(rows.length == 2) // unpaid changelog row, then paid
         assert(rows.head.getAs[String]("status") == "unpaid")
+        assert(rows.last.getAs[String]("id") == "b1")
         assert(rows.last.getAs[String]("status") == "paid")
         assert(rows.last.getAs[java.sql.Date]("paid_date").toString == "2024-04-02")
+        assert(rows.last.getAs[Long]("amount") == 4000L) // carried, not re-read
       } finally query.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("s13: timer fires an overdue alert for an unpaid bill; payment cancels it (RocksDB)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val input = MemoryStream[RawEvent]
@@ -159,19 +126,11 @@ class StatefulSpec extends SparkSpec {
         assert(rows.filter(_.getAs[String]("id") == "b2")
           .map(_.getAs[String]("status")).toSet == Set("paid"))
       } finally query.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("s13 event-time timers: replaying the same backlog yields identical alerts (RocksDB)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       // the backlog: b1 issued 10:00 and never paid → deadline 10:01;
@@ -219,11 +178,6 @@ class StatefulSpec extends SparkSpec {
       // the alert is the EVENT-TIME deadline: create ts 10:00 + 60 s
       assert(run1 == Set(("b1", Timestamp.valueOf("2024-03-01 10:01:00"))), s"run1 $run1")
       assert(run2 == run1, s"replay diverged: $run2 vs $run1")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -232,48 +186,21 @@ class StatefulSpec extends SparkSpec {
     // re-delivered ALONE in a later batch — the fold must keep 'paid'
     // (reference semantics: duplicate-PK INSERT is a no-op), so the
     // reminder processor's enters-unpaid guard can never re-arm a timer
-    val state = new TestGroupState[graft.streaming.Bill]
-    BillProjection.update("b9", Iterator(
-      ev("e1", Envelope.MemberBillCreated, "2024-03-01 10:00:00",
-        bill = "b9", promise = "p9", user = "u9", amount = 100L, issued = "2024-04-01"),
-      ev("e2", Envelope.PaymentCompleted, "2024-03-01 10:01:00", bill = "b9", paid = "2024-04-02")
-    ), state)
-    val out = BillProjection.update("b9", Iterator(
-      ev("e1", Envelope.MemberBillCreated, "2024-03-01 10:00:00",
-        bill = "b9", promise = "p9", user = "u9", amount = 100L, issued = "2024-04-01")
-    ), state).toSeq
-    assert(out.length == 1)
-    assert(out.head.status == "paid", s"re-delivered create regressed the bill: ${out.head}")
-    assert(out.head.paid_date.toString == "2024-04-02")
+    val create = ev("e1", Envelope.MemberBillCreated, "2024-03-01 10:00:00",
+      bill = "b9", promise = "p9", user = "u9", amount = 100L, issued = "2024-04-01")
+    val paid = BillProjection.fold(null, Iterator(create,
+      ev("e2", Envelope.PaymentCompleted, "2024-03-01 10:01:00", bill = "b9", paid = "2024-04-02")))
+    val out = BillProjection.fold(paid, Iterator(create))
+    assert(out.status == "paid", s"re-delivered create regressed the bill: $out")
+    assert(out.paid_date.toString == "2024-04-02")
   }
 
   test("same-batch create+pay resolves in (ts, event_id) order") {
-    val state = new TestGroupState[graft.streaming.Bill]
-    val out = BillProjection.update("b9", Iterator(
+    val out = BillProjection.fold(null, Iterator(
       ev("e2", Envelope.PaymentCompleted, "2024-03-01 10:01:00", bill = "b9", paid = "2024-04-02"),
       ev("e1", Envelope.MemberBillCreated, "2024-03-01 10:00:00",
-        bill = "b9", promise = "p9", user = "u9", amount = 100L, issued = "2024-04-01")
-    ), state).toSeq
-    assert(out.length == 1)
-    assert(out.head.status == "paid") // create applied before the later payment
+        bill = "b9", promise = "p9", user = "u9", amount = 100L, issued = "2024-04-01")))
+    assert(out != null)
+    assert(out.status == "paid") // create applied before the later payment
   }
-}
-
-/** Minimal GroupState for driving BillProjection.update directly. */
-class TestGroupState[T] extends org.apache.spark.sql.streaming.GroupState[T] {
-  private var v: Option[T] = None
-  override def exists: Boolean = v.isDefined
-  override def get: T = v.get
-  override def getOption: Option[T] = v
-  override def update(newValue: T): Unit = v = Some(newValue)
-  override def remove(): Unit = v = None
-  override def hasTimedOut: Boolean = false
-  override def setTimeoutDuration(durationMs: Long): Unit = ()
-  override def setTimeoutDuration(duration: String): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long, additionalDuration: String): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date, additionalDuration: String): Unit = ()
-  override def getCurrentWatermarkMs(): Long = 0L
-  override def getCurrentProcessingTimeMs(): Long = 0L
 }

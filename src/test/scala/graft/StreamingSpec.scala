@@ -249,17 +249,7 @@ class StreamingSpec extends SparkSpec {
     assert(after == expected, "post-update search != batch kernel on the modified corpus")
   }
 
-  // The runbook is asserted on BOTH s04 forms: keyed RocksDB state
-  // (default) and the parquet-MERGE fallback — same events, same checks.
   test("runbook e2e (keyed state): purchase -> promise -> bill -> payment -> notify; duplicate replay is a no-op") {
-    runbookE2e(billsViaKeyedState = true)
-  }
-
-  test("runbook e2e (parquet-merge fallback): purchase -> promise -> bill -> payment -> notify; duplicate replay is a no-op") {
-    runbookE2e(billsViaKeyedState = false)
-  }
-
-  private def runbookE2e(billsViaKeyedState: Boolean): Unit = {
     val eventsDir = tmpDir("bnpl-events")
     val stateDir = tmpDir("bnpl-state")
 
@@ -268,8 +258,7 @@ class StreamingSpec extends SparkSpec {
       ev("ev-1", Envelope.PurchaseCompleted, "2024-03-01T10:00:00.000Z",
         "order_id" -> "\"order-u1\"", "user_id" -> "\"u1\"", "amount" -> "4000")))
 
-    val pipe = new BnplPipeline(spark, eventsDir, stateDir,
-      billsViaKeyedState = billsViaKeyedState)
+    val pipe = new BnplPipeline(spark, eventsDir, stateDir)
     pipe.start()
     try {
       pipe.drain()
@@ -325,6 +314,26 @@ class StreamingSpec extends SparkSpec {
       // replay added nothing and no second promise was derived
       assert(pipe.eventsLog.count() == 4)
       assert(pipe.paymentPromises("u1").count() == 1)
+
+      // R8 is UPDATE … WHERE id=? on the bill's primary key: two payments
+      // for one bill in one micro-batch (distinct event_ids, so dedup keeps
+      // both) leave ONE row, carrying the later payment in (ts, event_id)
+      // order
+      writeEvents(eventsDir, "e5.json", Seq(
+        ev("ev-5", Envelope.MemberBillCreated, "2024-03-01T10:06:00.000Z",
+          "user_id" -> "\"u1\"", "amount" -> "2500", "bill_id" -> "\"bill-2\"",
+          "promise_id" -> "\"p-ev-1\"", "issued_date" -> "\"2024-05-01\"")))
+      pipe.drain()
+      writeEvents(eventsDir, "e6.json", Seq(
+        ev("ev-6b", Envelope.PaymentCompleted, "2024-03-01T10:08:00.000Z",
+          "user_id" -> "\"u1\"", "bill_id" -> "\"bill-2\"", "paid_date" -> "\"2024-05-03\""),
+        ev("ev-6a", Envelope.PaymentCompleted, "2024-03-01T10:07:00.000Z",
+          "user_id" -> "\"u1\"", "bill_id" -> "\"bill-2\"", "paid_date" -> "\"2024-05-02\"")))
+      pipe.drain()
+      val bill2 = pipe.memberBills("u1").collect().filter(_.getAs[String]("id") == "bill-2")
+      assert(bill2.length == 1, s"one bill, one row: ${bill2.mkString(", ")}")
+      assert(bill2(0).getAs[String]("status") == "paid")
+      assert(bill2(0).getAs[java.sql.Date]("paid_date").toString == "2024-05-03")
     } finally pipe.stop()
   }
 
@@ -3037,7 +3046,7 @@ class StreamingSpec extends SparkSpec {
       "hasParquetData" -> Set("BatchStore.scala"),
       "listStatus" -> Set("BatchStore.scala"),
       "fs.delete" -> Set("BatchStore.scala"),
-      "foreachBatch" -> Set("BatchStore.scala", "BnplPipeline.scala", "BillProjection.scala"),
+      "foreachBatch" -> Set("BatchStore.scala", "BnplPipeline.scala"),
       // the keyed-tail protocol: the foldDue → lastWins fold of a tail,
       // the null-safe touched-key prune and the arrival gate's error
       "lastWins" -> Set("BatchStore.scala"),
@@ -3047,8 +3056,8 @@ class StreamingSpec extends SparkSpec {
     // returns early on one only where it would otherwise change a read or
     // fail; each such store states why in a `// kept:` comment
     val guard = "isEmpty) return"
-    val guarded = Set("BnplPipeline.scala", "HeavyHitters.scala", "NearDupAdmission.scala",
-      "VectorStats.scala", "IncrementalDedup.scala", "IncrementalIndex.scala", "VectorIndex.scala")
+    val guarded = Set("HeavyHitters.scala", "NearDupAdmission.scala", "VectorStats.scala",
+      "IncrementalDedup.scala", "IncrementalIndex.scala", "VectorIndex.scala")
     val dir = new java.io.File("src/main/scala/graft/streaming")
     val files = Option(dir.listFiles()).getOrElse(Array.empty).filter(_.getName.endsWith(".scala"))
     assert(files.length > 30, s"streaming sources not found under ${dir.getAbsolutePath}")
@@ -3080,7 +3089,7 @@ class StreamingSpec extends SparkSpec {
     assert(guards.map(_._1).toSet == guarded,
       s"allowlisted stores without a guard: ${(guarded -- guards.map(_._1)).mkString(", ")}")
     val unstated = guards.collect { case (name, lines, i)
-        if name != "BnplPipeline.scala" && !lines.slice(i - 3, i).exists(_.trim.startsWith("// kept:")) => name }
+        if !lines.slice(i - 3, i).exists(_.trim.startsWith("// kept:")) => name }
     assert(unstated.isEmpty, s"empty-batch guard without a `// kept:` reason: ${unstated.mkString(", ")}")
   }
 }
