@@ -78,7 +78,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
     // The documented bench-contamination mode: a lingering sbt console /
     // Spark JVM competing for the same 32 cores inflates totals 2–7×.
@@ -103,16 +103,10 @@ object Bench {
       System.err.println(s"[bench] WARNING: ${foreignAtStart.size} foreign JVM(s) alive " +
         s"(pids ${foreignAtStart.mkString(",")}) — timings may be inflated 2-7x")
 
-    val spark = SparkEntry.applyStaticEngineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    SparkEntry.applyEngineConfs(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
     spark.range(1000).selectExpr("sum(id)").count() // JIT/codegen warmup outside any timer
     val sentStart = sentinelRuns(spark)
-    val sentScaledStart = scaledSentinelRuns(spark, cpus.toInt)
+    val sentScaledStart = scaledSentinelRuns(spark, cpus)
 
     val ordered = SparkEntry.queries.toSeq
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -184,7 +178,7 @@ object Bench {
       .mkString("[", ",", "]")
     val total = results.collect { case (_, (m, _)) if m >= 0 => m }.sum
     val sentEnd = sentinelRuns(spark)
-    val sentScaledEnd = scaledSentinelRuns(spark, cpus.toInt)
+    val sentScaledEnd = scaledSentinelRuns(spark, cpus)
     def jarr(xs: Seq[Double]) = xs.map(fmt).mkString("[", ",", "]")
     val sentMin = (sentStart ++ sentEnd).min
     val sentScaledMin = (sentScaledStart ++ sentScaledEnd).min

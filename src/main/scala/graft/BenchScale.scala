@@ -170,8 +170,7 @@ object BenchScale {
       "q185_decayed_engagement" -> "count",
       // r16: the bucketed bootstrap — one (type, h) shuffle + a
       // panel-sized replicate fan-out; the contrast leg to q184's
-      // per-row B-fold explode (r16 evidence via fresh-JVM ExpProbe;
-      // joins the in-run ladder here for the next full run)
+      // per-row B-fold explode
       "q187_bootstrap_bucketed" -> "count",
       // r16 (2): median+MAD — the q168 histogram class (one bounded
       // shuffle, the deviation histogram derives from it)
@@ -295,18 +294,12 @@ object BenchScale {
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,4,32")
       .split(",").map(_.trim.toInt).toSeq
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "BENCH_scale.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // targeted re-runs (a failed section shouldn't cost the whole ladder)
     val sections = sys.env.getOrElse("SPARK_GRAFT_SCALE_SECTIONS",
       "ladder,confirm,skew,stream").split(",").map(_.trim).toSet
 
-    val spark = SparkEntry.applyStaticEngineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    SparkEntry.applyEngineConfs(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
     spark.range(1000).selectExpr("sum(id)").count()
     // drift sentinel (r16 verdict): fixed constant work at run start and
     // end so the artifact carries its own noise floor — see Bench's
@@ -338,7 +331,7 @@ object BenchScale {
       // candidate VOLUME grew at 1.06). local[32] still runs 32 tasks at
       // a time; the extra partitions only cap per-task memory.
       spark.conf.set("spark.sql.shuffle.partitions",
-        (cpus.toInt * math.max(1, a / 8)).toString)
+        (cpus * math.max(1, a / 8)).toString)
       val tGen0 = System.nanoTime()
       ScaleGen.amplify(spark, base, dir, a)
       System.err.println(f"[bench-scale] x$a corpus ready in ${(System.nanoTime() - tGen0) / 1e9}%.1f s")
@@ -399,9 +392,8 @@ object BenchScale {
     // at r12/r13 — re-proving it would burn the octave's budget on a
     // known number; the `notes` field in the artifact records this).
     // q186 joins alongside its q90_tuned-class siblings.
-    // r17 (r16 verdict gap 3): q187/q188 join so their ×64 octaves are
-    // measured IN-RUN (their r16 octaves were fresh-JVM probes), and the
-    // two new rank statistics get their first octave the same way.
+    // q187/q188 and the three rank statistics are confirmed in-run like
+    // every other leg.
     val confirmSet = Set("q36_ngram_jaccard", "q84_containment",
       "q77_knn_join", "q90_tuned", "q99_dedup_eval",
       "q104_mutual_knn_clusters", "q147_filtered_tuned_ann",
@@ -415,7 +407,7 @@ object BenchScale {
     if (sections("confirm") && confirmFactor > factors.max) {
       val dir = s"$scaleRoot/x$confirmFactor"
       spark.conf.set("spark.sql.shuffle.partitions",
-        (cpus.toInt * math.max(1, confirmFactor / 8)).toString)
+        (cpus * math.max(1, confirmFactor / 8)).toString)
       val tGen0 = System.nanoTime()
       ScaleGen.amplify(spark, base, dir, confirmFactor)
       System.err.println(f"[bench-scale] x$confirmFactor corpus ready in ${(System.nanoTime() - tGen0) / 1e9}%.1f s")
@@ -483,7 +475,7 @@ object BenchScale {
       val aS = factors.max
       val skewDir = s"$scaleRoot/x${aS}skew"
       spark.conf.set("spark.sql.shuffle.partitions",
-        (cpus.toInt * math.max(1, aS / 8)).toString)
+        (cpus * math.max(1, aS / 8)).toString)
       val tGen0 = System.nanoTime()
       ScaleGen.amplify(spark, base, skewDir, aS, skewHot = true)
       System.err.println(f"[bench-scale] x${aS}skew corpus ready in ${(System.nanoTime() - tGen0) / 1e9}%.1f s")
@@ -1254,35 +1246,6 @@ object BenchScale {
     val streamJson = streaming.map { case (n, (t, r)) =>
       f"""    "$n": {"sec":$t%.2f,"rows":$r}"""
     }.mkString(",\n")
-    // ---- fresh-JVM confirm (r12): ExpProbe appends min-of-N lines to
-    // $scaleRoot/expprobe.jsonl from one-process-per-factor runs (one heap
-    // state per leg — the in-run confirm octave above measures through the
-    // ladder's accumulated heap residue; see ExpProbe's scaladoc). Embed
-    // those lines here so both confirms sit side by side in one evidence
-    // file and a report regeneration can't silently drop them.
-    val expProbeFile = new java.io.File(s"$scaleRoot/expprobe.jsonl")
-    val freshJson: String = if (expProbeFile.exists) {
-      val Line =
-        """\{"probe":"exp","factor":(\d+),"query":"([^"]+)","min_sec":([0-9.]+),"rows":(\d+)\}""".r
-      val src = scala.io.Source.fromFile(expProbeFile)
-      val recs =
-        try src.getLines().collect {
-          case Line(f, q, s, _) => (q, f.toInt, s.toDouble)
-        }.toSeq
-        finally src.close()
-      recs.groupBy(_._1).toSeq.sortBy(_._1).map { case (q, rs) =>
-        // last line wins per (query, factor) so probe re-runs supersede
-        val perF = rs.groupBy(_._2).map { case (f, g) => f -> g.last._3 }
-        val fs = perF.keys.toSeq.sorted
-        val tStr = fs.map(f => f""""x$f":${perF(f)}%.2f""").mkString(",")
-        val exp =
-          if (fs.size >= 2) {
-            val lo = fs(fs.size - 2); val hi = fs.last
-            math.log(perF(hi) / perF(lo)) / math.log(hi.toDouble / lo)
-          } else Double.NaN
-        s"""    "$q": {"t":{$tStr},"exp":${jnum(exp)}}"""
-      }.mkString(",\n")
-    } else ""
     val json =
       s"""{
   "metric": "scale_rehearsal",
@@ -1296,9 +1259,6 @@ $queryJson
   },
   "streaming_x$aMax": {
 $streamJson
-  },
-  "fresh_jvm_confirm": {
-$freshJson
   },
   "streaming_coverage": {
     "own_leg": "every store-backed component s14-s60 carries its own ingest and/or read leg in streaming_x$aMax above",

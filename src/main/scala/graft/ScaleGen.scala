@@ -173,13 +173,7 @@ object ScaleGen {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale")
     val a = sys.env.getOrElse("SPARK_GRAFT_SCALE_A", "32").toInt
-    val spark = SparkEntry.applyStaticEngineConfs(SparkSession.builder())
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    SparkEntry.applyEngineConfs(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(32)
     amplify(spark, src, s"$outRoot/x$a", a, force = true)
     spark.stop()
   }

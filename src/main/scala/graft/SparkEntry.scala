@@ -26,27 +26,17 @@ import graft.queries._
   * round-4 bench inflation.) */
 object SparkEntry {
 
-  /** Session tuning every driver main and the test harness apply right
-    * after building a session (`EngineConfs foreach spark.conf.set`;
-    * library users embedding these operators should too).
+  /** Runtime session tuning, applied by [[localSession]]; a session that
+    * embeds these operators should apply it too ([[applyEngineConfs]]).
     *
-    * `runtime.bloomFilter.enabled=false` (r11 verdict item 2): Spark's
-    * InjectRuntimeFilter has no NDV statistic on these plans, so every
-    * injected bloom is built at the default expectedNumItems=10⁶ —
-    * 8388608 bloom BITS = a 1 MiB literal serialized into the task
-    * binary of every stage above it (the `Broadcasting large task
-    * binary` WARNs in BENCH_r11's tail; TaskBinProbe attribution, bloom
-    * bits found verbatim in the serialized stage graph: q95's panel
-    * filter and q112's encode filter each triggered injection against a
-    * ≤128-row build side). Measured at sf0.1 with injection off: q95
-    * 4.7→3.9 s, q112 4.2→3.0 s, q116 0.93→0.65 s, q130 1.8→1.4 s —
-    * uniformly faster, because the engine's joins already carry their
-    * pruning explicitly (broadcast semi-joins, DPP on the bucketed
-    * layout, the q90 salt) and the bloom build+ship is pure overhead.
-    * At 1000-executor scale the same 1 MiB rides every task-set
-    * broadcast — scheduler pressure, the exact failure mode the r11
-    * verdict flagged. A deployment with cost-based stats that wants
-    * right-sized blooms can re-enable per session. */
+    * Runtime bloom filters are off. These plans carry no NDV statistic,
+    * so InjectRuntimeFilter sizes every bloom it injects at the default
+    * 10⁶ expected items: 8388608 bits, about 1 MiB, serialized into the
+    * task binary of every stage above the filter. The engine's joins
+    * already prune explicitly (broadcast semi-joins, DPP on the bucketed
+    * layout, the q90 salt), so building and shipping the bloom is pure
+    * overhead. A deployment with cost-based statistics that wants
+    * right-sized blooms can re-enable them per session. */
   val EngineConfs: Map[String, String] = Map(
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false")
 
@@ -55,41 +45,22 @@ object SparkEntry {
   def applyEngineConfs(spark: SparkSession): Unit =
     EngineConfs.foreach { case (k, v) => spark.conf.set(k, v) }
 
-  /** Session tuning that is STATIC (read once at SparkSession creation) —
-    * must go on the builder, not `spark.conf.set`; every driver main and
-    * the test harness route their builders through
-    * [[applyStaticEngineConfs]].
+  /** Session tuning that Spark reads once, when the session is created:
+    * it must go on the builder ([[applyStaticEngineConfs]]), because set
+    * on a running session it is silently ignored.
     *
-    * `codegen.cache.maxEntries=4000` (r12 sized 2000; re-derived r14):
-    * Spark's generated-class cache (Janino-compiled wholestage/expression
-    * classes, including their JIT state) defaults to 100 entries
-    * JVM-wide; an evicted class re-pays Janino compile + cold JIT on the
-    * next pass — the measured gap between back-to-back Profile warmth
-    * and in-bench minima (r12: suite 138.6→122.6 s going 100→2000).
-    * The size must track the SUITE's working set: CodegenProbe (r14)
-    * measured 2104 compiled classes per full pass at 147 queries, so the
-    * r12 size of 2000 had tipped back into per-pass churn as the suite
-    * grew — pass 2 recompiled 1644 classes at cache=2000 vs 68 at 4000,
-    * warm-pass suite 152.0→127.5 s, q85 0.98→0.40 s (its 16 fused
-    * DotProductFold kernels were exactly the eviction victims the r13
-    * verdict flagged), q135 2.22→1.62 s, q99 5.18→3.87 s. Re-derived r15
-    * at 184 queries: per-pass working set ~3560 classes (the unrolled
-    * q183 greedy chain and the q181 tuned-IVF composition are codegen-
-    * heavy), 89% of 4000 — pass 2 recompiled 251 at 4000 vs 130 at 6000
-    * (the ~130 floor is per-run class-name churn, not eviction), suite
-    * time flat. 6000 restores the r14 headroom ratio; cost is retained
-    * class metadata (~10-100 KiB/entry) — bounded and worth it for any
-    * long-lived session running many distinct plans; the same conf
-    * applies executor-side on a cluster. Re-derive with CodegenProbe
-    * whenever the suite grows by ~100 queries.
-    *
-    * The `SPARK_GRAFT_CODEGEN_CACHE` env override is the measurement seam
-    * (r13 verdict item 2): the conf is builder-static, so an A/B across
-    * sizes needs one process per size — CodegenProbe counts per-pass
-    * Janino compilations (evictions) through this seam. */
+    * `codegen.cache.maxEntries` bounds Spark's JVM-wide cache of
+    * Janino-compiled classes (default 100). An evicted class is compiled
+    * and JIT-warmed again the next time its plan runs. The size sits
+    * above the suite's per-pass working set of generated classes, counted
+    * with `CodegenMetrics`, whose compile counter moves only on a cache
+    * miss: `graft.Profile` over every query prints each iteration's
+    * count, the cold counts sum to the working set, and a warm iteration
+    * that compiles again is an eviction. Recount when the suite grows.
+    * The cost is retained class metadata, about 10-100 KiB per entry; on
+    * a cluster the same conf sizes each executor's cache. */
   val StaticEngineConfs: Map[String, String] = Map(
-    "spark.sql.codegen.cache.maxEntries" ->
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "6000"))
+    "spark.sql.codegen.cache.maxEntries" -> "6000")
 
   /** Apply [[StaticEngineConfs]] to a session builder (call before
     * `getOrCreate`; on an already-running session these would be
@@ -98,35 +69,45 @@ object SparkEntry {
   def applyStaticEngineConfs(b: SparkSession.Builder): SparkSession.Builder =
     StaticEngineConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
+  /** The local session every engine main and the test harness run on:
+    * [[StaticEngineConfs]] on the builder, `local[cpus]` with as many
+    * shuffle partitions, UTC session time and no UI, then [[EngineConfs]]
+    * and WARN logging. An already-running session is returned as is. */
+  def localSession(cpus: Int): SparkSession = {
+    val spark = applyStaticEngineConfs(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    applyEngineConfs(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query (SURVEY.md q33_bnpl_pipeline) on sf=0.001; the driver
     * smoke-checks rows > 0 (202 purchase events exist at sf0.001). */
   def entry(spark: SparkSession): DataFrame =
     Events.q33(spark, "/root/testdata/sf0.001")
 
   /** The cache-lifetime contract above, as a callable: drop every block a
-    * finished query result may still pin — catalog-cached DataFrames
-    * (the query-local `cache()`s) AND the localCheckpoint RDD blocks the
-    * CC fixpoints / q72 hold outside the catalog (the round-4 lesson:
-    * relying on GC for those inflated every later timing). Bench, Verify,
-    * and Profile call this between queries; embed it the same way in any
-    * long-lived session running these operators back to back. Blocking
-    * unpersist: the storage is actually gone when this returns, so the
-    * next query's timing or memory profile starts clean. */
+    * finished query result may still pin, both the catalog-cached
+    * DataFrames (the query-local `cache()`s) and the localCheckpoint RDD
+    * blocks the CC fixpoints and q72 hold outside the catalog, which
+    * garbage collection does not free in time. Bench, Verify and Profile
+    * call this between queries; embed it the same way in any long-lived
+    * session running these operators back to back. The unpersist blocks,
+    * so the storage is gone when this returns and the next query's timing
+    * or memory profile starts clean. */
   def clearGraftCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     // Unpersisting a locally-checkpointed RDD logs one WARN per RDD
-    // ("lineage has been truncated and cannot be recomputed") — correct
-    // and intended here: the query is FINISHED, nothing recomputes it,
-    // and a 124-query run otherwise emits hundreds of these, burying real
-    // warnings (r9 verdict task 4). Suppression is display-only — the
-    // blocking unpersist below still frees every block (the round-4
-    // bench-inflation lesson stands) — and SCOPED (r11 advisor): the
-    // rdd-package logger is lowered only AROUND the unpersist loop and
-    // the previous level restored afterward, so genuine rdd-package
-    // WARNs (block loss, replication failures) stay visible for the
-    // rest of the session. Package level, not per-class: the WARN is
-    // emitted under the CONCRETE RDD subclass logger (MapPartitionsRDD,
-    // ShuffledRowRDD, …), an open set.
+    // ("lineage has been truncated and cannot be recomputed"). It is
+    // expected here: the query is finished and nothing recomputes it, and
+    // a full-suite run would otherwise bury real warnings under hundreds
+    // of these. The suppression is display-only and scoped to the
+    // unpersist loop (silencingRddWarns), so every block is still freed
+    // and other rdd-package WARNs stay visible.
     silencingRddWarns {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     }

@@ -79,15 +79,14 @@ object RetrievalEval {
     // (r11 verdict item 2): a stage's task binary serializes the whole
     // upstream RDD DAG through its shuffle dependencies, and without a
     // cut here the eval's final stages carry ivfKnn + the brute-force
-    // truth + both joins — measured >1.1 MiB per submission at sf0.1
-    // (TaskBinProbe attribution; BisectProbe measured the final-stage
-    // graph at 1187 KiB). Both frames are ≤ EvalQueries rows and
+    // truth + both joins — measured >1.1 MiB per submission at sf0.1.
+    // Both frames are ≤ EvalQueries rows and
     // Aggregate-rooted, so the eager checkpoint is safe (the UnionBase
     // rule) and costs one tiny job each.
     //
     // Known cost (r12 advisor): the EAGER checkpoints run the ivfKnn +
     // brute-force-truth jobs at DataFrame-BUILD time, so a plan-only
-    // consumer (Explain, PlanSpec's whole-inventory sweep) pays full
+    // consumer (PlanSpec's whole-inventory sweep) pays full
     // execution just to look at the plan. Accepted under the existing pin
     // discipline — q95 is the one query whose task-binary growth forced
     // mid-plan cuts — and bounded: both checkpointed frames are

@@ -1068,12 +1068,11 @@ object Vectors {
     // re-reads it — r9 pinning discipline); the READ path (encode + LUT)
     // deliberately does NOT: a checkpointed corpus frame referenced by
     // the final stage rides its whole closure graph into every task
-    // binary (measured 3.1 MiB submissions, the r11 verdict's
-    // large-task-binary find — TaskBinProbe/BisectProbe attribution),
-    // where recomputing the narrow scan→normalize→slice map costs one
-    // extra parquet pass and no shuffle. The codebook IS checkpointed:
-    // 128 rows, Aggregate-rooted (the UnionBase rule), and it truncates
-    // the whole train-loop lineage out of the final plan.
+    // binary (measured 3.1 MiB submissions), where recomputing the
+    // narrow scan→normalize→slice map costs one extra parquet pass and
+    // no shuffle. The codebook IS checkpointed: 128 rows, Aggregate-rooted
+    // (the UnionBase rule), and it truncates the whole train-loop lineage
+    // out of the final plan.
     val cb = pqCodebook(trainedPqComponents(sub.localCheckpoint(true)))
       .localCheckpoint(true)
     val codes = pqAssign(sub, cb)

@@ -15,14 +15,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("engine confs reach the session: runtime blooms off, codegen cache sized") {
-    // EngineConfs (runtime-settable) and StaticEngineConfs (builder-only —
-    // reads back the DEFAULT if any code path builds a session without
-    // routing through applyStaticEngineConfs, which is exactly the
-    // regression this pins)
+    // EngineConfs are runtime-settable; StaticEngineConfs are builder-only,
+    // so a session built without SparkEntry.localSession reads back
+    // Spark's defaults here
     assert(spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled") == "false")
-    // 6000 = the CodegenProbe-measured ~3560-class suite working set +
-    // growth headroom (r15; 4000 from r14 hit 89% saturation at 184
-    // queries — pass-2 recompiles 251 vs the 130 churn floor)
+    // 6000 sits above the suite's per-pass working set of generated
+    // classes, counted with CodegenMetrics
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "6000")
   }
 

@@ -5,18 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (forked test JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkEntry.applyStaticEngineConfs(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    SparkEntry.applyEngineConfs(s)
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
