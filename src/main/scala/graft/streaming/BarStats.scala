@@ -23,8 +23,9 @@ import graft.queries.Stats
   * Scale posture: per batch ONE map-side-combined aggregate of the batch
   * only; the store grows one calendar-bounded partition per batch
   * (types × hours rows); the read shuffles ≤ partials × batches rows.
-  * Folding old partitions is s21's watermark compaction — every column
-  * is pointwise re-mergeable.
+  * The store never folds: its batch rows carry no `covered_upto`. Every
+  * column is pointwise re-mergeable, so [[BatchStore.foldCovered]] would
+  * apply if the partition count ever demanded it.
   */
 object BarStats {
 

@@ -26,10 +26,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   *    base, then deletes the folded partitions. At every point between,
   *    each read resolves to the rows the base holds (the winning
   *    partition still exists, or the base is now its only copy), and a
-  *    crashed fold re-runs to the same base. Additive stores, where a
-  *    duplicate row would double-count, instead stamp the base with a
-  *    `covered_upto` watermark: [[live]] hides covered partitions the
-  *    moment the base commits, and [[sweep]] is pure cleanup.
+  *    crashed fold re-runs to the same base.
   *  - An empty store reads as a schema-stable empty frame. A directory
   *    that was never written, or one holding only `_SUCCESS` (a dynamic
   *    overwrite whose rows were all filtered out), has no parquet footer
@@ -53,7 +50,24 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   *  - A replay of batch b checks against the marks as of b−1, as its
   *    reads do, so it passes wherever the first attempt passed.
   *  - A NULL key is an ordinary key: its tail is pruned, gated and
-  *    advanced like any other, as the batch kernels group it. */
+  *    advanced like any other, as the batch kernels group it.
+  *
+  * An additive store, where a duplicated row would double-count, folds
+  * by a coverage watermark instead of write-then-delete. Its batches
+  * write through [[writeCovered]], its readers count only the live rows
+  * ([[readCovered]]: the base plus the batch partitions at or above the
+  * base's `covered_upto`), and it folds in two phases:
+  *
+  *  - [[foldCovered]] rejects a fold point below the current watermark
+  *    with an IllegalArgumentException, before anything is written: a
+  *    regressed watermark would make folded batch partitions live again.
+  *    It then writes the store's merge of the live rows below the fold
+  *    point as the new base, stamped `covered_upto = upToBatch`. The
+  *    moment the base commits, readers stop counting the folded
+  *    partitions, whether or not they are still on disk, and a crashed
+  *    fold re-runs to the same base.
+  *  - [[sweepCovered]] deletes the covered partitions. It is pure
+  *    cleanup: it can crash, re-run or never run without moving a read. */
 object BatchStore {
 
   /** Batches between two automatic folds of a store. */
@@ -101,6 +115,15 @@ object BatchStore {
       .filter(col("rn") === 1)
       .drop("rn", "batch_id")
   }
+
+  /** Keep every row of each key's highest batch_id and drop batch_id: the
+    * read of a store whose batch replaces a key's whole row set (a
+    * document's postings, a vector's membership). NULL keys form one
+    * group. */
+  def lastVersion(key: String)(rows: DataFrame): DataFrame =
+    rows.withColumn("_mx", max(col("batch_id")).over(Window.partitionBy(col(key))))
+      .filter(col("batch_id") === col("_mx"))
+      .drop("_mx", "batch_id")
 
   /** What batch `batchId` reads of a keyed LWW tail store: the store is
     * folded first when [[foldDue]], then each key's row from its highest
@@ -174,6 +197,37 @@ object BatchStore {
     partitionsBelow(spark, dir, below).foreach(p => fs.delete(p, true))
   }
 
+  /** Write `df` as batch `batchId` of an additive store: [[write]], with
+    * the NULL covered_upto that only a base sets. */
+  def writeCovered(df: DataFrame, dir: String, batchId: Long): Unit =
+    write(df.withColumn("covered_upto", lit(null).cast("long")), dir, batchId)
+
+  /** The rows of an additive store a reader may count, without batch_id
+    * and covered_upto; `empty` while the store holds no parquet data. */
+  def readCovered(spark: SparkSession, dir: String)(empty: => DataFrame): DataFrame =
+    read(spark, dir).fold(empty)(live(_).drop("batch_id"))
+
+  /** Fold an additive store's live rows below `upToBatch` into a new base
+    * with covered_upto = upToBatch (the class doc's first phase).
+    * `resolve` receives those rows as [[readCovered]] gives them and
+    * returns the rows the base keeps. */
+  def foldCovered(spark: SparkSession, dir: String, upToBatch: Long)(
+      resolve: DataFrame => DataFrame): Unit =
+    read(spark, dir).foreach { all =>
+      val current = coveredUpto(all)
+      require(upToBatch >= current,
+        s"fold of $dir to batch $upToBatch is below its covered_upto $current: " +
+          "a regressed watermark re-exposes folded batch partitions")
+      val base = resolve(live(all).filter(col("batch_id") < upToBatch).drop("batch_id"))
+        .localCheckpoint(true) // pin: the overwrite below rewrites the source path
+      write(base.withColumn("covered_upto", lit(upToBatch)), dir, -1L)
+    }
+
+  /** Delete the batch partitions an additive store's base covers (the
+    * class doc's second phase). */
+  def sweepCovered(spark: SparkSession, dir: String): Unit =
+    read(spark, dir).foreach(all => sweep(spark, dir, coveredUpto(all)))
+
   /** An additive store's coverage watermark: the base partition's
     * covered_upto, 0 when no base exists. One row, so [[live]] can
     * broadcast it without a driver round-trip. Readers, fold guards and
@@ -184,19 +238,15 @@ object BatchStore {
       .agg(coalesce(max(col("covered_upto")), lit(0L)).as("_upto"))
 
   /** [[coveredUptoFrame]] as a driver value. */
-  def coveredUpto(all: DataFrame): Long =
+  private def coveredUpto(all: DataFrame): Long =
     coveredUptoFrame(all).collect()(0).getLong(0)
 
-  /** The rows of an additive store a reader may count: the base plus the
-    * batch partitions it does not cover. */
-  def live(all: DataFrame): DataFrame =
+  /** The base plus the batch partitions it does not cover, without
+    * covered_upto. */
+  private def live(all: DataFrame): DataFrame =
     all.crossJoin(broadcast(coveredUptoFrame(all)))
       .filter(col("batch_id") === -1L || col("batch_id") >= col("_upto"))
-      .drop("_upto")
-
-  /** Delete the batch partitions an additive store's base covers. */
-  def sweepCovered(spark: SparkSession, dir: String): Unit =
-    read(spark, dir).foreach(all => sweep(spark, dir, coveredUpto(all)))
+      .drop("_upto", "covered_upto")
 
   /** Run `processBatch(batch, batchId)` on every micro-batch of `source`,
     * checkpointed at `checkpointDir`. */

@@ -181,35 +181,13 @@ class BnplPipeline(
       .queryName("bnpl_member_bills")
       .start()
 
-    // R12/s07: change notification per batch with affected users. The full
-    // distinct user set is written to the notifications projection — a
-    // distributed parquet append that never passes through the driver; the
-    // in-process callback carries a BOUNDED sorted sample (the reference's
-    // payload is the content-free string "update", main.go:57-73 — keys are
-    // a courtesy, not a contract, so capping loses nothing).
+    // R12/s07: change notification per batch with affected users
+    // (notifyBatch).
     val notifyQ = ev
       .filter(col("event_type") === PaymentCompleted)
       .select(col("user_id"))
       .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist: the distinct feeds THREE consumers (emptiness probe,
-        // parquet append, capped sample) — without it each one re-executes
-        // the batch's distinct shuffle on the 1-second hot path
-        val affected = batch.distinct().persist()
-        try {
-          if (!affected.isEmpty) {
-            affected.withColumn("batch_id", lit(batchId))
-              .write.mode(SaveMode.Append).parquet(notificationsDir)
-            val users = affected.orderBy(col("user_id"))
-              .limit(BnplPipeline.NotifyUserCap)
-              .collect().map(_.getString(0)).toSeq
-            if (users.nonEmpty) {
-              notifications.add((batchId, users))
-              onUpdate(batchId, users)
-            }
-          }
-        } finally affected.unpersist()
-      }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => notifyBatch(batch, batchId) }
       .option("checkpointLocation", ckpt("notify"))
       .trigger(trigger)
       .queryName("bnpl_notify")
@@ -217,6 +195,33 @@ class BnplPipeline(
 
     queries = Seq(logQ, deriveQ, promisesQ, billsQ, notifyQ)
     queries
+  }
+
+  /** One notify micro-batch of (user_id) rows. The full distinct user
+    * set is written to the notifications projection as partition
+    * `batch_id=b` ([[BatchStore.write]]), so a re-run of batch b replaces
+    * its rows instead of notifying its users twice; the write is
+    * distributed and never passes through the driver. The in-process
+    * callback carries a BOUNDED sorted sample (the reference's payload is
+    * the content-free string "update", main.go:57-73 — keys are a
+    * courtesy, not a contract, so capping loses nothing). */
+  def notifyBatch(batch: DataFrame, batchId: Long): Unit = {
+    // persist: the distinct feeds THREE consumers (emptiness probe,
+    // parquet write, capped sample) — without it each one re-executes
+    // the batch's distinct shuffle on the 1-second hot path
+    val affected = batch.distinct().persist()
+    try {
+      if (!affected.isEmpty) {
+        BatchStore.write(affected, notificationsDir, batchId)
+        val users = affected.orderBy(col("user_id"))
+          .limit(BnplPipeline.NotifyUserCap)
+          .collect().map(_.getString(0)).toSeq
+        if (users.nonEmpty) {
+          notifications.add((batchId, users))
+          onUpdate(batchId, users)
+        }
+      }
+    } finally affected.unpersist()
   }
 
   /** Merge a keyed-state changelog into the serving parquet (s04): each

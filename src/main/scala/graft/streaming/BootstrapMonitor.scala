@@ -25,8 +25,9 @@ import graft.queries.Stats
   * q184's scaladoc documents (CI ~24 % narrower at planted n = 20k,
   * StatsSpec's measured A/B) is exactly what buys streamability.
   *
-  * Compaction, if ever needed, is s21's watermark fold (partials are
-  * pointwise-summable); the store is already bounded at ≤ types × 10⁴
+  * The store never folds: its batch rows carry no `covered_upto`. The
+  * partials are pointwise-summable, so [[BatchStore.foldCovered]] would
+  * apply if ever needed; the store is already bounded at ≤ types × 10⁴
   * rows per batch regardless of batch volume.
   */
 object BootstrapMonitor {

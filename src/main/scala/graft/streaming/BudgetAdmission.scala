@@ -32,9 +32,10 @@ import graft.ops.Dsl.{h60, ratio4}
   * (never global) over the BATCH only, budgets and the consumed panel
   * broadcast at source cardinality, and one map-side-combined per-source
   * aggregate for the store partial; the accept log is append-only and
-  * the store grows one source-cardinality partition per batch (s21's
-  * watermark compaction applies when partition count demands it —
-  * the partials are pointwise-summable).
+  * the store grows one source-cardinality partition per batch. It never
+  * folds (its batch rows carry no `covered_upto`); the partials are
+  * pointwise-summable, so [[BatchStore.foldCovered]] would apply if the
+  * partition count ever demanded it.
   */
 object BudgetAdmission {
 

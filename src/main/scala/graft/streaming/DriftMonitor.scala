@@ -24,7 +24,8 @@ import graft.queries.Stats
   * The store grows one quantization-bounded partition per batch
   * (distinct (type, value) pairs, NOT batch rows — the 2-decimal value
   * grid bounds it regardless of volume); folding old partitions into a
-  * base is s21's watermark compaction (counts are pointwise-summable).
+  * base is the coverage-watermark fold ([[BatchStore.foldCovered]]):
+  * counts are pointwise-summable.
   *
   * Scale posture: per batch ONE (type, value)-keyed map-side-combined
   * aggregate of the batch only; the drift read is one shuffle over the
@@ -39,19 +40,19 @@ import graft.queries.Stats
   * is deliberately no silent read-side default, because an old partition
   * coalesced onto a sentinel day would CORRUPT the s48 calendar slices
   * while appearing to work. (SeasonalMonitor's r14 `sum_v` widening has
-  * the same posture.) SECOND store-format break (r16): partials gained
-  * the `covered_upto` watermark column so [[foldBase]] can compact —
-  * same rebuild-by-replay posture.
+  * the same posture.) The fold's coverage-watermark column was a second
+  * such break, with the same rebuild-by-replay posture.
   *
   * Read-cost note (advisor r15, closed r16): the day axis multiplies
   * per-batch partition cardinality (types × days × values), so the
   * drift/IQR reads merge ~days× more rows per uncompacted batch — still
-  * quantization-bounded. [[compactStore]] is s21's watermark fold with
-  * one twist: while folding base + covered batches into a new base, the
-  * DAY AXIS IS DROPPED (d → NULL, counts pointwise-summed) for days
-  * older than [[BandHorizonDays]] behind the store's newest day. Drift,
-  * IQR and winsorized reads merge across d anyway, so they are provably
-  * unchanged by any fold (the compaction law in StreamingSpec); the
+  * quantization-bounded. [[compactStore]] is the coverage-watermark
+  * fold with one twist: while folding base + covered batches into a new
+  * base, the DAY AXIS IS DROPPED (d → NULL, counts pointwise-summed)
+  * for days older than [[BandHorizonDays]] behind the store's newest
+  * day. Drift, IQR and winsorized reads merge across d anyway, so they
+  * are provably unchanged by any fold (the compaction law in
+  * StreamingSpec); the
   * bands read skips the folded NULL-day rows, i.e. after a fold s48
   * serves the calendar slices inside the horizon — exactly the "bands
   * only read recent days" contract. Compaction is a maintainer
@@ -93,15 +94,12 @@ object DriftMonitor {
         to_date(date_trunc("day", col("ts"))).as("d"), col("value"))
       .groupBy(col("event_type"), col("d"), col("value"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("covered_upto", lit(null).cast("long"))
-    BatchStore.write(partials, storeDir, batchId)
+    BatchStore.writeCovered(partials, storeDir, batchId)
   }
 
-  /** The store's countable rows: the base plus the batch partitions it
-    * does not cover ([[BatchStore.live]]). */
+  /** The store's countable rows ([[BatchStore.readCovered]]). */
   private def storeCounts(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.read(spark, storeDir).map(BatchStore.live).getOrElse(emptyCounts(spark))
-      .select(col("event_type"), col("d"), col("value"), col("cnt"))
+    BatchStore.readCovered(spark, storeDir)(emptyCounts(spark))
 
   /** The merged (event_type, value) histogram the d-merging reads share. */
   private def valueCounts(spark: SparkSession, storeDir: String): DataFrame =
@@ -109,54 +107,29 @@ object DriftMonitor {
       .groupBy(col("event_type"), col("value"))
       .agg(sum(col("cnt")).as("cnt"))
 
-  /** Phase 1 of compaction: fold the base and every batch partition
-    * below `upToBatch` into a new base with covered_upto = upToBatch,
-    * dropping the day axis (d → NULL, counts pointwise-summed) for days
-    * more than [[BandHorizonDays]] behind the folded frame's newest day.
-    * Counts are exact integers, so the fold commutes with every
-    * d-merging read; only the bands read narrows (to the horizon). */
+  /** Fold the live rows below `upToBatch` into a new base, dropping the
+    * day axis (d → NULL, counts pointwise-summed) for days more than
+    * `horizonDays` behind the store's newest day. Counts are exact
+    * integers, so the fold commutes with every d-merging read; only the
+    * bands read narrows (to the horizon). */
   def foldBase(spark: SparkSession, storeDir: String, upToBatch: Long,
       horizonDays: Int = BandHorizonDays): Unit =
-    BatchStore.read(spark, storeDir).foreach { all =>
-      // a regressed watermark would re-expose covered-but-unswept batch
-      // partitions to the live read (double count on every d-merging
-      // read) — fail loudly instead
-      val current = BatchStore.coveredUpto(all)
-      require(upToBatch >= current,
-        s"s29 foldBase: upToBatch $upToBatch < current covered_upto $current — " +
-          "a regressed watermark re-exposes folded batch partitions")
-      val live = BatchStore.live(all)
-      val folded = live
-        .filter(col("batch_id") === -1L || col("batch_id") < upToBatch)
-        .select(col("event_type"), col("d"), col("value"), col("cnt"))
-      // horizon anchor = the newest day across ALL live rows (the class
-      // doc's "store's newest day"), not just the folded frame's — a
-      // partial fold with newer unfolded batches must not shift the band
-      // horizon backwards
-      val cutoff = Option(
-        live.agg(date_sub(max(col("d")), horizonDays)).collect()(0).getDate(0))
-      val dropped = cutoff.fold(folded) { c =>
-        folded.withColumn("d",
-          when(col("d") >= lit(c), col("d")).otherwise(lit(null).cast("date")))
-      }
-      val newBase = dropped
+    BatchStore.foldCovered(spark, storeDir, upToBatch) { folded =>
+      // the anchor is the newest day over ALL live rows, not just the
+      // folded ones, so a partial fold never moves the horizon backwards
+      val cutoff = Option(storeCounts(spark, storeDir)
+        .agg(date_sub(max(col("d")), horizonDays)).collect()(0).getDate(0))
+      cutoff.fold(folded)(c => folded.withColumn("d", when(col("d") >= lit(c), col("d"))))
         .groupBy(col("event_type"), col("d"), col("value"))
         .agg(sum(col("cnt")).as("cnt"))
-        .localCheckpoint(true) // pin: the overwrite below rewrites the source path
-      BatchStore.write(newBase.withColumn("covered_upto", lit(upToBatch)), storeDir, -1L)
     }
-
-  /** Phase 2: garbage-collect covered batch partitions (pure cleanup —
-    * can crash, re-run, or never run without moving any read). */
-  def sweepFolded(spark: SparkSession, storeDir: String): Unit =
-    BatchStore.sweepCovered(spark, storeDir)
 
   /** The maintainer fold: see the class doc for why this runs on the
     * band-retention schedule rather than processBatch's cadence. */
   def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long,
       horizonDays: Int = BandHorizonDays): Unit = {
     foldBase(spark, storeDir, upToBatch, horizonDays)
-    sweepFolded(spark, storeDir)
+    BatchStore.sweepCovered(spark, storeDir)
   }
 
   /** The q135-shaped KS drift matrix over everything ingested so far —

@@ -18,11 +18,8 @@ import graft.ops.Dsl.freqSketch
   * licenses folding per-batch sketches written at different times.
   *
   * The store is ADDITIVE — a duplicated row changes sums — so it folds
-  * with the coverage watermark (`covered_upto`, see [[BatchStore]]), not
-  * by write-then-delete. [[foldBase]] (write the new base) and
-  * [[sweepFolded]] (delete covered partitions) are split so the
-  * StreamingSpec law can hold the crash window open and assert the
-  * merged sketch is identical at every point.
+  * by the coverage watermark ([[BatchStore.foldCovered]]), not by
+  * write-then-delete.
   *
   * Scale posture: per batch the shuffle is the m-counter sketch merge
   * tree (constant state per partition — the q88 argument, now paid per
@@ -42,8 +39,8 @@ object HeavyHitters {
     * bound still holds. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long,
       m: Int = Counters): Unit = {
-    // kept: the token sketch is a global aggregate, and at a fold
-    // boundary an empty batch would still advance the covered_upto watermark
+    // kept: in the eviction regime a fold moves the merged sketch, so an
+    // empty batch at a fold boundary would move the read
     if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId, m)
@@ -52,9 +49,8 @@ object HeavyHitters {
       .filter(length(col("token")) >= 1)
       .agg(freqSketch(col("token"), m).as("sk"))
       .select(explode(col("sk")).as("e"))
-      .select(col("e.token").as("token"), col("e.est").as("est"),
-        lit(null).cast("long").as("covered_upto"))
-    BatchStore.write(sketch, storeDir, batchId)
+      .select(col("e.token").as("token"), col("e.est").as("est"))
+    BatchStore.writeCovered(sketch, storeDir, batchId)
   }
 
   /** The PODS'12 merge over a (token, est) frame: pointwise sum, subtract
@@ -73,41 +69,21 @@ object HeavyHitters {
 
   /** The queryable merged sketch over everything admitted so far. */
   def merged(spark: SparkSession, storeDir: String, m: Int = Counters): DataFrame =
-    mergeSketch(BatchStore.live(spark.read.parquet(storeDir)), m)
+    mergeSketch(BatchStore.readCovered(spark, storeDir)(
+      spark.range(0).select(lit("").as("token"), col("id").as("est"))), m)
 
-  /** Phase 1 of compaction: fold the base and every batch partition in
-    * [old watermark, upToBatch) into a new base with
-    * covered_upto = upToBatch. The moment this commits, readers stop
-    * seeing the folded partitions (watermark filter) — no double count
-    * regardless of when (or whether) the sweep runs. The fold itself
+  /** Fold the live rows below `upToBatch` into a new base. The fold
     * applies [[mergeSketch]], which the mergeable-summary theorem says
     * preserves the N/(m+1) bound under any fold schedule; below the
     * eviction regime (distinct tokens ≤ m) the threshold is 0 and the
     * fold is exactly the pointwise sum. */
   def foldBase(spark: SparkSession, storeDir: String, upToBatch: Long,
       m: Int = Counters): Unit =
-    BatchStore.read(spark, storeDir).foreach { all =>
-      // a regressed watermark would re-expose covered-but-unswept batch
-      // partitions to the live read (double count) — fail loudly
-      val current = BatchStore.coveredUpto(all)
-      require(upToBatch >= current,
-        s"s16 foldBase: upToBatch $upToBatch < current covered_upto $current — " +
-          "a regressed watermark re-exposes folded batch partitions")
-      val newBase = mergeSketch(
-        BatchStore.live(all).filter(col("batch_id") === -1L || col("batch_id") < upToBatch), m)
-        .localCheckpoint(true) // pin: the overwrite below rewrites the source path
-      BatchStore.write(newBase.select(col("token"), col("est"),
-        lit(upToBatch).as("covered_upto")), storeDir, -1L)
-    }
-
-  /** Phase 2: garbage-collect batch partitions the base now covers. Pure
-    * cleanup — the watermark already hides them from every reader. */
-  def sweepFolded(spark: SparkSession, storeDir: String): Unit =
-    BatchStore.sweepCovered(spark, storeDir)
+    BatchStore.foldCovered(spark, storeDir, upToBatch)(mergeSketch(_, m))
 
   def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long,
       m: Int = Counters): Unit = {
     foldBase(spark, storeDir, upToBatch, m)
-    sweepFolded(spark, storeDir)
+    BatchStore.sweepCovered(spark, storeDir)
   }
 }

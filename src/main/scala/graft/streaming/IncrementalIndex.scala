@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.Text
@@ -44,22 +43,10 @@ object IncrementalIndex {
     BatchStore.write(Text.termFrequencies(batch), storeDir, batchId)
   }
 
-  /** Per-doc LWW over store rows: every (token, doc_id, tf) row of each
-    * doc's max batch_id. */
-  private def lastVersion(rows: DataFrame): DataFrame = {
-    val wd = Window.partitionBy(col("doc_id"))
-    rows
-      .select(col("token"), col("doc_id"), col("tf"),
-        col("batch_id").cast("long").as("batch_id"))
-      .withColumn("mx", max(col("batch_id")).over(wd))
-      .filter(col("batch_id") === col("mx"))
-      .select(col("token"), col("doc_id"), col("tf"))
-  }
-
   /** The store's current posting rows after per-doc LWW resolution —
     * (token, doc_id, tf), one version per doc. */
   private def currentPostings(spark: SparkSession, storeDir: String): DataFrame =
-    lastVersion(spark.read.parquet(storeDir))
+    BatchStore.lastVersion("doc_id")(spark.read.parquet(storeDir))
 
   /** The index as q91 would report it over the streamed corpus: the q91
     * aggregation applied to the LWW-resolved store (the batch-parity law
@@ -71,7 +58,7 @@ object IncrementalIndex {
   /** Fold every committed partition below `upToBatch` into one
     * LWW-resolved base partition. */
   def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
-    BatchStore.fold(spark, storeDir, upToBatch)(lastVersion)
+    BatchStore.fold(spark, storeDir, upToBatch)(BatchStore.lastVersion("doc_id"))
 
   /** s18: BM25 search served FROM the incremental store — the query-time
     * read path that makes s15 an index rather than an archive. Document

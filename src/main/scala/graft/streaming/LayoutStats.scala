@@ -18,7 +18,9 @@ import graft.queries.ZOrder
   * (s16/s21/s26), the engine's strongest replay class: no arrival-order
   * assumption at all.
   *
-  * Compaction is s21's watermark fold when partition count demands it.
+  * The store never folds: its batch rows carry no `covered_upto`.
+  * [[BatchStore.foldCovered]] would apply if the partition count ever
+  * demanded it.
   *
   * Scale posture: per batch ONE map-side-combined aggregate of the batch
   * at 2^ZBucketBits cardinality (each task emits ≤ 64 partial rows); the

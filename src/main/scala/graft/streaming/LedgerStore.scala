@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   * presence/NULL discipline and the null-user one-row-per-side semantics
   * included, parity by construction.
   *
-  * The store grows one user-cardinality-bounded partition per batch;
-  * the partials are pointwise-summable, so s21's watermark fold applies
-  * when the partition count demands it.
+  * The store grows one user-cardinality-bounded partition per batch and
+  * never folds: its batch rows carry no `covered_upto`. The partials are
+  * pointwise-summable, so [[BatchStore.foldCovered]] would apply if the
+  * partition count ever demanded it.
   *
   * Scale posture: per batch ONE user_id-keyed map-side-combined
   * aggregate of the batch only; the panel read is one shuffle over the

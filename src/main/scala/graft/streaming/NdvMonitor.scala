@@ -33,8 +33,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: per batch ONE map-side-combined sketch aggregate at
   * event-type cardinality; read = one union shuffle over KB-sized rows.
-  * Compaction (s21's watermark fold) unions old partitions into a base
-  * sketch — lossless, by the same merge law the read relies on.
+  * The store never folds: its batch rows carry no `covered_upto`. A
+  * [[BatchStore.foldCovered]] fold that unions old partitions into a base
+  * sketch would be lossless, by the same merge law the read relies on.
   */
 object NdvMonitor {
 

@@ -21,8 +21,10 @@ import graft.queries.Behavior
   * Note the quantile boundaries are DERIVED, not stored: quantiles are
   * not mergeable statistics, so the read recomputes them from the merged
   * metrics — which stay one row per (user, batch-partial), never
-  * event-scale. Folding old partitions is s21's watermark compaction
-  * (MAX/SUM partials are pointwise-mergeable).
+  * event-scale. The store never folds: its batch rows carry no
+  * `covered_upto`. MAX/SUM partials are pointwise-mergeable, so
+  * [[BatchStore.foldCovered]] would apply if the partition count ever
+  * demanded it.
   *
   * Scale posture: per batch ONE map-side-combined per-user aggregate of
   * the batch only (`Behavior.rfmMetrics` — the shared kernel); the read

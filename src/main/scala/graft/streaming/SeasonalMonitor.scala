@@ -21,8 +21,10 @@ import graft.queries.Stats
   * monitoring query has a store-maintained face.
   *
   * The store grows one (types × days)-bounded partition per batch —
-  * calendar-bounded, never volume-bounded; folding old partitions is
-  * s21's watermark compaction (counts are pointwise-summable).
+  * calendar-bounded, never volume-bounded. The store never folds: its
+  * batch rows carry no `covered_upto`. Counts are pointwise-summable, so
+  * [[BatchStore.foldCovered]] would apply if the partition count ever
+  * demanded it.
   *
   * Scale posture: per batch ONE map-side-combined aggregate of the
   * batch only; the read is one shuffle over ≤ types × days ×

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dsl.{cosine, round4}
@@ -47,22 +46,10 @@ object VectorIndex {
       storeDir, batchId)
   }
 
-  /** Per-vector LWW over store rows: each vec_id's row of its max
-    * batch_id. */
-  private def lastVersion(rows: DataFrame): DataFrame = {
-    val wv = Window.partitionBy(col("vec_id"))
-    rows
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        col("batch_id").cast("long").as("batch_id"))
-      .withColumn("mx", max(col("batch_id")).over(wv))
-      .filter(col("batch_id") === col("mx"))
-      .select(col("vec_id"), col("embedding"), col("cell"))
-  }
-
   /** The index's current membership after per-vector LWW resolution —
     * (vec_id, embedding, cell), one version per vector. */
   def currentMembers(spark: SparkSession, storeDir: String): DataFrame =
-    lastVersion(spark.read.parquet(storeDir))
+    BatchStore.lastVersion("vec_id")(spark.read.parquet(storeDir))
 
   /** q56's probe against the streamed store: the stored vector `qId`
     * ranks the codebook cells, its NProbe nearest are semi-joined against
@@ -87,5 +74,5 @@ object VectorIndex {
   /** Fold every committed partition below `upToBatch` into one
     * LWW-resolved base partition. */
   def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
-    BatchStore.fold(spark, storeDir, upToBatch)(lastVersion)
+    BatchStore.fold(spark, storeDir, upToBatch)(BatchStore.lastVersion("vec_id"))
 }

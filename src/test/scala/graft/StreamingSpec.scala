@@ -24,6 +24,22 @@ class StreamingSpec extends SparkSpec {
     s"""{"event_id":"$id","event_type":"$tpe","ts":"$ts"$extra}"""
   }
 
+  test("notify replay: a re-run of notify batch b writes its users once") {
+    import spark.implicits._
+    val pipe = new BnplPipeline(spark, tmpDir("notify-events"), tmpDir("notify-state"))
+    def stored() = spark.read.parquet(pipe.notificationsDir)
+      .selectExpr("user_id", "cast(batch_id as long)").as[(String, Long)].collect().sorted.toSeq
+    val b3 = Seq("u2", "u1", "u2").toDF("user_id")
+    pipe.notifyBatch(b3, 3L)
+    val once = stored()
+    assert(once == Seq(("u1", 3L), ("u2", 3L)), once.toString)
+    // foreachBatch re-runs batch 3 after a crash: its partition is replaced
+    pipe.notifyBatch(b3, 3L)
+    assert(stored() == once, s"replayed notify batch wrote its users twice: ${stored()}")
+    pipe.notifyBatch(Seq("u1").toDF("user_id"), 4L)
+    assert(stored() == (once :+ (("u1", 4L))).sorted)
+  }
+
   test("s14: incremental dedup admits novel docs, rejects near-dups within and across batches") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -835,7 +851,8 @@ class StreamingSpec extends SparkSpec {
 
   test("s16 laws: streamed sketch == exact counts below eviction; replay no-op; crash-window compaction invisible") {
     import spark.implicits._
-    import graft.streaming.HeavyHitters.{foldBase, merged, processBatch, sweepFolded}
+    import graft.streaming.BatchStore.sweepCovered
+    import graft.streaming.HeavyHitters.{foldBase, merged, processBatch}
     val storeDir = tmpDir("hh-store") + "/store"
     def batchDf(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     def mergedMap(): Map[String, Long] =
@@ -870,7 +887,7 @@ class StreamingSpec extends SparkSpec {
     foldBase(spark, storeDir, 2L)
     assert(mergedMap() == exact01, "foldBase retry changed the merged counts")
     // the sweep is pure GC
-    sweepFolded(spark, storeDir)
+    sweepCovered(spark, storeDir)
     val partsAfter = new java.io.File(storeDir).listFiles()
       .map(_.getName).filter(_.startsWith("batch_id=")).toSet
     assert(partsAfter == Set("batch_id=-1"), s"sweep left: $partsAfter")
@@ -904,7 +921,7 @@ class StreamingSpec extends SparkSpec {
     assert(est.contains("x"), s"heavy hitter evicted: $est")
     // and folding must preserve all of the above
     foldBase(spark, smStore, 2L, m = 2)
-    sweepFolded(spark, smStore)
+    sweepCovered(spark, smStore)
     val estC = merged(spark, smStore, m = 2).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(estC.size <= 2 && estC.contains("x"))
@@ -1057,7 +1074,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("s21: streamed embedding stats == batch q102; replay no-op; compaction crash window invisible") {
-    import graft.streaming.VectorStats.{foldBase, processBatch, stats, sweepFolded}
+    import graft.streaming.BatchStore.sweepCovered
+    import graft.streaming.VectorStats.{foldBase, processBatch, stats}
     val storeDir = tmpDir("vstats-store") + "/store"
     val emb = graft.tables.Tables.embeddings(spark, sf001)
     def got(): List[(Int, Long, Long, Double, Double, Double)] =
@@ -1084,7 +1102,7 @@ class StreamingSpec extends SparkSpec {
     // is identical BEFORE the sweep, after it, and after both.
     foldBase(spark, storeDir, 3L)
     assert(got() == batch, "stats changed inside the fold/sweep crash window")
-    sweepFolded(spark, storeDir)
+    sweepCovered(spark, storeDir)
     assert(got() == batch, "sweep changed the stats")
     val parts = new java.io.File(storeDir).listFiles()
       .map(_.getName).filter(_.startsWith("batch_id=")).toSet
@@ -1099,6 +1117,18 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5))).toList
     assert(got() == expected, "post-compaction batch not absorbed")
+
+    // an empty batch at the fold boundary folds the store, and its replay
+    // folds it again; the exact combine moves no read either time
+    val boundary = graft.streaming.BatchStore.FoldEvery
+    val empty = emb.filter(org.apache.spark.sql.functions.lit(false))
+    processBatch(empty, storeDir, boundary)
+    assert(got() == expected, "an empty fold-boundary batch moved the stats")
+    processBatch(empty, storeDir, boundary)
+    assert(got() == expected, "a replayed empty fold-boundary batch moved the stats")
+    val folded = new java.io.File(storeDir).listFiles()
+      .map(_.getName).filter(_.startsWith("batch_id=")).toSet
+    assert(folded == Set("batch_id=-1"), s"partitions after the boundary fold: $folded")
   }
 
   test("s22: streamed quality routing matches the q108 panel; replay no-op; alien docs route") {
@@ -2346,7 +2376,7 @@ class StreamingSpec extends SparkSpec {
       "fold (unswept) moved the winsorized read")
     assert(rows(bands(spark, storeDir)) == wantBands,
       "fold (unswept) bands != batch bands restricted to the horizon")
-    sweepFolded(spark, storeDir)
+    graft.streaming.BatchStore.sweepCovered(spark, storeDir)
     assert(rows(drift(spark, storeDir)) == wantDrift, "sweep moved the KS read")
     assert(rows(iqr(spark, storeDir)) == wantIqr, "sweep moved the IQR read")
     assert(rows(winsorized(spark, storeDir)) == wantWin, "sweep moved the winsorized read")
@@ -2844,6 +2874,9 @@ class StreamingSpec extends SparkSpec {
       StoreLaw("vectorstats", Seq("s"), graft.tables.Tables.embeddings(spark, sf001),
         (b, d, i) => VectorStats.processBatch(b, d("s"), i),
         Seq("stats" -> (d => VectorStats.stats(spark, d("s"))))),
+      StoreLaw("heavyhitters", Seq("s"), docs.select(col("doc_id"), col("text")),
+        (b, d, i) => HeavyHitters.processBatch(b, d("s"), i),
+        Seq("merged" -> (d => HeavyHitters.merged(spark, d("s"))))),
       StoreLaw("decontamination", Seq("a"), docs.filter(col("source") =!= "src0"),
         (b, d, i) => Decontamination.processBatch(b, bench, d("a"), i),
         Seq("readAudit" -> (d => Decontamination.readAudit(spark, d("a"))))),
@@ -2917,13 +2950,13 @@ class StreamingSpec extends SparkSpec {
   test("empty-batch law: an empty micro-batch, first or later, and its replay leave every read as it was") {
     // the stores that still return early on an empty batch (the guard law
     // below names them and why); every other store ingests it
-    val guarded = Set("vectorstats", "neardup")
+    val guarded = Set("heavyhitters", "neardup")
     // rows as a multiset: a read need not be ordered
     def bag(df: DataFrame) =
       df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     val laws = storeLaws().filterNot(l => guarded(l.store))
-    assert(laws.size == 23)
+    assert(laws.size == 24)
     for (StoreLaw(store, _, batch, ingest, reads) <- laws) {
       val empty = batch.filter(org.apache.spark.sql.functions.lit(false))
       def snapshot(root: String): Seq[(Map[Row, Int], Seq[(String, DataType)])] =
@@ -3051,12 +3084,15 @@ class StreamingSpec extends SparkSpec {
       // the null-safe touched-key prune and the arrival gate's error
       "lastWins" -> Set("BatchStore.scala"),
       nullSafePrune -> Set("BatchStore.scala"),
-      "arrival-order contract violated" -> Set("BatchStore.scala"))
+      "arrival-order contract violated" -> Set("BatchStore.scala"),
+      // the additive stores' coverage-watermark fold
+      "covered_upto" -> Set("BatchStore.scala"),
+      "coveredUpto" -> Set("BatchStore.scala"))
     // an empty batch writes no partition (BatchStore.write), so a store
     // returns early on one only where it would otherwise change a read or
     // fail; each such store states why in a `// kept:` comment
     val guard = "isEmpty) return"
-    val guarded = Set("HeavyHitters.scala", "NearDupAdmission.scala", "VectorStats.scala",
+    val guarded = Set("HeavyHitters.scala", "NearDupAdmission.scala",
       "IncrementalDedup.scala", "IncrementalIndex.scala", "VectorIndex.scala")
     val dir = new java.io.File("src/main/scala/graft/streaming")
     val files = Option(dir.listFiles()).getOrElse(Array.empty).filter(_.getName.endsWith(".scala"))
