@@ -41,9 +41,48 @@ object SparkEntry {
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false")
 
   /** Apply [[EngineConfs]] to a live session (all confs are
-    * runtime-settable). */
-  def applyEngineConfs(spark: SparkSession): Unit =
+    * runtime-settable) and install the [[CancelNoise]] log filter. */
+  def applyEngineConfs(spark: SparkSession): Unit = {
     EngineConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    dropCancelNoise()
+  }
+
+  /** The one DAGScheduler message the logs drop. Stopping a streaming
+    * query cancels its run's job group, and when that group has no running
+    * job DAGScheduler logs this WARN from its event-loop thread, so every
+    * clean stop of an idle query logs it. A level change scoped around
+    * `stop()` would race that thread; a message filter does not, and every
+    * other DAGScheduler WARN stays visible. */
+  val CancelNoise = "Failed to cancel job group .*\\. Cannot find active jobs for it\\."
+
+  private val DagSchedulerLogger = "org.apache.spark.scheduler.DAGScheduler"
+  private var cancelNoiseOn: AnyRef = null
+
+  /** Attach a [[CancelNoise]] deny filter to the DAGScheduler logger,
+    * once per logging configuration. The logger config created for it
+    * has no level of its own, so it keeps inheriting the root level that
+    * `sparkContext.setLogLevel` sets. */
+  private def dropCancelNoise(): Unit = synchronized {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    import org.apache.logging.log4j.core.config.LoggerConfig
+    import org.apache.logging.log4j.core.filter.RegexFilter
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val config = ctx.getConfiguration
+    val own = config.getLoggerConfig(DagSchedulerLogger)
+    val lc = if (own.getName == DagSchedulerLogger) own else {
+      val created = new LoggerConfig(DagSchedulerLogger, null, true)
+      config.addLogger(DagSchedulerLogger, created)
+      created.start()
+      created
+    }
+    if (cancelNoiseOn ne lc) {
+      lc.addFilter(RegexFilter.createFilter(CancelNoise, null, false,
+        Filter.Result.DENY, Filter.Result.NEUTRAL))
+      ctx.updateLoggers()
+      cancelNoiseOn = lc
+    }
+  }
 
   /** Session tuning that Spark reads once, when the session is created:
     * it must go on the builder ([[applyStaticEngineConfs]]), because set

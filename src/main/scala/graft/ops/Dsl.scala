@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Determinism helpers shared by every query (SURVEY.md §2.2 rules D1–D5).
@@ -67,6 +68,49 @@ object Dsl {
     * [[pin]]. */
   def pinIter(df: DataFrame, parts: Int = PinParts): DataFrame =
     df.coalesce(parts).localCheckpoint(true)
+
+  /** Range partitions of [[runningSum]]; at 100 TB raise it with the
+    * cluster — the offsets side stays one row per partition regardless. */
+  val PrefixRanges = 32
+
+  /** `df` plus column `as`, the INCLUSIVE global running sum of the long
+    * column `value` in `order` (a total order over the rows), by the
+    * two-phase distributed prefix sum — no row ever passes through a
+    * single-task global window:
+    *   1. range-partition on `order`, so partition p holds a contiguous
+    *      key slice and all of p's keys precede p+1's;
+    *   2. per-partition totals, one tiny row per partition;
+    *   3. each partition's offset = the sum of the totals before it (a
+    *      P×P triangular join over P rows — deliberately not a window, so
+    *      the plan stays free of unpartitioned windows, PlanSpec-pinned);
+    *   4. a running sum PARTITIONED by partition id, plus the broadcast
+    *      offset.
+    * The arithmetic is boundary-invariant: wherever the range sampler
+    * cuts, contiguous ranges and grouped totals reproduce the same
+    * offsets, so results (and oracle hashes) cannot move. The (…, pid)
+    * frame is pinned with localCheckpoint(true), NOT cache(),
+    * because steps 2 and 4 must read spark_partition_id off ONE
+    * materialization: an evicted cache partition would be recomputed, and
+    * correctness would then rest on the range sampler being
+    * bit-reproducible; the eager checkpoint truncates lineage so a
+    * recompute is impossible. An exclusive sum is `as` minus `value`. */
+  def runningSum(df: DataFrame, value: String, order: Seq[Column], as: String): DataFrame = {
+    val d = df.repartitionByRange(PrefixRanges, order: _*)
+      .withColumn("pid", spark_partition_id())
+      .localCheckpoint(true)
+    val totals = d.groupBy(col("pid")).agg(sum(col(value)).as("ptot"))
+    val offsets = totals
+      .join(broadcast(totals.select(col("pid").as("prev_pid"), col("ptot").as("prev_tot"))),
+        col("prev_pid") < col("pid"), "left")
+      .groupBy(col("pid"))
+      .agg(coalesce(sum(col("prev_tot")), lit(0L)).as("poff"))
+    val w = Window.partitionBy(col("pid")).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    d.withColumn("lcum", sum(col(value)).over(w))
+      .join(broadcast(offsets), Seq("pid"))
+      .withColumn(as, col("poff") + col("lcum"))
+      .drop("pid", "poff", "lcum")
+  }
 
   /** Exact sum of a (possibly computed) double column: DECIMAL(18,4) per
     * row, decimal sum, DOUBLE out. DuckDB mirror:

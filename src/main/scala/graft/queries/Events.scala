@@ -390,29 +390,10 @@ object Events {
       .select(explode(sequence(col("m0"), col("m1"), expr("INTERVAL 1 MONTH"))).as("m"))
       .select(col("m").cast("timestamp").as("t"), lit(0L).as("delta"),
         lit(-1L).as("event_id"))
-    val bounds = real.unionAll(sentinels)
-    // two-phase global prefix sum (q72 discipline): range partitions
-    // follow the sweep order, so pid order == key order and the offset
-    // join is a broadcast of one row per partition
-    val d = bounds
-      .repartitionByRange(graft.queries.Sampling.ShardRanges,
-        col("t"), col("delta"), col("event_id"))
-      .withColumn("pid", spark_partition_id())
-      // two consumers (totals + cumsum) must see ONE pid assignment
-      .localCheckpoint(true)
-    val totals = d.groupBy(col("pid")).agg(sum(col("delta")).as("ptot"))
-    val offsets = totals
-      .join(broadcast(totals.select(col("pid").as("prev_pid"), col("ptot").as("prev_tot"))),
-        col("prev_pid") < col("pid"), "left")
-      .groupBy(col("pid"))
-      .agg(coalesce(sum(col("prev_tot")), lit(0L)).as("poff"))
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("t"), col("delta"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = d.withColumn("lcum", sum(col("delta")).over(w))
-      .join(broadcast(offsets), Seq("pid"))
-      .select(col("t"), col("delta"), col("event_id"),
-        (col("poff") + col("lcum")).as("active"))
+    // the active count is the global running sum of the deltas in sweep
+    // order (the two-phase prefix sum)
+    val cum = runningSum(real.unionAll(sentinels), "delta",
+      Seq(col("t"), col("delta"), col("event_id")), "active")
     val best = Window.partitionBy(col("month"))
       .orderBy(col("active").desc, col("t"), col("delta"), col("event_id"))
     cum.withColumn("month", to_date(date_trunc("month", col("t"))))

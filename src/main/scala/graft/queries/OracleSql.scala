@@ -262,7 +262,7 @@ object OracleSql {
        |ORDER BY src, rk""".stripMargin
 
   /** q146/q147 oracle: the q90 trained chain with the TUNED subcode
-    * multi-probe unrolled (Vectors.ivfKnnTuned at the declared
+    * multi-probe unrolled (Vectors.ivfKnn at the declared
     * TunedSubBits). The subcode is the sign pattern of the first subBits
     * hyperplane projections (graft.ops.Ann.weights rendered as literal
     * lists — the annBucketCols/jlSql discipline, sequential-double

@@ -109,58 +109,23 @@ object Sampling {
   /** q72 shard budget: target token volume per training shard. */
   val ShardBudget = 2000L
 
-  /** q72 range-partition count for the two-phase prefix sum. Matches the
-    * session shuffle parallelism; at 100 TB raise it with the cluster —
-    * the offsets side stays one row per partition regardless. */
-  val ShardRanges = 32
-
   /** q72: token-budget shard assignment — pack the corpus (in doc_id
     * order) into training shards of ~ShardBudget tokens each: a doc's
     * shard is its starting token offset divided by the budget, so shard
     * boundaries never reorder documents and a doc lands in exactly one
     * shard. Output: per-shard doc count, token volume, doc range.
     *
-    * The running offset is the classic two-phase distributed prefix sum —
-    * no row ever passes through a global single-task window:
-    *   1. range-partition (doc_id) so partition p holds a contiguous
-    *      doc_id slice and all of partition p's ids precede partition
-    *      p+1's;
-    *   2. per-partition token totals — one tiny row per partition;
-    *   3. each partition's starting offset = sum of the totals of the
-    *      partitions before it (a P×P triangular join over P rows —
-    *      deliberately not a window, so the whole plan is free of
-    *      unpartitioned windows, PlanSpec-pinned);
-    *   4. local cumsum per partition (a window PARTITIONED by pid) +
-    *      broadcast-joined starting offset = the exact global prefix sum.
-    * The arithmetic is boundary-invariant: wherever the range sampler
-    * happens to cut, contiguous ranges + grouped totals reproduce the
-    * identical global offsets, so the shard assignment (and the oracle
-    * hash) cannot move. The narrow (doc_id, n_tokens, pid) frame is
-    * localCheckpoint(true)-pinned — NOT cache()d — because both phase 2
-    * and phase 4 read it and spark_partition_id must be evaluated against
-    * ONE materialization: a cached partition can be evicted under memory
-    * pressure and recomputed, which would make correctness rest on the
-    * range sampler being bit-reproducible across recomputes; the eager
-    * checkpoint truncates lineage so a recompute is impossible (the q57
-    * CC-fixpoint discipline). */
+    * A doc's starting offset is the exclusive running token sum in doc_id
+    * order, by the two-phase distributed prefix sum
+    * ([[graft.ops.Dsl.runningSum]]): no row ever passes through a global
+    * single-task window, and wherever the range sampler cuts, the shard
+    * assignment (and the oracle hash) cannot move. */
   def q72(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .repartitionByRange(ShardRanges, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val totals = d.groupBy(col("pid")).agg(sum(col("n_tokens")).as("ptot"))
-    val offsets = totals
-      .join(broadcast(totals.select(col("pid").as("prev_pid"), col("ptot").as("prev_tot"))),
-        col("prev_pid") < col("pid"), "left")
-      .groupBy(col("pid"))
-      .agg(coalesce(sum(col("prev_tot")), lit(0L)).as("poff"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    d.withColumn("lcum", sum(col("n_tokens")).over(w))
-      .join(broadcast(offsets), Seq("pid"))
+    runningSum(d, "n_tokens", Seq(col("doc_id")), "cum")
       .select(col("doc_id"), col("n_tokens"),
-        ((col("poff") + col("lcum") - col("n_tokens")) / ShardBudget).cast("long").as("shard_id"))
+        ((col("cum") - col("n_tokens")) / ShardBudget).cast("long").as("shard_id"))
       .groupBy(col("shard_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("shard_tokens"),

@@ -561,6 +561,41 @@ object Stats {
         .as("significant"))
   }
 
+  /** The cent histogram under the robust value statistics (q168, q182,
+    * q188) from a per-(event_type, value) COUNT frame: counts
+    * re-aggregated by exact cents (DECIMAL(12,2)·100, q156's carrier —
+    * distinct raw values that quantize to one cent merge), pinned because
+    * the totals, the quantile scans and the final conditional aggregate
+    * all read it (q104 pinning discipline). Returns the histogram
+    * (event_type, cents, cnt), the per-type total (event_type, n) and the
+    * [[cdfOf]] frame. */
+  private def centsHist(counts: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val h = pin(counts
+      .select(col("event_type"),
+        (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"),
+        col("cnt"))
+      .groupBy(col("event_type"), col("cents"))
+      .agg(sum(col("cnt")).as("cnt")))
+    val tot = h.groupBy(col("event_type")).agg(sum(col("cnt")).as("n"))
+    (h, tot, cdfOf(h, "cents", tot))
+  }
+
+  /** A per-type histogram (event_type, v, cnt) with its running count
+    * `cum` in v order, PARTITIONED by type, and the broadcast type total
+    * `n` from `tot`. */
+  private def cdfOf(h: DataFrame, v: String, tot: DataFrame): DataFrame =
+    h.withColumn("cum",
+      sum(col("cnt")).over(Window.partitionBy(col("event_type")).orderBy(col(v))))
+      .join(broadcast(tot), Seq("event_type"))
+
+  /** The DISC k/d quantile per type off a [[cdfOf]] frame: the smallest
+    * attained v whose running count reaches k/d of the total
+    * (d·cum ≥ k·n, all integer). */
+  private def discQuantile(cdf: DataFrame, v: String, k: Int, d: Int,
+      out: String): DataFrame =
+    cdf.filter(col("cum") * d >= col("n") * k)
+      .groupBy(col("event_type")).agg(min(col(v)).as(out))
+
   /** q168: Tukey box-plot summary + IQR fence outlier counts per event
     * type over the VALUE distribution — the five-number profile (DISC
     * quartiles) and the 1.5·IQR outlier rule every EDA/monitoring layer
@@ -594,22 +629,8 @@ object Stats {
     * s45 streaming read enters through, so stream and batch share one
     * quartile/fence definition by construction. */
   private[graft] def iqrOfValueCounts(counts: DataFrame): DataFrame = {
-    // one histogram evaluation feeds totals, the quartile scans and the
-    // outlier count (q104 pinning discipline); re-aggregating by cents
-    // merges any distinct raw values that quantize to the same cent
-    val h = pin(counts
-      .select(col("event_type"),
-        (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"),
-        col("cnt"))
-      .groupBy(col("event_type"), col("cents"))
-      .agg(sum(col("cnt")).as("cnt")))
-    val tot = h.groupBy(col("event_type")).agg(sum(col("cnt")).as("n"))
-    val cum = h.withColumn("cum",
-      sum(col("cnt")).over(Window.partitionBy(col("event_type")).orderBy(col("cents"))))
-      .join(broadcast(tot), Seq("event_type"))
-    def quartile(k: Int, out: String): DataFrame =
-      cum.filter(col("cum") * 4 >= col("n") * k)
-        .groupBy(col("event_type")).agg(min(col("cents")).as(out))
+    val (h, _, cum) = centsHist(counts)
+    def quartile(k: Int, out: String): DataFrame = discQuantile(cum, "cents", k, 4, out)
     val panel = quartile(1, "q1_c")
       .join(quartile(2, "med_c"), Seq("event_type"))
       .join(quartile(3, "q3_c"), Seq("event_type"))
@@ -661,19 +682,8 @@ object Stats {
   /** q182 kernel on a per-(event_type, value) COUNT frame (the s29-store
     * seam, like [[iqrOfValueCounts]]). */
   private[graft] def winsorizedOfValueCounts(counts: DataFrame): DataFrame = {
-    val h = pin(counts
-      .select(col("event_type"),
-        (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"),
-        col("cnt"))
-      .groupBy(col("event_type"), col("cents"))
-      .agg(sum(col("cnt")).as("cnt")))
-    val tot = h.groupBy(col("event_type")).agg(sum(col("cnt")).as("n"))
-    val cum = h.withColumn("cum",
-      sum(col("cnt")).over(Window.partitionBy(col("event_type")).orderBy(col("cents"))))
-      .join(broadcast(tot), Seq("event_type"))
-    def pct(k: Int, out: String): DataFrame =
-      cum.filter(col("cum") * 20 >= col("n") * k)
-        .groupBy(col("event_type")).agg(min(col("cents")).as(out))
+    val (h, _, cum) = centsHist(counts)
+    def pct(k: Int, out: String): DataFrame = discQuantile(cum, "cents", k, 20, out)
     val panel = pct(1, "lo_c").join(pct(19, "hi_c"), Seq("event_type"))
     val clamped = greatest(least(col("cents"), col("hi_c")), col("lo_c"))
     h.join(broadcast(panel), Seq("event_type"))
@@ -725,18 +735,8 @@ object Stats {
   /** q188 kernel on a per-(event_type, value) COUNT frame (the s29-store
     * seam, like [[iqrOfValueCounts]]/[[winsorizedOfValueCounts]]). */
   private[graft] def madOfValueCounts(counts: DataFrame): DataFrame = {
-    val h = pin(counts
-      .select(col("event_type"),
-        (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"),
-        col("cnt"))
-      .groupBy(col("event_type"), col("cents"))
-      .agg(sum(col("cnt")).as("cnt")))
-    val tot = h.groupBy(col("event_type")).agg(sum(col("cnt")).as("n"))
-    val cum = h.withColumn("cum",
-      sum(col("cnt")).over(Window.partitionBy(col("event_type")).orderBy(col("cents"))))
-      .join(broadcast(tot), Seq("event_type"))
-    val med = cum.filter(col("cum") * 2 >= col("n"))
-      .groupBy(col("event_type")).agg(min(col("cents")).as("med_c"))
+    val (h, tot, cum) = centsHist(counts)
+    val med = discQuantile(cum, "cents", 1, 2, "med_c")
     // deviation histogram DERIVED from the bounded cent histogram —
     // distinct |cents − med| values collapse (symmetric deviations
     // merge), counts pointwise-summed
@@ -745,11 +745,7 @@ object Stats {
         abs(col("cents") - col("med_c")).as("dv"), col("cnt"))
       .groupBy(col("event_type"), col("dv"))
       .agg(sum(col("cnt")).as("cnt"))
-    val cumd = dev.withColumn("cum",
-      sum(col("cnt")).over(Window.partitionBy(col("event_type")).orderBy(col("dv"))))
-      .join(broadcast(tot), Seq("event_type"))
-    val mad = cumd.filter(col("cum") * 2 >= col("n"))
-      .groupBy(col("event_type")).agg(min(col("dv")).as("mad_c"))
+    val mad = discQuantile(cdfOf(dev, "dv", tot), "dv", 1, 2, "mad_c")
     h.join(broadcast(med), Seq("event_type"))
       .join(broadcast(mad), Seq("event_type"))
       .groupBy(col("event_type"))
@@ -1267,13 +1263,12 @@ object Stats {
     *
     * The scale move: a_v is a GLOBAL prefix count over the revenue
     * histogram, whose cardinality is bounded by the cent RANGE, not the
-    * corpus — but not constant, so it gets q72's two-phase distributed
-    * prefix sum (range-partition by cents, per-partition totals, the
-    * triangular P×P offset join, local PARTITIONED cumsum) instead of a
-    * single-task global window. No unpartitioned window anywhere in the
-    * plan (PlanSpec-pinned globally).
+    * corpus — but not constant, so it gets the two-phase distributed
+    * prefix sum ([[graft.ops.Dsl.runningSum]], range-partitioned by
+    * cents) instead of a single-task global window. No unpartitioned
+    * window anywhere in the plan (PlanSpec-pinned globally).
     *
-    * Determinism: pure integers; the q72 boundary-invariance argument
+    * Determinism: pure integers; runningSum's boundary-invariance argument
     * (contiguous ranges + grouped totals reproduce identical offsets
     * wherever the range sampler cuts). */
   def q173(spark: SparkSession, sfDir: String): DataFrame =
@@ -1283,16 +1278,15 @@ object Stats {
 
   /** The ranked revenue histogram shared by q173/q174: per distinct
     * per-customer cent total v, its customer count c and the EXACT
-    * global rank offset a (customers strictly below v), computed by
-    * q72's two-phase distributed prefix — range-partition by v,
-    * per-partition totals, the triangular offset join, a PARTITIONED
-    * local cumsum. No unpartitioned window at any cardinality. */
+    * global rank offset a (customers strictly below v), computed by the
+    * two-phase distributed prefix sum ([[graft.ops.Dsl.runningSum]]) over
+    * v. No unpartitioned window at any cardinality. */
   private[graft] def rankedRevenueHist(rows: DataFrame): DataFrame =
     rankedHist(rows.groupBy(col("o_custkey")).agg(sum(col("cents")).as("v")))
 
   /** The generalized ranked histogram: any single-column LONG frame `v`
     * reduces to (v, c, a) — distinct value, count, exact global rank
-    * offset — via q72's two-phase distributed prefix. The order-statistic
+    * offset — via the two-phase distributed prefix sum. The order-statistic
     * substrate under q173 (Gini), q174 (deciles) and q180 (equi-depth
     * optimizer stats): everything "needs a global sort" reduces to this,
     * with zero global sorts and zero unpartitioned windows. */
@@ -1301,26 +1295,10 @@ object Stats {
 
   /** [[rankedHist]] from a pre-counted (v, cnt) frame — the seam the s50
     * streaming column-statistics store reads through. */
-  private[graft] def rankedHistOfCounts(counts: DataFrame): DataFrame = {
-    import graft.queries.Sampling.ShardRanges
-    val hist = counts
-      .groupBy(col("v")).agg(sum(col("cnt")).as("c"))
-      .repartitionByRange(ShardRanges, col("v"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val totals = hist.groupBy(col("pid")).agg(sum(col("c")).as("ptot"))
-    val offsets = totals
-      .join(broadcast(totals.select(col("pid").as("prev_pid"), col("ptot").as("prev_tot"))),
-        col("prev_pid") < col("pid"), "left")
-      .groupBy(col("pid"))
-      .agg(coalesce(sum(col("prev_tot")), lit(0L)).as("poff"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hist
-      .withColumn("lcum", sum(col("c")).over(w))
-      .join(broadcast(offsets), Seq("pid"))
-      .select(col("v"), col("c"), (col("poff") + col("lcum") - col("c")).as("a"))
-  }
+  private[graft] def rankedHistOfCounts(counts: DataFrame): DataFrame =
+    runningSum(counts.groupBy(col("v")).agg(sum(col("cnt")).as("c")),
+      "c", Seq(col("v")), "cum")
+      .select(col("v"), col("c"), (col("cum") - col("c")).as("a"))
 
   /** q173 kernel on a (o_custkey, cents) frame (planted-data seam). */
   private[graft] def revenueGini(rows: DataFrame): DataFrame = {

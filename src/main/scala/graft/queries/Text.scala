@@ -1315,11 +1315,6 @@ object Text {
     (textRankTopKOf(r), round)
   }
 
-  /** q98 range-partition count for the two-phase prefix sum (the q72
-    * machinery; raise with the cluster — the offsets side stays one row
-    * per partition regardless). */
-  val NoveltyRanges = 32
-
   /** q98: trigram-novelty / corpus-saturation curve — in doc_id
     * (= ingest) order, how many NEW distinct word-trigrams each document
     * contributes and how much of the corpus's final distinct-trigram
@@ -1345,13 +1340,9 @@ object Text {
     * per shingle (uniform 64-bit key, map-side partials); n_new then
     * aggregates the SHINGLE TABLE by its fmin column — never joins back
     * to the stream. The curve itself runs on the doc-cardinality frame:
-    * the q72 two-phase range-partitioned prefix sum (per-partition
-    * totals → triangular offset join over P rows → pid-partitioned local
-    * cumsum), so no row ever crosses a single-task global window; the
-    * universe size broadcasts as a single-row aggregate (q74 pattern).
-    * The narrow (doc_id, ns, n_new, pid) frame is localCheckpoint(true)-
-    * pinned for the same reason as q72: spark_partition_id must be read
-    * off ONE materialization. */
+    * the two-phase distributed prefix sum ([[graft.ops.Dsl.runningSum]]),
+    * so no row ever crosses a single-task global window; the universe
+    * size broadcasts as a single-row aggregate (q74 pattern). */
   def q98(spark: SparkSession, sfDir: String): DataFrame =
     noveltyCurveOf(docs(spark, sfDir))
 
@@ -1360,7 +1351,7 @@ object Text {
     * repeating only earlier-doc trigrams contributes zero novelty, the
     * lowest doc_id is all-new, and the curve ends at exactly 1.0. */
   private[graft] def noveltyCurveOf(documents: DataFrame): DataFrame = {
-    import graft.ops.Dsl.ratio4
+    import graft.ops.Dsl.{ratio4, runningSum}
     val sh = shinglesOf(documents)
       .select(col("doc_id"), xxhash64(col("shingle")).as("hm"))
       .distinct()
@@ -1375,25 +1366,12 @@ object Text {
       .select(col("doc_id"),
         coalesce(col("ns"), lit(0L)).as("ns"),
         coalesce(col("n_new"), lit(0L)).as("n_new"))
-      .repartitionByRange(NoveltyRanges, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val totals = base.groupBy(col("pid")).agg(sum(col("n_new")).as("ptot"))
-    val offsets = totals
-      .join(broadcast(totals.select(col("pid").as("prev_pid"), col("ptot").as("prev_tot"))),
-        col("prev_pid") < col("pid"), "left")
-      .groupBy(col("pid"))
-      .agg(coalesce(sum(col("prev_tot")), lit(0L)).as("poff"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    base.withColumn("lcum", sum(col("n_new")).over(w))
-      .join(broadcast(offsets), Seq("pid"))
+    runningSum(base, "n_new", Seq(col("doc_id")), "cum_new")
       .crossJoin(broadcast(universe))
-      .select(col("doc_id"), col("ns"), col("n_new"),
-        (col("poff") + col("lcum")).as("cum_new"),
+      .select(col("doc_id"), col("ns"), col("n_new"), col("cum_new"),
         when(col("ns") > 0, ratio4(col("n_new"), col("ns")))
           .otherwise(lit(null).cast("double")).as("novelty4"),
-        when(col("n_total") > 0, ratio4(col("poff") + col("lcum"), col("n_total")))
+        when(col("n_total") > 0, ratio4(col("cum_new"), col("n_total")))
           .otherwise(lit(null).cast("double")).as("coverage4"))
       .orderBy(col("doc_id"))
   }

@@ -95,7 +95,7 @@ object Vectors {
         s => s.getField("c")).as("cvec"))
 
   /** Per-(vector, cell) similarity frame against a broadcast codebook —
-    * THIN: (vec_id, cell, csim) only, never the embedding (r17). The
+    * THIN: (vec_id, cell, csim) only, never the embedding. The
     * N·ncells similarity stream used to carry the 64-double embedding
     * into the argmax window's map-side sort, shuffle, and (on the kNN
     * paths) a localCheckpoint — ~25× the bytes of the scalars actually
@@ -201,7 +201,7 @@ object Vectors {
     val cells = codebook(trainedComponents(emb))
     val sims = cellSims(emb, cells)
     // join-back of the embedding onto the one surviving (vec_id, cell)
-    // row per vector — the argmax ranks THIN rows (see cellSims r17)
+    // row per vector — the argmax ranks THIN rows (see cellSims)
     val assigned = argmaxCell(sims)
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
     val qcells = sims.filter(col("vec_id") === 0)
@@ -321,7 +321,7 @@ object Vectors {
     val sig = e.select(col("label"), col("vec_id"),
         posexplode(graft.ops.Ann.buckets(col("embedding"))).as(Seq("t", "bucket")))
       // eager pin: this frame self-joins for the bucket pairs (q104
-      // shape; r9 pinning sweep)
+      // shape)
       .localCheckpoint(true)
     val pairs = sig.select(col("label"), col("t"), col("bucket"), col("vec_id").as("vec_a"))
       .join(sig.select(col("label"), col("t"), col("bucket"), col("vec_id").as("vec_b")),
@@ -523,92 +523,48 @@ object Vectors {
   def q90(spark: SparkSession, sfDir: String): DataFrame =
     ivfKnn(spark, sfDir, NProbe)
 
-  /** q90 core, parameterized on the probe width so LlmOpsSpec can pin the
-    * limit identity: at nprobe = ncells the probe scans every cell, so
-    * the output must EQUAL the brute-force exact k-NN row for row — the
-    * law that validates the whole train/assign/probe machinery
-    * independent of how clusterable the corpus happens to be (recall at
-    * the production NProbe is corpus geometry, pinned separately). */
-  private[graft] def ivfKnn(spark: SparkSession, sfDir: String, nprobe: Int): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val cells = codebook(trainedComponents(emb))
-    // eager pin: `assigned` and `probes` both derive from this frame and
-    // meet again in the probe join (q104 shape; r9 pinning sweep)
-    val sims = cellSims(emb, cells).localCheckpoint(true)
-    // join-back of the embedding onto the one surviving (vec_id, cell)
-    // row per vector — the argmax ranks THIN rows (see cellSims r17)
-    val assigned = argmaxCell(sims)
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cell"))
-    // rank cells on the NARROW (vec_id, cell, csim) frame — carrying the
-    // 64-float embedding through the window shuffle/sort costs ~10x the
-    // bytes for rows that are about to be filtered to NProbe per vector —
-    // then join the query embedding back onto the surviving probe rows
-    val probes = sims
-      .select(col("vec_id"), col("cell"), col("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("src"), col("cell"))
-      .join(emb.select(col("vec_id").as("src"), col("embedding").as("emb_a")), Seq("src"))
-    // The probe join's key is `cell` — ncells-cardinality, so an unsalted
-    // shuffle uses at most ncells tasks (and one giant task per hot cell).
-    // Salt it the q47 way, deterministically: each member takes ONE salt
-    // from its dst hash (never rand() — replay/compare discipline), each
-    // probe row replicates across all ProbeSalt salts, so every
-    // (probe, member) pair still meets exactly once while the shuffle
-    // spreads over ncells×ProbeSalt keys. The cost — ProbeSalt copies of
-    // the (src, cell, emb_a) probe frame — is N·NProbe·ProbeSalt tiny rows;
-    // the member side (the big one at corpus scale) is never replicated.
-    val members = assigned
-      .select(col("cell"), col("vec_id").as("dst"), col("embedding").as("emb_b"))
-      .withColumn("salt", pmod(xxhash64(col("dst")), lit(ProbeSalt)))
-    val saltedProbes = probes
-      .withColumn("salt", explode(sequence(lit(0L), lit(ProbeSalt - 1L))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))
-    saltedProbes.join(members, Seq("cell", "salt"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        round4(cosine(col("emb_a"), col("emb_b"))).as("sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= KnnK)
-      .select(col("src"), col("rk"), col("dst"), col("sim"))
-      .orderBy(col("src"), col("rk"))
-  }
-
-  /** q90's TUNED second operating point (r12 verdict item 1b): the same
-    * trained IVF index, but each cell's members are SUBDIVIDED by a
-    * `subBits`-bit random-hyperplane subcode (the q38/q85 plane family —
-    * sign bits of the first `subBits` projections, Charikar STOC'02), and
-    * a query probes, within each of its NProbe cells, only the subcell
-    * matching its own subcode plus the single least-confident bit flip
-    * (query-directed multi-probe, Lv et al. VLDB'07: the bit whose
-    * projection magnitude is smallest is the likeliest to differ for a
-    * true neighbor). With subBits sized to hold the expected subcell at a
-    * fixed target (~100 members), per-query candidate volume is
-    * NProbe · 2 · ⟨subcell⟩ — CONSTANT in corpus size — so total probe
-    * work is Θ(N) where q90's flat probe is Θ(N^1.5) under the ladder's
-    * ncells ∝ √N. The residual super-linear term is the assignment /
-    * probe-ranking cosine pass (N · ncells ∝ N^1.5) — map-side broadcast
-    * FMAs with no shuffle, ~1e-9 s each, invisible at any measured scale
-    * and the first thing a 100 TB deployment replaces with a quantizer-ANN
-    * assignment. Trade: recall drops (the subcode cuts true neighbors
-    * whose subcode differs by ≥ 2 bits) — the dial between q90's exactness
-    * and linear scaling, law-pinned in LlmOpsSpec (identity at subBits=0,
-    * recall floor at subBits=2). Declared surface since r14: [[q146]] runs
-    * this at the fixed [[TunedSubBits]] operating point against a DuckDB
-    * mirror of the whole subcode/multi-probe chain (r13 verdict item 1 —
-    * the scale-safe configuration is the one the contract verifies);
-    * BENCH_scale additionally rides the scale-keyed dial
-    * (BenchScale.tunedSubBits) so the exponent stays measured.
-    * `memberPrune` is the q143 composition seam (q147): a member-side
-    * predicate prune applied BEFORE subcoding and the probe join —
-    * prune-then-rank, never post-filter. Deterministic end to end:
-    * seeded hyperplane subcodes, argmin-|projection| bit flip with the
-    * lower-plane tie-break, unique argmax cell assignment. */
-  private[graft] def ivfKnnTuned(spark: SparkSession, sfDir: String,
-      nprobe: Int, subBits: Int,
+  /** The one IVF probe: every query vector probes its `nprobe` nearest
+    * trained cells and ranks the members by exact ROUND-4 cosine, ties by
+    * dst, keeping its top `k` as (src, rk, dst, sim).
+    *
+    * `subBits` is the dial between exactness and linear scaling. At 0 the
+    * probe scans whole cells (q90, q143, q158): per-query candidate volume
+    * is nprobe·N/ncells, so total probe work is Θ(N^1.5) under
+    * ncells ∝ √N. Above 0 each cell's members are subdivided by a
+    * `subBits`-bit random-hyperplane subcode (sign bits of the first
+    * `subBits` Ann projections, the q38/q85 plane family, Charikar
+    * STOC'02), and a query probes, within each probed cell, only its own
+    * subcell plus the single least-confident bit flip (query-directed
+    * multi-probe, Lv et al. VLDB'07: the bit whose projection magnitude is
+    * smallest is the likeliest to differ for a true neighbor). With
+    * subBits sized to hold ~100-member subcells, per-query volume is
+    * nprobe·2·⟨subcell⟩, constant in corpus size, so total probe work is
+    * Θ(N) (q146, q147, q181, q186). The residual super-linear term is the
+    * assignment and probe-ranking cosine pass (N·ncells): map-side
+    * broadcast FMAs with no shuffle. The price is recall: a true neighbor
+    * whose subcode differs in ≥ 2 bits is cut. LlmOpsSpec pins the limit
+    * identity (nprobe = ncells ∧ subBits = 0 ⇒ exact k-NN row for row)
+    * and a recall floor at subBits = 2.
+    *
+    * Hooks, all applied before ranking, never as a post-top-k filter:
+    * `memberPrune` prunes the member side before subcoding and the probe
+    * join (q143/q147's label predicate); `excludeSameLabel` drops
+    * candidate pairs of equal label (q158/q181: the exclusion is
+    * query-relative, so it cannot be a member prune); `queryFilter`
+    * restricts which vectors act as queries before probe ranking while
+    * the index still covers the corpus (q186; per-src ranks are
+    * independent, so pre- and post-filtering agree).
+    *
+    * A (src, dst) pair meets at most once, so nothing deduplicates before
+    * the rank window: the argmax cell assignment is unique (ties to the
+    * lower cell), so each dst has exactly one (cell, code, salt), and a
+    * src's probe rows have distinct (cell, code) — distinct cells from
+    * the probe ranking, and within a cell the two codes differ in the
+    * flipped bit. Deterministic end to end: seeded hyperplanes, the
+    * argmin-|projection| flip with ties to the lower plane, dst-hash
+    * salts. */
+  private[graft] def ivfKnn(spark: SparkSession, sfDir: String,
+      nprobe: Int, subBits: Int = 0,
       memberPrune: DataFrame => DataFrame = identity,
       excludeSameLabel: Boolean = false,
       k: Int = KnnK,
@@ -616,123 +572,121 @@ object Vectors {
     import graft.ops.Ann
     require(subBits >= 0 && subBits <= 16, s"subBits=$subBits out of range")
     def subcode(emb: Column): Column =
-      if (subBits == 0) lit(0L)
-      else (0 until subBits)
+      (0 until subBits)
         .map(j => when(Ann.projection(emb, j) > 0, lit(1L << j)).otherwise(lit(0L)))
         .reduce(_ + _)
     val emb = Tables.embeddings(spark, sfDir)
     val cells = codebook(trainedComponents(emb))
+    // eager pin: `assigned` and `probes` both derive from this frame and
+    // meet again in the probe join (the q104 shape)
     val sims = cellSims(emb, cells).localCheckpoint(true)
     // join-back of the embedding onto the one surviving (vec_id, cell)
-    // row per vector — the argmax ranks THIN rows (see cellSims r17)
+    // row per vector — the argmax ranks THIN rows (see cellSims)
     val assigned = argmaxCell(sims)
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
     val wProbe = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cell"))
-    // queryFilter (q186): restrict WHICH vectors act as queries before
-    // probe ranking — the index (assignment/member side) still covers the
-    // whole corpus; per-src ranks are independent, so pre- vs
-    // post-filtering is result-identical and pre is the production shape
-    val probes0 = queryFilter(sims.select(col("vec_id"), col("cell"), col("csim")))
+    // rank cells on the NARROW (vec_id, cell, csim) frame — carrying the
+    // 64-float embedding through the window shuffle/sort costs ~10x the
+    // bytes for rows that are about to be filtered to nprobe per vector —
+    // then join the query embedding (and, for the label exclusion, the
+    // query's label) back onto the surviving probe rows
+    val srcLabel = if (excludeSameLabel) Seq(col("label").as("src_label")) else Nil
+    val probeRows = queryFilter(sims.select(col("vec_id"), col("cell"), col("csim")))
       .withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= nprobe)
       .select(col("vec_id").as("src"), col("cell"))
       .join(emb.select(Seq(col("vec_id").as("src"), col("embedding").as("emb_a")) ++
-        (if (excludeSameLabel) Seq(col("label").as("src_label")) else Nil): _*), Seq("src"))
-    // columns the multi-probe explode must carry through (q181 rides the
-    // query-side label here — the exclusion predicate is query-relative)
-    val probeCarry = Seq(col("src"), col("cell"), col("emb_a")) ++
-      (if (excludeSameLabel) Seq(col("src_label")) else Nil)
+        srcLabel: _*), Seq("src"))
     val probes =
-      if (subBits == 0) probes0.withColumn("code", lit(0L))
+      if (subBits == 0) probeRows
       else {
         // least-confident bit = argmin |projection| over the subcode planes
         // (array_sort on (|proj|, j) structs — lexicographic, ties to the
-        // lower plane index, deterministic)
+        // lower plane index)
         val flip = element_at(array_sort(array((0 until subBits).map(j =>
           struct(abs(Ann.projection(col("emb_a"), j)).as("a"),
             lit(j).as("j"))): _*)), 1).getField("j")
-        probes0
+        probeRows
           .withColumn("code0", subcode(col("emb_a")))
           .withColumn("flip", flip)
-          .select(probeCarry :+
+          .select(probeRows.columns.toSeq.map(col) :+
             explode(array(col("code0"),
               expr("code0 ^ shiftleft(CAST(1 AS BIGINT), flip)"))).as("code"): _*)
       }
-    // Salt inversely to the subcode width (advisor r13): at subBits=0 the
-    // (cell, code) key collapses to the bare ncells-cardinality cell key —
-    // exactly the hot-cell join ivfKnn's ProbeSalt discipline prevents —
-    // and small subBits only partially restores the spread. saltN halves
-    // per subcode bit, so key cardinality ncells·2^subBits·saltN stays
-    // ≥ ncells·ProbeSalt at every operating point, while at subBits ≥ 3
-    // the salt is a free no-op (saltN = 1: one-element explode, zero
-    // probe replication). Deterministic dst-hash salt, the q47/ivfKnn way.
+    // Salt the probe join. Its key at subBits = 0 is the bare cell,
+    // ncells-cardinality, so an unsalted shuffle uses at most ncells tasks
+    // and one giant task per hot cell. Each member takes ONE salt from its
+    // dst hash (never rand(): replay/compare discipline) and each probe
+    // row replicates across all salts, so every (probe, member) pair still
+    // meets exactly once. saltN halves per subcode bit, so the key
+    // cardinality ncells·2^subBits·saltN stays ≥ ncells·ProbeSalt at every
+    // operating point, and from subBits ≥ 3 the salt is free (saltN = 1:
+    // a one-element explode, no probe replication). The replicated side is
+    // the N·nprobe·saltN small probe rows; the member side, the big one at
+    // corpus scale, is never replicated.
     val saltN = math.max(1L, ProbeSalt >> subBits)
-    val members0 = memberPrune(assigned
-        .select(col("cell"), col("vec_id").as("dst"), col("embedding").as("emb_b")))
-    val members = (if (excludeSameLabel)
-        members0.join(emb.select(col("vec_id").as("dst"),
-          col("label").as("dst_label")), Seq("dst"))
-      else members0)
-      .withColumn("code", subcode(col("emb_b")))
+    val pruned = memberPrune(assigned
+      .select(col("cell"), col("vec_id").as("dst"), col("embedding").as("emb_b")))
+    val labelled = if (excludeSameLabel)
+        pruned.join(emb.select(col("vec_id").as("dst"), col("label").as("dst_label")),
+          Seq("dst"))
+      else pruned
+    val members = (if (subBits == 0) labelled
+      else labelled.withColumn("code", subcode(col("emb_b"))))
       .withColumn("salt", pmod(xxhash64(col("dst")), lit(saltN)))
     val saltedProbes = probes
       .withColumn("salt", explode(sequence(lit(0L), lit(saltN - 1L))))
+    val key = if (subBits == 0) Seq("cell", "salt") else Seq("cell", "code", "salt")
+    val notSelf = col("src") =!= col("dst")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))
-    saltedProbes.join(members, Seq("cell", "code", "salt"))
-      .filter(col("src") =!= col("dst") &&
-        (if (excludeSameLabel) col("dst_label") =!= col("src_label") else lit(true)))
+    saltedProbes.join(members, key)
+      .filter(if (excludeSameLabel) notSelf && col("dst_label") =!= col("src_label")
+        else notSelf)
       .select(col("src"), col("dst"),
         round4(cosine(col("emb_a"), col("emb_b"))).as("sim"))
-      // a dst reachable through BOTH probed codes of one (src, cell) pair
-      // cannot occur (codes differ), but a dst CAN appear through two
-      // different probed cells only if assignment were ambiguous — it is
-      // not (argmax is unique); still, groupBy-max mirrors knnPairsOn's
-      // belt-and-braces dedup before ranking
-      .groupBy(col("src"), col("dst")).agg(max(col("sim")).as("sim"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("src"), col("rk"), col("dst"), col("sim"))
       .orderBy(col("src"), col("rk"))
   }
 
-  /** Declared subcode width for q146/q147 — the law-pinned recall point
-    * (LlmOpsSpec: recall 0.390 vs flat q90's 0.588 at sf0.001) where the
-    * per-query candidate volume is already constant-bounded. The
-    * scale-keyed production dial (subBits sized to hold ~100-member
-    * subcells) lives in BenchScale.tunedSubBits; the DECLARED query fixes
-    * the width so the oracle mirrors one deterministic computation. */
+  /** Declared subcode width for q146/q147/q181/q186 — the law-pinned
+    * recall point (LlmOpsSpec: recall 0.390 vs flat q90's 0.588 at
+    * sf0.001) where the per-query candidate volume is already
+    * constant-bounded. The scale-keyed production dial (subBits sized to
+    * hold ~100-member subcells) lives in BenchScale.tunedSubBits; the
+    * DECLARED query fixes the width so the oracle mirrors one
+    * deterministic computation. */
   val TunedSubBits = 2
 
   /** q146: the TUNED IVF k-NN graph — q90's operator at the Θ(N)-probe
-    * operating point (r13 verdict item 1: fresh-JVM exponent 0.49 vs the
-    * flat probe's 1.47 on the ×32→×64 octave; the configuration a 100 TB
-    * deployment actually runs, now on the correctness contract). Same
-    * output shape as q90/q77 (src, rk, dst, sim); recall at the declared
-    * [[TunedSubBits]] is the documented trade, law-pinned in LlmOpsSpec. */
+    * operating point, the configuration a 100 TB deployment runs (fresh-JVM
+    * growth exponent 0.49 against the flat probe's 1.47 on the ×32→×64
+    * octave). Same output shape as q90/q77 (src, rk, dst, sim); recall at
+    * the declared [[TunedSubBits]] is the documented trade. The oracle
+    * mirrors the whole subcode/multi-probe chain. */
   def q146(spark: SparkSession, sfDir: String): DataFrame =
-    ivfKnnTuned(spark, sfDir, NProbe, TunedSubBits)
+    ivfKnn(spark, sfDir, NProbe, TunedSubBits)
 
-  /** q147: FILTERED × TUNED ANN (r13 verdict item 6) — q143's member-side
-    * metadata prune composed with q146's subcode multi-probe: the literal
-    * production query of a predicate-aware vector store at the Θ(N)
-    * operating point. The label prune left-semi-joins the member side
-    * BEFORE subcoding and the (cell, code, salt) probe join — no cosine
-    * and no subcode is ever computed for a non-matching vector. */
+  /** q147: FILTERED × TUNED ANN — q143's member-side metadata prune
+    * composed with q146's subcode multi-probe: the literal production
+    * query of a predicate-aware vector store at the Θ(N) operating point.
+    * The label prune left-semi-joins the member side BEFORE subcoding and
+    * the (cell, code, salt) probe join — no cosine and no subcode is ever
+    * computed for a non-matching vector. */
   def q147(spark: SparkSession, sfDir: String): DataFrame =
-    ivfKnnFilteredTuned(spark, sfDir, NProbe, TunedSubBits)
+    ivfKnnFiltered(spark, sfDir, NProbe, TunedSubBits)
 
-  /** q147 core, parameterized so LlmOpsSpec can pin the identities (at
-    * subBits=0 it equals q143's salted flat filtered probe; at
-    * nprobe=ncells ∧ subBits=0 it equals the predicate-filtered exact
-    * kNN) and the recall floor at the production operating point. */
-  private[graft] def ivfKnnFilteredTuned(spark: SparkSession, sfDir: String,
-      nprobe: Int, subBits: Int): DataFrame = {
+  /** The q143/q147 probe: [[ivfKnn]] with the member side left-semi
+    * pruned to label ∈ [[FilterLabels]]. */
+  private[graft] def ivfKnnFiltered(spark: SparkSession, sfDir: String,
+      nprobe: Int, subBits: Int = 0): DataFrame = {
     val keep = Tables.embeddings(spark, sfDir)
       .filter(col("label").isin(FilterLabels.map(Int.box): _*))
       .select(col("vec_id").as("dst"))
-    ivfKnnTuned(spark, sfDir, nprobe, subBits,
+    ivfKnn(spark, sfDir, nprobe, subBits,
       members => members.join(keep, Seq("dst"), "left_semi"))
   }
 
@@ -743,22 +697,21 @@ object Vectors {
   val FilterLabels: Seq[Int] = Seq(0, 3, 6, 9)
 
   /** q143: FILTERED ANN — metadata-predicated kNN, the query every real
-    * vector-search deployment hits almost immediately (r12 verdict item 6):
-    * for every vector, its top-KnnK nearest neighbors AMONG the vectors
-    * satisfying a metadata predicate (label ∈ [[FilterLabels]]), through
-    * the SAME trained IVF index as q90. The predicate is applied to the
-    * MEMBER side BEFORE the probe join — never post-ranking — so the probe
-    * scans Σ|probed cell ∩ predicate| candidates and no cosine is ever
-    * computed for a non-matching vector (post-filtering top-k instead
-    * would starve: k survivors of a 40% predicate need k/0.4 retrieved).
+    * vector-search deployment hits almost immediately: for every vector,
+    * its top-KnnK nearest neighbors AMONG the vectors satisfying a
+    * metadata predicate (label ∈ [[FilterLabels]]), through the SAME
+    * trained IVF index as q90. The predicate is applied to the MEMBER side
+    * BEFORE the probe join — never post-ranking — so the probe scans
+    * Σ|probed cell ∩ predicate| candidates and no cosine is ever computed
+    * for a non-matching vector (post-filtering top-k instead would starve:
+    * k survivors of a 40% predicate need k/0.4 retrieved).
     *
-    * Scale posture: q90's machinery verbatim (broadcast codebook, narrow
-    * probe ranking, deterministically salted probe join) plus one
-    * left-semi prune of the member side against the label-filtered scan —
-    * the filter is IN-pushable so the prune starts at the source, and the
-    * semi join re-uses the assignment's vec_id hash partitioning. Queries
-    * whose probed cells hold no matching member return fewer than k rows
-    * (absent, not padded) — both engines agree. */
+    * Scale posture: q90's probe plus one left-semi prune of the member
+    * side against the label-filtered scan — the filter is IN-pushable so
+    * the prune starts at the source, and the semi join re-uses the
+    * assignment's vec_id hash partitioning. Queries whose probed cells
+    * hold no matching member return fewer than k rows (absent, not
+    * padded) — both engines agree. */
   def q143(spark: SparkSession, sfDir: String): DataFrame =
     ivfKnnFiltered(spark, sfDir, NProbe)
 
@@ -775,123 +728,22 @@ object Vectors {
     * whose probed cells hold only same-label members return fewer than k
     * rows — absent, not padded; both engines agree.
     *
-    * Scale posture: q90's machinery verbatim (broadcast codebook, narrow
-    * probe ranking, deterministically salted probe join); the two label
-    * columns ride the existing probe/member frames (one int each), so the
-    * exclusion costs one codegen'd comparison per candidate — no extra
-    * join, no extra shuffle. */
+    * Scale posture: q90's probe; the two label columns ride the existing
+    * probe/member frames (one int each), so the exclusion costs one
+    * codegen'd comparison per candidate — no extra shuffle. */
   def q158(spark: SparkSession, sfDir: String): DataFrame =
-    hardNegatives(spark, sfDir, NProbe)
+    ivfKnn(spark, sfDir, NProbe, excludeSameLabel = true)
 
-  /** q158 core, parameterized on the probe width so LlmOpsSpec can pin
-    * the limit identity (nprobe = ncells ⇒ equals the exact
-    * different-label kNN row for row) and the recall floor at the
-    * production NProbe. */
-  private[graft] def hardNegatives(spark: SparkSession, sfDir: String,
-      nprobe: Int): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val cells = codebook(trainedComponents(emb))
-    val sims = cellSims(emb, cells).localCheckpoint(true)
-    // join-back of the embedding onto the one surviving (vec_id, cell)
-    // row per vector — the argmax ranks THIN rows (see cellSims r17)
-    val assigned = argmaxCell(sims)
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cell"))
-    val probes = sims
-      .select(col("vec_id"), col("cell"), col("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("src"), col("cell"))
-      .join(emb.select(col("vec_id").as("src"), col("embedding").as("emb_a"),
-        col("label").as("src_label")), Seq("src"))
-    val members = assigned
-      .select(col("vec_id").as("dst"), col("cell"), col("embedding").as("emb_b"))
-      .join(emb.select(col("vec_id").as("dst"), col("label").as("dst_label")),
-        Seq("dst"))
-      .withColumn("salt", pmod(xxhash64(col("dst")), lit(ProbeSalt)))
-    val saltedProbes = probes
-      .withColumn("salt", explode(sequence(lit(0L), lit(ProbeSalt - 1L))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))
-    saltedProbes.join(members, Seq("cell", "salt"))
-      .filter(col("src") =!= col("dst") && col("dst_label") =!= col("src_label"))
-      .select(col("src"), col("dst"),
-        round4(cosine(col("emb_a"), col("emb_b"))).as("sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= KnnK)
-      .select(col("src"), col("rk"), col("dst"), col("sim"))
-      .orderBy(col("src"), col("rk"))
-  }
-
-  /** q181: HARD-NEGATIVE mining at the TUNED operating point (r14 verdict
-    * item 2) — q158's semantics (top-KnnK different-label neighbors, the
-    * contrastive-training op) riding q146's subcode multi-probe instead of
-    * the flat cell scan: the configuration a 100 TB mining job actually
-    * runs. The label exclusion is QUERY-RELATIVE (dst.label ≠ src.label),
-    * so it cannot be a member-side pre-prune like q147's corpus-constant
-    * predicate (the memberPrune hook); it rides the candidate-pair filter
-    * inside the (cell, code, salt) join — still strictly BEFORE ranking
-    * (post-top-k filtering would starve queries whose nearest candidates
-    * share their label: k survivors of an f-fraction exclusion need k/f
-    * retrieved). Per-query candidate volume is q146's constant
-    * NProbe · 2 · ⟨subcell⟩, so total probe work is Θ(N) where q158's flat
-    * composition measured exponent 1.39 on the ladder. LlmOpsSpec pins the
-    * identity (subBits=0 ⇒ equals q158's flat probe row for row) and the
-    * recall floor vs the exact cross-label truth. */
+  /** q181: HARD-NEGATIVE mining at the TUNED operating point — q158's
+    * semantics (top-KnnK different-label neighbors) riding q146's subcode
+    * multi-probe instead of the flat cell scan: the configuration a
+    * 100 TB mining job runs. The query-relative exclusion rides the
+    * candidate-pair filter inside the (cell, code, salt) join, still
+    * strictly BEFORE ranking. Per-query candidate volume is q146's
+    * constant NProbe·2·⟨subcell⟩, so total probe work is Θ(N) where q158's
+    * flat composition measured growth exponent 1.39 on the scale ladder. */
   def q181(spark: SparkSession, sfDir: String): DataFrame =
-    hardNegativesTuned(spark, sfDir, NProbe, TunedSubBits)
-
-  /** q181 core, parameterized so LlmOpsSpec can pin the subBits=0 identity
-    * against [[hardNegatives]] and the recall floor at the declared
-    * operating point. */
-  private[graft] def hardNegativesTuned(spark: SparkSession, sfDir: String,
-      nprobe: Int, subBits: Int): DataFrame =
-    ivfKnnTuned(spark, sfDir, nprobe, subBits, excludeSameLabel = true)
-
-  /** q143 core, parameterized on the probe width so LlmOpsSpec can pin the
-    * limit identity (nprobe = ncells ⇒ equals the predicate-filtered exact
-    * kNN row for row) and the recall floor at the production NProbe. */
-  private[graft] def ivfKnnFiltered(spark: SparkSession, sfDir: String,
-      nprobe: Int): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val cells = codebook(trainedComponents(emb))
-    // same pin discipline as ivfKnn: `assigned` and `probes` both derive
-    // from this frame and meet again in the probe join
-    val sims = cellSims(emb, cells).localCheckpoint(true)
-    // join-back of the embedding onto the one surviving (vec_id, cell)
-    // row per vector — the argmax ranks THIN rows (see cellSims r17)
-    val assigned = argmaxCell(sims)
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cell"))
-    val probes = sims
-      .select(col("vec_id"), col("cell"), col("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("src"), col("cell"))
-      .join(emb.select(col("vec_id").as("src"), col("embedding").as("emb_a")), Seq("src"))
-    // the predicate prune: left-semi against the label-filtered scan,
-    // BEFORE the salt explode and the probe join — prune-then-rank
-    val keep = emb.filter(col("label").isin(FilterLabels.map(Int.box): _*))
-      .select(col("vec_id").as("dst"))
-    val members = assigned
-      .select(col("vec_id").as("dst"), col("cell"), col("embedding").as("emb_b"))
-      .join(keep, Seq("dst"), "left_semi")
-      .withColumn("salt", pmod(xxhash64(col("dst")), lit(ProbeSalt)))
-    val saltedProbes = probes
-      .withColumn("salt", explode(sequence(lit(0L), lit(ProbeSalt - 1L))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))
-    saltedProbes.join(members, Seq("cell", "salt"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        round4(cosine(col("emb_a"), col("emb_b"))).as("sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= KnnK)
-      .select(col("src"), col("rk"), col("dst"), col("sim"))
-      .orderBy(col("src"), col("rk"))
-  }
+    ivfKnn(spark, sfDir, NProbe, TunedSubBits, excludeSameLabel = true)
 
   /** q102 quantization scale for the per-dimension stats: 1e6 keeps every
     * scaled component exact in signed-64 (|x| < 10³ → |qx| < 10⁹; summed
@@ -1284,11 +1136,11 @@ object Vectors {
     mmrGreedy(cand)
   }
 
-  /** q186: MMR AT THE PRODUCTION SHAPE (r15 verdict item 5) — q183's
+  /** q186: MMR AT THE PRODUCTION SHAPE — q183's
     * greedy diversity selection fed by q146's TUNED IVF candidates
     * instead of the exact broadcast-panel scan: the composition a real
     * RAG/search stack runs (retrieve approximately, rerank exactly).
-    * Retrieval is [[ivfKnnTuned]] restricted to the [[MmrQueries]] query
+    * Retrieval is [[ivfKnn]] restricted to the [[MmrQueries]] query
     * panel BEFORE probe ranking (per-src ranks are independent, so the
     * restriction is result-identical to post-filtering and skips ranking
     * probes for N−Q vectors), widened to top-[[MmrCand]]; the greedy is
@@ -1316,7 +1168,7 @@ object Vectors {
       nprobe: Int, subBits: Int): DataFrame = {
     import graft.ops.Dsl.pin
     val emb = Tables.embeddings(spark, sfDir)
-    val knn = ivfKnnTuned(spark, sfDir, nprobe, subBits, k = MmrCand,
+    val knn = ivfKnn(spark, sfDir, nprobe, subBits, k = MmrCand,
       queryFilter = s => s.filter(col("vec_id") < MmrQueries))
     // re-attach candidate vectors for the pairwise sims: queries×MmrCand
     // skinny rows against the corpus — the dst side is the join key side

@@ -240,25 +240,27 @@ class LlmOpsSpec extends SparkSpec {
     val np = graft.queries.Vectors.NProbe
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    // IDENTITY at subBits=0: one subcell per cell, multi-probe degenerate —
-    // the tuned operator must equal q90's flat probe row for row, which
-    // pins the whole subcode/multi-probe plumbing as a pure refinement
-    val base = rows(graft.queries.Vectors.ivfKnn(spark, sf001, np))
-    val t0 = rows(graft.queries.Vectors.ivfKnnTuned(spark, sf001, np, 0))
-    assert(t0 == base, "subBits=0 tuned probe != q90 flat probe")
-    // RECALL floor at subBits=2 (forced: sf0.001 cells hold ~50 members,
-    // so 4 subcells × 2 probed really cut the candidate set) vs the exact
-    // brute-force truth — the dial's cost side, measured and pinned
+    // the exact brute-force truth (test-only)
     val e = graft.tables.Tables.embeddings(spark, sf001)
     val w = Window.partitionBy($"src").orderBy($"sim".desc, $"dst")
-    val exact = e.select($"vec_id".as("src"), $"embedding".as("emb_a"))
+    val exactRows = rows(e.select($"vec_id".as("src"), $"embedding".as("emb_a"))
       .crossJoin(e.select($"vec_id".as("dst"), $"embedding".as("emb_b")))
       .filter($"src" =!= $"dst")
       .select($"src", $"dst", round4(cosine($"emb_a", $"emb_b")).as("sim"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= graft.queries.Vectors.KnnK)
-      .collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val tuned = graft.queries.Vectors.ivfKnnTuned(spark, sf001, np, 2).collect()
+      .select($"src", $"rk", $"dst", $"sim"))
+    // LIMIT IDENTITY at subBits=0, nprobe=ncells: one subcell per cell and
+    // every cell probed, so the probe must equal the exact k-NN row for row
+    // (q90 runs this operator at subBits=0)
+    val ncells = e.select($"label").distinct().count().toInt
+    assert(rows(graft.queries.Vectors.ivfKnn(spark, sf001, ncells, 0)) == exactRows,
+      "subBits=0, nprobe=ncells probe != brute-force exact k-NN")
+    // RECALL floor at subBits=2 (forced: sf0.001 cells hold ~50 members,
+    // so 4 subcells × 2 probed really cut the candidate set) vs the exact
+    // brute-force truth — the dial's cost side, measured and pinned
+    val exact = exactRows.groupBy(_._1).view.mapValues(_.map(_._3)).toMap
+    val tuned = graft.queries.Vectors.ivfKnn(spark, sf001, np, 2).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(2)).toSet).toMap
     val per = exact.map { case (src, truth) =>
       (truth intersect tuned.getOrElse(src, Set.empty)).size.toDouble / truth.size
@@ -327,16 +329,8 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("q147 filtered x tuned ANN: subBits=0 degenerates to q143 exactly; predicate respected; recall floor at the declared point") {
-    val np = graft.queries.Vectors.NProbe
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    // IDENTITY at subBits=0: one subcell per cell, multi-probe degenerate —
-    // the composition must equal q143's flat filtered probe row for row,
-    // which pins the prune x subcode plumbing as a pure refinement (the
-    // same law shape as the q146 family's subBits=0 == q90)
-    val base = rows(graft.queries.Vectors.ivfKnnFiltered(spark, sf001, np))
-    val t0 = rows(graft.queries.Vectors.ivfKnnFilteredTuned(spark, sf001, np, 0))
-    assert(t0 == base, "subBits=0 filtered-tuned probe != q143 flat filtered probe")
     // at the DECLARED operating point: every neighbor satisfies the
     // predicate, and recall vs the filtered exact truth keeps the q146
     // floor (the subcode cut composes with the member prune — both shrink
@@ -353,14 +347,21 @@ class LlmOpsSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import graft.ops.Dsl.{cosine, round4}
     val w = Window.partitionBy($"src").orderBy($"sim".desc, $"dst")
-    val exact = e.select($"vec_id".as("src"), $"embedding".as("emb_a"))
+    val exactRows = rows(e.select($"vec_id".as("src"), $"embedding".as("emb_a"))
       .crossJoin(e.filter($"label".isin(labels.toSeq.map(Int.box): _*))
         .select($"vec_id".as("dst"), $"embedding".as("emb_b")))
       .filter($"src" =!= $"dst")
       .select($"src", $"dst", round4(cosine($"emb_a", $"emb_b")).as("sim"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= graft.queries.Vectors.KnnK)
-      .collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
+      .select($"src", $"rk", $"dst", $"sim"))
+    // LIMIT IDENTITY at subBits=0, nprobe=ncells: the filtered probe must
+    // equal the predicate-filtered exact k-NN row for row (q143 runs this
+    // operator at subBits=0)
+    val ncells = e.select($"label").distinct().count().toInt
+    assert(rows(graft.queries.Vectors.ivfKnnFiltered(spark, sf001, ncells, 0)) == exactRows,
+      "subBits=0, nprobe=ncells filtered probe != filtered exact k-NN")
+    val exact = exactRows.groupBy(_._1).view.mapValues(_.map(_._3)).toMap
     val per = exact.map { case (src, truth) =>
       val found = got.get(src).map(_.map(_.getLong(2)).toSet).getOrElse(Set.empty)
       (truth intersect found).size.toDouble / truth.size
@@ -1274,7 +1275,7 @@ class LlmOpsSpec extends SparkSpec {
     assert(recall >= 0.5, f"q158 recall $recall%.3f below pin")
     // LIMIT IDENTITY: probing every cell == the exact cross-label k-NN
     val ncells = e.select($"label").distinct().count().toInt
-    val full = graft.queries.Vectors.hardNegatives(spark, sf001, ncells).collect()
+    val full = graft.queries.Vectors.ivfKnn(spark, sf001, ncells, excludeSameLabel = true).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     val exactRows = exactDf.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
@@ -1285,15 +1286,8 @@ class LlmOpsSpec extends SparkSpec {
   test("q181 hard negatives tuned: subBits=0 degenerates to q158 exactly; exclusion respected; recall floor at the declared point") {
     import org.apache.spark.sql.expressions.Window
     import graft.ops.Dsl.{cosine, round4}
-    val np = graft.queries.Vectors.NProbe
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    // IDENTITY at subBits=0: the multi-probe degenerates to the flat salted
-    // cell probe, so the tuned miner must equal q158 row for row — pins the
-    // label-carry plumbing through the subcode machinery as a refinement
-    val base = rows(graft.queries.Vectors.hardNegatives(spark, sf001, np))
-    val t0 = rows(graft.queries.Vectors.hardNegativesTuned(spark, sf001, np, 0))
-    assert(t0 == base, "subBits=0 tuned hard negatives != q158 flat probe")
     // the exclusion is respected on every output row at the DECLARED point
     val e = graft.tables.Tables.embeddings(spark, sf001)
     val lbl = e.select($"vec_id", $"label").collect()
@@ -1307,13 +1301,21 @@ class LlmOpsSpec extends SparkSpec {
     // to mining: lower than q158's flat 0.5+ floor by construction (the
     // subcode cuts candidates), pinned so machinery regressions surface
     val w = Window.partitionBy($"src").orderBy($"sim".desc, $"dst")
-    val exact = e.select($"vec_id".as("src"), $"embedding".as("emb_a"), $"label".as("la"))
+    val exactRows = rows(e.select($"vec_id".as("src"), $"embedding".as("emb_a"), $"label".as("la"))
       .crossJoin(e.select($"vec_id".as("dst"), $"embedding".as("emb_b"), $"label".as("lb")))
       .filter($"src" =!= $"dst" && $"la" =!= $"lb")
       .select($"src", $"dst", round4(cosine($"emb_a", $"emb_b")).as("sim"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= graft.queries.Vectors.KnnK)
-      .collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
+      .select($"src", $"rk", $"dst", $"sim"))
+    // LIMIT IDENTITY at subBits=0, nprobe=ncells: the label-excluding probe
+    // must equal the exact cross-label k-NN row for row (q158 runs this
+    // operator at subBits=0)
+    val ncells = e.select($"label").distinct().count().toInt
+    assert(rows(graft.queries.Vectors.ivfKnn(spark, sf001, ncells, 0,
+        excludeSameLabel = true)) == exactRows,
+      "subBits=0, nprobe=ncells label-excluding probe != exact cross-label k-NN")
+    val exact = exactRows.groupBy(_._1).view.mapValues(_.map(_._3)).toMap
     val per = exact.map { case (src, truth) =>
       val found = got.get(src).map(_.map(_.getLong(2)).toSet).getOrElse(Set.empty)
       (truth intersect found).size.toDouble / truth.size

@@ -119,7 +119,7 @@ class PlanSpec extends SparkSpec {
       "q135_distribution_drift", // broadcast T×T type-pair frame (T = #event
                                  // families — cardinality fixed by the schema,
                                  // not the corpus; q95's constant-panel shape)
-      "q142_peak_concurrency",   // broadcast ≤ShardRanges-row per-partition
+      "q142_peak_concurrency",   // broadcast ≤PrefixRanges-row per-partition
                                  // totals in the two-phase prefix-sum carry-in
                                  // (q72's offsets shape — constant-bounded)
       "q148_hybrid_rrf",         // broadcast query vector row (q31's shape,
@@ -132,7 +132,7 @@ class PlanSpec extends SparkSpec {
       "q160_basket_pairs",       // broadcast single-row distinct-order total
                                  // into the lift denominator
       "q173_revenue_gini",       // the two-phase prefix's triangular P×P
-                                 // offset join over ≤ ShardRanges rows
+                                 // offset join over ≤ PrefixRanges rows
                                  // (q72's shape — constant-bounded)
       "q174_revenue_deciles",    // q173's triangular offset join + the
                                  // single-row (n, S) total broadcast into
@@ -485,7 +485,11 @@ class PlanSpec extends SparkSpec {
       "q82_char_entropy"      -> 3,
       "q83_source_overlap"    -> 6,
       "q84_containment"       -> 5,
-      "q90_ivf_knn"           -> 6)
+      "q90_ivf_knn"           -> 6,
+      // one probe operator: the tuned point ranks without a (src, dst)
+      // dedup aggregate, and the flat point keeps q90's plan
+      "q146_ivf_tuned"        -> 6,
+      "q158_hard_negatives"   -> 6)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val over = try budgets.flatMap { case (name, budget) =>

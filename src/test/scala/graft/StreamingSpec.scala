@@ -40,6 +40,49 @@ class StreamingSpec extends SparkSpec {
     assert(stored() == (once :+ (("u1", 4L))).sorted)
   }
 
+  test("shutdown logs: stopping a BnplPipeline logs no job-group cancel WARN; other DAGScheduler WARNs stay") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("cancel-noise-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == "org.apache.spark.scheduler.DAGScheduler")
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      val eventsDir = tmpDir("cancel-noise-events")
+      writeEvents(eventsDir, "e1.json", Seq(
+        ev("ev-1", Envelope.PurchaseCompleted, "2024-03-01T10:00:00.000Z",
+          "order_id" -> "\"order-u1\"", "user_id" -> "\"u1\"", "amount" -> "4000")))
+      val pipe = new BnplPipeline(spark, eventsDir, tmpDir("cancel-noise-state"))
+      val queries = pipe.start()
+      try pipe.drain() finally pipe.stop()
+      assert(queries.forall(!_.isActive))
+      // each stop posts its job-group cancel to the DAGScheduler event loop;
+      // a job submitted after them runs only once the loop has handled them
+      spark.range(1).count()
+      val dag = LogManager.getLogger("org.apache.spark.scheduler.DAGScheduler")
+      dag.warn("Failed to cancel job group probe-1. Cannot find active jobs for it.")
+      dag.warn("cancel-noise control warning")
+      val cancels = seen.toArray.map(_.toString).filter(_.startsWith("Failed to cancel job group"))
+      assert(cancels.isEmpty, s"${cancels.length} cancel WARNs: ${cancels.take(3).mkString("; ")}")
+      assert(seen.contains("cancel-noise control warning"),
+        s"the capture missed a DAGScheduler WARN: ${seen.toArray.mkString("; ")}")
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+  }
+
   test("s14: incremental dedup admits novel docs, rejects near-dups within and across batches") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
