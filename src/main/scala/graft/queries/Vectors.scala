@@ -1136,11 +1136,11 @@ object Vectors {
     mmrGreedy(cand)
   }
 
-  /** q186: MMR AT THE PRODUCTION SHAPE — q183's
-    * greedy diversity selection fed by q146's TUNED IVF candidates
-    * instead of the exact broadcast-panel scan: the composition a real
-    * RAG/search stack runs (retrieve approximately, rerank exactly).
-    * Retrieval is [[ivfKnn]] restricted to the [[MmrQueries]] query
+  /** q186: MMR AT THE PRODUCTION SHAPE — q183's greedy diversity
+    * selection fed by q146's TUNED IVF candidates instead of the exact
+    * broadcast-panel scan: the composition a real RAG/search stack runs
+    * (retrieve approximately, rerank exactly). Retrieval is the
+    * [[ivfKnn]] probe restricted to the [[MmrQueries]] query
     * panel BEFORE probe ranking (per-src ranks are independent, so the
     * restriction is result-identical to post-filtering and skips ranking
     * probes for N−Q vectors), widened to top-[[MmrCand]]; the greedy is
