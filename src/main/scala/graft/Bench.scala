@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 import scala.jdk.OptionConverters._
 
@@ -111,7 +111,7 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    for (_ <- 1 to Runs; (name, fn) <- ordered) {
+    def timedRun(name: String, fn: (SparkSession, String) => DataFrame): Unit = {
       val t0 = System.nanoTime()
       // noop sink, not count(): count() lets ColumnPruning delete every
       // projected expression a query computes (a projection-only query
@@ -135,6 +135,7 @@ object Bench {
       SparkEntry.clearGraftCaches(spark)
       if (ok) samples(name) = dt :: samples(name)
     }
+    for (_ <- 1 to Runs; (name, fn) <- ordered) timedRun(name, fn)
     // Adaptive third pass (the round-6 verdict's "bump Runs for noisy
     // queries" suggestion, made data-driven): two samples disagreeing by
     // >1.5x means one of them sat in a contended window — a third sample,
@@ -148,16 +149,7 @@ object Bench {
     if (noisy.nonEmpty)
       System.err.println(s"[bench] third pass for ${noisy.size} noisy queries: " +
         noisy.map(_._1).mkString(","))
-    for ((name, fn) <- noisy) {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      SparkEntry.clearGraftCaches(spark)
-      if (ok) samples(name) = dt :: samples(name)
-    }
+    for ((name, fn) <- noisy) timedRun(name, fn)
     val results = ordered.map { case (name, _) =>
       val good = samples(name)
       // -1 sentinel: a crashed query must read as a failure, not as a

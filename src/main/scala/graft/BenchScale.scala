@@ -2,16 +2,17 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.queries.Vectors
+import graft.streaming._
+import graft.tables.Tables
 
-/** Scale rehearsal (VERDICT r8 item 1): one measured point well beyond
-  * sf0.1. Runs the most expensive queries of BENCH_r08 against
-  * [[ScaleGen]]-amplified corpora (default ×1 / ×4 / ×32 of sf0.1) and
-  * fits per-query growth exponents, then drives the streaming stores
-  * (s14/s15/s17 + the tail stores s23–s27) over the largest corpus —
-  * converting SURVEY §2.2's 100 TB plan-shape arguments into
-  * measurements.
+/** Scale rehearsal: one measured point well beyond sf0.1. Runs the most
+  * expensive queries against [[ScaleGen]]-amplified corpora (default
+  * ×1 / ×4 / ×32 of sf0.1) and fits per-query growth exponents, confirms
+  * the near-linear ones one octave higher (2 × the largest factor), then
+  * drives every streaming store over the largest corpus.
   *
   * What "holds at scale" means here, per family:
   *  - map-side / single-shuffle families (q82 entropy, q93 TextRank,
@@ -56,198 +57,56 @@ object BenchScale {
     math.max(0, math.round(math.log(cellsize / 100.0) / math.log(2.0)).toInt)
   }
 
-  private def buildQueries(a: Int): Seq[(String, (SparkSession, String) => DataFrame, String)] = {
+  /** The confirm octave: one doubling above the largest ladder factor. */
+  def confirmFactor(factors: Seq[Int]): Int = 2 * factors.max
+
+  private type QueryFn = (SparkSession, String) => DataFrame
+
+  private def buildQueries(a: Int): Seq[(String, QueryFn, String)] = {
     val std = Seq(
-      "q36_ngram_jaccard" -> "count",
-      "q57_dedup_clusters" -> "count",
-      "q66_dedup_materialize" -> "count",
-      "q82_char_entropy" -> "noop",
-      "q84_containment" -> "count",
-      "q93_textrank" -> "count",
-      "q99_dedup_eval" -> "count",
-      "q100_leakage_safe_split" -> "count",
-      "q90_ivf_knn" -> "count",
-      "q95_retrieval_eval" -> "count",
-      // per-user state family over the replica-salted event log (r9:
-      // events amplify too — user cardinality grows A× at the original
-      // per-user cadence)
-      "q113_scd2_history" -> "count",
-      "q114_bill_aging" -> "count",
-      // r9 additions (r10 verdict item 3): the PQ chain and BPE encode
-      "q111_bpe_encode" -> "count",
-      "q112_pq_adc" -> "count",
-      // r11 additions (r11 verdict item 1): the TPC-H correlation shapes
-      // (over the v3 key-shift-amplified business tables) and the
-      // Stats monitoring layer (over the amplified event log)
-      "q125_order_priority_check" -> "count",
-      "q126_market_share" -> "count",
-      "q127_customer_distribution" -> "count",
-      "q128_promo_revenue" -> "count",
-      "q129_small_qty_revenue" -> "count",
-      "q130_waiting_suppliers" -> "count",
-      "q131_dsir_weights" -> "count",
-      "q132_ewma_smoothing" -> "count",
-      "q133_spike_detection" -> "count",
-      "q134_token_concentration" -> "count",
-      "q135_distribution_drift" -> "count",
-      // r12 addition: the boilerplate-scrub materialization (q76's grid +
-      // one digest shuffle + one doc reassembly — the q66 growth class)
-      "q136_boilerplate_scrub" -> "count",
-      // r12 additions: Q19/Q9/Q12 shapes over the key-shift-amplified
-      // business tables (one broadcast join / the 5-table profit rollup /
-      // one orderkey fact⋈fact shuffle)
-      "q137_disjunctive_revenue" -> "count",
-      "q138_product_profit" -> "count",
-      "q139_shipping_lag_pivot" -> "count",
-      // r12: per-user forward fill + gaps-and-islands streaks over the
-      // amplified event log (the q13/q27 partitioned-window growth class)
-      "q140_forward_fill" -> "count",
-      "q141_event_streaks" -> "count",
-      "q142_peak_concurrency" -> "count",
-      // r13 additions: filtered ANN (the q90 probe with a member-side
-      // label prune), the Q20 nested-semi chain, and the mixture
-      // realization (one per-source running-sum window over documents)
-      "q143_filtered_ann" -> "count",
-      "q144_bulk_part_suppliers" -> "count",
-      "q145_mixture_realization" -> "count",
-      // r14 additions: hybrid RRF (the q92 lexical scan + a broadcast-
-      // query cosine scan, fused on TopK-bounded lists) and the Z-order
-      // layout audit (two map-side passes + one 64-group shuffle)
-      "q148_hybrid_rrf" -> "count",
-      "q149_zorder_layout" -> "count",
-      "q150_compaction_plan" -> "count",
-      // r14 additions (2): the monitoring + change-data/behavioral layer
-      // over the amplified event log — seasonal baseline (calendar-bounded
-      // after dailyOf's one shuffle), CDC snapshot diff (one conditional-
-      // max shuffle), Markov transitions + TWAP (the q140/q27 partitioned-
-      // window growth class), attribution (two co-partitioned shuffles +
-      // the native as-of merge)
-      "q151_seasonal_baseline" -> "count",
-      "q152_snapshot_diff" -> "count",
-      "q153_transition_matrix" -> "count",
-      "q154_attribution" -> "count",
-      "q155_time_weighted_avg" -> "count",
-      // r14 (2): RFM quantile segmentation — histogram-derived disc
-      // boundaries + one per-user scoring shuffle — and position
-      // attribution's binned (user, bin) range join
-      "q156_rfm_segments" -> "count",
-      "q157_position_attribution" -> "count",
-      // r14 (2): hard-negative mining — measured r14 at exp 1.39 on the
-      // flat probe; the leg moved to the TUNED operating point in r15
-      // (scaled list below), the same q146-composition route that retired
-      // the flat q90 confirm octave
-      // r14 (3): the queries with a corpus-scale stage among the
-      // time-series/experimentation additions — OHLC's one (type, hour)
-      // bar shuffle, the basket-bounded pair self-join, the skyline's
-      // domain reduction, the survival per-user span shuffle and the A/B
-      // per-user conversion shuffle (q161/q162/q166 ride dailyOf's
-      // shuffle — the q151 leg already measures that class)
-      "q159_ohlc_bars" -> "count",
-      "q160_basket_pairs" -> "count",
-      "q163_skyline" -> "count",
-      "q164_survival_hazard" -> "count",
-      "q165_ab_chisq" -> "count",
-      // r14 (4): the remaining corpus-scale stages — the per-type value
-      // histogram (q168), the user-co-partitioned latency join (q169),
-      // the lineitem⋈orders lag join (q170), and the two-phase-prefix
-      // order statistics (q173/q174); the calendar-panel family
-      // (q161/q162/q166/q167/q171/q172) rides dailyOf's shuffle, which
-      // the q151 leg already measures
-      "q168_iqr_outliers" -> "count",
-      // r15 additions: the winsorized read of the same per-type value
-      // histogram class, and the Poisson bootstrap's 40x map-side
-      // compute fan-out (one types x B shuffle — the leg measures the
-      // explode's compute scaling, the textbook distributed-bootstrap
-      // cost shape)
-      "q182_winsorized_stats" -> "count",
-      "q184_bootstrap_ci" -> "count",
-      // r16 (r15 verdict item 1): the remaining r15 queries join the
-      // in-run ladder — q183's retrieval is the allowlisted Θ(N)
-      // broadcast-panel scan (everything after is queries × MmrCand²
-      // bounded), q185 rides dailyOf's one shuffle into the
-      // calendar-bounded decay panel
-      "q183_mmr_rerank" -> "count",
-      "q185_decayed_engagement" -> "count",
-      // r16: the bucketed bootstrap — one (type, h) shuffle + a
-      // panel-sized replicate fan-out; the contrast leg to q184's
-      // per-row B-fold explode
-      "q187_bootstrap_bucketed" -> "count",
-      // r16 (2): median+MAD — the q168 histogram class (one bounded
-      // shuffle, the deviation histogram derives from it)
-      "q188_median_mad" -> "count",
-      // r17: the two rank statistics — both ride dailyOf's one corpus
-      // shuffle into calendar-bounded pair panels (days² per type /
-      // types²·days² day pairs are constants in corpus size; the legs
-      // certify the reduction dominates, i.e. near-flat exponents)
-      "q189_theilsen_trend" -> "count",
-      "q190_kendall_tau" -> "count",
-      "q191_mann_kendall" -> "count",
-      "q169_conversion_latency" -> "count",
-      "q170_ship_lag_quantiles" -> "count",
-      "q173_revenue_gini" -> "count",
-      "q174_revenue_deciles" -> "count"
-    ).map { case (k, act) => (k, SparkEntry.queries(k), act) }
+      "q36_ngram_jaccard", "q57_dedup_clusters", "q66_dedup_materialize",
+      "q82_char_entropy", "q84_containment", "q93_textrank", "q99_dedup_eval",
+      "q100_leakage_safe_split", "q90_ivf_knn", "q95_retrieval_eval",
+      "q113_scd2_history", "q114_bill_aging", "q111_bpe_encode", "q112_pq_adc",
+      "q125_order_priority_check", "q126_market_share",
+      "q127_customer_distribution", "q128_promo_revenue",
+      "q129_small_qty_revenue", "q130_waiting_suppliers", "q131_dsir_weights",
+      "q132_ewma_smoothing", "q133_spike_detection", "q134_token_concentration",
+      "q135_distribution_drift", "q136_boilerplate_scrub",
+      "q137_disjunctive_revenue", "q138_product_profit",
+      "q139_shipping_lag_pivot", "q140_forward_fill", "q141_event_streaks",
+      "q142_peak_concurrency", "q143_filtered_ann", "q144_bulk_part_suppliers",
+      "q145_mixture_realization", "q148_hybrid_rrf", "q149_zorder_layout",
+      "q150_compaction_plan", "q151_seasonal_baseline", "q152_snapshot_diff",
+      "q153_transition_matrix", "q154_attribution", "q155_time_weighted_avg",
+      "q156_rfm_segments", "q157_position_attribution", "q159_ohlc_bars",
+      "q160_basket_pairs", "q163_skyline", "q164_survival_hazard",
+      "q165_ab_chisq", "q168_iqr_outliers", "q182_winsorized_stats",
+      "q184_bootstrap_ci", "q183_mmr_rerank", "q185_decayed_engagement",
+      "q187_bootstrap_bucketed", "q188_median_mad", "q189_theilsen_trend",
+      "q190_kendall_tau", "q191_mann_kendall", "q169_conversion_latency",
+      "q170_ship_lag_quantiles", "q173_revenue_gini", "q174_revenue_deciles"
+    ).map(k => (k, SparkEntry.queries(k), if (k == "q82_char_entropy") "noop" else "count"))
     val bits = scaledBits(a)
-    val wide: Column => Column = graft.ops.Ann.bucketsWide(_, bits)
-    val scaled = Seq(
-      (s"q77_knn_join[k=$bits]",
-        (s: SparkSession, dir: String) =>
-          Vectors.knnPairsOn(graft.tables.Tables.embeddings(s, dir), wide)
-            .orderBy(col("src"), col("rk")),
-        "count"),
-      // r14 (r13 verdict item 3): q104's leg consumes the MATERIALIZED
-      // kNN graph (ensureKnnGraph, built once per factor outside any
-      // timer) instead of rebuilding the candidate machinery the q77 leg
-      // just graded — a deployment materializes the graph once and feeds
-      // every downstream consumer, so charging q104 for a second rebuild
-      // double-counted the ladder's most expensive constant (83 s at ×64,
-      // of which the rebuild was the bulk). The leg now measures what
-      // q104 adds: the reciprocal semi-join + CC fixpoint.
-      (s"q104_mutual_knn_clusters[k=$bits,shared-knn]",
-        (s: SparkSession, dir: String) =>
-          Vectors.mutualKnnClustersOn(s.read.parquet(knnGraphPath(dir, bits))),
-        "count"),
-      // r14 (r13 verdict item 1): the TUNED operating point — declared as
-      // q146 on the correctness contract since r14 — is the ladder's
-      // DEFAULT q90 leg: it rides every factor AND the ×64 confirm
-      // octave, at the scale-keyed subcode width a deployment would run.
-      // The flat probe stays on the ×1/×4/×32 ladder (std list) so its
-      // documented Θ(N^1.5) trade stays measured, but no longer burns the
-      // confirm octave re-proving a 1.47 exponent measured twice
-      // (r12/r13).
-      (s"q90_tuned[b=${tunedSubBits(a)}]",
-        (s: SparkSession, dir: String) =>
-          Vectors.ivfKnn(s, dir, Vectors.NProbe, tunedSubBits(a)),
-        "count"),
-      // r14 (r13 verdict item 6): the filtered × tuned composition (q147)
-      // at the same scale-keyed width — the literal production query of a
-      // predicate-aware vector store at the Θ(N) operating point.
-      (s"q147_filtered_tuned_ann[b=${tunedSubBits(a)}]",
-        (s: SparkSession, dir: String) =>
-          Vectors.ivfKnnFiltered(s, dir, Vectors.NProbe, tunedSubBits(a)),
-        "count"),
-      // r15 (r14 verdict item 2): hard-negative mining at the TUNED
-      // operating point — q158's query-relative exclusion riding q146's
-      // subcode multi-probe, replacing the flat leg whose r14 octave
-      // measured exp 1.39 / 39.9 s at ×32. Named for the DECLARED query
-      // since r16 (this leg ran as `q158_tuned` in the r15 artifact —
-      // same computation, renamed so the evidence row matches the
-      // contract key without a judge re-derivation).
-      (s"q181_tuned[b=${tunedSubBits(a)}]",
-        (s: SparkSession, dir: String) =>
-          Vectors.ivfKnn(s, dir, Vectors.NProbe, tunedSubBits(a),
-            excludeSameLabel = true),
-        "count"),
-      // r16 (r15 verdict item 5): MMR over the tuned-IVF candidates at
-      // the scale-keyed width — the production rerank composition; the
-      // leg's cost is dominated by the index build (the q90_tuned
-      // class), the rerank itself is queries × MmrCand² bounded.
-      (s"q186_mmr_tuned[b=${tunedSubBits(a)}]",
-        (s: SparkSession, dir: String) =>
-          Vectors.mmrTuned(s, dir, Vectors.NProbe, tunedSubBits(a)),
-        "count"))
-    std ++ scaled
+    val b = tunedSubBits(a)
+    def q(name: String)(fn: QueryFn) = (name, fn, "count")
+    std ++ Seq(
+      q(s"q77_knn_join[k=$bits]")((s, dir) => knnJoin(s, dir, graft.ops.Ann.bucketsWide(_, bits))),
+      // q104 consumes the kNN graph ensureKnnGraph materialized outside
+      // any timer, so the leg measures what q104 adds to it
+      q(s"q104_mutual_knn_clusters[k=$bits,shared-knn]")((s, dir) =>
+        Vectors.mutualKnnClustersOn(s.read.parquet(knnGraphPath(dir, bits)))),
+      q(s"q90_tuned[b=$b]")((s, dir) => Vectors.ivfKnn(s, dir, Vectors.NProbe, b)),
+      q(s"q147_filtered_tuned_ann[b=$b]")((s, dir) =>
+        Vectors.ivfKnnFiltered(s, dir, Vectors.NProbe, b)),
+      q(s"q181_tuned[b=$b]")((s, dir) =>
+        Vectors.ivfKnn(s, dir, Vectors.NProbe, b, excludeSameLabel = true)),
+      q(s"q186_mmr_tuned[b=$b]")((s, dir) => Vectors.mmrTuned(s, dir, Vectors.NProbe, b)))
   }
+
+  /** The q77 bucket join over `buckets`' LSH family. */
+  private def knnJoin(spark: SparkSession, dir: String, buckets: Column => Column): DataFrame =
+    Vectors.knnPairsOn(Tables.embeddings(spark, dir), buckets).orderBy(col("src"), col("rk"))
 
   /** The per-factor materialized kNN graph the q104 leg consumes (and any
     * future graph-consumer leg would). Keyed by the density-scaled bits so
@@ -264,16 +123,14 @@ object BenchScale {
     val path = knnGraphPath(dir, bits)
     if (!new java.io.File(s"$path/_SUCCESS").exists) {
       val t0 = System.nanoTime()
-      Vectors.knnPairsOn(graft.tables.Tables.embeddings(spark, dir),
-          graft.ops.Ann.bucketsWide(_, bits))
+      Vectors.knnPairsOn(Tables.embeddings(spark, dir), graft.ops.Ann.bucketsWide(_, bits))
         .write.mode("overwrite").parquet(path)
       SparkEntry.clearGraftCaches(spark)
       System.err.println(f"[bench-scale] x$a knn graph (b=$bits) materialized in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
   }
 
-  private def runOnce(spark: SparkSession, name: String,
-      fn: (SparkSession, String) => DataFrame, dir: String,
+  private def runOnce(spark: SparkSession, name: String, fn: QueryFn, dir: String,
       action: String): (Double, Long) = {
     val t0 = System.nanoTime()
     var rows = -1L
@@ -289,6 +146,285 @@ object BenchScale {
     ((System.nanoTime() - t0) / 1e9, rows)
   }
 
+  /** One streaming leg: the key it reports under in `streaming_x<max>`
+    * and a run that returns (seconds, rows). Building a leg runs nothing. */
+  private[graft] final case class Leg(key: String, run: () => (Double, Long))
+
+  private def timed(body: => Long): (Double, Long) = {
+    val t0 = System.nanoTime()
+    val rows = body
+    ((System.nanoTime() - t0) / 1e9, rows)
+  }
+
+  /** Micro-batches per stream leg. */
+  private val StreamBatches = 4
+
+  /** The stream legs over the ×`aMax` corpus in `bigDir`, in report order:
+    * one per store-backed component. Every store reads `StreamBatches`
+    * blocks of whole replicas; replicas hold disjoint ids and users, so
+    * each user's whole chain sits in one batch and the order-gated
+    * stores' arrival contract holds trivially. Static artifacts a
+    * deployment builds once (s19's benchmark index, s22's frozen model)
+    * are built outside the timer; everything else a leg needs, s17's
+    * codebook and s31's budgets included, is timed. */
+  private[graft] def streamLegs(spark: SparkSession, base: String, bigDir: String,
+      streamRoot: String, aMax: Int): Seq[Leg] = {
+    val repsPerBatch = math.max(1, aMax / StreamBatches)
+    def at(p: String): String = s"$streamRoot/$p"
+    def replicaBlock(table: => DataFrame, idCol: String, cols: Seq[Column] = Nil)(
+        b: Int): DataFrame = {
+      val block = table.filter((col(idCol) / ScaleGen.IdStride).cast("int")
+        .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
+      if (cols.isEmpty) block else block.select(cols: _*)
+    }
+    def events(idCol: String, cols: String*): Int => DataFrame =
+      replicaBlock(Tables.events(spark, bigDir), idCol, cols.map(col))
+    val docs: Int => DataFrame =
+      replicaBlock(spark.read.parquet(s"$bigDir/documents.parquet"), "doc_id")
+    val vecs: Int => DataFrame =
+      replicaBlock(spark.read.parquet(s"$bigDir/embeddings.parquet"), "vec_id")
+    val cents = (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long")
+    def ingest(batch: Int => DataFrame)(f: (DataFrame, Long) => Unit): Unit =
+      for (b <- 0 until StreamBatches) f(batch(b), b.toLong)
+    // ingest + read in one timer
+    def ingestLeg(key: String, batch: Int => DataFrame)(f: (DataFrame, Long) => Unit)(
+        read: => DataFrame): Leg =
+      Leg(key, () => timed { ingest(batch)(f); read.count() })
+    // ingest alone; its rows are the batch count
+    def ingestOnly(key: String, batch: Int => DataFrame)(f: (DataFrame, Long) => Unit): Leg =
+      Leg(key, () => timed { ingest(batch)(f); StreamBatches.toLong })
+    // one more read of a store an earlier leg built
+    def readLeg(key: String)(read: => DataFrame): Leg = Leg(key, () => timed(read.count()))
+    def baseDocs = spark.read.parquet(s"$base/documents.parquet")
+
+    Seq(
+      ingestLeg("s14_incremental_dedup", docs)(IncrementalDedup.processBatch(_,
+        at("s14/store"), at("s14/accept"), at("s14/reject"), _))(
+        spark.read.parquet(at("s14/accept"))),
+      ingestLeg("s15_incremental_index", docs)(IncrementalIndex.processBatch(_,
+        at("s15/store"), _))(IncrementalIndex.readIndex(spark, at("s15/store"))),
+      readLeg("s18_search_read")(IncrementalIndex.search(spark, at("s15/store"))),
+      ingestLeg("s16_heavy_hitters", docs)(HeavyHitters.processBatch(_,
+        at("s16/store"), _))(HeavyHitters.merged(spark, at("s16/store"))),
+      Leg("s19_decontamination", () => {
+        val bench = Decontamination.benchIndexOf(baseDocs)
+        timed {
+          ingest(docs)(Decontamination.processBatch(_, bench, at("s19/audit"), _))
+          Decontamination.readAudit(spark, at("s19/audit")).count()
+        }
+      }),
+      ingestLeg("s20_novelty", docs)(Novelty.processBatch(_, at("s20/store"),
+        at("s20/audit"), _))(Novelty.readAudit(spark, at("s20/audit"))),
+      ingestLeg("s21_embedding_stats", vecs)(VectorStats.processBatch(_,
+        at("s21/store"), _))(VectorStats.stats(spark, at("s21/store"))),
+      Leg("s22_quality_routing", () => {
+        val frozen = QualityRouter.freeze(baseDocs)
+        timed {
+          ingest(docs)(QualityRouter.processBatch(_, frozen, at("s22/routed"), _))
+          QualityRouter.readRouted(spark, at("s22/routed")).count()
+        }
+      }),
+      ingestLeg("s23_stream_packing", docs)(SequencePacker.processBatch(_,
+        at("s23/tails"), at("s23/assign"), _))(
+        SequencePacker.packedSummary(spark, at("s23/assign"))),
+      ingestLeg("s24_stream_scd2", events("user_id", "user_id", "event_id", "event_type", "ts"))(
+        Scd2History.processBatch(_, at("s24/tails"), at("s24/closed"), _))(
+        Scd2History.history(spark, at("s24/tails"), at("s24/closed"))),
+      ingestLeg("s25_stream_funnel", events("user_id", "user_id", "event_type", "ts"))(
+        FunnelTracker.processBatch(_, at("s25/tails"), _))(
+        FunnelTracker.funnelState(spark, at("s25/tails"))),
+      ingestLeg("s26_stream_ledger", events("event_id", "user_id", "event_type", "value"))(
+        LedgerStore.processBatch(_, at("s26/store"), _))(
+        LedgerStore.ledger(spark, at("s26/store"))),
+      ingestLeg("s29_stream_drift", events("event_id", "event_type", "ts", "value"))(
+        DriftMonitor.processBatch(_, at("s29/store"), _))(
+        DriftMonitor.drift(spark, at("s29/store"))),
+      readLeg("s55_winsorized_read")(DriftMonitor.winsorized(spark, at("s29/store"))),
+      readLeg("s57_mad_read")(DriftMonitor.mad(spark, at("s29/store"))),
+      readLeg("s45_iqr_read")(DriftMonitor.iqr(spark, at("s29/store"))),
+      readLeg("s48_bands_read")(DriftMonitor.bands(spark, at("s29/store"))),
+      ingestLeg("s36_stream_seasonal", events("event_id", "event_type", "ts", "value"))(
+        SeasonalMonitor.processBatch(_, at("s36/store"), _))(
+        SeasonalMonitor.baseline(spark, at("s36/store"))),
+      readLeg("s54_decayed_read")(SeasonalMonitor.decayed(spark, at("s36/store"))),
+      readLeg("s39_mad_read")(SeasonalMonitor.outliers(spark, at("s36/store"))),
+      readLeg("s43_holt_read")(SeasonalMonitor.holt(spark, at("s36/store"))),
+      readLeg("s44_cusum_read")(SeasonalMonitor.changepoint(spark, at("s36/store"))),
+      readLeg("s46_drawdown_read")(SeasonalMonitor.drawdown(spark, at("s36/store"))),
+      readLeg("s58_theilsen_read")(SeasonalMonitor.theilsen(spark, at("s36/store"))),
+      readLeg("s59_kendall_read")(SeasonalMonitor.kendall(spark, at("s36/store"))),
+      readLeg("s60_mannkendall_read")(SeasonalMonitor.mannKendall(spark, at("s36/store"))),
+      ingestLeg("s38_stream_ohlc", events("event_id", "event_id", "ts", "event_type", "value"))(
+        BarStats.processBatch(_, at("s38/store"), _))(BarStats.bars(spark, at("s38/store"))),
+      ingestLeg("s47_stream_revenue", replicaBlock(Tables.orders(spark, bigDir), "o_orderkey",
+          Seq(col("o_custkey"), cents.as("cents"))))(
+        RevenueMonitor.processBatch(_, at("s47/store"), _))(
+        RevenueMonitor.gini(spark, at("s47/store"))),
+      ingestLeg("s49_stream_sessions", events("event_id", "user_id", "event_id", "event_type", "ts"))(
+        SessionTracker.processBatch(_, at("s49/open"), at("s49/closed"), _))(
+        SessionTracker.flow(spark, at("s49/open"), at("s49/closed"))),
+      ingestLeg("s37_stream_rfm", events("event_id", "user_id", "ts", "value"))(
+        RfmMonitor.processBatch(_, at("s37/store"), _))(
+        RfmMonitor.segments(spark, at("s37/store"))),
+      ingestLeg("s34_stream_changefeed",
+          events("event_id", "user_id", "event_id", "event_type", "ts", "value"))(
+        ChangeFeed.processBatch(_, at("s34/state"), at("s34/cdc"), _))(
+        ChangeFeed.netted(ChangeFeed.feed(spark, at("s34/cdc")))),
+      ingestLeg("s35_stream_transitions", events("user_id", "user_id", "event_id", "event_type", "ts"))(
+        TransitionStats.processBatch(_, at("s35/tails"), at("s35/counts"), _))(
+        TransitionStats.transitions(spark, at("s35/counts"))),
+      // the fixed offline domain is computed inside the ingest timer
+      Leg("s33_layout_ingest", () => {
+        val dims = graft.queries.ZOrder.ordersDims(spark, bigDir)
+        timed {
+          val dom = graft.queries.ZOrder.domainOf(dims).localCheckpoint(true)
+          ingest(replicaBlock(dims, "ck"))(LayoutStats.processBatch(_, dom, at("s33/store"), _))
+          StreamBatches.toLong
+        }
+      }),
+      readLeg("s33_layout_read")(LayoutStats.envelopePanel(spark, at("s33/store"))),
+      ingestOnly("s40_survival_ingest", events("event_id", "user_id", "ts", "event_type"))(
+        SurvivalMonitor.processBatch(_, at("s40/store"), _)),
+      readLeg("s40_survival_read")(SurvivalMonitor.hazard(spark, at("s40/store"))),
+      ingestOnly("s41_skyline_ingest", replicaBlock(Tables.lineitem(spark, bigDir), "l_orderkey",
+          Seq(col("l_quantity").as("qty"), col("l_extendedprice").as("price"))))(
+        SkylineMonitor.processBatch(_, at("s41/store"), _)),
+      readLeg("s41_skyline_read")(SkylineMonitor.frontier(spark, at("s41/store"))),
+      ingestOnly("s42_chisq_ingest", events("event_id", "user_id", "event_type"))(
+        ChisqMonitor.processBatch(_, at("s42/store"), _)),
+      readLeg("s42_chisq_read")(ChisqMonitor.readout(spark, at("s42/store"))),
+      ingestOnly("s50_colstats_ingest",
+          replicaBlock(Tables.orders(spark, bigDir), "o_orderkey", Seq(cents.as("v"))))(
+        ColumnStats.processBatch(_, at("s50/store"), _)),
+      readLeg("s50_colstats_read")(ColumnStats.stats(spark, at("s50/store"))),
+      ingestOnly("s52_ndv_ingest", events("event_id", "event_type", "user_id"))(
+        NdvMonitor.processBatch(_, at("s52/store"), _)),
+      readLeg("s52_ndv_read")(NdvMonitor.ndv(spark, at("s52/store"))),
+      ingestOnly("s56_bootstrap_ingest", events("event_id", "event_type", "event_id", "value"))(
+        BootstrapMonitor.processBatch(_, at("s56/store"), _)),
+      readLeg("s56_bootstrap_read")(BootstrapMonitor.ci(spark, at("s56/store"))),
+      ingestOnly("s53_neardup_ingest", docs)((b, id) => NearDupAdmission.processBatch(
+        b.select(col("doc_id"), col("text")), at("s53/store"), at("s53/accept"), id)),
+      readLeg("s53_neardup_read")(NearDupAdmission.admitted(spark, at("s53/accept"))),
+      ingestLeg("s27_stream_asof_enrich", events("user_id", "event_id", "user_id", "event_type", "ts"))(
+        AsOfEnrich.processBatch(_, at("s27/tails"), at("s27/enrich"), _))(
+        AsOfEnrich.enriched(spark, at("s27/enrich"))),
+      Leg("s17_vector_index", () => timed {
+        val emb = spark.read.parquet(s"$bigDir/embeddings.parquet")
+        val cells = Vectors.codebook(Vectors.trainedComponents(emb)).localCheckpoint(true)
+        ingest(vecs)(VectorIndex.processBatch(_, cells, at("s17/store"), _))
+        VectorIndex.probe(spark, at("s17/store"), cells, 0L, 10).count()
+      }),
+      readLeg("s32_hybrid_search_read")(
+        HybridSearch.search(spark, at("s15/store"), at("s17/store"))),
+      Leg("s31_budget_admission", () => timed {
+        val tokAll = spark.read.parquet(s"$bigDir/documents.parquet")
+          .select(col("source"), size(split(col("text"), " ")).cast("long").as("n_tok"))
+        val budgets = graft.queries.Sampling.mixBudgets(tokAll)
+          .select(col("source"), col("planned_tokens")).localCheckpoint(true)
+        ingest(docs)((b, id) => BudgetAdmission.processBatch(
+          b.select(col("source"), col("doc_id"),
+            size(split(col("text"), " ")).cast("long").as("n_tok")),
+          budgets, at("s31/store"), at("s31/accept"), id))
+        BudgetAdmission.admittedDocs(spark, at("s31/accept")).count()
+      }),
+      Leg("s30_rate_sustained", () => rateSustained(spark, at("s30rate"))),
+      Leg("s30_backlog_drain", () => backlogDrain(spark, at("s30drain"))),
+      Leg("s51_socket_transport", () => socketTransport(spark, at("s51sock"))))
+  }
+
+  /** s30 sustained: the full cascade (dedup → log + derive → self-loop →
+    * projections) fed by the rate generator for a fixed wall window; rows
+    * are the events the log committed in that window (offered load is
+    * rps purchases/s plus the derived-promise re-publish). */
+  private def rateSustained(spark: SparkSession, rroot: String): (Double, Long) = {
+    val rps = 500
+    val sustainSec = 30
+    val broker = RateBroker(spark, s"$rroot/loop", rowsPerSecond = rps, users = 64)
+    val pipe = new BnplPipeline(spark, s"$rroot/events", s"$rroot/state", broker = Some(broker))
+    val t0 = System.nanoTime()
+    pipe.start()
+    Thread.sleep(sustainSec * 1000L)
+    pipe.stop()
+    val sustained = (System.nanoTime() - t0) / 1e9
+    val logged = spark.read.parquet(s"$rroot/state/events_log").count()
+    System.err.println(f"[bench-scale] s30 sustained: $logged rows committed in " +
+      f"$sustained%.1f s (${logged / sustained}%.0f rows/s vs $rps purchases/s offered)")
+    (sustained, logged)
+  }
+
+  /** s30 backlog drain: an AvailableNow catch-up over a pre-written
+    * purchase backlog, in two rounds, because the cascade is a self-loop:
+    * round 1 drains the purchases and republishes their derived promises,
+    * round 2 absorbs the promises (the s09 catch-up path, same checkpoints
+    * across rounds). Backlog event time spans 100 s, inside the 10 min
+    * watermark, so nothing is late-dropped. */
+  private def backlogDrain(spark: SparkSession, droot: String): (Double, Long) = {
+    val nBacklog = 50000L
+    spark.range(nBacklog).select(
+        concat(lit("bk-"), col("id")).as("event_id"),
+        lit(Envelope.PurchaseCompleted).as("event_type"),
+        timestamp_millis(lit(1700000000000L) + col("id") * 2L).as("ts"),
+        concat(lit("order-bk-"), col("id")).as("order_id"),
+        concat(lit("u"), pmod(col("id"), lit(64L))).as("user_id"),
+        ((pmod(col("id"), lit(50L)) + 1L) * 100L).as("amount"),
+        lit(null).cast("string").as("promise_id"),
+        lit(null).cast("string").as("bill_id"),
+        lit(null).cast("string").as("due_date"),
+        lit(null).cast("string").as("payment_mode"),
+        lit(null).cast("string").as("issued_date"),
+        lit(null).cast("string").as("paid_date"))
+      .write.mode("overwrite").json(s"$droot/events")
+    val t1 = System.nanoTime()
+    for (_ <- 1 to 2) {
+      val p = new BnplPipeline(spark, s"$droot/events", s"$droot/state",
+        trigger = Trigger.AvailableNow)
+      p.start().foreach(_.awaitTermination())
+      p.stop()
+    }
+    val drain = (System.nanoTime() - t1) / 1e9
+    val drained = spark.read.parquet(s"$droot/state/events_log").count()
+    System.err.println(f"[bench-scale] s30 drain: $drained log rows " +
+      f"(backlog $nBacklog purchases + derived promises) in $drain%.1f s")
+    (drain, drained)
+  }
+
+  /** s51: the full cascade fed a purchase backlog over a real TCP hop —
+    * loopback socket server → Spark's socket source — with the
+    * derived-promise self-loop republished through the same socket,
+    * measured to the converged log (every purchase and its derived
+    * promise committed). */
+  private def socketTransport(spark: SparkSession, sroot: String): (Double, Long) = {
+    val nSock = 20000L
+    val lines = (0L until nSock).map { i =>
+      s"""{"event_id":"sk-$i","event_type":"${Envelope.PurchaseCompleted}",""" +
+      s""""ts":"${java.time.Instant.ofEpochMilli(1700000000000L + i * 2L)}",""" +
+      s""""order_id":"order-sk-$i","user_id":"u${i % 64}","amount":${(i % 50 + 1) * 100}}"""
+    }
+    val sb = new SocketBroker(spark)
+    val pipe = new BnplPipeline(spark, s"$sroot/events", s"$sroot/state",
+      broker = Some(sb.brokerArg))
+    val t0 = System.nanoTime()
+    pipe.start()
+    val committed = try {
+      // publish in broker-sized chunks (the wire is line-framed; chunking
+      // only bounds the per-write syscall, not the semantics)
+      lines.grouped(2000).foreach(sb.publish)
+      def logged(): Long =
+        try spark.read.parquet(s"$sroot/state/events_log").count()
+        catch { case _: Throwable => 0L }
+      val want = nSock * 2 // purchases + their derived promises
+      val deadline = System.nanoTime() + 600L * 1000000000L
+      while (logged() < want && System.nanoTime() < deadline) pipe.drain(1)
+      logged()
+    } finally { pipe.stop(); sb.close() }
+    val dt = (System.nanoTime() - t0) / 1e9
+    System.err.println(f"[bench-scale] s51 socket: $committed log rows " +
+      f"($nSock purchases over TCP + derived promises) in $dt%.1f s " +
+      f"(${committed / dt}%.0f rows/s)")
+    (dt, committed)
+  }
+
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scaleRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale")
@@ -302,9 +438,8 @@ object BenchScale {
 
     val spark = SparkEntry.localSession(cpus)
     spark.range(1000).selectExpr("sum(id)").count()
-    // drift sentinel (r16 verdict): fixed constant work at run start and
-    // end so the artifact carries its own noise floor — see Bench's
-    // sentinelRuns scaladoc
+    // drift sentinel: fixed constant work at run start and end so the
+    // artifact carries its own noise floor (see Bench.sentinelRuns)
     val sentStart = Bench.sentinelRuns(spark)
 
     val rt = Runtime.getRuntime
@@ -314,87 +449,59 @@ object BenchScale {
       if (used > heapPeakMb) heapPeakMb = used
     }
 
+    /** Amplify the corpus for factor `a` into `dir`. Partition count
+      * tracks the data, as a cluster deployment sizes
+      * spark.sql.shuffle.partitions to input bytes: ×32 the corpus on a
+      * FIXED 32 partitions means ×32 the bytes per shuffle partition, and
+      * sorts that fit at the tuning density spill at the amplified one.
+      * local[cpus] still runs cpus tasks at a time; the extra partitions
+      * only cap per-task memory. */
+    def prepare(dir: String, a: Int, skewHot: Boolean = false): Unit = {
+      spark.conf.set("spark.sql.shuffle.partitions", (cpus * math.max(1, a / 8)).toString)
+      val tGen0 = System.nanoTime()
+      ScaleGen.amplify(spark, base, dir, a, skewHot = skewHot)
+      System.err.println(f"[bench-scale] ${new java.io.File(dir).getName} corpus ready in ${(System.nanoTime() - tGen0) / 1e9}%.1f s")
+    }
+
     // factor -> (query -> (seconds, rows))
     val times = scala.collection.mutable.LinkedHashMap
       .empty[Int, scala.collection.mutable.LinkedHashMap[String, (Double, Long)]]
+
+    /** Run `qs` `passes` times, interleaved (pass 1 of every query, then
+      * pass 2), keeping each query's fastest pass in `times(a)`. A single
+      * ×32 pass can read 25–60 s for the same query on identical code —
+      * one GC pause or page-cache eviction bends a fitted exponent by
+      * ±0.5 — so the min over passes is the reproducible signal. */
+    def minOfPasses(a: Int, dir: String, passes: Int, qs: Seq[(String, QueryFn, String)]): Unit = {
+      val byQ = times.getOrElseUpdate(a, scala.collection.mutable.LinkedHashMap.empty)
+      for (p <- 1 to passes; (name, fn, action) <- qs) {
+        val (dt, rows) = runOnce(spark, name, fn, dir, action)
+        noteHeap()
+        if (dt >= 0 && byQ.get(name).forall(_._1 > dt)) byQ(name) = (dt, rows)
+        if (dt >= 0) System.err.println(f"[bench-scale] x$a pass$p $name%-32s $dt%8.2f s rows=$rows")
+        else System.err.println(f"[bench-scale] x$a pass$p $name%-32s FAILED")
+      }
+    }
+
     var q90SkewMarkers = -1
     var q90AqePlanSeen = false
 
     for (a <- factors.sorted if sections("ladder")) {
       val dir = s"$scaleRoot/x$a"
-      // Partition count tracks the data, exactly as a cluster deployment
-      // sizes spark.sql.shuffle.partitions to input-bytes / ~128 MB: ×32
-      // the corpus on a FIXED 32 partitions means ×32 the bytes per
-      // shuffle partition — sorts that fit at the tuning density spill at
-      // the amplified one, and the measured curve bends for a reason that
-      // has nothing to do with the operator (the first ×32 run, 8 GiB
-      // heap + 32 partitions, measured q77 at exponent 1.8 while its
-      // candidate VOLUME grew at 1.06). local[32] still runs 32 tasks at
-      // a time; the extra partitions only cap per-task memory.
-      spark.conf.set("spark.sql.shuffle.partitions",
-        (cpus * math.max(1, a / 8)).toString)
-      val tGen0 = System.nanoTime()
-      ScaleGen.amplify(spark, base, dir, a)
-      System.err.println(f"[bench-scale] x$a corpus ready in ${(System.nanoTime() - tGen0) / 1e9}%.1f s")
+      prepare(dir, a)
       ensureKnnGraph(spark, dir, a)
-      val qs = buildQueries(a)
-      val byQ = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long)]
-      // min-of-2 at EVERY leg (r12): single-pass ×32 points have read
-      // 25–60 s for the same query on identical code — one GC pause or
-      // page-cache eviction in a 40 s run bends a fitted exponent by
-      // ±0.5. The min over two passes is the reproducible signal.
-      val passes = 2
-      for (p <- 1 to passes; (name, fn, action) <- qs) {
-        val (dt, rows) = runOnce(spark, name, fn, dir, action)
-        noteHeap()
-        // Print EVERY leg, failed or not (r12 advisor): a silently missing
-        // query in BENCH_scale.json was unattributable from the log when
-        // the progress line lived inside the dt>=0 guard.
-        if (dt >= 0) {
-          val prev = byQ.get(name)
-          if (prev.isEmpty || prev.get._1 > dt) byQ(name) = (dt, rows)
-          System.err.println(f"[bench-scale] x$a pass$p $name%-32s $dt%8.2f s rows=$rows")
-        } else
-          System.err.println(f"[bench-scale] x$a pass$p $name%-32s FAILED")
-      }
-      // Demonstrate the LSH density knob is load-bearing: fixed 4-bit
-      // buckets at ×4 (≈16× the candidate volume of the scaled form).
-      if (a == 4) {
-        val (dt, rows) = runOnce(spark, "q77_fixed_bits",
-          (s, d) => Vectors.knnPairsOn(graft.tables.Tables.embeddings(s, d),
-            graft.ops.Ann.buckets).orderBy(col("src"), col("rk")),
-          dir, "count")
-        noteHeap()
-        if (dt >= 0) byQ("q77_fixed_bits") = (dt, rows)
-        System.err.println(f"[bench-scale] x$a q77_fixed_bits $dt%8.2f s rows=$rows")
-      }
-      times(a) = byQ
+      minOfPasses(a, dir, 2, buildQueries(a))
+      // the LSH density knob is load-bearing: fixed 4-bit buckets at ×4
+      // carry ≈16× the candidate volume of the scaled form
+      if (a == 4)
+        minOfPasses(a, dir, 1, Seq(("q77_fixed_bits",
+          (s: SparkSession, d: String) => knnJoin(s, d, graft.ops.Ann.buckets), "count")))
     }
 
-    // ---- ×64 confirmation of the steepest exponents ----
-    // Every query whose x4→x32 exponent came out near-linear runs one
-    // more octave to decide whether the curve bends upward: q36/q84 (the
-    // r10 pair, confirmed at 0.42/−0.09) plus q77/q99/q104 (r11 item 1 —
-    // their 0.84–0.95 legs were the board's closest thing to a scale
-    // risk; their outputs grow Θ(N·k), so ~linear wall time is the
-    // optimum, not a defect — the octave tests for super-linear bend).
-    // r14: the q90-family confirm leg is the TUNED operating point (the
-    // declared q146 scale path) plus the q147 composition — the flat
-    // probe's Θ(N^1.5) was measured on this octave twice (exp 1.47,
-    // r12/r13) and no longer burns ~140 s re-proving it. Full-base-name
-    // matching so the flat q90_ivf_knn leg and the tuned one are
-    // distinguishable.
-    // r15 (r14 verdict item 6): every ladder leg ≥ ~7 s at ×32 gets a
-    // confirm octave — q100/q112/q143/q160 join, plus the new tuned
-    // hard-negatives leg (item 2). r16 (r15 verdict item 4): the four
-    // remaining ≥ 7 s legs join — q57/q66/q82/q95; q90's FLAT leg stays
-    // deliberately unconfirmed (its 31.9 s ×32 read is the documented
-    // tuned-vs-flat Θ(N^1.5) contrast, exponent already measured twice
-    // at r12/r13 — re-proving it would burn the octave's budget on a
-    // known number; the `notes` field in the artifact records this).
-    // q186 joins alongside its q90_tuned-class siblings.
-    // q187/q188 and the three rank statistics are confirmed in-run like
-    // every other leg.
+    // ---- confirm octave: the near-linear legs one doubling higher ----
+    // An upper bound on the exponent ("no upward bend"), not a tight
+    // asymptote. The flat q90_ivf_knn probe is left out: its Θ(N^1.5) is
+    // the documented contrast to the tuned point, which is confirmed.
     val confirmSet = Set("q36_ngram_jaccard", "q84_containment",
       "q77_knn_join", "q90_tuned", "q99_dedup_eval",
       "q104_mutual_knn_clusters", "q147_filtered_tuned_ann",
@@ -404,59 +511,24 @@ object BenchScale {
       "q82_char_entropy", "q95_retrieval_eval", "q186_mmr_tuned",
       "q187_bootstrap_bucketed", "q188_median_mad",
       "q189_theilsen_trend", "q190_kendall_tau", "q191_mann_kendall")
-    val confirmFactor = sys.env.getOrElse("SPARK_GRAFT_SCALE_CONFIRM", "64").toInt
-    if (sections("confirm") && confirmFactor > factors.max) {
-      val dir = s"$scaleRoot/x$confirmFactor"
-      spark.conf.set("spark.sql.shuffle.partitions",
-        (cpus * math.max(1, confirmFactor / 8)).toString)
-      val tGen0 = System.nanoTime()
-      ScaleGen.amplify(spark, base, dir, confirmFactor)
-      System.err.println(f"[bench-scale] x$confirmFactor corpus ready in ${(System.nanoTime() - tGen0) / 1e9}%.1f s")
-      ensureKnnGraph(spark, dir, confirmFactor)
-      val byQ = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long)]
-      // min-of-2 here too (r12): the single-pass confirm octave read q36
-      // at 71.5 s in a JVM that had just run the full ladder, while a
-      // fresh-JVM interleaved A/B on the same corpus read ~30 s — the
-      // confirm leg is the bend verdict, so it gets the same noise floor
-      // as the ladder legs.
-      for (p <- 1 to 2; (name, fn, action) <- buildQueries(confirmFactor)
-           if confirmSet(name.takeWhile(_ != '['))) {
-        val (dt, rows) = runOnce(spark, name, fn, dir, action)
-        noteHeap()
-        if (dt >= 0) {
-          val prev = byQ.get(name)
-          if (prev.isEmpty || prev.get._1 > dt) byQ(name) = (dt, rows)
-        }
-        System.err.println(f"[bench-scale] x$confirmFactor pass$p $name%-32s $dt%8.2f s rows=$rows")
-      }
-      // r15 (r14 verdict item 4): the q77 knob-vs-kernel A/B at the bend
-      // octave — the bucket join re-run with the PREVIOUS octave's bits
-      // held fixed (candidates ∝ N²/2^bits, so this leg carries ~2× the
-      // scheduled leg's candidate volume). t(fixed)/t(scheduled) ≈ 2 ⇒
-      // wall time tracks candidate volume and the bits schedule is
-      // holding occupancy (the confirm exponent's excess over 1.0 is
-      // then constants — fat-array shuffle + fixed costs — not drift);
-      // a ratio ≪ 2 ⇒ candidate volume is NOT the driver at this octave.
-      val abBits = scaledBits(confirmFactor / 2)
-      val abWide: Column => Column = graft.ops.Ann.bucketsWide(_, abBits)
-      for (p <- 1 to 2) {
-        val name = s"q77_fixed_bits[b=$abBits]"
-        val (dt, rows) = runOnce(spark, name,
-          (s: SparkSession, d: String) =>
-            Vectors.knnPairsOn(graft.tables.Tables.embeddings(s, d), abWide)
-              .orderBy(col("src"), col("rk")),
-          dir, "count")
-        noteHeap()
-        if (dt >= 0) {
-          val prev = byQ.get(name)
-          if (prev.isEmpty || prev.get._1 > dt) byQ(name) = (dt, rows)
-        }
-        System.err.println(f"[bench-scale] x$confirmFactor pass$p $name%-32s $dt%8.2f s rows=$rows")
-      }
-      times(confirmFactor) = byQ
+    if (sections("confirm")) {
+      val cf = confirmFactor(factors)
+      val dir = s"$scaleRoot/x$cf"
+      prepare(dir, cf)
+      ensureKnnGraph(spark, dir, cf)
+      minOfPasses(cf, dir, 2,
+        buildQueries(cf).filter { case (name, _, _) => confirmSet(name.takeWhile(_ != '[')) })
+      // knob-vs-kernel A/B at the octave: the bucket join at the previous
+      // octave's bits carries ~2× the scheduled leg's candidate volume
+      // (candidates ∝ N²/2^bits); t(fixed)/t(scheduled) ≈ 2 means wall
+      // time tracks candidate volume and the bits schedule holds occupancy
+      val abBits = scaledBits(cf / 2)
+      minOfPasses(cf, dir, 2, Seq((s"q77_fixed_bits[b=$abBits]",
+        (s: SparkSession, d: String) => knnJoin(s, d, graft.ops.Ann.bucketsWide(_, abBits)),
+        "count")))
     }
 
-    // ---- AQE skew-join rehearsal on a REAL hot cell (r9 task 6) ----
+    // ---- AQE skew-join rehearsal on a REAL hot cell ----
     // ~30% of the skew corpus shares replica-0 geometry and label space
     // (ScaleGen.amplify skewHot), so group-0 IVF cells hold ~hotReps×
     // the members of any rotated group's — the hot-key shape a
@@ -475,11 +547,7 @@ object BenchScale {
     if (sections("skew")) {
       val aS = factors.max
       val skewDir = s"$scaleRoot/x${aS}skew"
-      spark.conf.set("spark.sql.shuffle.partitions",
-        (cpus * math.max(1, aS / 8)).toString)
-      val tGen0 = System.nanoTime()
-      ScaleGen.amplify(spark, base, skewDir, aS, skewHot = true)
-      System.err.println(f"[bench-scale] x${aS}skew corpus ready in ${(System.nanoTime() - tGen0) / 1e9}%.1f s")
+      prepare(skewDir, aS, skewHot = true)
       def runQ90(aqe: Boolean): Option[(Long, Long, Int, Boolean)] = {
         spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
         try {
@@ -521,685 +589,22 @@ object BenchScale {
     val aMax = factors.max
     val bigDir = s"$scaleRoot/x$aMax"
     val streamRoot = s"$scaleRoot/stream_x$aMax"
-    def rmrf(p: String): Unit = {
+    val streaming = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long)]
+    if (sections("stream")) {
+      // amplify is ok-file idempotent: free when the ladder built the
+      // corpus, and a stream-only re-run regenerates it
+      ScaleGen.amplify(spark, base, bigDir, aMax)
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
       }
-      rm(new java.io.File(p))
-    }
-    // a section-scoped re-run (SECTIONS=stream without ladder) must not
-    // crash on a missing corpus: amplify is ok-file idempotent — free
-    // when the ladder already built it, regenerates otherwise (r11 advice)
-    if (sections("stream")) {
-      ScaleGen.amplify(spark, base, bigDir, aMax)
-      rmrf(streamRoot)
-    }
-    val nBatches = 4
-    val repsPerBatch = math.max(1, aMax / nBatches)
-    def docBatch(b: Int): DataFrame =
-      spark.read.parquet(s"$bigDir/documents.parquet")
-        .filter((col("doc_id") / ScaleGen.IdStride).cast("int")
-          .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-    def vecBatch(b: Int): DataFrame =
-      spark.read.parquet(s"$bigDir/embeddings.parquet")
-        .filter((col("vec_id") / ScaleGen.IdStride).cast("int")
-          .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-
-    val streaming = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long)]
-
-    if (sections("stream")) locally { // s14 incremental dedup: 4-batch admission
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.IncrementalDedup.processBatch(docBatch(b),
-          s"$streamRoot/s14/store", s"$streamRoot/s14/accept",
-          s"$streamRoot/s14/reject", b.toLong)
-      val accepted = spark.read.parquet(s"$streamRoot/s14/accept").count()
-      streaming("s14_incremental_dedup") = ((System.nanoTime() - t0) / 1e9, accepted)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s15 incremental index: 4-batch build + one read-side view
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.IncrementalIndex.processBatch(docBatch(b),
-          s"$streamRoot/s15/store", b.toLong)
-      val indexRows = graft.streaming.IncrementalIndex
-        .readIndex(spark, s"$streamRoot/s15/store").count()
-      streaming("s15_incremental_index") = ((System.nanoTime() - t0) / 1e9, indexRows)
-      // r17 (r16 verdict gap 2): the s18 BM25 search read off the store
-      // the leg above just built — the marginal read-path cost
-      val t1 = System.nanoTime()
-      val hits = graft.streaming.IncrementalIndex
-        .search(spark, s"$streamRoot/s15/store").count()
-      streaming("s18_search_read") = ((System.nanoTime() - t1) / 1e9, hits)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s16 heavy hitters: 4-batch sketch ingest + merged read (r17 gap 2)
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.HeavyHitters.processBatch(docBatch(b),
-          s"$streamRoot/s16/store", b.toLong)
-      val rows = graft.streaming.HeavyHitters
-        .merged(spark, s"$streamRoot/s16/store").count()
-      streaming("s16_heavy_hitters") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s19 decontamination: static benchmark, 4 streamed train batches (r17 gap 2)
-      // the benchmark side is the DEPLOYMENT-STATIC artifact — built once
-      // from the base corpus (small, like a real eval suite), while the
-      // ×-amplified corpus streams through as training data
-      // the static artifact builds OUTSIDE the timer: the leg measures
-      // the streamed path's marginal cost, and the benchmark index is a
-      // per-deployment constant that does not scale with the stream
-      val bench = graft.streaming.Decontamination.benchIndexOf(
-        spark.read.parquet(s"$base/documents.parquet"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.Decontamination.processBatch(docBatch(b), bench,
-          s"$streamRoot/s19/audit", b.toLong)
-      val rows = graft.streaming.Decontamination
-        .readAudit(spark, s"$streamRoot/s19/audit").count()
-      streaming("s19_decontamination") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s20 novelty: 4-batch first-seer ingest + audit read (r17 gap 2)
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.Novelty.processBatch(docBatch(b),
-          s"$streamRoot/s20/store", s"$streamRoot/s20/audit", b.toLong)
-      val rows = graft.streaming.Novelty
-        .readAudit(spark, s"$streamRoot/s20/audit").count()
-      streaming("s20_novelty") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s21 embedding stats: 4-batch partial ingest + panel read (r17 gap 2)
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.VectorStats.processBatch(vecBatch(b),
-          s"$streamRoot/s21/store", b.toLong)
-      val rows = graft.streaming.VectorStats
-        .stats(spark, s"$streamRoot/s21/store").count()
-      streaming("s21_embedding_stats") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s22 quality routing: frozen model, 4 routed batches (r17 gap 2)
-      // freeze on the base corpus (the CCNet deployment shape: train
-      // once, apply fixed cuts to the stream)
-      // freeze OUTSIDE the timer (same reason as the s19 benchmark index:
-      // a per-deployment constant, not part of the streamed path)
-      val frozen = graft.streaming.QualityRouter.freeze(
-        spark.read.parquet(s"$base/documents.parquet"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.QualityRouter.processBatch(docBatch(b), frozen,
-          s"$streamRoot/s22/routed", b.toLong)
-      val rows = graft.streaming.QualityRouter
-        .readRouted(spark, s"$streamRoot/s22/routed").count()
-      streaming("s22_quality_routing") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s23 sequence packing: 4 doc batches through the tail store
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.SequencePacker.processBatch(docBatch(b),
-          s"$streamRoot/s23/tails", s"$streamRoot/s23/assign", b.toLong)
-      val bins = graft.streaming.SequencePacker
-        .packedSummary(spark, s"$streamRoot/s23/assign").count()
-      streaming("s23_stream_packing") = ((System.nanoTime() - t0) / 1e9, bins)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s24 SCD2 history: 4 event batches split by replica block
-      // (each user's whole chain sits in one batch - per-user ts order,
-      // the parity precondition, holds trivially)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("user_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.Scd2History.processBatch(evBatch(b),
-          s"$streamRoot/s24/tails", s"$streamRoot/s24/closed", b.toLong)
-      val hist = graft.streaming.Scd2History
-        .history(spark, s"$streamRoot/s24/tails", s"$streamRoot/s24/closed").count()
-      streaming("s24_stream_scd2") = ((System.nanoTime() - t0) / 1e9, hist)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s25 funnel: 4 event batches split by user replica block
-      // (each user's whole chain in one batch — the enforced per-user
-      // order contract holds trivially)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("user_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("user_id"), col("event_type"), col("ts"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.FunnelTracker.processBatch(evBatch(b),
-          s"$streamRoot/s25/tails", b.toLong)
-      val users = graft.streaming.FunnelTracker
-        .funnelState(spark, s"$streamRoot/s25/tails").count()
-      streaming("s25_stream_funnel") = ((System.nanoTime() - t0) / 1e9, users)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s26 ledger: 4 event batches split by event_id block (the
-      // additive store needs no order assumption — any split is legal)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("user_id"), col("event_type"), col("value"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.LedgerStore.processBatch(evBatch(b),
-          s"$streamRoot/s26/store", b.toLong)
-      val rows = graft.streaming.LedgerStore
-        .ledger(spark, s"$streamRoot/s26/store").count()
-      streaming("s26_stream_ledger") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s29 drift monitor: 4 event batches by event_id block
-      // (additive count store — any split is legal, like s26)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("event_type"), col("ts"), col("value"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.DriftMonitor.processBatch(evBatch(b),
-          s"$streamRoot/s29/store", b.toLong)
-      val rows = graft.streaming.DriftMonitor
-        .drift(spark, s"$streamRoot/s29/store").count()
-      streaming("s29_stream_drift") = ((System.nanoTime() - t0) / 1e9, rows)
-      // r16 (r15 verdict item 2): the s55 winsorized read — the store's
-      // FOURTH read, measured as the marginal read cost off the store
-      // the leg above just built (the s39/s43 store-read economics)
-      val t1 = System.nanoTime()
-      val wrows = graft.streaming.DriftMonitor
-        .winsorized(spark, s"$streamRoot/s29/store").count()
-      streaming("s55_winsorized_read") = ((System.nanoTime() - t1) / 1e9, wrows)
-      // r16 (2): the s57 median+MAD read — the store's fifth read
-      val t2 = System.nanoTime()
-      val mrows = graft.streaming.DriftMonitor
-        .mad(spark, s"$streamRoot/s29/store").count()
-      streaming("s57_mad_read") = ((System.nanoTime() - t2) / 1e9, mrows)
-      // r17 (r16 verdict gap 2): the s45 IQR and s48 bands reads — the
-      // store's remaining two reads, measured as marginal read cost
-      val t3 = System.nanoTime()
-      val irows = graft.streaming.DriftMonitor
-        .iqr(spark, s"$streamRoot/s29/store").count()
-      streaming("s45_iqr_read") = ((System.nanoTime() - t3) / 1e9, irows)
-      val t4 = System.nanoTime()
-      val brows = graft.streaming.DriftMonitor
-        .bands(spark, s"$streamRoot/s29/store").count()
-      streaming("s48_bands_read") = ((System.nanoTime() - t4) / 1e9, brows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s36 seasonal panel: 4 event batches by event_id block
-      // (additive daily-count store — any split is legal, like s29; the
-      // r14 widening adds the exact decimal value-sum partial)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("event_type"), col("ts"), col("value"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.SeasonalMonitor.processBatch(evBatch(b),
-          s"$streamRoot/s36/store", b.toLong)
-      val rows = graft.streaming.SeasonalMonitor
-        .baseline(spark, s"$streamRoot/s36/store").count()
-      streaming("s36_stream_seasonal") = ((System.nanoTime() - t0) / 1e9, rows)
-      // r16 (r15 verdict item 3): the s54 decayed-engagement read — the
-      // store's SIXTH read, the one r15 streaming component with no
-      // scale evidence; measured as the marginal read cost off the
-      // store the leg above just built
-      val t1 = System.nanoTime()
-      val drows = graft.streaming.SeasonalMonitor
-        .decayed(spark, s"$streamRoot/s36/store").count()
-      streaming("s54_decayed_read") = ((System.nanoTime() - t1) / 1e9, drows)
-      // r17 (r16 verdict gap 2 + the two new reads): every remaining
-      // read of the daily store, each as marginal read cost off the
-      // store the ingest leg above built
-      def readLeg(key: String, f: => org.apache.spark.sql.DataFrame): Unit = {
-        val t = System.nanoTime()
-        val n = f.count()
-        streaming(key) = ((System.nanoTime() - t) / 1e9, n)
+      rm(new java.io.File(streamRoot))
+      // one recorder: the leg's (seconds, rows), the heap mark, then the
+      // cache clear outside the timer so no cache is shared across legs
+      for (leg <- streamLegs(spark, base, bigDir, streamRoot, aMax)) {
+        streaming(leg.key) = leg.run()
+        noteHeap()
+        SparkEntry.clearGraftCaches(spark)
       }
-      readLeg("s39_mad_read",
-        graft.streaming.SeasonalMonitor.outliers(spark, s"$streamRoot/s36/store"))
-      readLeg("s43_holt_read",
-        graft.streaming.SeasonalMonitor.holt(spark, s"$streamRoot/s36/store"))
-      readLeg("s44_cusum_read",
-        graft.streaming.SeasonalMonitor.changepoint(spark, s"$streamRoot/s36/store"))
-      readLeg("s46_drawdown_read",
-        graft.streaming.SeasonalMonitor.drawdown(spark, s"$streamRoot/s36/store"))
-      readLeg("s58_theilsen_read",
-        graft.streaming.SeasonalMonitor.theilsen(spark, s"$streamRoot/s36/store"))
-      readLeg("s59_kendall_read",
-        graft.streaming.SeasonalMonitor.kendall(spark, s"$streamRoot/s36/store"))
-      readLeg("s60_mannkendall_read",
-        graft.streaming.SeasonalMonitor.mannKendall(spark, s"$streamRoot/s36/store"))
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s38 OHLC bars: 4 event batches by event_id block
-      // (additive bar-partial store — any split is legal)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.BarStats.processBatch(evBatch(b),
-          s"$streamRoot/s38/store", b.toLong)
-      val rows = graft.streaming.BarStats
-        .bars(spark, s"$streamRoot/s38/store").count()
-      streaming("s38_stream_ohlc") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s47 revenue inequality: 4 order batches by orderkey block
-      // (additive per-customer cent sums — any split; ranks re-derive at
-      // the Gini read via the two-phase prefix)
-      def ordBatch(b: Int): DataFrame =
-        graft.tables.Tables.orders(spark, bigDir)
-          .filter(pmod(col("o_orderkey"), lit(nBatches.toLong)) === b.toLong)
-          .select(col("o_custkey"),
-            (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").as("cents"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.RevenueMonitor.processBatch(ordBatch(b),
-          s"$streamRoot/s47/store", b.toLong)
-      val rows = graft.streaming.RevenueMonitor
-        .gini(spark, s"$streamRoot/s47/store").count()
-      streaming("s47_stream_revenue") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s49 sessions: 4 event batches by event_id block
-      // (ORDER-GATED, but replica blocks hold disjoint user ids, so each
-      // user's whole history sits inside one batch — the gate is
-      // trivially satisfied, like the s24/s25 replica-block legs)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.SessionTracker.processBatch(evBatch(b),
-          s"$streamRoot/s49/open", s"$streamRoot/s49/closed", b.toLong)
-      val rows = graft.streaming.SessionTracker
-        .flow(spark, s"$streamRoot/s49/open", s"$streamRoot/s49/closed").count()
-      streaming("s49_stream_sessions") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s37 RFM: 4 event batches by event_id block
-      // (additive per-user metric store — any split is legal, like s36)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("user_id"), col("ts"), col("value"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.RfmMonitor.processBatch(evBatch(b),
-          s"$streamRoot/s37/store", b.toLong)
-      val segs = graft.streaming.RfmMonitor
-        .segments(spark, s"$streamRoot/s37/store").count()
-      streaming("s37_stream_rfm") = ((System.nanoTime() - t0) / 1e9, segs)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s34 change feed: 4 event batches by event_id block
-      // (the LWW state half is commutative — any split is legal, like
-      // s26/s29; the feed is measured as the netted read every CDF
-      // consumer runs)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("user_id"), col("event_id"), col("event_type"),
-            col("ts"), col("value"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.ChangeFeed.processBatch(evBatch(b),
-          s"$streamRoot/s34/state", s"$streamRoot/s34/cdc", b.toLong)
-      val netted = graft.streaming.ChangeFeed.netted(
-        graft.streaming.ChangeFeed.feed(spark, s"$streamRoot/s34/cdc")).count()
-      streaming("s34_stream_changefeed") = ((System.nanoTime() - t0) / 1e9, netted)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s35 transitions: 4 event batches by user block
-      // (each user's whole chain in one batch — the enforced per-user
-      // order contract holds trivially, like s24/s25)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("user_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.TransitionStats.processBatch(evBatch(b),
-          s"$streamRoot/s35/tails", s"$streamRoot/s35/counts", b.toLong)
-      val rows = graft.streaming.TransitionStats
-        .transitions(spark, s"$streamRoot/s35/counts").count()
-      streaming("s35_stream_transitions") = ((System.nanoTime() - t0) / 1e9, rows)
-      noteHeap()
-    }
-    // ---- r15 (r14 verdict item 3): the five r14 store maintainers that
-    // had no streaming_x32 leg — s33/s40/s41/s42/s50. Each maintains its
-    // OWN store (unlike the store-READ components s39/s43–s46/s48, which
-    // legitimately ride their host stores' legs), so each gets a measured
-    // per-batch ingest cost and a separate read cost, the s31/s32 split.
-    if (sections("stream")) locally { // s33 layout stats: 4 orders-dims batches
-      // (additive envelope partials — any split; the fixed offline domain
-      // is computed INSIDE the ingest timer, the s17-codebook honesty rule)
-      val dims = graft.queries.ZOrder.ordersDims(spark, bigDir)
-      val t0 = System.nanoTime()
-      val dom = graft.queries.ZOrder.domainOf(dims).localCheckpoint(true)
-      for (b <- 0 until nBatches)
-        graft.streaming.LayoutStats.processBatch(
-          dims.filter(pmod(col("ck"), lit(nBatches.toLong)) === b.toLong),
-          dom, s"$streamRoot/s33/store", b.toLong)
-      streaming("s33_layout_ingest") = ((System.nanoTime() - t0) / 1e9, nBatches.toLong)
-      val t1 = System.nanoTime()
-      val rows = graft.streaming.LayoutStats
-        .envelopePanel(spark, s"$streamRoot/s33/store").count()
-      streaming("s33_layout_read") = ((System.nanoTime() - t1) / 1e9, rows)
-      noteHeap()
-      SparkEntry.clearGraftCaches(spark)
-    }
-    if (sections("stream")) locally { // s40 survival: 4 event batches by event_id block
-      // (per-user min/min/max span partials merge at read — any split)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("user_id"), col("ts"), col("event_type"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.SurvivalMonitor.processBatch(evBatch(b),
-          s"$streamRoot/s40/store", b.toLong)
-      streaming("s40_survival_ingest") = ((System.nanoTime() - t0) / 1e9, nBatches.toLong)
-      val t1 = System.nanoTime()
-      val rows = graft.streaming.SurvivalMonitor
-        .hazard(spark, s"$streamRoot/s40/store").count()
-      streaming("s40_survival_read") = ((System.nanoTime() - t1) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s41 skyline: 4 lineitem batches by orderkey mod
-      // (domain-bounded (qty, price) counts — any split; frontier
-      // re-derives at read, the non-mergeable-statistic boundary)
-      def liBatch(b: Int): DataFrame =
-        graft.tables.Tables.lineitem(spark, bigDir)
-          .filter(pmod(col("l_orderkey"), lit(nBatches.toLong)) === b.toLong)
-          .select(col("l_quantity").as("qty"), col("l_extendedprice").as("price"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.SkylineMonitor.processBatch(liBatch(b),
-          s"$streamRoot/s41/store", b.toLong)
-      streaming("s41_skyline_ingest") = ((System.nanoTime() - t0) / 1e9, nBatches.toLong)
-      val t1 = System.nanoTime()
-      val rows = graft.streaming.SkylineMonitor
-        .frontier(spark, s"$streamRoot/s41/store").count()
-      streaming("s41_skyline_read") = ((System.nanoTime() - t1) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s42 chi-square: 4 event batches by event_id block
-      // (per-user max-conv partials — any split; the 2x2 statistic is a
-      // four-long aggregate at read)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("user_id"), col("event_type"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.ChisqMonitor.processBatch(evBatch(b),
-          s"$streamRoot/s42/store", b.toLong)
-      streaming("s42_chisq_ingest") = ((System.nanoTime() - t0) / 1e9, nBatches.toLong)
-      val t1 = System.nanoTime()
-      val rows = graft.streaming.ChisqMonitor
-        .readout(spark, s"$streamRoot/s42/store").count()
-      streaming("s42_chisq_read") = ((System.nanoTime() - t1) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s50 column stats: 4 orders batches by orderkey mod
-      // (range-bounded value-count partials — any split; equi-depth
-      // boundaries re-derive at read via the sort-free two-phase prefix)
-      def ordBatch(b: Int): DataFrame =
-        graft.tables.Tables.orders(spark, bigDir)
-          .filter(pmod(col("o_orderkey"), lit(nBatches.toLong)) === b.toLong)
-          .select((col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long").as("v"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.ColumnStats.processBatch(ordBatch(b),
-          s"$streamRoot/s50/store", b.toLong)
-      streaming("s50_colstats_ingest") = ((System.nanoTime() - t0) / 1e9, nBatches.toLong)
-      val t1 = System.nanoTime()
-      val rows = graft.streaming.ColumnStats
-        .stats(spark, s"$streamRoot/s50/store").count()
-      streaming("s50_colstats_read") = ((System.nanoTime() - t1) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s52 NDV sketches (r15): 4 event batches
-      // by event_id block (sketch union is order-free — any split); the
-      // store appends KB-sized sketch rows, corpus-size-independent
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("event_type"), col("user_id"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.NdvMonitor.processBatch(evBatch(b),
-          s"$streamRoot/s52/store", b.toLong)
-      streaming("s52_ndv_ingest") = ((System.nanoTime() - t0) / 1e9, nBatches.toLong)
-      val t1 = System.nanoTime()
-      val rows = graft.streaming.NdvMonitor
-        .ndv(spark, s"$streamRoot/s52/store").count()
-      streaming("s52_ndv_read") = ((System.nanoTime() - t1) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s56 bootstrap CI (r16): 4 event batches
-      // by event_id block (additive bucket store — any split); state is
-      // <= types x 10^4 rows per batch regardless of volume
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("event_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("event_type"), col("event_id"), col("value"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.BootstrapMonitor.processBatch(evBatch(b),
-          s"$streamRoot/s56/store", b.toLong)
-      streaming("s56_bootstrap_ingest") = ((System.nanoTime() - t0) / 1e9, nBatches.toLong)
-      val t1 = System.nanoTime()
-      val rows = graft.streaming.BootstrapMonitor
-        .ci(spark, s"$streamRoot/s56/store").count()
-      streaming("s56_bootstrap_read") = ((System.nanoTime() - t1) / 1e9, rows)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s53 near-dup admission (r15): 4 doc
-      // batches by replica block — ascending doc_id ranges, so the order
-      // gate holds; the LSH band index accumulates across batches
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.NearDupAdmission.processBatch(
-          docBatch(b).select(col("doc_id"), col("text")),
-          s"$streamRoot/s53/store", s"$streamRoot/s53/accept", b.toLong)
-      streaming("s53_neardup_ingest") = ((System.nanoTime() - t0) / 1e9, nBatches.toLong)
-      val t1 = System.nanoTime()
-      val kept = graft.streaming.NearDupAdmission
-        .admitted(spark, s"$streamRoot/s53/accept").count()
-      streaming("s53_neardup_read") = ((System.nanoTime() - t1) / 1e9, kept)
-      noteHeap()
-      SparkEntry.clearGraftCaches(spark)
-    }
-    if (sections("stream")) locally { // s27 as-of enrichment: 4 event batches by user block
-      // (each user's events in one batch — the order gate holds trivially)
-      def evBatch(b: Int): DataFrame =
-        graft.tables.Tables.events(spark, bigDir)
-          .filter((col("user_id") / ScaleGen.IdStride).cast("int")
-            .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
-          .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      val t0 = System.nanoTime()
-      for (b <- 0 until nBatches)
-        graft.streaming.AsOfEnrich.processBatch(evBatch(b),
-          s"$streamRoot/s27/tails", s"$streamRoot/s27/enrich", b.toLong)
-      val enriched = graft.streaming.AsOfEnrich
-        .enriched(spark, s"$streamRoot/s27/enrich").count()
-      streaming("s27_stream_asof_enrich") = ((System.nanoTime() - t0) / 1e9, enriched)
-      noteHeap()
-    }
-    if (sections("stream")) locally { // s17 vector index: offline codebook + 4-batch ingest + probe
-      val t0 = System.nanoTime()
-      val emb = spark.read.parquet(s"$bigDir/embeddings.parquet")
-      val cells = Vectors.codebook(Vectors.trainedComponents(emb))
-        .localCheckpoint(true)
-      for (b <- 0 until nBatches)
-        graft.streaming.VectorIndex.processBatch(vecBatch(b), cells,
-          s"$streamRoot/s17/store", b.toLong)
-      val probed = graft.streaming.VectorIndex
-        .probe(spark, s"$streamRoot/s17/store", cells, 0L, 10).count()
-      streaming("s17_vector_index") = ((System.nanoTime() - t0) / 1e9, probed)
-      noteHeap()
-      SparkEntry.clearGraftCaches(spark)
-    }
-    if (sections("stream")) locally { // s32 hybrid search: ONE fused read
-      // over the stores the s15/s17 legs just built (the serving path —
-      // ingest is already charged to those legs; a second ingest here
-      // would double-count it)
-      val t0 = System.nanoTime()
-      val hits = graft.streaming.HybridSearch.search(spark,
-        s"$streamRoot/s15/store", s"$streamRoot/s17/store").count()
-      streaming("s32_hybrid_search_read") = ((System.nanoTime() - t0) / 1e9, hits)
-      noteHeap()
-      SparkEntry.clearGraftCaches(spark)
-    }
-    if (sections("stream")) locally { // s31 budget admission: per-source
-      // quotas enforced across 4 doc batches. The budget panel build
-      // (one pass over the corpus) is INSIDE the timer — a deployment
-      // computes it offline once, but charging it here keeps the leg
-      // honest about the full cold-start cost, like s17's codebook.
-      val t0 = System.nanoTime()
-      val tokAll = spark.read.parquet(s"$bigDir/documents.parquet")
-        .select(col("source"),
-          size(split(col("text"), " ")).cast("long").as("n_tok"))
-      val budgets = graft.queries.Sampling.mixBudgets(tokAll)
-        .select(col("source"), col("planned_tokens"))
-        .localCheckpoint(true)
-      for (b <- 0 until nBatches)
-        graft.streaming.BudgetAdmission.processBatch(
-          docBatch(b).select(col("source"), col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("n_tok")),
-          budgets, s"$streamRoot/s31/store", s"$streamRoot/s31/accept", b.toLong)
-      val admitted = graft.streaming.BudgetAdmission
-        .admittedDocs(spark, s"$streamRoot/s31/accept").count()
-      streaming("s31_budget_admission") = ((System.nanoTime() - t0) / 1e9, admitted)
-      noteHeap()
-      SparkEntry.clearGraftCaches(spark)
-    }
-    if (sections("stream")) locally { // s30 rate transport (r13 verdict item 5):
-      // the rate source is the one transport whose whole point is load, and
-      // until r14 it only had a parity law. Two measurements:
-      // (a) SUSTAINED: the full cascade (dedup → log + derive → self-loop →
-      //     projections) fed by the rate generator for a fixed wall window;
-      //     reported rows = events the log COMMITTED in that window (the
-      //     honest end-to-end number — offered load is rps purchases/s plus
-      //     the derived-promise re-publish).
-      import org.apache.spark.sql.streaming.Trigger
-      val rps = 500
-      val sustainSec = 30
-      val rroot = s"$streamRoot/s30rate"
-      val broker = graft.streaming.RateBroker(spark, s"$rroot/loop",
-        rowsPerSecond = rps, users = 64)
-      val pipe = new graft.streaming.BnplPipeline(spark, s"$rroot/events",
-        s"$rroot/state", broker = Some(broker))
-      val t0 = System.nanoTime()
-      pipe.start()
-      Thread.sleep(sustainSec * 1000L)
-      pipe.stop()
-      val sustained = (System.nanoTime() - t0) / 1e9
-      val logged = spark.read.parquet(s"$rroot/state/events_log").count()
-      System.err.println(f"[bench-scale] s30 sustained: $logged rows committed in " +
-        f"$sustained%.1f s (${logged / sustained}%.0f rows/s vs $rps purchases/s offered)")
-      streaming("s30_rate_sustained") = (sustained, logged)
-      // (b) BACKLOG DRAIN: an AvailableNow catch-up over a pre-written
-      //     purchase backlog — two rounds, because the cascade is a
-      //     self-loop: round 1 drains the purchases and republishes their
-      //     derived promises, round 2 absorbs the promises (the s09
-      //     catch-up path, same checkpoints across rounds). Backlog event
-      //     time spans 100 s — inside the 10 min watermark, so nothing is
-      //     late-dropped and the dedup state covers the whole drain.
-      val nBacklog = 50000L
-      val droot = s"$streamRoot/s30drain"
-      spark.range(nBacklog).select(
-          concat(lit("bk-"), col("id")).as("event_id"),
-          lit(graft.streaming.Envelope.PurchaseCompleted).as("event_type"),
-          timestamp_millis(lit(1700000000000L) + col("id") * 2L).as("ts"),
-          concat(lit("order-bk-"), col("id")).as("order_id"),
-          concat(lit("u"), pmod(col("id"), lit(64L))).as("user_id"),
-          ((pmod(col("id"), lit(50L)) + 1L) * 100L).as("amount"),
-          lit(null).cast("string").as("promise_id"),
-          lit(null).cast("string").as("bill_id"),
-          lit(null).cast("string").as("due_date"),
-          lit(null).cast("string").as("payment_mode"),
-          lit(null).cast("string").as("issued_date"),
-          lit(null).cast("string").as("paid_date"))
-        .write.mode("overwrite").json(s"$droot/events")
-      val t1 = System.nanoTime()
-      for (_ <- 1 to 2) {
-        val p = new graft.streaming.BnplPipeline(spark, s"$droot/events",
-          s"$droot/state", trigger = Trigger.AvailableNow)
-        p.start().foreach(_.awaitTermination())
-        p.stop()
-      }
-      val drain = (System.nanoTime() - t1) / 1e9
-      val drained = spark.read.parquet(s"$droot/state/events_log").count()
-      System.err.println(f"[bench-scale] s30 drain: $drained log rows " +
-        f"(backlog $nBacklog purchases + derived promises) in $drain%.1f s")
-      streaming("s30_backlog_drain") = (drain, drained)
-      noteHeap()
-      SparkEntry.clearGraftCaches(spark)
-    }
-    if (sections("stream")) locally { // s51 socket transport (r15, r14 verdict
-      // item 5): the full cascade fed a purchase backlog over a REAL TCP
-      // hop — loopback socket server → Spark's built-in socket source —
-      // with the derived-promise self-loop republished through the same
-      // socket. Measured to the CONVERGED log (backlog purchases + their
-      // derived promises all committed), the honest end-to-end number.
-      val nSock = 20000L
-      val sroot = s"$streamRoot/s51sock"
-      val lines = (0L until nSock).map { i =>
-        s"""{"event_id":"sk-$i","event_type":"${graft.streaming.Envelope.PurchaseCompleted}",""" +
-        s""""ts":"${java.time.Instant.ofEpochMilli(1700000000000L + i * 2L)}",""" +
-        s""""order_id":"order-sk-$i","user_id":"u${i % 64}","amount":${(i % 50 + 1) * 100}}"""
-      }
-      val sb = new graft.streaming.SocketBroker(spark)
-      val pipe = new graft.streaming.BnplPipeline(spark, s"$sroot/events",
-        s"$sroot/state", broker = Some(sb.brokerArg))
-      val t0 = System.nanoTime()
-      pipe.start()
-      val committed = try {
-        // publish in broker-sized chunks (the wire is line-framed; chunking
-        // only bounds the per-write syscall, not the semantics)
-        lines.grouped(2000).foreach(sb.publish)
-        def logged(): Long =
-          try spark.read.parquet(s"$sroot/state/events_log").count()
-          catch { case _: Throwable => 0L }
-        val want = nSock * 2 // purchases + their derived promises
-        val deadline = System.nanoTime() + 600L * 1000000000L
-        while (logged() < want && System.nanoTime() < deadline) pipe.drain(1)
-        logged()
-      } finally { pipe.stop(); sb.close() }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench-scale] s51 socket: $committed log rows " +
-        f"($nSock purchases over TCP + derived promises) in $dt%.1f s " +
-        f"(${committed / dt}%.0f rows/s)")
-      streaming("s51_socket_transport") = (dt, committed)
-      noteHeap()
-      SparkEntry.clearGraftCaches(spark)
     }
 
     // ---- report ----
@@ -1208,7 +613,7 @@ object BenchScale {
       if (d.isNaN) "null" else f"$d%.3f"
     def jarr(xs: Seq[Double]): String = xs.map(jnum).mkString("[", ",", "]")
     // section-scoped re-runs may never have built the max corpus; the
-    // report must degrade to null, not crash at the finish line (r11)
+    // report must degrade to null, not crash at the finish line
     def countOrNull(path: String): String =
       graft.streaming.BatchStore.read(spark, path).fold("null")(_.count().toString)
     val ladder = factors.sorted

@@ -41,46 +41,60 @@ object SparkEntry {
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false")
 
   /** Apply [[EngineConfs]] to a live session (all confs are
-    * runtime-settable) and install the [[CancelNoise]] log filter. */
+    * runtime-settable) and install the [[LogNoise]] log filters. */
   def applyEngineConfs(spark: SparkSession): Unit = {
     EngineConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    dropCancelNoise()
+    dropLogNoise()
   }
 
-  /** The one DAGScheduler message the logs drop. Stopping a streaming
-    * query cancels its run's job group, and when that group has no running
-    * job DAGScheduler logs this WARN from its event-loop thread, so every
-    * clean stop of an idle query logs it. A level change scoped around
-    * `stop()` would race that thread; a message filter does not, and every
-    * other DAGScheduler WARN stays visible. */
-  val CancelNoise = "Failed to cancel job group .*\\. Cannot find active jobs for it\\."
+  /** The (logger, message regex) pairs the logs drop; every other message
+    * of these loggers stays visible.
+    *
+    * DAGScheduler: stopping a streaming query cancels its run's job group,
+    * and when that group has no running job DAGScheduler logs this WARN
+    * from its event-loop thread, so every clean stop of an idle query logs
+    * it. A level change scoped around `stop()` would race that thread; a
+    * message filter does not.
+    *
+    * ResolveWriteToStream and MicroBatchExecution: every streaming query
+    * started on a session with AQE on, and every stateful one again at
+    * each micro-batch plan, says that AQE is disabled for it. That is
+    * Spark's fixed behaviour, not a fault of the query. */
+  val LogNoise: Seq[(String, String)] = Seq(
+    "org.apache.spark.scheduler.DAGScheduler" ->
+      "Failed to cancel job group .*\\. Cannot find active jobs for it\\.",
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream" ->
+      "spark\\.sql\\.adaptive\\.enabled is not supported in streaming DataFrames/Datasets.*",
+    "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution" ->
+      "Disabling AQE since AQE is not supported in stateful workloads\\.")
 
-  private val DagSchedulerLogger = "org.apache.spark.scheduler.DAGScheduler"
-  private var cancelNoiseOn: AnyRef = null
+  private var noiseOn = Map.empty[String, AnyRef]
 
-  /** Attach a [[CancelNoise]] deny filter to the DAGScheduler logger,
-    * once per logging configuration. The logger config created for it
-    * has no level of its own, so it keeps inheriting the root level that
+  /** Attach each [[LogNoise]] deny filter to its logger, once per logging
+    * configuration. A logger config created for it has no level of its
+    * own, so it keeps inheriting the root level that
     * `sparkContext.setLogLevel` sets. */
-  private def dropCancelNoise(): Unit = synchronized {
+  private def dropLogNoise(): Unit = synchronized {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{Filter, LoggerContext}
     import org.apache.logging.log4j.core.config.LoggerConfig
     import org.apache.logging.log4j.core.filter.RegexFilter
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val config = ctx.getConfiguration
-    val own = config.getLoggerConfig(DagSchedulerLogger)
-    val lc = if (own.getName == DagSchedulerLogger) own else {
-      val created = new LoggerConfig(DagSchedulerLogger, null, true)
-      config.addLogger(DagSchedulerLogger, created)
-      created.start()
-      created
-    }
-    if (cancelNoiseOn ne lc) {
-      lc.addFilter(RegexFilter.createFilter(CancelNoise, null, false,
-        Filter.Result.DENY, Filter.Result.NEUTRAL))
-      ctx.updateLoggers()
-      cancelNoiseOn = lc
+    for ((logger, message) <- LogNoise) {
+      val own = config.getLoggerConfig(logger)
+      val lc = if (own.getName == logger) own else {
+        val created = new LoggerConfig(logger, null, true)
+        config.addLogger(logger, created)
+        created.start()
+        created
+      }
+      if (!noiseOn.get(logger).exists(_ eq lc)) {
+        lc.addFilter(RegexFilter.createFilter(message, null, false,
+          Filter.Result.DENY, Filter.Result.NEUTRAL))
+        noiseOn += logger -> lc
+        ctx.updateLoggers()
+      }
     }
   }
 

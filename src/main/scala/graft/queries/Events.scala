@@ -332,16 +332,22 @@ object Events {
   /** q113 core on a plain (user_id, event_id, event_type, ts) frame so
     * SemanticsSpec can pin the collapse/open-interval boundaries on
     * planted rows. */
-  private[graft] def scd2(events: DataFrame): DataFrame = {
+  private[graft] def scd2(events: DataFrame): DataFrame =
+    scd2Intervals(events
+      .select(col("user_id"), col("event_id"), col("event_type").as("status"), col("ts")))
+      .orderBy(col("user_id"), col("valid_from"), col("event_id"))
+
+  /** The SCD2 interval kernel of q113 and s24 over (user_id, event_id,
+    * status, ts): per user in (ts, event_id) order, lag drops the rows
+    * that repeat the previous status and lead closes each interval at the
+    * next change (NULL valid_to for the open one). Unordered output. */
+  private[graft] def scd2Intervals(ev: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    events
-      .select(col("user_id"), col("event_id"), col("event_type").as("status"), col("ts"))
-      .withColumn("prev_status", lag(col("status"), 1).over(w))
+    ev.withColumn("prev_status", lag(col("status"), 1).over(w))
       .filter(col("prev_status").isNull || col("prev_status") =!= col("status"))
       .withColumn("valid_to", lead(col("ts"), 1).over(w))
       .select(col("user_id"), col("event_id"), col("status"),
         col("ts").as("valid_from"), col("valid_to"))
-      .orderBy(col("user_id"), col("valid_from"), col("event_id"))
   }
 
   /** q142: peak promise concurrency per month — the sweep-line

@@ -55,16 +55,23 @@ object Pack {
 
   /** Per-document frame: (shard_id, doc_id, t) with t capped at C. */
   private[graft] def docFrame(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select((col("doc_id") % PackShards).as("shard_id"), col("doc_id"),
-        least(size(split(col("text"), " ")).cast("long"), lit(PackContext)).as("t"))
+    docsOf(Tables.documents(spark, sfDir))
+
+  /** (shard_id, doc_id, t) of a (doc_id, text, …) frame. */
+  private[graft] def docsOf(docs: DataFrame): DataFrame =
+    docs.select((col("doc_id") % PackShards).as("shard_id"), col("doc_id"),
+      least(size(split(col("text"), " ")).cast("long"), lit(PackContext)).as("t"))
 
   /** The streaming per-shard fold: rows arrive hash-clustered by shard and
     * sorted (shard_id, doc_id) within the partition; the iterator carries
     * only the open bin's (shard, fill, bin) and emits (shard_id, doc_id,
-    * t, bin_id) per document. A partition may hold several whole shards —
-    * state resets when shard_id changes. */
-  private[graft] def packAssignments(spark: SparkSession, docs: DataFrame): DataFrame = {
+    * t, bin_id, fill_after) per document. A partition may hold several
+    * whole shards — state resets when shard_id changes, to the shard's
+    * carried (fill, bin) in `seed` (s23's stored tails) or, for a shard
+    * with no seed, to "no open bin yet" (a fresh shard opens bin 0 with
+    * its first doc). */
+  private[graft] def packAssignments(spark: SparkSession, docs: DataFrame,
+      seed: Map[Long, (Long, Long)] = Map.empty): DataFrame = {
     import spark.implicits._
     docs.select(col("shard_id"), col("doc_id"), col("t"))
       .repartition(col("shard_id"))
@@ -72,16 +79,21 @@ object Pack {
       .as[(Long, Long, Long)]
       .mapPartitions { it =>
         var shard = Long.MinValue
-        var fill = 0L
+        var fill = -1L
         var bin = 0L
         it.map { case (s, d, t) =>
-          if (s != shard) { shard = s; bin = 0L; fill = t }
+          if (s != shard) {
+            shard = s
+            val (sf, sb) = seed.getOrElse(s, (-1L, 0L))
+            fill = sf; bin = sb
+          }
+          if (fill < 0L) { bin = 0L; fill = t }
           else if (fill + t > PackContext) { bin += 1L; fill = t }
           else fill += t
-          (s, d, t, bin)
+          (s, d, t, bin, fill)
         }
       }
-      .toDF("shard_id", "doc_id", "t", "bin_id")
+      .toDF("shard_id", "doc_id", "t", "bin_id", "fill_after")
   }
 
   /** Declarative twin of [[packAssignments]] — the executable spec: per
@@ -123,8 +135,12 @@ object Pack {
     * length distribution wants a smarter packer (first-fit-decreasing)
     * or a larger context. */
   def q96(spark: SparkSession, sfDir: String): DataFrame =
-    packAssignments(spark, docFrame(spark, sfDir))
-      .groupBy(col("shard_id"), col("bin_id"))
+    binSummary(packAssignments(spark, docFrame(spark, sfDir)))
+
+  /** Per-(shard_id, bin_id) summary of (shard_id, doc_id, t, bin_id)
+    * assignments: q96's output, and s23's read over every batch packed. */
+  private[graft] def binSummary(asg: DataFrame): DataFrame =
+    asg.groupBy(col("shard_id"), col("bin_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("t")).as("bin_tokens"),
         min(col("doc_id")).as("min_doc"),

@@ -392,22 +392,34 @@ object Text {
     * posture), and the oracle computes the same intersection counts from
     * raw strings. */
   def q67(spark: SparkSession, sfDir: String): DataFrame = {
-    // hash BEFORE distinct — same fixed-width-longs posture as q36: the
-    // distinct's shuffle carries (doc_id, long), never the raw strings
+    val (train, bench) = contamSplit(spark, sfDir)
+    contamAudit(train, bench).orderBy(col("train_doc"), col("bench_doc"))
+  }
+
+  /** q67/q101's two sides: distinct (train_doc, hm) and (bench_doc, hm)
+    * shingle hashes, with source `src0` as the benchmark. Hashed BEFORE
+    * distinct — same fixed-width-longs posture as q36: the distinct's
+    * shuffle carries (doc_id, long), never the raw strings. */
+  private def contamSplit(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     val s = rawShingles(spark, sfDir)
       .select(col("doc_id"), xxhash64(col("shingle")).as("hm"))
       .distinct()
       .join(docs(spark, sfDir).select(col("doc_id"), col("source")), Seq("doc_id"))
-    val bench = s.filter(col("source") === "src0")
-      .select(col("doc_id").as("bench_doc"), col("hm"))
-    val train = s.filter(col("source") =!= "src0")
-      .select(col("doc_id").as("train_doc"), col("hm"))
-    train.join(bench, Seq("hm"))
+    (s.filter(col("source") =!= "src0").select(col("doc_id").as("train_doc"), col("hm")),
+      s.filter(col("source") === "src0").select(col("doc_id").as("bench_doc"), col("hm")))
+  }
+
+  /** The contamination audit kernel of q67, q101 and s19: join distinct
+    * (train_doc, hm) with (bench_doc, hm) on hm and keep the pairs sharing
+    * at least [[ContamMinShared]] hashes. With a Bloom over the benchmark
+    * hashes, train hashes it rejects drop map-side before the join. */
+  private[graft] def contamAudit(train: DataFrame, bench: DataFrame,
+      bloom: Option[Array[Byte]] = None): DataFrame =
+    bloom.fold(train)(bf => train.filter(mightContain(bf, col("hm"))))
+      .join(bench, Seq("hm"))
       .groupBy(col("train_doc"), col("bench_doc"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= ContamMinShared)
-      .orderBy(col("train_doc"), col("bench_doc"))
-  }
 
   /** q101 Bloom sizing: capacity upper bound for the BENCHMARK side's
     * distinct shingles and the target false-positive rate. Capacity only
@@ -439,20 +451,8 @@ object Text {
     * distributed, one row to the driver). might_contain is codegen'd, so
     * the drop happens inside the scan's WholeStageCodegen. */
   def q101(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = rawShingles(spark, sfDir)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("hm"))
-      .distinct()
-      .join(docs(spark, sfDir).select(col("doc_id"), col("source")), Seq("doc_id"))
-    val bench = s.filter(col("source") === "src0")
-      .select(col("doc_id").as("bench_doc"), col("hm"))
-    val train = s.filter(col("source") =!= "src0")
-      .select(col("doc_id").as("train_doc"), col("hm"))
-    val bloom = bloomOf(bench.select(col("hm")))
-    train.filter(mightContain(bloom, col("hm")))
-      .join(bench, Seq("hm"))
-      .groupBy(col("train_doc"), col("bench_doc"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= ContamMinShared)
+    val (train, bench) = contamSplit(spark, sfDir)
+    contamAudit(train, bench, Some(bloomOf(bench.select(col("hm")))))
       .orderBy(col("train_doc"), col("bench_doc"))
   }
 

@@ -54,14 +54,11 @@ object Decontamination {
   /** One batch's audit: the q67 kernel over (batch × benchmark) with the
     * q101 Bloom prefilter. Pure function of its inputs — no store read. */
   private[graft] def auditBatch(batch: DataFrame, bench: BenchIndex): DataFrame =
-    Text.shinglesOf(batch)
-      .select(col("doc_id").as("train_doc"), xxhash64(col("shingle")).as("hm"))
-      .distinct()
-      .filter(Text.mightContain(bench.bloom, col("hm")))
-      .join(bench.shingles, Seq("hm"))
-      .groupBy(col("train_doc"), col("bench_doc"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= Text.ContamMinShared)
+    Text.contamAudit(
+      Text.shinglesOf(batch)
+        .select(col("doc_id").as("train_doc"), xxhash64(col("shingle")).as("hm"))
+        .distinct(),
+      bench.shingles, Some(bench.bloom))
 
   /** foreachBatch body: audit → the batch's own partition. */
   private[graft] def processBatch(batch: DataFrame, bench: BenchIndex,

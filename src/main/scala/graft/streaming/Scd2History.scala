@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.queries.Events
 
 /** s24: streaming SCD2 projection history — the online form of q113,
   * completing the projection family's symmetry: q27 (latest state) has
@@ -75,13 +76,7 @@ object Scd2History {
         col("valid_from").as("ts"))
       // q113's kernel over tail ∪ batch: the tail sorts first under the
       // arrival-order contract (its (ts, event_id) precedes the batch's)
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val intervals = tails.unionByName(ev)
-        .withColumn("prev_status", lag(col("status"), 1).over(w))
-        .filter(col("prev_status").isNull || col("prev_status") =!= col("status"))
-        .withColumn("valid_to", lead(col("ts"), 1).over(w))
-        .select(col("user_id"), col("event_id"), col("status"),
-          col("ts").as("valid_from"), col("valid_to"))
+      val intervals = Events.scd2Intervals(tails.unionByName(ev))
         // eager pin: feeds both the closed write and the tail write, and
         // the dynamic overwrite below rewrites paths a lazy plan might
         // re-read

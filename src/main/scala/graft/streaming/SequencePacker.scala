@@ -67,31 +67,8 @@ object SequencePacker {
       if (violations.nonEmpty) throw BatchStore.violation("s23", batchId,
         "next-fit is order-sensitive; q96 parity would silently break", violations.take(3).toSeq)
     }
-    val asg = batch
-      .select((col("doc_id") % Pack.PackShards).as("shard_id"), col("doc_id"),
-        least(size(split(col("text"), " ")).cast("long"), lit(Pack.PackContext)).as("t"))
-      .repartition(col("shard_id"))
-      .sortWithinPartitions(col("shard_id"), col("doc_id"))
-      .as[(Long, Long, Long)]
-      .mapPartitions { it =>
-        // q96's fold, seeded from the carried tails: fill < 0 marks "no
-        // open bin yet" (a fresh shard opens bin 0 with this doc)
-        var shard = Long.MinValue
-        var fill = -1L
-        var bin = 0L
-        it.map { case (s, d, t) =>
-          if (s != shard) {
-            shard = s
-            val (pf, pb, _) = tails.getOrElse(s, (-1L, 0L, Long.MinValue))
-            fill = pf; bin = pb
-          }
-          if (fill < 0L) { bin = 0L; fill = t }
-          else if (fill + t > Pack.PackContext) { bin += 1L; fill = t }
-          else fill += t
-          (s, d, t, bin, fill)
-        }
-      }
-      .toDF("shard_id", "doc_id", "t", "bin_id", "fill_after")
+    val asg = Pack.packAssignments(spark, Pack.docsOf(batch),
+        tails.map { case (s, (fill, bin, _)) => s -> ((fill, bin)) })
       // eager pin: feeds the assignment write AND the tail aggregate, and
       // the dynamic overwrite below rewrites paths a lazy plan might
       // re-read
@@ -115,13 +92,6 @@ object SequencePacker {
     * assignment partitions. Schema-stable empty frame before the first
     * write. */
   def packedSummary(spark: SparkSession, assignDir: String): DataFrame =
-    BatchStore.readOr(spark, assignDir)(spark.range(0).select(col("id").as("shard_id"),
-        col("id").as("doc_id"), col("id").as("t"), col("id").as("bin_id")))
-      .groupBy(col("shard_id"), col("bin_id"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("t")).as("bin_tokens"),
-        min(col("doc_id")).as("min_doc"),
-        max(col("doc_id")).as("max_doc"))
-      .withColumn("fill4", graft.ops.Dsl.ratio4(col("bin_tokens"), lit(Pack.PackContext)))
-      .orderBy(col("shard_id"), col("bin_id"))
+    Pack.binSummary(BatchStore.readOr(spark, assignDir)(spark.range(0).select(
+      col("id").as("shard_id"), col("id").as("doc_id"), col("id").as("t"), col("id").as("bin_id"))))
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.ops.Ann
 import graft.queries.Vectors
@@ -149,5 +150,20 @@ class ScaleSpec extends SparkSpec {
       .filter(col("count") > Vectors.KnnK)
     assert(overK.count() === 0L)
     SparkEntry.clearGraftCaches(spark)
+  }
+
+  test("stream legs: one per streaming_x32 key of BENCH_scale.json, in order, built without running") {
+    val committed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("BENCH_scale.json")).get("streaming_x32")
+    val want = committed.fieldNames().asScala.toList
+    // nothing exists under these paths: building the table must not touch them
+    val missing = "/nonexistent/bench-scale"
+    val keys = BenchScale.streamLegs(spark, missing, missing, missing, 32).map(_.key).toList
+    assert(keys == want, s"leg keys drifted from the artifact: ${keys.diff(want)} vs ${want.diff(keys)}")
+  }
+
+  test("confirm octave: 2 x the largest ladder factor") {
+    assert(BenchScale.confirmFactor(Seq(1, 4, 32)) === 64)
+    assert(BenchScale.confirmFactor(Seq(1, 2)) === 4)
   }
 }

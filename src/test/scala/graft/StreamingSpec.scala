@@ -83,6 +83,50 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("streaming logs: a BnplPipeline run logs no AQE-disabled WARN; other WARNs of those loggers stay") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val loggers = Seq(
+      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+      "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("aqe-noise-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (loggers.contains(e.getLoggerName)) seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
+        "the WARNs under test are only logged on a session with AQE on")
+      val eventsDir = tmpDir("aqe-noise-events")
+      writeEvents(eventsDir, "e1.json", Seq(
+        ev("ev-1", Envelope.PurchaseCompleted, "2024-03-01T10:00:00.000Z",
+          "order_id" -> "\"order-u1\"", "user_id" -> "\"u1\"", "amount" -> "4000")))
+      val pipe = new BnplPipeline(spark, eventsDir, tmpDir("aqe-noise-state"))
+      pipe.start()
+      try pipe.drain() finally pipe.stop()
+      for (logger <- loggers) LogManager.getLogger(logger).warn(s"aqe-noise control warning $logger")
+      val noise = seen.toArray.map(_.toString).filter(m =>
+        m.contains("is not supported in streaming DataFrames/Datasets") ||
+          m.contains("Disabling AQE since AQE is not supported in stateful workloads"))
+      assert(noise.isEmpty, s"${noise.length} AQE-disabled WARNs: ${noise.take(3).mkString("; ")}")
+      for (logger <- loggers)
+        assert(seen.contains(s"aqe-noise control warning $logger"),
+          s"the capture missed a $logger WARN: ${seen.toArray.mkString("; ")}")
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+  }
+
   test("s14: incremental dedup admits novel docs, rejects near-dups within and across batches") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

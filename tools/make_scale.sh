@@ -5,7 +5,8 @@
 #
 #   gen   32        — build the x32 amplified corpus under target/scale/x32
 #   bench 1,4,32    — run graft.BenchScale over the given factors and write
-#                     BENCH_scale.json at the repo root
+#                     BENCH_scale.json at the repo root; the confirm octave
+#                     runs at 2 × the largest factor (x64 for 1,4,32)
 #
 # The amplifier itself is graft.ScaleGen (Scala — it IS a Spark job: the
 # per-replica token salting / vector rotation are the same column
