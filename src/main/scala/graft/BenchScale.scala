@@ -156,12 +156,20 @@ object BenchScale {
     ((System.nanoTime() - t0) / 1e9, rows)
   }
 
-  /** Micro-batches per stream leg. */
-  private val StreamBatches = 4
+  /** Most micro-batches per stream leg. */
+  private val MaxStreamBatches = 4
+
+  /** The replicas each micro-batch of a stream leg over a ×`aMax` corpus
+    * reads: at most [[MaxStreamBatches]] blocks of ⌈aMax / 4⌉ whole
+    * replicas (4 × 8 at ×32), none empty, every replica in one. */
+  private[graft] def streamBatches(aMax: Int): Seq[Range] = {
+    val per = (aMax + MaxStreamBatches - 1) / MaxStreamBatches
+    (0 until aMax by per).map(lo => lo until math.min(lo + per, aMax))
+  }
 
   /** The stream legs over the ×`aMax` corpus in `bigDir`, in report order:
-    * one per store-backed component. Every store reads `StreamBatches`
-    * blocks of whole replicas; replicas hold disjoint ids and users, so
+    * one per store-backed component. Every store reads the
+    * [[streamBatches]] blocks; replicas hold disjoint ids and users, so
     * each user's whole chain sits in one batch and the order-gated
     * stores' arrival contract holds trivially. Static artifacts a
     * deployment builds once (s19's benchmark index, s22's frozen model)
@@ -169,12 +177,12 @@ object BenchScale {
     * codebook and s31's budgets included, is timed. */
   private[graft] def streamLegs(spark: SparkSession, base: String, bigDir: String,
       streamRoot: String, aMax: Int): Seq[Leg] = {
-    val repsPerBatch = math.max(1, aMax / StreamBatches)
+    val blocks = streamBatches(aMax)
     def at(p: String): String = s"$streamRoot/$p"
     def replicaBlock(table: => DataFrame, idCol: String, cols: Seq[Column] = Nil)(
         b: Int): DataFrame = {
       val block = table.filter((col(idCol) / ScaleGen.IdStride).cast("int")
-        .between(b * repsPerBatch, (b + 1) * repsPerBatch - 1))
+        .between(blocks(b).head, blocks(b).last))
       if (cols.isEmpty) block else block.select(cols: _*)
     }
     def events(idCol: String, cols: String*): Int => DataFrame =
@@ -185,14 +193,14 @@ object BenchScale {
       replicaBlock(spark.read.parquet(s"$bigDir/embeddings.parquet"), "vec_id")
     val cents = (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long")
     def ingest(batch: Int => DataFrame)(f: (DataFrame, Long) => Unit): Unit =
-      for (b <- 0 until StreamBatches) f(batch(b), b.toLong)
+      for (b <- blocks.indices) f(batch(b), b.toLong)
     // ingest + read in one timer
     def ingestLeg(key: String, batch: Int => DataFrame)(f: (DataFrame, Long) => Unit)(
         read: => DataFrame): Leg =
       Leg(key, () => timed { ingest(batch)(f); read.count() })
     // ingest alone; its rows are the batch count
     def ingestOnly(key: String, batch: Int => DataFrame)(f: (DataFrame, Long) => Unit): Leg =
-      Leg(key, () => timed { ingest(batch)(f); StreamBatches.toLong })
+      Leg(key, () => timed { ingest(batch)(f); blocks.size.toLong })
     // one more read of a store an earlier leg built
     def readLeg(key: String)(read: => DataFrame): Leg = Leg(key, () => timed(read.count()))
     def baseDocs = spark.read.parquet(s"$base/documents.parquet")
@@ -200,7 +208,7 @@ object BenchScale {
     Seq(
       ingestLeg("s14_incremental_dedup", docs)(IncrementalDedup.processBatch(_,
         at("s14/store"), at("s14/accept"), at("s14/reject"), _))(
-        spark.read.parquet(at("s14/accept"))),
+        IncrementalDedup.accepted(spark, at("s14/accept"))),
       ingestLeg("s15_incremental_index", docs)(IncrementalIndex.processBatch(_,
         at("s15/store"), _))(IncrementalIndex.readIndex(spark, at("s15/store"))),
       readLeg("s18_search_read")(IncrementalIndex.search(spark, at("s15/store"))),
@@ -279,7 +287,7 @@ object BenchScale {
         timed {
           val dom = graft.queries.ZOrder.domainOf(dims).localCheckpoint(true)
           ingest(replicaBlock(dims, "ck"))(LayoutStats.processBatch(_, dom, at("s33/store"), _))
-          StreamBatches.toLong
+          blocks.size.toLong
         }
       }),
       readLeg("s33_layout_read")(LayoutStats.envelopePanel(spark, at("s33/store"))),

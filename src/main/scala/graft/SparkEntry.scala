@@ -59,14 +59,21 @@ object SparkEntry {
     * ResolveWriteToStream and MicroBatchExecution: every streaming query
     * started on a session with AQE on, and every stateful one again at
     * each micro-batch plan, says that AQE is disabled for it. That is
-    * Spark's fixed behaviour, not a fault of the query. */
+    * Spark's fixed behaviour, not a fault of the query.
+    *
+    * WindowExec: every window without `partitionBy` warns that it moves
+    * its input to one partition. Such windows are allowed only above a
+    * reduced frame, and only at the sites PlanSpec's "unpartitioned
+    * windows" law enumerates; that law is the gate this WARN repeats. */
   val LogNoise: Seq[(String, String)] = Seq(
     "org.apache.spark.scheduler.DAGScheduler" ->
       "Failed to cancel job group .*\\. Cannot find active jobs for it\\.",
     "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream" ->
       "spark\\.sql\\.adaptive\\.enabled is not supported in streaming DataFrames/Datasets.*",
     "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution" ->
-      "Disabling AQE since AQE is not supported in stateful workloads\\.")
+      "Disabling AQE since AQE is not supported in stateful workloads\\.",
+    "org.apache.spark.sql.execution.window.WindowExec" ->
+      "No Partition Defined for Window operation!.*")
 
   private var noiseOn = Map.empty[String, AnyRef]
 

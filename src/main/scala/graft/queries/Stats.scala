@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Dsl._
@@ -35,6 +35,9 @@ object Stats {
 
   private def daily(spark: SparkSession, sfDir: String): DataFrame =
     dailyOf(events(spark, sfDir))
+
+  /** The exact-integer carrier of the moment and rank kernels. */
+  private def dec(x: Column): Column = x.cast("decimal(38,0)")
 
   /** q132 smoothing constant: EWMA decay (1 − α) = 3/4 — exactly
     * representable in binary, so the fold multiplies by the same double
@@ -543,13 +546,12 @@ object Stats {
       sum(when(col("variant") === 0, col("conv")).otherwise(0L)).as("conv_a"),
       sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
       sum(when(col("variant") === 1, col("conv")).otherwise(0L)).as("conv_b"))
-    def d(x: org.apache.spark.sql.Column) = x.cast("decimal(38,0)")
-    val adbc = d(col("conv_a")) * d(col("n_b") - col("conv_b")) -
-      d(col("n_a") - col("conv_a")) * d(col("conv_b"))
-    val num = d(col("n_a") + col("n_b")) * adbc * adbc
-    val den = d(col("n_a")) * d(col("n_b")) *
-      d(col("conv_a") + col("conv_b")) *
-      d(col("n_a") + col("n_b") - col("conv_a") - col("conv_b"))
+    val adbc = dec(col("conv_a")) * dec(col("n_b") - col("conv_b")) -
+      dec(col("n_a") - col("conv_a")) * dec(col("conv_b"))
+    val num = dec(col("n_a") + col("n_b")) * adbc * adbc
+    val den = dec(col("n_a")) * dec(col("n_b")) *
+      dec(col("conv_a") + col("conv_b")) *
+      dec(col("n_a") + col("n_b") - col("conv_a") - col("conv_b"))
     c.select(col("n_a"), col("conv_a"), col("n_b"), col("conv_b"),
       when(col("n_a") > 0, ratio4(col("conv_a"), col("n_a")))
         .otherwise(lit(null).cast("double")).as("cr_a4"),
@@ -1125,7 +1127,6 @@ object Stats {
     val daily = pin(dailyIn.select(col("event_type"), col("d"),
       (col("sum_v").cast("decimal(18,4)") * 100).cast("long").as("sc")))
     val ref = daily.agg(max(col("d")).as("ref_d"))
-    def dec(x: org.apache.spark.sql.Column) = x.cast("decimal(38,0)")
     daily.crossJoin(broadcast(ref))
       .withColumn("dd", datediff(col("ref_d"), col("d")))
       .withColumn("k", least(expr(s"dd div $DecayHalfLifeDays"), lit(DecayClampK.toLong)))
@@ -1174,7 +1175,6 @@ object Stats {
     * keys + x + y) — q171 (contemporaneous, unordered pairs) and q177
     * (lagged, ordered pairs) both reduce to this one moment kernel. */
   private def corrOfPairs(j: DataFrame, keys: Seq[String]): DataFrame = {
-    def dec(x: org.apache.spark.sql.Column) = x.cast("decimal(38,0)")
     val s = j.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_days"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -1302,7 +1302,6 @@ object Stats {
 
   /** q173 kernel on a (o_custkey, cents) frame (planted-data seam). */
   private[graft] def revenueGini(rows: DataFrame): DataFrame = {
-    def dec(x: org.apache.spark.sql.Column) = x.cast("decimal(38,0)")
     val terms = rankedRevenueHist(rows)
       .agg(sum(col("c")).as("n"),
         sum(dec(col("v")) * dec(col("c"))).as("s"),
@@ -1340,7 +1339,6 @@ object Stats {
 
   /** q174 kernel on a (o_custkey, cents) frame (planted-data seam). */
   private[graft] def revenueDeciles(rows: DataFrame): DataFrame = {
-    def dec(x: org.apache.spark.sql.Column) = x.cast("decimal(38,0)")
     // the ranked histogram feeds the totals and the decile explode
     // (q104 pinning discipline)
     val rh = pin(rankedRevenueHist(rows))
@@ -1451,7 +1449,6 @@ object Stats {
       .agg(count(lit(1)).as("n_days"), sum(col("n")).as("total"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def dec(x: org.apache.spark.sql.Column) = x.cast("decimal(38,0)")
     val dev = daily
       .withColumn("prefix", sum(col("n")).over(w))
       .withColumn("k", count(lit(1)).over(w))

@@ -29,22 +29,18 @@ import graft.queries.Stats
   */
 object BarStats {
 
-  private def emptyPartials(spark: SparkSession): DataFrame =
-    Stats.barPartials(spark.range(0).select(
-      lit("").as("event_type"), lit(null).cast("timestamp").as("ts"),
-      lit(0L).as("event_id"), lit(0.0).as("value")))
+  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(Stats.barPartials)
 
   /** One micro-batch of (event_id, ts, event_type, value): q159 partials
     * → the batch's own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    BatchStore.write(Stats.barPartials(batch), storeDir, batchId)
-  }
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   /** The q159-shaped bar report over everything ingested so far —
     * row-for-row equal to batch q159 on the concatenated log under ANY
     * batch split. */
   def bars(spark: SparkSession, storeDir: String): DataFrame = {
-    val partials = BatchStore.readOr(spark, storeDir)(emptyPartials(spark)).drop("batch_id")
+    val partials = BatchStore.readOr(spark, storeDir)(partial.empty(spark)).drop("batch_id")
     Stats.finishBars(Stats.mergeBars(partials))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 /** The on-disk layout every streaming store shares, held in one place.
   *
@@ -32,6 +33,15 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   *    overwrite whose rows were all filtered out), has no parquet footer
   *    to read; [[readOr]] and [[latest]] return the caller's empty frame
   *    instead of throwing.
+  *
+  * Every store read goes through one of these empty fallbacks; no store
+  * reads its directory raw. A store whose batch rows are a plan-only
+  * function of the batch alone states that function once, as a
+  * [[Partial]] over its input schema: each batch writes the partial of
+  * the batch, and the store's empty read is the partial of zero rows, so
+  * the written schema and the empty one cannot drift apart. A store
+  * whose rows depend on prior state or on a side input states its empty
+  * frame by hand.
   *
   * A keyed tail store carries, per key, the state its left fold needs
   * (an open interval, a funnel tuple, a last event) as an LWW row. Each
@@ -69,6 +79,21 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   *  - [[sweepCovered]] deletes the covered partitions. It is pure
   *    cleanup: it can crash, re-run or never run without moving a read. */
 object BatchStore {
+
+  /** A store's batch kernel `partial` over the `input` columns it reads:
+    * [[apply]] is what a batch writes, [[empty]] what a store that holds
+    * no parquet data reads. */
+  final case class Partial(input: StructType)(partial: DataFrame => DataFrame) {
+    def apply(batch: DataFrame): DataFrame = partial(batch)
+
+    /** The partial of zero rows ([[emptyOf]] `input`). */
+    def empty(spark: SparkSession): DataFrame = partial(emptyOf(spark, input))
+  }
+
+  /** A zero-row frame of `schema`: a local relation, so building it, or a
+    * plan over it, runs no job. */
+  def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** Batches between two automatic folds of a store. */
   val FoldEvery = 8L
@@ -115,6 +140,12 @@ object BatchStore {
       .filter(col("rn") === 1)
       .drop("rn", "batch_id")
   }
+
+  /** [[lastVersion]] of the store, or `empty` while it holds no parquet
+    * data. */
+  def readLastVersion(spark: SparkSession, dir: String, key: String)(
+      empty: => DataFrame): DataFrame =
+    read(spark, dir).fold(empty)(lastVersion(key))
 
   /** Keep every row of each key's highest batch_id and drop batch_id: the
     * read of a store whose batch replaces a key's whole row set (a

@@ -32,22 +32,19 @@ import graft.queries.Stats
   */
 object BootstrapMonitor {
 
-  private def emptyBuckets(spark: SparkSession): DataFrame =
-    spark.range(0).select(lit("").as("event_type"), lit(0L).as("h"),
-      lit(0L).as("cnt"), lit(0L).as("sum_c"))
+  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(Stats.bucketsOf)
 
   /** One micro-batch of (event_type, event_id, value): exact per-(type,
     * h60-bucket) count/cent-sum partials → the batch's own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    BatchStore.write(Stats.bucketsOf(batch), storeDir, batchId)
-  }
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   /** The q184-shaped bootstrap CI over everything ingested so far —
     * row-for-row equal to batch q184 on the concatenated log under ANY
     * batch split (bucket merge is associative and commutative; the
     * kernel sees only the merged panel). */
   def ci(spark: SparkSession, storeDir: String): DataFrame = {
-    val buckets = BatchStore.readOr(spark, storeDir)(emptyBuckets(spark))
+    val buckets = BatchStore.readOr(spark, storeDir)(partial.empty(spark))
       .groupBy(col("event_type"), col("h"))
       .agg(sum(col("cnt")).as("cnt"), sum(col("sum_c")).as("sum_c"))
     Stats.ciOfBuckets(buckets)

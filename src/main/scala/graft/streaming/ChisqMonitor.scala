@@ -24,20 +24,18 @@ import graft.queries.Stats
   */
 object ChisqMonitor {
 
-  private def emptyConv(spark: SparkSession): DataFrame =
-    spark.range(0).select(lit(0L).as("user_id"), lit(0L).as("conv"))
+  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(Stats.userConv)
 
   /** One micro-batch of (user_id, event_type): per-user conversion-flag
     * partials → the batch's own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    BatchStore.write(Stats.userConv(batch), storeDir, batchId)
-  }
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   /** The q165-shaped experiment readout over everything ingested so far
     * — row-for-row equal to batch q165 on the concatenated log under ANY
     * batch split. */
   def readout(spark: SparkSession, storeDir: String): DataFrame = {
-    val conv = BatchStore.readOr(spark, storeDir)(emptyConv(spark))
+    val conv = BatchStore.readOr(spark, storeDir)(partial.empty(spark))
       .groupBy(col("user_id"))
       .agg(max(col("conv")).as("conv"))
     Stats.chisqOfConv(conv)

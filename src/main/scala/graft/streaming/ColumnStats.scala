@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.queries.ZOrder
 
@@ -25,21 +26,20 @@ import graft.queries.ZOrder
   */
 object ColumnStats {
 
-  private def emptyCounts(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").as("v"), lit(0L).as("cnt"))
+  private val partial = BatchStore.Partial(StructType.fromDDL("v BIGINT"))(
+    _.groupBy(col("v")).agg(count(lit(1)).as("cnt")))
 
   /** One micro-batch of single-long-column `v`: per-value count
     * partials → the batch's own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    BatchStore.write(batch.groupBy(col("v")).agg(count(lit(1)).as("cnt")), storeDir, batchId)
-  }
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   /** The q180-shaped equi-depth histogram over everything ingested so
     * far — row-for-row equal to batch q180 on the concatenated input
     * under ANY batch split (the merged counts enter through the kernel's
     * own (v, cnt) histogram seam). */
   def stats(spark: SparkSession, storeDir: String): DataFrame = {
-    val merged = BatchStore.readOr(spark, storeDir)(emptyCounts(spark))
+    val merged = BatchStore.readOr(spark, storeDir)(partial.empty(spark))
       .groupBy(col("v")).agg(sum(col("cnt")).as("cnt"))
     ZOrder.equiDepthStatsOfCounts(merged)
   }

@@ -32,18 +32,17 @@ import graft.queries.Stats
   * store (≤ grid × uncompacted batches rows) feeding q135's
   * already-bounded pair kernel — the event log itself is never re-read.
   *
-  * STORE-FORMAT BREAK (r14, advisor-flagged r15): the partial schema
-  * gained the day column `d` in r14 (to serve the s48 band read), so a
-  * store written by pre-r14 code fails the merged read with a missing
-  * column. Partials are derived state — rebuild by replaying the event
+  * STORE-FORMAT BREAK: the partial schema gained the day column `d`
+  * (to serve the s48 band read), so a store written before it fails the
+  * merged read with a missing column. Partials are derived state — rebuild by replaying the event
   * log through `processBatch` (the replay law makes this exact); there
   * is deliberately no silent read-side default, because an old partition
   * coalesced onto a sentinel day would CORRUPT the s48 calendar slices
-  * while appearing to work. (SeasonalMonitor's r14 `sum_v` widening has
-  * the same posture.) The fold's coverage-watermark column was a second
+  * while appearing to work. (SeasonalMonitor's `sum_v` widening has the
+  * same posture.) The fold's coverage-watermark column was a second
   * such break, with the same rebuild-by-replay posture.
   *
-  * Read-cost note (advisor r15, closed r16): the day axis multiplies
+  * Read-cost note: the day axis multiplies
   * per-batch partition cardinality (types × days × values), so the
   * drift/IQR reads merge ~days× more rows per uncompacted batch — still
   * quantization-bounded. [[compactStore]] is the coverage-watermark
@@ -81,25 +80,22 @@ object DriftMonitor {
     * winsorized reads are invariant to it (they never look at d). */
   val BandHorizonDays = 45
 
-  private def emptyCounts(spark: SparkSession): DataFrame =
-    spark.range(0).select(lit("").as("event_type"),
-      lit(null).cast("date").as("d"), lit(0.0).as("value"), lit(0L).as("cnt"))
-
-  /** One micro-batch of (event_type, ts, value): exact per-(type, day,
-    * value) counts → the batch's own partition. The day column was added
-    * in r14 so the same store serves the calendar-sliced band read (s48);
-    * the drift/IQR reads simply merge across it. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    val partials = batch.select(col("event_type"),
-        to_date(date_trunc("day", col("ts"))).as("d"), col("value"))
+  /** Exact per-(type, day, value) counts. The day column lets the same
+    * store serve the calendar-sliced band read (s48); the drift/IQR reads
+    * simply merge across it. */
+  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(
+    _.select(col("event_type"), to_date(date_trunc("day", col("ts"))).as("d"), col("value"))
       .groupBy(col("event_type"), col("d"), col("value"))
-      .agg(count(lit(1)).as("cnt"))
-    BatchStore.writeCovered(partials, storeDir, batchId)
-  }
+      .agg(count(lit(1)).as("cnt")))
+
+  /** One micro-batch of (event_type, ts, value): the per-(type, day,
+    * value) counts → the batch's own partition. */
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.writeCovered(partial(batch), storeDir, batchId)
 
   /** The store's countable rows ([[BatchStore.readCovered]]). */
   private def storeCounts(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readCovered(spark, storeDir)(emptyCounts(spark))
+    BatchStore.readCovered(spark, storeDir)(partial.empty(spark))
 
   /** The merged (event_type, value) histogram the d-merging reads share. */
   private def valueCounts(spark: SparkSession, storeDir: String): DataFrame =
@@ -171,7 +167,7 @@ object DriftMonitor {
 
   /** s48: the THIRD read of this store — q179's daily p10/p50/p90 value
     * bands over the calendar-sliced histogram, through the SAME
-    * `Stats.bandsOfCounts` kernel batch q179 runs (the r14 day-widened
+    * `Stats.bandsOfCounts` kernel batch q179 runs (the day-widened
     * partials make this read possible; drift and IQR keep merging across
     * the day axis). Row-for-row equal to batch q179 under ANY batch
     * split; replay no-op inherits from the shared store. */

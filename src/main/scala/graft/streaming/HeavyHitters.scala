@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Dsl.freqSketch
 
@@ -44,14 +45,16 @@ object HeavyHitters {
     if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId, m)
-    val sketch = batch
-      .select(explode(split(col("text"), " ")).as("token"))
+    BatchStore.writeCovered(partial(m)(batch), storeDir, batchId)
+  }
+
+  /** The batch's m-counter sketch as (token, est) rows. */
+  private def partial(m: Int) = BatchStore.Partial(StructType.fromDDL("text STRING"))(
+    _.select(explode(split(col("text"), " ")).as("token"))
       .filter(length(col("token")) >= 1)
       .agg(freqSketch(col("token"), m).as("sk"))
       .select(explode(col("sk")).as("e"))
-      .select(col("e.token").as("token"), col("e.est").as("est"))
-    BatchStore.writeCovered(sketch, storeDir, batchId)
-  }
+      .select(col("e.token").as("token"), col("e.est").as("est")))
 
   /** The PODS'12 merge over a (token, est) frame: pointwise sum, subtract
     * the (m+1)-th largest sum (a TakeOrdered single-row probe, broadcast
@@ -69,8 +72,7 @@ object HeavyHitters {
 
   /** The queryable merged sketch over everything admitted so far. */
   def merged(spark: SparkSession, storeDir: String, m: Int = Counters): DataFrame =
-    mergeSketch(BatchStore.readCovered(spark, storeDir)(
-      spark.range(0).select(lit("").as("token"), col("id").as("est"))), m)
+    mergeSketch(BatchStore.readCovered(spark, storeDir)(partial(m).empty(spark)), m)
 
   /** Fold the live rows below `upToBatch` into a new base. The fold
     * applies [[mergeSketch]], which the mergeable-summary theorem says

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Dsl.h60
 import graft.queries.{Dedup, Text}
@@ -58,22 +59,19 @@ object IncrementalDedup {
   def processBatch(batch: DataFrame, storeDir: String,
       acceptDir: String, rejectDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    // kept: the store's readers parse the raw directory with no
-    // empty-store fallback, so it stays outside the empty-batch law
-    if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(spark, storeDir, batchId)
     val sh = Text.shinglesOf(batch)
       .select(col("doc_id"), (h60(col("shingle")) % Dedup.P).as("hm"))
     // Eager localCheckpoint, not lazy cache: `hitBatch` below SELF-joins
-    // this frame (q104 shape; r9 pinning sweep). Checkpoint blocks live
+    // this frame (the q104 shape). Checkpoint blocks live
     // outside the catalog, so the per-batch cleanup diffs the persistent-
     // RDD set instead of calling DataFrame.unpersist.
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val bands = Dedup.bandKeys(Dedup.signatures(sh)).localCheckpoint(true)
     try {
       val store = BatchStore.before(spark, storeDir, batchId)(
-          spark.emptyDataFrame.select(lit(0).as("band_id"), lit("").as("bk")).limit(0))
+          BatchStore.emptyOf(spark, StructType.fromDDL("band_id INT, bk STRING")))
         .select(col("band_id"), col("bk"))
       val hitStore = bands
         .join(store, Seq("band_id", "bk"), "left_semi")
@@ -84,7 +82,7 @@ object IncrementalDedup {
           col("a.band_id") === col("b.band_id") && col("a.bk") === col("b.bk") &&
             col("a.doc_id") > col("b.doc_id"))
         .select(col("a.doc_id").as("doc_id"))
-      // eager pin: feeds the anti/semi/anti join trio below (r9 sweep)
+      // eager pin: feeds the anti/semi/anti join trio below
       val rejected = hitStore.union(hitBatch).distinct().localCheckpoint(true)
       BatchStore.write(batch.join(rejected, Seq("doc_id"), "left_anti"), acceptDir, batchId)
       BatchStore.write(batch.join(rejected, Seq("doc_id"), "left_semi"), rejectDir, batchId)
@@ -101,6 +99,13 @@ object IncrementalDedup {
       }
     }
   }
+
+  /** The admitted documents so far, (doc_id, text). Admission depends on
+    * the prior store, so the empty read is stated here. */
+  def accepted(spark: SparkSession, acceptDir: String): DataFrame =
+    BatchStore.readOr(spark, acceptDir)(
+        BatchStore.emptyOf(spark, StructType.fromDDL("doc_id BIGINT, text STRING")))
+      .select(col("doc_id"), col("text"))
 
   /** Fold every committed partition below `upToBatch` into one
     * distinct-keyed base partition. */

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.queries.Text
 
@@ -33,20 +34,20 @@ import graft.queries.Text
   * vocab × avg-df, the same frame q91 aggregates. */
 object IncrementalIndex {
 
+  private val partial =
+    BatchStore.Partial(StructType.fromDDL("doc_id BIGINT, text STRING"))(Text.termFrequencies)
+
   /** One micro-batch upsert. Exposed for direct testing. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    // kept: the store's readers parse the raw directory with no
-    // empty-store fallback, so it stays outside the empty-batch law
-    if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)
-    BatchStore.write(Text.termFrequencies(batch), storeDir, batchId)
+    BatchStore.write(partial(batch), storeDir, batchId)
   }
 
   /** The store's current posting rows after per-doc LWW resolution —
     * (token, doc_id, tf), one version per doc. */
   private def currentPostings(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.lastVersion("doc_id")(spark.read.parquet(storeDir))
+    BatchStore.readLastVersion(spark, storeDir, "doc_id")(partial.empty(spark))
 
   /** The index as q91 would report it over the streamed corpus: the q91
     * aggregation applied to the LWW-resolved store (the batch-parity law
@@ -80,7 +81,7 @@ object IncrementalIndex {
       terms: Seq[String] = Text.Bm25Query): DataFrame = {
     // Materialize the LWW resolution ONCE: dl and tf both derive from it,
     // and without the pin the full store scan + max-batch window would
-    // execute twice per search (advisor r7).
+    // execute twice per search.
     val cur = currentPostings(spark, storeDir).localCheckpoint(true)
     val dl = cur.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val tf = cur.filter(col("token").isin(terms: _*))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.queries.ZOrder
 
@@ -30,26 +31,29 @@ import graft.queries.ZOrder
   */
 object LayoutStats {
 
+  /** Per bucket of bucketed (ck, day, bucket) rows: the count and the
+    * envelope of both dims. */
+  private val partial =
+    BatchStore.Partial(StructType.fromDDL("ck BIGINT, day BIGINT, bucket BIGINT"))(
+      _.groupBy(col("bucket"))
+        .agg(count(lit(1)).as("n"),
+          min(col("ck")).as("min_ck"), max(col("ck")).as("max_ck"),
+          min(col("day")).as("min_day"), max(col("day")).as("max_day")))
+
   /** One micro-batch of (ck, day) dims: envelope partials → the batch's
     * own partition. `dom` is the fixed quantization domain (offline
-    * column stats), broadcast at one row. */
+    * column stats), broadcast at one row; it buckets the batch before
+    * the partial, so the store's empty read needs no domain. */
   def processBatch(batch: DataFrame, dom: DataFrame, storeDir: String,
-      batchId: Long): Unit = {
-    val partials = ZOrder.bucketed(batch.select(col("ck"), col("day")), dom)
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"),
-        min(col("ck")).as("min_ck"), max(col("ck")).as("max_ck"),
-        min(col("day")).as("min_day"), max(col("day")).as("max_day"))
-    BatchStore.write(partials, storeDir, batchId)
-  }
+      batchId: Long): Unit =
+    BatchStore.write(partial(ZOrder.bucketed(batch.select(col("ck"), col("day")), dom)),
+      storeDir, batchId)
 
   /** The q149-shaped panel over everything ingested so far: merge the
     * partials, re-derive the scan verdict — row-for-row the batch q149
     * on the concatenated input (any split). */
   def envelopePanel(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readOr(spark, storeDir)(spark.range(0).select(col("id").as("bucket"),
-        col("id").as("n"), col("id").as("min_ck"), col("id").as("max_ck"),
-        col("id").as("min_day"), col("id").as("max_day")))
+    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
       .groupBy(col("bucket"))
       .agg(sum(col("n")).as("n"),
         min(col("min_ck")).as("min_ck"), max(col("max_ck")).as("max_ck"),

@@ -28,39 +28,35 @@ import org.apache.spark.sql.functions._
   */
 object LedgerStore {
 
-  private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").as("user_id"), lit("").as("presence"),
-      lit(0L).as("n_clicks"), lit(0L).as("n_purchases"),
-      lit(null).cast("double").as("purchase_value"))
-
-  /** One micro-batch of (user_id, event_type, value): exact per-user
-    * partials → the batch's own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    val partials = batch.filter(col("event_type").isin("click", "purchase"))
+  /** Per user: click count, purchase count and exact purchase value. */
+  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(
+    _.filter(col("event_type").isin("click", "purchase"))
       .groupBy(col("user_id"))
       .agg(
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("p"),
         sum(when(col("event_type") === "purchase",
-          col("value").cast("decimal(18,4)"))).as("pv"))
-    BatchStore.write(partials, storeDir, batchId)
-  }
+          col("value").cast("decimal(18,4)"))).as("pv")))
+
+  /** One micro-batch of (user_id, event_type, value): exact per-user
+    * partials → the batch's own partition. */
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   /** The q115-shaped reconciliation over everything ingested so far —
     * row-for-row equal to batch q115 on the concatenated log under ANY
     * batch split (the partial merge is associative and commutative). */
-  def ledger(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.read(spark, storeDir).fold(emptyLedger(spark)) { all =>
-      val totals = all
-        .groupBy(col("user_id"))
-        .agg(sum(col("c")).as("c"), sum(col("p")).as("p"), sum(col("pv")).as("pv"))
-        // feeds both sides of the full-outer below (r9 pinning discipline)
-        .localCheckpoint(true)
-      val clicks = totals.filter(col("c") > 0L)
-        .select(col("user_id"), col("c").as("n_clicks"))
-      val purchases = totals.filter(col("p") > 0L)
-        .select(col("user_id"), col("p").as("n_purchases"),
-          col("pv").cast("double").as("purchase_value"))
-      graft.queries.Relational.reconcile(clicks, purchases)
-    }
+  def ledger(spark: SparkSession, storeDir: String): DataFrame = {
+    val totals = BatchStore.readOr(spark, storeDir)(partial.empty(spark))
+      .groupBy(col("user_id"))
+      .agg(sum(col("c")).as("c"), sum(col("p")).as("p"), sum(col("pv")).as("pv"))
+      // pinned: it feeds both sides of the full-outer below
+      .localCheckpoint(true)
+    val clicks = totals.filter(col("c") > 0L)
+      .select(col("user_id"), col("c").as("n_clicks"))
+    val purchases = totals.filter(col("p") > 0L)
+      .select(col("user_id"), col("p").as("n_purchases"),
+        col("pv").cast("double").as("purchase_value"))
+    graft.queries.Relational.reconcile(clicks, purchases)
+  }
 }

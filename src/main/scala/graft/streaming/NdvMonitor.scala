@@ -45,22 +45,20 @@ object NdvMonitor {
     * relative standard error. */
   val LgK = 12
 
-  private def emptySketches(spark: SparkSession): DataFrame =
-    spark.range(0).select(lit("").as("event_type"),
-      lit(null).cast("binary").as("sketch"))
+  /** Per event type: the HLL sketch of its users. */
+  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(
+    _.groupBy(col("event_type")).agg(expr(s"hll_sketch_agg(user_id, $LgK)").as("sketch")))
 
   /** One micro-batch of (event_type, user_id): per-type HLL sketch
     * partial → the batch's own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    BatchStore.write(batch.groupBy(col("event_type"))
-      .agg(expr(s"hll_sketch_agg(user_id, $LgK)").as("sketch")), storeDir, batchId)
-  }
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   /** Distinct-user estimate per event type over everything ingested so
     * far — equal to the one-shot sketch estimate on the concatenated
     * log under ANY batch split (the union-merge law). */
   def ndv(spark: SparkSession, storeDir: String): DataFrame = {
-    BatchStore.readOr(spark, storeDir)(emptySketches(spark))
+    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
       .groupBy(col("event_type"))
       // allowDifferentLgConfigK=false: every sketch in the store is
       // written at the one LgK above; a foreign-width sketch must fail

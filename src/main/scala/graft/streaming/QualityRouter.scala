@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.queries.Text
 
@@ -59,8 +60,10 @@ object QualityRouter {
       outDir: String, batchId: Long): Unit =
     BatchStore.write(routeBatch(batch, frozen), outDir, batchId)
 
-  /** Everything routed so far. */
+  /** Everything routed so far. The verdicts depend on the frozen
+    * artifact, a side input, so the empty read is stated here. */
   def readRouted(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir)
+    BatchStore.readOr(spark, outDir)(BatchStore.emptyOf(spark, StructType.fromDDL(
+        "doc_id BIGINT, n_bigrams BIGINT, avg_neg_logp DOUBLE, bucket STRING")))
       .select(col("doc_id"), col("n_bigrams"), col("avg_neg_logp"), col("bucket"))
 }

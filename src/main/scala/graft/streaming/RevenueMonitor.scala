@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.queries.Stats
 
@@ -27,18 +28,16 @@ import graft.queries.Stats
   */
 object RevenueMonitor {
 
-  private def emptyRows(spark: SparkSession): DataFrame =
-    spark.range(0).select(lit(0L).as("o_custkey"), lit(0L).as("cents"))
+  private val partial = BatchStore.Partial(StructType.fromDDL("o_custkey BIGINT, cents BIGINT"))(
+    _.groupBy(col("o_custkey")).agg(sum(col("cents")).as("cents")))
 
   /** One micro-batch of (o_custkey, cents): per-customer sum partials →
     * the batch's own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    BatchStore.write(batch.groupBy(col("o_custkey")).agg(sum(col("cents")).as("cents")),
-      storeDir, batchId)
-  }
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   private def merged(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readOr(spark, storeDir)(emptyRows(spark))
+    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
       .select(col("o_custkey"), col("cents"))
 
   /** q173-shaped Gini over everything ingested so far. */

@@ -33,20 +33,16 @@ import graft.queries.Behavior
   */
 object RfmMonitor {
 
-  private def emptyMetrics(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").as("user_id"),
-      lit(null).cast("timestamp").as("last_ts"),
-      col("id").as("frequency"), col("id").as("cents"))
+  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(Behavior.rfmMetrics)
 
   /** One micro-batch of (user_id, ts, value): the batch's own per-user
     * metric partials → its own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    BatchStore.write(Behavior.rfmMetrics(batch), storeDir, batchId)
-  }
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   /** The merged per-user metric frame over everything ingested. */
   private[graft] def metrics(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readOr(spark, storeDir)(emptyMetrics(spark))
+    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
       .groupBy(col("user_id"))
       .agg(max(col("last_ts")).as("last_ts"), sum(col("frequency")).as("frequency"),
         sum(col("cents")).as("cents"))

@@ -30,43 +30,37 @@ import graft.queries.Stats
   * batch only; the read is one shuffle over ≤ types × days ×
   * uncompacted-batches partial rows into q151's calendar-bounded kernel.
   *
-  * STORE-FORMAT BREAK (r14, advisor-flagged r15): the partial schema
-  * gained the exact `sum_v` decimal column in r14 (to serve the s43 Holt
-  * read), so a store written by pre-r14 code fails the merged read with
-  * a missing column. Partials are derived state — rebuild by replaying
-  * the event log through `processBatch`; no silent read-side default
-  * (a defaulted sum would corrupt the mean-based reads while appearing
-  * to work). Same posture as DriftMonitor's r14 day widening.
+  * STORE-FORMAT BREAK: the partial schema gained the exact `sum_v`
+  * decimal column (to serve the s43 Holt read), so a store written
+  * before it fails the merged read with a missing column. Partials are
+  * derived state — rebuild by replaying the event log through
+  * `processBatch`; no silent read-side default (a defaulted sum would
+  * corrupt the mean-based reads while appearing to work). Same posture
+  * as DriftMonitor's day widening.
   */
 object SeasonalMonitor {
 
-  /** The stored partial schema: `sum_v` is the sum of decimal(18,4). */
-  private def emptyDaily(spark: SparkSession): DataFrame =
-    spark.range(0).select(lit("").as("event_type"),
-      lit(null).cast("date").as("d"), lit(0L).as("n"),
-      lit(null).cast("decimal(28,4)").as("sum_v"))
-
-  /** One micro-batch of (event_type, ts, value): exact per-(type, day)
-    * counts AND the exact DECIMAL value sum → the batch's own partition.
-    * The decimal (not double) carrier is what keeps the merge exact: the
-    * read sums the per-batch decimals and casts to double ONCE, so the
-    * merged panel equals batch `Stats.dailyOf` bit-for-bit under any
-    * split (r14: widened from counts-only so the one store serves the
-    * holt read too). */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    val partials = batch
-      .select(col("event_type"), to_date(date_trunc("day", col("ts"))).as("d"),
-        col("value"))
+  /** Per (type, day): the count AND the exact DECIMAL value sum. The
+    * decimal (not double) carrier is what keeps the merge exact: the read
+    * sums the per-batch decimals and casts to double ONCE, so the merged
+    * panel equals batch `Stats.dailyOf` bit-for-bit under any split. */
+  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(
+    _.select(col("event_type"), to_date(date_trunc("day", col("ts"))).as("d"), col("value"))
       .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).as("sum_v"))
-    BatchStore.write(partials, storeDir, batchId)
-  }
+      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,4)")).as("sum_v")))
+
+  /** One micro-batch of (event_type, ts, value): the per-(type, day)
+    * partials → the batch's own partition. */
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
+
+  private def stored(spark: SparkSession, storeDir: String): DataFrame =
+    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
 
   /** The merged (event_type, d, n, sum_v) daily panel — the dailyOf
     * equivalence every read below starts from. */
   private def mergedDaily(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readOr(spark, storeDir)(emptyDaily(spark))
+    stored(spark, storeDir)
       .groupBy(col("event_type"), col("d"))
       .agg(sum(col("n")).as("n"), sum(col("sum_v")).cast("double").as("sum_v"))
 
@@ -85,7 +79,7 @@ object SeasonalMonitor {
     * under ANY batch split; replay no-op inherits from the shared
     * store. */
   def decayed(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.decayedEngagement(BatchStore.readOr(spark, storeDir)(emptyDaily(spark))
+    Stats.decayedEngagement(stored(spark, storeDir)
       .groupBy(col("event_type"), col("d"))
       .agg(sum(col("sum_v")).as("sum_v")))
 

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.queries.Skyline
 
@@ -27,22 +28,19 @@ import graft.queries.Skyline
   */
 object SkylineMonitor {
 
-  private def emptyCounts(spark: SparkSession): DataFrame =
-    spark.range(0).select(lit(0.0).as("qty"), lit(0.0).as("price"),
-      lit(0L).as("n"))
+  private val partial = BatchStore.Partial(StructType.fromDDL("qty DOUBLE, price DOUBLE"))(
+    _.groupBy(col("qty"), col("price")).agg(count(lit(1)).as("n")))
 
   /** One micro-batch of (qty, price): per-point counts → the batch's
     * own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    BatchStore.write(batch.groupBy(col("qty"), col("price")).agg(count(lit(1)).as("n")),
-      storeDir, batchId)
-  }
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   /** The q163-shaped frontier over everything ingested so far —
     * row-for-row equal to batch q163 on the concatenated input under ANY
     * batch split. */
   def frontier(spark: SparkSession, storeDir: String): DataFrame = {
-    val counts = BatchStore.readOr(spark, storeDir)(emptyCounts(spark))
+    val counts = BatchStore.readOr(spark, storeDir)(partial.empty(spark))
       .groupBy(col("qty"), col("price"))
       .agg(sum(col("n")).as("n"))
     Skyline.frontierOfCounts(counts)

@@ -34,22 +34,18 @@ import graft.queries.Behavior
   */
 object SurvivalMonitor {
 
-  private def emptySpans(spark: SparkSession): DataFrame =
-    Behavior.userSpans(spark.range(0).select(
-      lit(0L).as("user_id"), lit(null).cast("timestamp").as("ts"),
-      lit("").as("event_type")))
+  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(Behavior.userSpans)
 
   /** One micro-batch of (user_id, ts, event_type): per-user span
     * partials → the batch's own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
-    BatchStore.write(Behavior.userSpans(batch), storeDir, batchId)
-  }
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    BatchStore.write(partial(batch), storeDir, batchId)
 
   /** The q164-shaped hazard table over everything ingested so far —
     * row-for-row equal to batch q164 on the concatenated log under ANY
     * batch split. */
   def hazard(spark: SparkSession, storeDir: String): DataFrame = {
-    val spans = BatchStore.readOr(spark, storeDir)(emptySpans(spark))
+    val spans = BatchStore.readOr(spark, storeDir)(partial.empty(spark))
       .groupBy(col("user_id"))
       .agg(min(col("t0")).as("t0"), min(col("tp")).as("tp"),
         max(col("tend")).as("tend"))

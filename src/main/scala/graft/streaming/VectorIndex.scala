@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Dsl.{cosine, round4}
 import graft.queries.Vectors
@@ -37,9 +38,6 @@ object VectorIndex {
     * this batch's own partition. Exposed for direct testing. */
   def processBatch(batch: DataFrame, cells: DataFrame, storeDir: String,
       batchId: Long): Unit = {
-    // kept: the store's readers parse the raw directory with no
-    // empty-store fallback, so it stays outside the empty-batch law
-    if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)
     BatchStore.write(Vectors.assign(batch.select(col("vec_id"), col("embedding")), cells),
@@ -47,9 +45,12 @@ object VectorIndex {
   }
 
   /** The index's current membership after per-vector LWW resolution —
-    * (vec_id, embedding, cell), one version per vector. */
+    * (vec_id, embedding, cell), one version per vector. The cells come
+    * from the codebook, a side input, so the empty membership is stated
+    * here. */
   def currentMembers(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.lastVersion("vec_id")(spark.read.parquet(storeDir))
+    BatchStore.readLastVersion(spark, storeDir, "vec_id")(BatchStore.emptyOf(spark,
+      StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, cell INT")))
 
   /** q56's probe against the streamed store: the stored vector `qId`
     * ranks the codebook cells, its NProbe nearest are semi-joined against

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.queries.Vectors
 
@@ -26,11 +27,14 @@ import graft.queries.Vectors
   * the base; the merged read is an aggregate over that bounded frame. */
 object VectorStats {
 
+  private val partial =
+    BatchStore.Partial(StructType.fromDDL("embedding ARRAY<FLOAT>"))(Vectors.statPartials)
+
   /** One micro-batch: exact partials → own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)
-    BatchStore.writeCovered(Vectors.statPartials(batch), storeDir, batchId)
+    BatchStore.writeCovered(partial(batch), storeDir, batchId)
   }
 
   /** Pointwise combine of partial rows — exact, associative,
@@ -41,17 +45,9 @@ object VectorStats {
         sum(col("sq")).as("sq"), min(col("mnq")).as("mnq"), max(col("mxq")).as("mxq"))
 
   /** The queryable panel over everything streamed so far — q102's exact
-    * output shape (same finalize formula, same ordering). Querying the
-    * panel before the first non-empty batch returns the empty frame in
-    * that same shape instead of throwing: the empty partial frame flows
-    * through combine+finalize, so the schema is derived from the one
-    * real path, not duplicated here. */
+    * output shape (same finalize formula, same ordering). */
   def stats(spark: SparkSession, storeDir: String): DataFrame =
-    Vectors.statFinalize(combine(BatchStore.readCovered(spark, storeDir)(
-      spark.range(0).select(
-        col("id").cast("int").as("i"), col("id").as("n"),
-        col("id").as("n_pos"), col("id").as("sq"),
-        col("id").as("mnq"), col("id").as("mxq")))))
+    Vectors.statFinalize(combine(BatchStore.readCovered(spark, storeDir)(partial.empty(spark))))
 
   /** Fold the live rows below `upToBatch` into a new base. */
   def foldBase(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =

@@ -2,6 +2,7 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver's parquet tables (`TESTDATA.md`).
   *
@@ -30,6 +31,11 @@ object Tables {
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   def documents(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
+
+  /** The columns and types [[events]] returns, for code that needs the
+    * schema without reading the log (a streaming store's empty read). */
+  val EventsSchema: StructType = StructType.fromDDL(
+    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
 
   /** Event log with `ts` normalized to TimestampType (micros, UTC).
     *

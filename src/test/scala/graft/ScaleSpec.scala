@@ -162,6 +162,16 @@ class ScaleSpec extends SparkSpec {
     assert(keys == want, s"leg keys drifted from the artifact: ${keys.diff(want)} vs ${want.diff(keys)}")
   }
 
+  test("stream batches: at most 4 per leg, none empty, every replica in one; 4 x 8 at x32") {
+    for (aMax <- Seq(1, 2, 5, 32)) {
+      val blocks = BenchScale.streamBatches(aMax)
+      assert(blocks.nonEmpty && blocks.size <= 4, s"x$aMax: ${blocks.size} batches")
+      assert(blocks.forall(_.nonEmpty), s"x$aMax: an empty batch in $blocks")
+      assert(blocks.flatten == (0 until aMax), s"x$aMax: replicas $blocks")
+    }
+    assert(BenchScale.streamBatches(32).map(_.size) == Seq(8, 8, 8, 8))
+  }
+
   test("confirm octave: 2 x the largest ladder factor") {
     assert(BenchScale.confirmFactor(Seq(1, 4, 32)) === 64)
     assert(BenchScale.confirmFactor(Seq(1, 2)) === 4)

@@ -2903,11 +2903,12 @@ class StreamingSpec extends SparkSpec {
 
   /** One store under the store laws: its sub-directories, one real
     * batch 0 with the ingest that feeds it, and its reads. Every path is
-    * relative to a fresh root per store state. */
+    * relative to a fresh root per store state. `source` is the store's
+    * object, which names its source file. */
   private case class StoreLaw(store: String, subdirs: Seq[String],
       batch: DataFrame,
       ingest: (DataFrame, String => String, Long) => Unit,
-      reads: Seq[(String, (String => String) => DataFrame)])
+      reads: Seq[(String, (String => String) => DataFrame)])(val source: AnyRef)
 
   private def storeLaws(): Seq[StoreLaw] = {
     import graft.streaming._
@@ -2923,81 +2924,98 @@ class StreamingSpec extends SparkSpec {
     val budgets = graft.queries.Sampling.mixBudgets(tok.select(col("source"), col("n_tok")))
       .localCheckpoint(true)
     lazy val bench = Decontamination.benchIndexOf(docs.filter(col("source") === "src0"))
+    val emb = graft.tables.Tables.embeddings(spark, sf001).select(col("vec_id"), col("embedding"))
+    lazy val cells = graft.queries.Vectors.codebook(graft.queries.Vectors.trainedComponents(
+      graft.tables.Tables.embeddings(spark, sf001))).localCheckpoint(true)
+    lazy val frozen = QualityRouter.freeze(docs.select(col("doc_id"), col("text")))
     Seq(
       StoreLaw("ledger", Seq("s"), ev, (b, d, i) => LedgerStore.processBatch(b, d("s"), i),
-        Seq("ledger" -> (d => LedgerStore.ledger(spark, d("s"))))),
+        Seq("ledger" -> (d => LedgerStore.ledger(spark, d("s")))))(LedgerStore),
       StoreLaw("ndv", Seq("s"), ev, (b, d, i) => NdvMonitor.processBatch(b, d("s"), i),
-        Seq("ndv" -> (d => NdvMonitor.ndv(spark, d("s"))))),
+        Seq("ndv" -> (d => NdvMonitor.ndv(spark, d("s")))))(NdvMonitor),
       StoreLaw("bootstrap", Seq("s"), ev, (b, d, i) => BootstrapMonitor.processBatch(b, d("s"), i),
-        Seq("ci" -> (d => BootstrapMonitor.ci(spark, d("s"))))),
+        Seq("ci" -> (d => BootstrapMonitor.ci(spark, d("s")))))(BootstrapMonitor),
       StoreLaw("rfm", Seq("s"), ev, (b, d, i) => RfmMonitor.processBatch(b, d("s"), i),
-        Seq("segments" -> (d => RfmMonitor.segments(spark, d("s"))))),
+        Seq("segments" -> (d => RfmMonitor.segments(spark, d("s")))))(RfmMonitor),
       StoreLaw("seasonal", Seq("s"), ev, (b, d, i) => SeasonalMonitor.processBatch(b, d("s"), i),
         Seq("baseline" -> (d => SeasonalMonitor.baseline(spark, d("s"))),
           "decayed" -> (d => SeasonalMonitor.decayed(spark, d("s"))),
-          "holt" -> (d => SeasonalMonitor.holt(spark, d("s"))))),
+          "holt" -> (d => SeasonalMonitor.holt(spark, d("s")))))(SeasonalMonitor),
       StoreLaw("chisq", Seq("s"), ev, (b, d, i) => ChisqMonitor.processBatch(b, d("s"), i),
-        Seq("readout" -> (d => ChisqMonitor.readout(spark, d("s"))))),
+        Seq("readout" -> (d => ChisqMonitor.readout(spark, d("s")))))(ChisqMonitor),
       StoreLaw("bars", Seq("s"), ev, (b, d, i) => BarStats.processBatch(b, d("s"), i),
-        Seq("bars" -> (d => BarStats.bars(spark, d("s"))))),
+        Seq("bars" -> (d => BarStats.bars(spark, d("s")))))(BarStats),
       StoreLaw("survival", Seq("s"), ev, (b, d, i) => SurvivalMonitor.processBatch(b, d("s"), i),
-        Seq("hazard" -> (d => SurvivalMonitor.hazard(spark, d("s"))))),
+        Seq("hazard" -> (d => SurvivalMonitor.hazard(spark, d("s")))))(SurvivalMonitor),
       StoreLaw("drift", Seq("s"), ev, (b, d, i) => DriftMonitor.processBatch(b, d("s"), i),
         Seq("drift" -> (d => DriftMonitor.drift(spark, d("s"))),
-          "bands" -> (d => DriftMonitor.bands(spark, d("s"))))),
+          "bands" -> (d => DriftMonitor.bands(spark, d("s")))))(DriftMonitor),
       StoreLaw("colstats", Seq("s"), orders.select(cents.as("v")),
         (b, d, i) => ColumnStats.processBatch(b, d("s"), i),
-        Seq("stats" -> (d => ColumnStats.stats(spark, d("s"))))),
+        Seq("stats" -> (d => ColumnStats.stats(spark, d("s")))))(ColumnStats),
       StoreLaw("skyline", Seq("s"), graft.tables.Tables.lineitem(spark, sf001)
           .select(col("l_quantity").as("qty"), col("l_extendedprice").as("price")),
         (b, d, i) => SkylineMonitor.processBatch(b, d("s"), i),
-        Seq("frontier" -> (d => SkylineMonitor.frontier(spark, d("s"))))),
+        Seq("frontier" -> (d => SkylineMonitor.frontier(spark, d("s")))))(SkylineMonitor),
       StoreLaw("revenue", Seq("s"), orders.select(col("o_custkey"), cents.as("cents")),
         (b, d, i) => RevenueMonitor.processBatch(b, d("s"), i),
         Seq("gini" -> (d => RevenueMonitor.gini(spark, d("s"))),
-          "deciles" -> (d => RevenueMonitor.deciles(spark, d("s"))))),
+          "deciles" -> (d => RevenueMonitor.deciles(spark, d("s")))))(RevenueMonitor),
       StoreLaw("layout", Seq("s"), dims, (b, d, i) => LayoutStats.processBatch(b, dom, d("s"), i),
-        Seq("envelopePanel" -> (d => LayoutStats.envelopePanel(spark, d("s"))))),
+        Seq("envelopePanel" -> (d => LayoutStats.envelopePanel(spark, d("s")))))(LayoutStats),
       StoreLaw("vectorstats", Seq("s"), graft.tables.Tables.embeddings(spark, sf001),
         (b, d, i) => VectorStats.processBatch(b, d("s"), i),
-        Seq("stats" -> (d => VectorStats.stats(spark, d("s"))))),
+        Seq("stats" -> (d => VectorStats.stats(spark, d("s")))))(VectorStats),
       StoreLaw("heavyhitters", Seq("s"), docs.select(col("doc_id"), col("text")),
         (b, d, i) => HeavyHitters.processBatch(b, d("s"), i),
-        Seq("merged" -> (d => HeavyHitters.merged(spark, d("s"))))),
+        Seq("merged" -> (d => HeavyHitters.merged(spark, d("s")))))(HeavyHitters),
       StoreLaw("decontamination", Seq("a"), docs.filter(col("source") =!= "src0"),
         (b, d, i) => Decontamination.processBatch(b, bench, d("a"), i),
-        Seq("readAudit" -> (d => Decontamination.readAudit(spark, d("a"))))),
+        Seq("readAudit" -> (d => Decontamination.readAudit(spark, d("a")))))(Decontamination),
       StoreLaw("novelty", Seq("s", "a"), docs, (b, d, i) => Novelty.processBatch(b, d("s"), d("a"), i),
-        Seq("readAudit" -> (d => Novelty.readAudit(spark, d("a"))))),
+        Seq("readAudit" -> (d => Novelty.readAudit(spark, d("a")))))(Novelty),
       StoreLaw("neardup", Seq("s", "a"), docs.select(col("doc_id"), col("text")),
         (b, d, i) => NearDupAdmission.processBatch(b, d("s"), d("a"), i),
-        Seq("admitted" -> (d => NearDupAdmission.admitted(spark, d("a"))))),
+        Seq("admitted" -> (d => NearDupAdmission.admitted(spark, d("a")))))(NearDupAdmission),
       StoreLaw("budget", Seq("s", "a"), tok,
         (b, d, i) => BudgetAdmission.processBatch(b, budgets, d("s"), d("a"), i),
         Seq("admittedDocs" -> (d => BudgetAdmission.admittedDocs(spark, d("a"))),
-          "audit" -> (d => BudgetAdmission.audit(spark, d("s"), budgets)))),
+          "audit" -> (d => BudgetAdmission.audit(spark, d("s"), budgets))))(BudgetAdmission),
       StoreLaw("packer", Seq("t", "a"), docs.select(col("doc_id"), col("text")),
         (b, d, i) => SequencePacker.processBatch(b, d("t"), d("a"), i),
-        Seq("packedSummary" -> (d => SequencePacker.packedSummary(spark, d("a"))))),
+        Seq("packedSummary" -> (d => SequencePacker.packedSummary(spark, d("a")))))(SequencePacker),
       StoreLaw("transitions", Seq("t", "c"), ev,
         (b, d, i) => TransitionStats.processBatch(b, d("t"), d("c"), i),
-        Seq("transitions" -> (d => TransitionStats.transitions(spark, d("c"))))),
+        Seq("transitions" -> (d => TransitionStats.transitions(spark, d("c")))))(TransitionStats),
       StoreLaw("sessions", Seq("o", "c"), ev,
         (b, d, i) => SessionTracker.processBatch(b, d("o"), d("c"), i),
-        Seq("flow" -> (d => SessionTracker.flow(spark, d("o"), d("c"))))),
+        Seq("flow" -> (d => SessionTracker.flow(spark, d("o"), d("c")))))(SessionTracker),
       StoreLaw("funnel", Seq("t"), ev, (b, d, i) => FunnelTracker.processBatch(b, d("t"), i),
         Seq("funnelState" -> (d => FunnelTracker.funnelState(spark, d("t"))),
-          "funnelSummary" -> (d => FunnelTracker.funnelSummary(spark, d("t"))))),
+          "funnelSummary" -> (d => FunnelTracker.funnelSummary(spark, d("t")))))(FunnelTracker),
       StoreLaw("asof", Seq("t", "e"), ev, (b, d, i) => AsOfEnrich.processBatch(b, d("t"), d("e"), i),
         Seq("enriched" -> (d => AsOfEnrich.enriched(spark, d("e"))),
-          "clickState" -> (d => AsOfEnrich.clickState(spark, d("t"))))),
+          "clickState" -> (d => AsOfEnrich.clickState(spark, d("t")))))(AsOfEnrich),
       StoreLaw("changefeed", Seq("s", "c"), ev,
         (b, d, i) => ChangeFeed.processBatch(b, d("s"), d("c"), i),
         Seq("state" -> (d => ChangeFeed.state(spark, d("s"))),
-          "feed" -> (d => ChangeFeed.feed(spark, d("c"))))),
+          "feed" -> (d => ChangeFeed.feed(spark, d("c")))))(ChangeFeed),
       StoreLaw("scd2", Seq("t", "c"), ev,
         (b, d, i) => Scd2History.processBatch(b, d("t"), d("c"), i),
-        Seq("history" -> (d => Scd2History.history(spark, d("t"), d("c"))))))
+        Seq("history" -> (d => Scd2History.history(spark, d("t"), d("c")))))(Scd2History),
+      StoreLaw("dedup", Seq("s", "a", "r"), docs.select(col("doc_id"), col("text")),
+        (b, d, i) => IncrementalDedup.processBatch(b, d("s"), d("a"), d("r"), i),
+        Seq("accepted" -> (d => IncrementalDedup.accepted(spark, d("a")))))(IncrementalDedup),
+      StoreLaw("index", Seq("s"), docs.select(col("doc_id"), col("text")),
+        (b, d, i) => IncrementalIndex.processBatch(b, d("s"), i),
+        Seq("readIndex" -> (d => IncrementalIndex.readIndex(spark, d("s"))),
+          "search" -> (d => IncrementalIndex.search(spark, d("s")))))(IncrementalIndex),
+      StoreLaw("vectorindex", Seq("s"), emb,
+        (b, d, i) => VectorIndex.processBatch(b, cells, d("s"), i),
+        Seq("currentMembers" -> (d => VectorIndex.currentMembers(spark, d("s")))))(VectorIndex),
+      StoreLaw("router", Seq("o"), docs.select(col("doc_id"), col("text")),
+        (b, d, i) => QualityRouter.processBatch(b, frozen, d("o"), i),
+        Seq("readRouted" -> (d => QualityRouter.readRouted(spark, d("o")))))(QualityRouter))
   }
 
   private def schemaOf(df: DataFrame) =
@@ -3043,7 +3061,7 @@ class StreamingSpec extends SparkSpec {
       df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     val laws = storeLaws().filterNot(l => guarded(l.store))
-    assert(laws.size == 24)
+    assert(laws.size == 28)
     for (StoreLaw(store, _, batch, ingest, reads) <- laws) {
       val empty = batch.filter(org.apache.spark.sql.functions.lit(false))
       def snapshot(root: String): Seq[(Map[Row, Int], Seq[(String, DataType)])] =
@@ -3154,6 +3172,44 @@ class StreamingSpec extends SparkSpec {
     SparkEntry.clearGraftCaches(spark)
   }
 
+  /** Each streaming source file's name and lines. */
+  private def streamingSources(): Seq[(String, Vector[String])] = {
+    val dir = new java.io.File("src/main/scala/graft/streaming")
+    val files = Option(dir.listFiles()).getOrElse(Array.empty).filter(_.getName.endsWith(".scala"))
+    assert(files.length > 30, s"streaming sources not found under ${dir.getAbsolutePath}")
+    files.toSeq.map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      (f.getName, lines)
+    }
+  }
+
+  /** `line` without a comment: blank for a comment line, else the code
+    * before a trailing ` //`. */
+  private def code(line: String): String = {
+    val t = line.trim
+    if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
+    else line.split(" //", 2)(0)
+  }
+
+  test("store-law completeness: every streaming source that defines processBatch is in the law table, and nothing else") {
+    val stores = streamingSources().collect {
+      case (name, lines) if lines.exists(l => code(l).contains("def processBatch(")) => name
+    }.toSet
+    val laws = storeLaws()
+    val covered = laws.map(_.source.getClass.getSimpleName.stripSuffix("$") + ".scala").toSet
+    assert(covered == stores,
+      s"stores without laws: ${(stores -- covered).mkString(", ")}; " +
+        s"laws without a store: ${(covered -- stores).mkString(", ")}")
+    assert(laws.size == 30 && laws.map(_.store).distinct.size == laws.size)
+    SparkEntry.clearGraftCaches(spark)
+  }
+
+  test("events schema: Tables.EventsSchema is the schema Tables.events loads, by name and type") {
+    val declared = graft.tables.Tables.EventsSchema.map(f => f.name -> f.dataType)
+    assert(declared == schemaOf(graft.tables.Tables.events(spark, sf001)))
+  }
+
   test("layout law: the batch-partition layout and the foreachBatch wiring live only in BatchStore") {
     // PlanSpec-style allowlist over the sources: each token may appear in
     // code (comments ignored) only in the files listed for it; a token is
@@ -3179,21 +3235,8 @@ class StreamingSpec extends SparkSpec {
     // returns early on one only where it would otherwise change a read or
     // fail; each such store states why in a `// kept:` comment
     val guard = "isEmpty) return"
-    val guarded = Set("HeavyHitters.scala", "NearDupAdmission.scala",
-      "IncrementalDedup.scala", "IncrementalIndex.scala", "VectorIndex.scala")
-    val dir = new java.io.File("src/main/scala/graft/streaming")
-    val files = Option(dir.listFiles()).getOrElse(Array.empty).filter(_.getName.endsWith(".scala"))
-    assert(files.length > 30, s"streaming sources not found under ${dir.getAbsolutePath}")
-    def code(line: String): String = {
-      val t = line.trim
-      if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
-      else line.split(" //", 2)(0)
-    }
-    val sources = files.toSeq.map { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val lines = try src.getLines().toVector finally src.close()
-      (f.getName, lines)
-    }
+    val guarded = Set("HeavyHitters.scala", "NearDupAdmission.scala")
+    val sources = streamingSources()
     val found = sources.flatMap { case (name, lines) =>
       val text = lines.map(code).mkString("\n")
       allowed.keys.filter(pattern(_).findFirstIn(text).isDefined).map(_ -> name)
