@@ -60,7 +60,7 @@ object QualityRouter {
       outDir: String, batchId: Long): Unit =
     BatchStore.write(routeBatch(batch, frozen), outDir, batchId)
 
-  /** Everything routed so far. The verdicts depend on the frozen
+  /** Everything routed so far. The routes depend on the frozen
     * artifact, a side input, so the empty read is stated here. */
   def readRouted(spark: SparkSession, outDir: String): DataFrame =
     BatchStore.readOr(spark, outDir)(BatchStore.emptyOf(spark, StructType.fromDDL(
