@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Determinism helpers shared by every query (SURVEY.md §2.2 rules D1–D5).
   *
@@ -33,13 +34,13 @@ object Dsl {
     * materialize the WHOLE cache with a count before returning — every
     * consumer then reads one fully-built, immutable evaluation.
     *
-    * Why eager-fill cache and not `localCheckpoint(true)` (the r9 sweep's
-    * first form): the correctness hazard the sweep closed was a LAZY
-    * cache first materialized mid-job serving an under-matched semi-join
-    * on a cold session — the fix is that no consumer job ever observes a
+    * Why eager-fill cache and not `localCheckpoint(true)` (the pin's
+    * first form): the correctness hazard pinning closes is a LAZY cache
+    * first materialized mid-job serving an under-matched semi-join on a
+    * cold session — the fix is that no consumer job ever observes a
     * partially-built pin, which the blocking count guarantees. The
-    * checkpoint form paid ~2× on the audited hot paths (the r10 verdict's
-    * quantified q99/q104/q77/q36 regression): it re-serializes every row
+    * checkpoint form paid ~2× on the audited hot paths (measured on
+    * q99, q104, q77 and q36): it re-serializes every row
     * into storage blocks and cuts whole-stage codegen, where the cache
     * stores compressed columnar batches the scans read back natively.
     * Pinned frames here are deterministic SETS (aggregates/distinct
@@ -52,9 +53,15 @@ object Dsl {
     * a frame whose size scales with the corpus (e.g. a per-doc signature
     * table at 100 TB) should pass an explicit parts sized to keep
     * partitions under spark.sql.files.maxPartitionBytes. Unpersist is the
-    * caller-contract documented on SparkEntry.clearGraftCaches. */
+    * caller-contract documented on SparkEntry.clearGraftCaches.
+    *
+    * A plan the session already caches (the same query built twice, two
+    * reads of one store) is reused rather than persisted again; a write
+    * to a cached plan's path refreshes that cache, so the reuse reads
+    * current data. */
   def pin(df: DataFrame, parts: Int = PinParts): DataFrame = {
-    val p = df.coalesce(parts).persist()
+    val p = df.coalesce(parts)
+    if (p.storageLevel == StorageLevel.NONE) p.persist()
     p.count()
     p
   }
@@ -111,6 +118,30 @@ object Dsl {
       .withColumn(as, col("poff") + col("lcum"))
       .drop("pid", "poff", "lcum")
   }
+
+  /** `h` plus the DISC columns [[disc]] reads: `cum`, the running sum of
+    * `cnt` in `v` order (a ROWS frame, NULL `v` first), and `n`, the
+    * group's total of `cnt`, both over the partition `by` (an empty `by`
+    * is one global group, so callers keep it on a reduced frame). `n`
+    * rides an unbounded frame of the same window, so no totals aggregate
+    * or join is needed. The rows need not be aggregated per (by, v):
+    * among tied `v` rows the last one's `cum` counts the whole tie. */
+  def cumHist(h: DataFrame, by: Seq[Column], v: Column, cnt: Column): DataFrame = {
+    val w = Window.partitionBy(by: _*).orderBy(v)
+    h.withColumn("cum", sum(cnt).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("n", sum(cnt).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+  }
+
+  /** The DISC k/d quantile of `v` as an aggregate over a [[cumHist]]
+    * frame grouped by its `by`: the smallest attained `v` whose running
+    * count reaches k/d of the total, d·cum ≥ k·n in exact integers.
+    * Exact under any order of tied `v` rows: a tied row that passes
+    * implies the tie's last row passes, and that row's `cum` is the
+    * full count through `v`. NULL `v` is counted but never returned.
+    * Long products stay exact while n·max(k, d) < 2⁶³; past that ANSI
+    * arithmetic throws rather than wraps. */
+  def disc(v: Column, k: Int, d: Int): Column =
+    min(when(col("cum") * d >= col("n") * k, v))
 
   /** Exact sum of a (possibly computed) double column: DECIMAL(18,4) per
     * row, decimal sum, DOUBLE out. DuckDB mirror:

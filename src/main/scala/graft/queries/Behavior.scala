@@ -235,7 +235,8 @@ object Behavior {
     * PARTITIONED by metric over the bounded histogram (recency is
     * calendar-bounded, frequency bounded by the per-user event ceiling,
     * monetary on the fixed [[MonetaryGridCents]] grid), then
-    * `smallest v with 5·cum ≥ k·N` in exact integers — never a global
+    * `smallest v with 5·cum ≥ k·N` in exact integers
+    * ([[graft.ops.Dsl.cumHist]] + [[graft.ops.Dsl.disc]]) — never a global
     * sort or an ntile over the corpus (the plan a naive quantile
     * scoring would produce, and the single-task stage this query
     * exists to avoid). The 3-row boundary panel broadcasts back into
@@ -282,17 +283,10 @@ object Behavior {
       .select(col("user_id"), col("cents"), col("frequency"),
         col("mv.metric").as("metric"), col("mv.v").as("v"))
     val hist = melted.groupBy(col("metric"), col("v")).agg(count(lit(1)).as("cnt"))
-    val totals = hist.groupBy(col("metric")).agg(sum(col("cnt")).as("n_tot"))
-    val wc = Window.partitionBy(col("metric")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(wc))
-      .join(broadcast(totals), Seq("metric"))
-    // disc percentile in exact integers: cum ≥ ceil(k·N/5) ⟺ 5·cum ≥ k·N
-    val bounds = cum.groupBy(col("metric")).agg(
-      min(when(col("cum") * RfmQuantiles >= col("n_tot"), col("v"))).as("b1"),
-      min(when(col("cum") * RfmQuantiles >= col("n_tot") * 2, col("v"))).as("b2"),
-      min(when(col("cum") * RfmQuantiles >= col("n_tot") * 3, col("v"))).as("b3"),
-      min(when(col("cum") * RfmQuantiles >= col("n_tot") * 4, col("v"))).as("b4"))
+    // quintile boundaries b1..b4: 5·cum ≥ k·N in exact integers
+    val bs = (1 until RfmQuantiles).map(k => disc(col("v"), k, RfmQuantiles).as(s"b$k"))
+    val bounds = cumHist(hist, Seq(col("metric")), col("v"), col("cnt"))
+      .groupBy(col("metric")).agg(bs.head, bs.tail: _*)
     val q = lit(1) + (col("v") > col("b1")).cast("int") +
       (col("v") > col("b2")).cast("int") + (col("v") > col("b3")).cast("int") +
       (col("v") > col("b4")).cast("int")
@@ -416,8 +410,7 @@ object Behavior {
     * reuses the join's partitioning); everything after is the
     * hour-domain-bounded histogram — the cumulative window is global but
     * post-Aggregate at observation-window-hours cardinality
-    * (bounded-global-window allowlisted), and the single-row totals
-    * broadcast (NoCartesian-allowlisted). One-row output. */
+    * (bounded-global-window allowlisted). One-row output. */
   def q169(spark: SparkSession, sfDir: String): DataFrame =
     conversionLatency(Tables.events(spark, sfDir))
 
@@ -431,23 +424,15 @@ object Behavior {
       .filter(col("ts_p") >= col("ts_s"))
       .groupBy(col("user_id"))
       .agg(min(unix_micros(col("ts_p")) - unix_micros(col("ts_s"))).as("lat_us"))
-    // totals ride the SAME windowed frame as the cumulative counts (an
-    // unbounded-frame sum next to the running sum), so one Aggregate
-    // finishes the whole report — no joins, no second evaluation, and
-    // both global windows sit visibly above the histogram Aggregate for
-    // the reduced-frame plan pin
-    val wCum = Window.orderBy(col("h"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.orderBy(col("h"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    lat.select(expr("lat_us div 3600000000").as("h"))
+    // one Aggregate finishes the whole report: the kernel's total rides
+    // the windowed frame, so no join and no second evaluation, and its
+    // global window sits above the histogram Aggregate for the
+    // reduced-frame plan pin
+    val hist = lat.select(expr("lat_us div 3600000000").as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-      .withColumn("cum", sum(col("cnt")).over(wCum))
-      .withColumn("n", sum(col("cnt")).over(wAll))
-      .withColumn("sum_h", sum(col("h") * col("cnt")).over(wAll))
-      .agg(max(col("n")).as("n"), max(col("sum_h")).as("sum_h"),
-        min(when(col("cum") * 2 >= col("n"), col("h"))).as("p50_h"),
-        min(when(col("cum") * 10 >= col("n") * 9, col("h"))).as("p90_h"))
+    cumHist(hist, Nil, col("h"), col("cnt"))
+      .agg(max(col("n")).as("n"), sum(col("h") * col("cnt")).as("sum_h"),
+        disc(col("h"), 1, 2).as("p50_h"), disc(col("h"), 9, 10).as("p90_h"))
       .select(col("n").as("n_converted"), col("p50_h"), col("p90_h"),
         when(col("n") > 0, ratio4(col("sum_h"), col("n")))
           .otherwise(lit(null).cast("double")).as("mean_h4"))

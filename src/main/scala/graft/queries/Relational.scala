@@ -881,8 +881,8 @@ object Relational {
     * pivot upgraded from threshold counts to the DISC p50/p90 of the
     * actual order-to-ship lag distribution, the SLA percentile report a
     * fulfillment dashboard shows. Quantiles read off per-priority
-    * lag-day histograms (Stats' q162/q168 discipline: smallest v with
-    * k·cum ≥ q·N) — all integer (lags are whole days).
+    * lag-day histograms (smallest v with d·cum ≥ k·N,
+    * [[graft.ops.Dsl.disc]]) — all integer (lags are whole days).
     *
     * Scale posture: the lineitem⋈orders fact join is the one
     * corpus-scale stage (orderkey equi-join, AQE-planned); the lag
@@ -897,23 +897,15 @@ object Relational {
 
   /** q170 kernel (planted-data seam). */
   private[graft] def shipLagQuantiles(li: DataFrame, o: DataFrame): DataFrame = {
-    val h = pin(li.join(o, col("l_orderkey") === col("o_orderkey"))
+    val h = li.join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_orderpriority").as("priority"),
         datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate"))).as("lag_d"))
       .groupBy(col("priority"), col("lag_d"))
-      .agg(count(lit(1)).as("cnt")))
-    val tot = h.groupBy(col("priority")).agg(sum(col("cnt")).as("n"))
-    val cum = h.withColumn("cum",
-      sum(col("cnt")).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("priority")).orderBy(col("lag_d"))))
-      .join(broadcast(tot), Seq("priority"))
-    def pct(k: Int, q: Int, out: String): DataFrame =
-      cum.filter(col("cum") * k >= col("n") * q)
-        .groupBy(col("priority")).agg(min(col("lag_d")).as(out))
-    tot.join(broadcast(pct(2, 1, "p50_d")), Seq("priority"))
-      .join(broadcast(pct(10, 9, "p90_d")), Seq("priority"))
-      .select(col("priority"), col("n"), col("p50_d"), col("p90_d"))
+      .agg(count(lit(1)).as("cnt"))
+    cumHist(h, Seq(col("priority")), col("lag_d"), col("cnt"))
+      .groupBy(col("priority"))
+      .agg(max(col("n")).as("n"), disc(col("lag_d"), 1, 2).as("p50_d"),
+        disc(col("lag_d"), 9, 10).as("p90_d"))
       .orderBy(col("priority"))
   }
 }

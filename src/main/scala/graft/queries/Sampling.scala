@@ -270,16 +270,22 @@ object Sampling {
     // the ranked admission, which meet again in the join (q104 shape —
     // eager checkpoint, not lazy cache)
     val tok = tokIn.localCheckpoint(true)
+    val budgets = mixBudgets(tok.select(col("source"), col("n_tok")))
+      .select(col("source"), col("n_docs"), col("tokens"), col("planned_tokens"))
+    mixRanked(tok).join(broadcast(budgets), Seq("source"))
+      .withColumn("admitted", col("cum") <= col("planned_tokens"))
+  }
+
+  /** A (source, doc_id, n_tok) frame plus q145's admission order: `hk`,
+    * the h60("mix:" ‖ doc_id) hash rank, and `cum`, the source's running
+    * token sum in (hk, doc_id) order — the same order however the rows
+    * are partitioned. Shared with the s31 streaming admission. */
+  private[graft] def mixRanked(tok: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("source"))
       .orderBy(col("hk"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = tok
-      .withColumn("hk", h60(concat(lit("mix:"), col("doc_id").cast("string"))))
+    tok.withColumn("hk", h60(concat(lit("mix:"), col("doc_id").cast("string"))))
       .withColumn("cum", sum(col("n_tok")).over(w))
-    val budgets = mixBudgets(tok.select(col("source"), col("n_tok")))
-      .select(col("source"), col("n_docs"), col("tokens"), col("planned_tokens"))
-    ranked.join(broadcast(budgets), Seq("source"))
-      .withColumn("admitted", col("cum") <= col("planned_tokens"))
   }
 
   /** q100: leakage-safe (cluster-aware) train/val/test split — q51's

@@ -394,41 +394,31 @@ object Stats {
     * attained values, the fence is an integer comparison): no float
     * exists anywhere in this query, so the oracle cannot wobble.
     *
-    * DISC discipline: median = smallest v with 2·cum(v) ≥ N over the
-    * per-type value histogram — q156's quantile-off-a-histogram move at
-    * k = 2. MAD = 0 (more than half the days identical) degenerates the
-    * fence to "any deviation flags"; documented, mirrored, and exercised
-    * by the planted law.
+    * DISC discipline: median = smallest v with 2·cum(v) ≥ N per type
+    * ([[graft.ops.Dsl.disc]] at 1/2 over the daily rows). MAD = 0 (more
+    * than half the days identical) degenerates the fence to "any
+    * deviation flags"; documented, mirrored, and exercised by the
+    * planted law.
     *
-    * Scale posture: [[dailyOf]] shuffles once; histograms, cumulative
-    * windows (PARTITIONED by type) and both median joins run on
+    * Scale posture: [[dailyOf]] shuffles once; the cumulative windows
+    * (PARTITIONED by type) and both median joins run on
     * calendar-bounded frames — at 100 TB nothing after the first
     * exchange sees corpus-scale rows. */
   def q162(spark: SparkSession, sfDir: String): DataFrame =
     madOutliers(dailyOf(events(spark, sfDir)))
 
-  /** DISC median per event_type of `v` over frame `df`: smallest v with
-    * 2·cum ≥ N (ties counted through RANGE cumulative peers). */
-  private def discMedianByType(df: DataFrame, v: String, out: String): DataFrame = {
-    val tot = df.groupBy(col("event_type")).agg(count(lit(1)).as("n_days"))
-    val cum = df.groupBy(col("event_type"), col(v))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("cum",
-        sum(col("cnt")).over(Window.partitionBy(col("event_type")).orderBy(col(v))))
-    cum.join(broadcast(tot), Seq("event_type"))
-      .filter(col("cum") * 2 >= col("n_days"))
-      .groupBy(col("event_type")).agg(min(col(v)).as(out))
-  }
-
   /** q162 core on a (event_type, d, n) daily frame (planted-data seam). */
   private[graft] def madOutliers(dailyIn: DataFrame): DataFrame = {
-    // the daily frame feeds the median histogram, the deviation pass and
-    // the final report (q104 pinning discipline)
+    def median(df: DataFrame, v: String, out: String): DataFrame =
+      discPanel(df.select(col("event_type"), col(v).as("v"), lit(1L).as("cnt")), "v", (1, 2, out))
+    // the daily frame feeds the median and the deviation pass, and the
+    // deviation frame feeds the MAD and the final report (q104 pinning
+    // discipline)
     val d = pin(dailyIn.select(col("event_type"), col("d"), col("n")))
-    val med = discMedianByType(d, "n", "med")
+    val med = median(d, "n", "med")
     val dev = pin(d.join(broadcast(med), Seq("event_type"))
       .withColumn("dev", abs(col("n") - col("med"))))
-    val mad = discMedianByType(dev, "dev", "mad")
+    val mad = median(dev, "dev", "mad")
     dev.join(broadcast(mad), Seq("event_type"))
       .select(col("event_type"), col("d"), col("n"), col("med"), col("mad"),
         (col("dev") > lit(MadFenceK) * col("mad")).as("outlier"))
@@ -563,40 +553,27 @@ object Stats {
         .as("significant"))
   }
 
-  /** The cent histogram under the robust value statistics (q168, q182,
-    * q188) from a per-(event_type, value) COUNT frame: counts
-    * re-aggregated by exact cents (DECIMAL(12,2)·100, q156's carrier —
-    * distinct raw values that quantize to one cent merge), pinned because
-    * the totals, the quantile scans and the final conditional aggregate
-    * all read it (q104 pinning discipline). Returns the histogram
-    * (event_type, cents, cnt), the per-type total (event_type, n) and the
-    * [[cdfOf]] frame. */
-  private def centsHist(counts: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val h = pin(counts
+  /** The cent histogram (event_type, cents, cnt) under the robust value
+    * statistics (q168, q182, q188) from a per-(event_type, value) COUNT
+    * frame: counts re-aggregated by exact cents (DECIMAL(12,2)·100,
+    * q156's carrier — distinct raw values that quantize to one cent
+    * merge), pinned because the quantile panel and the final conditional
+    * aggregate both read it (q104 pinning discipline). */
+  private def centsHist(counts: DataFrame): DataFrame =
+    pin(counts
       .select(col("event_type"),
         (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"),
         col("cnt"))
       .groupBy(col("event_type"), col("cents"))
       .agg(sum(col("cnt")).as("cnt")))
-    val tot = h.groupBy(col("event_type")).agg(sum(col("cnt")).as("n"))
-    (h, tot, cdfOf(h, "cents", tot))
+
+  /** The per-type DISC panel of a (event_type, v, cnt) histogram: one
+    * row per type with each of `qs` (k, d, out) as [[graft.ops.Dsl.disc]]. */
+  private def discPanel(h: DataFrame, v: String, qs: (Int, Int, String)*): DataFrame = {
+    val outs = qs.map { case (k, d, out) => disc(col(v), k, d).as(out) }
+    cumHist(h, Seq(col("event_type")), col(v), col("cnt"))
+      .groupBy(col("event_type")).agg(outs.head, outs.tail: _*)
   }
-
-  /** A per-type histogram (event_type, v, cnt) with its running count
-    * `cum` in v order, PARTITIONED by type, and the broadcast type total
-    * `n` from `tot`. */
-  private def cdfOf(h: DataFrame, v: String, tot: DataFrame): DataFrame =
-    h.withColumn("cum",
-      sum(col("cnt")).over(Window.partitionBy(col("event_type")).orderBy(col(v))))
-      .join(broadcast(tot), Seq("event_type"))
-
-  /** The DISC k/d quantile per type off a [[cdfOf]] frame: the smallest
-    * attained v whose running count reaches k/d of the total
-    * (d·cum ≥ k·n, all integer). */
-  private def discQuantile(cdf: DataFrame, v: String, k: Int, d: Int,
-      out: String): DataFrame =
-    cdf.filter(col("cum") * d >= col("n") * k)
-      .groupBy(col("event_type")).agg(min(col(v)).as(out))
 
   /** q168: Tukey box-plot summary + IQR fence outlier counts per event
     * type over the VALUE distribution — the five-number profile (DISC
@@ -631,11 +608,8 @@ object Stats {
     * s45 streaming read enters through, so stream and batch share one
     * quartile/fence definition by construction. */
   private[graft] def iqrOfValueCounts(counts: DataFrame): DataFrame = {
-    val (h, _, cum) = centsHist(counts)
-    def quartile(k: Int, out: String): DataFrame = discQuantile(cum, "cents", k, 4, out)
-    val panel = quartile(1, "q1_c")
-      .join(quartile(2, "med_c"), Seq("event_type"))
-      .join(quartile(3, "q3_c"), Seq("event_type"))
+    val h = centsHist(counts)
+    val panel = discPanel(h, "cents", (1, 4, "q1_c"), (2, 4, "med_c"), (3, 4, "q3_c"))
     h.join(broadcast(panel), Seq("event_type"))
       .groupBy(col("event_type"))
       .agg(sum(col("cnt")).as("n"),
@@ -684,9 +658,8 @@ object Stats {
   /** q182 kernel on a per-(event_type, value) COUNT frame (the s29-store
     * seam, like [[iqrOfValueCounts]]). */
   private[graft] def winsorizedOfValueCounts(counts: DataFrame): DataFrame = {
-    val (h, _, cum) = centsHist(counts)
-    def pct(k: Int, out: String): DataFrame = discQuantile(cum, "cents", k, 20, out)
-    val panel = pct(1, "lo_c").join(pct(19, "hi_c"), Seq("event_type"))
+    val h = centsHist(counts)
+    val panel = discPanel(h, "cents", (1, 20, "lo_c"), (19, 20, "hi_c"))
     val clamped = greatest(least(col("cents"), col("hi_c")), col("lo_c"))
     h.join(broadcast(panel), Seq("event_type"))
       .groupBy(col("event_type"))
@@ -719,9 +692,9 @@ object Stats {
     * shape — the 2-dec value grid bounds distinct cents per type
     * regardless of corpus size); the deviation histogram DERIVES from
     * the bounded histogram (grid-cardinality rows, no corpus re-read);
-    * type-PARTITIONED cumulative windows on both; the three
-    * single-value panels broadcast back into one conditional aggregate
-    * over the same histogram. The raw rows are read exactly once. */
+    * type-PARTITIONED cumulative windows on both; the two single-value
+    * panels broadcast back into one conditional aggregate over the same
+    * histogram. The raw rows are read exactly once. */
   def q188(spark: SparkSession, sfDir: String): DataFrame =
     madStats(events(spark, sfDir))
 
@@ -737,23 +710,19 @@ object Stats {
   /** q188 kernel on a per-(event_type, value) COUNT frame (the s29-store
     * seam, like [[iqrOfValueCounts]]/[[winsorizedOfValueCounts]]). */
   private[graft] def madOfValueCounts(counts: DataFrame): DataFrame = {
-    val (h, tot, cum) = centsHist(counts)
-    val med = discQuantile(cum, "cents", 1, 2, "med_c")
-    // deviation histogram DERIVED from the bounded cent histogram —
-    // distinct |cents − med| values collapse (symmetric deviations
-    // merge), counts pointwise-summed
+    val h = centsHist(counts)
+    val med = discPanel(h, "cents", (1, 2, "med_c"))
+    // the deviation histogram is the cent histogram keyed by |cents − med|;
+    // symmetric deviations stay separate rows, which the kernel counts
+    // as one tie
     val dev = h.join(broadcast(med), Seq("event_type"))
-      .select(col("event_type"),
-        abs(col("cents") - col("med_c")).as("dv"), col("cnt"))
-      .groupBy(col("event_type"), col("dv"))
-      .agg(sum(col("cnt")).as("cnt"))
-    val mad = discQuantile(cdfOf(dev, "dv", tot), "dv", 1, 2, "mad_c")
-    h.join(broadcast(med), Seq("event_type"))
-      .join(broadcast(mad), Seq("event_type"))
+      .withColumn("dv", abs(col("cents") - col("med_c")))
+    val mad = discPanel(dev, "dv", (1, 2, "mad_c"))
+    dev.join(broadcast(mad), Seq("event_type"))
       .groupBy(col("event_type"))
       .agg(sum(col("cnt")).as("n"),
         max(col("med_c")).as("med_c"), max(col("mad_c")).as("mad_c"),
-        sum(when(abs(col("cents") - col("med_c")) > col("mad_c") * 3, col("cnt"))
+        sum(when(col("dv") > col("mad_c") * 3, col("cnt"))
           .otherwise(0L)).as("n_far"))
       .select(col("event_type"), col("n"), col("med_c"), col("mad_c"),
         col("n_far"))
@@ -786,29 +755,27 @@ object Stats {
     * Scale posture: [[dailyOf]] is the ONE corpus-sized shuffle; the
     * pair self-join runs on the types × days panel (calendar-bounded —
     * days² pairs per type is a CONSTANT in corpus size, the whole point
-    * of pairing AFTER the daily reduction), and the median histogram +
-    * type-partitioned cumulative window live on that bounded frame. */
+    * of pairing AFTER the daily reduction), and the median's
+    * type-partitioned cumulative window runs on that bounded frame. */
   def q189(spark: SparkSession, sfDir: String): DataFrame =
     theilSenOf(dailyOf(events(spark, sfDir)))
 
   /** q189 core on a (event_type, d, n) daily frame (planted-data seam;
     * also the s58 read of the s36 SeasonalMonitor store). */
   private[graft] def theilSenOf(dailyIn: DataFrame): DataFrame = {
-    // one evaluation feeds both sides of the pair join, the day count
-    // and the median chain (q104 pinning discipline)
+    // one evaluation feeds both sides of the pair join and the day count
+    // (q104 pinning discipline)
     val d = pin(dailyIn.select(col("event_type"), col("d"), col("n")))
-    // the pair frame is ALSO pinned: it feeds the pair count, the
-    // median's own total and the slope histogram — without the pin the
-    // days²-per-type self-join would execute three times per read
-    val pairs = pin(d.as("a").join(d.as("b"),
+    val pairs = d.as("a").join(d.as("b"),
         col("a.event_type") === col("b.event_type") && col("b.d") > col("a.d"))
       .select(col("a.event_type").as("event_type"),
         ((col("b.n") - col("a.n")).cast("double") /
-          datediff(col("b.d"), col("a.d")).cast("double")).as("s")))
-    val tot = pairs.groupBy(col("event_type")).agg(count(lit(1)).as("n_pairs"))
-    val med = discMedianByType(pairs, "s", "slope")
+          datediff(col("b.d"), col("a.d")).cast("double")).as("s"))
+    // one pass over the pairs: the kernel's total is the pair count
+    val med = cumHist(pairs, Seq(col("event_type")), col("s"), lit(1L))
+      .groupBy(col("event_type"))
+      .agg(max(col("n")).as("n_pairs"), disc(col("s"), 1, 2).as("slope"))
     d.groupBy(col("event_type")).agg(count(lit(1)).as("n_days"))
-      .join(tot, Seq("event_type"))
       .join(med, Seq("event_type"))
       .select(col("event_type"), col("n_days"), col("n_pairs"), col("slope"))
       .orderBy(col("event_type"))
@@ -943,14 +910,14 @@ object Stats {
     * both engines implement identically, not an approximation drift).
     * Replicate means are ratio4dec half-up quotients of exact integer
     * sums; the CI is the DISC 2.5%/97.5% order statistics over the B
-    * replicate means (smallest mean with B·rank ≥ n_reps·k, k = 1/39,
-    * ties to the lower replicate id).
+    * replicate means (smallest mean with B·cum ≥ n_reps·k, k = 1/39,
+    * [[graft.ops.Dsl.disc]]; tied means are one attained value).
     *
     * Scale posture: the B-fold explode is map-side COMPUTE fan-out, not
     * data movement — each task folds its replicate partials locally and
     * the one shuffle carries ≤ types × B partial rows (the textbook
-    * distributed-bootstrap shape); the rank window sits on a ≤ B-row
-    * per-type panel. */
+    * distributed-bootstrap shape); the cumulative window sits on a
+    * ≤ B-row per-type panel. */
   def q184(spark: SparkSession, sfDir: String): DataFrame =
     bootstrapCi(events(spark, sfDir))
 
@@ -1004,29 +971,18 @@ object Stats {
     ciFinish(tot, reps)
   }
 
-  /** The shared CI finish: rank the replicate means, take the DISC
-    * 2.5/97.5 order statistics, join onto the point estimate. `reps` is
+  /** The shared CI finish: the DISC 1/40 and 39/40 order statistics of
+    * the replicate means, joined onto the point estimate. `reps` is
     * (event_type, b, nw, sw) — exact integer replicate sums, from EITHER
     * the per-row fold (q184) or the bucket panel (q187/s56). */
-  private def ciFinish(tot: DataFrame, reps0: DataFrame): DataFrame = {
+  private def ciFinish(tot: DataFrame, reps: DataFrame): DataFrame = {
     import graft.ops.Dsl.ratio4dec
-    val reps = reps0
-      .filter(col("nw") > 0)
-      .withColumn("rmean4", ratio4dec(col("sw"), col("nw")))
-    val wr = Window.partitionBy(col("event_type"))
-      .orderBy(col("rmean4"), col("b"))
-    val ranked = reps
-      .withColumn("rk", row_number().over(wr).cast("long"))
-      .withColumn("n_reps", count(lit(1)).over(
-        Window.partitionBy(col("event_type"))).cast("long"))
-    def ostat(k: Int, out: String): DataFrame =
-      ranked.filter(col("rk") * BootB >= col("n_reps") * k)
-        .groupBy(col("event_type")).agg(min(col("rmean4")).as(out))
-    tot
-      .join(ostat(1, "ci_lo4"), Seq("event_type"))
-      .join(ostat(39, "ci_hi4"), Seq("event_type"))
-      .join(ranked.groupBy(col("event_type"))
-        .agg(max(col("n_reps")).as("n_reps")), Seq("event_type"))
+    val means = reps.filter(col("nw") > 0).withColumn("rmean4", ratio4dec(col("sw"), col("nw")))
+    val ci = cumHist(means, Seq(col("event_type")), col("rmean4"), lit(1L))
+      .groupBy(col("event_type"))
+      .agg(disc(col("rmean4"), 1, BootB).as("ci_lo4"),
+        disc(col("rmean4"), 39, BootB).as("ci_hi4"), max(col("n")).as("n_reps"))
+    tot.join(ci, Seq("event_type"))
       .select(col("event_type"), col("n"), col("mean_c4"),
         col("ci_lo4"), col("ci_hi4"), col("n_reps"))
       .orderBy(col("event_type"))
@@ -1050,9 +1006,10 @@ object Stats {
     *
     * Scale posture: one map-side-combined shuffle of ≤ types × 10⁴
     * rows; the explode fans out 40× over the bounded panel (≤ types ×
-    * 4·10⁵ in-memory rows, no shuffle growth); the rank window sits on
-    * the ≤ B-row per-type frame. At 100 TB this is THE way to bootstrap:
-    * the corpus is read once, everything after is constant-bounded. */
+    * 4·10⁵ in-memory rows, no shuffle growth); the cumulative window
+    * sits on the ≤ B-row per-type frame. At 100 TB this is THE way to
+    * bootstrap: the corpus is read once, everything after is
+    * constant-bounded. */
   def q187(spark: SparkSession, sfDir: String): DataFrame =
     bootstrapCiBucketed(events(spark, sfDir))
 
@@ -1372,18 +1329,17 @@ object Stats {
     * monitor renders (a mean hides exactly the tail movement the p90
     * band shows). ALL INTEGER: exact cents, quantiles as attained values
     * off per-(type, day) cent histograms — the q168 machinery swept along
-    * the calendar axis. Totals ride an unbounded window over the SAME
-    * partitioned frame as the cumulative counts (q169's no-join trick),
-    * so one aggregate finishes the panel.
+    * the calendar axis ([[graft.ops.Dsl.cumHist]] partitioned by
+    * (type, day)), so one aggregate finishes the panel.
     *
     * Scale posture: ONE map-side-combined histogram shuffle (cardinality
-    * types × days × cents-domain — quantization-bounded per day);
+    * types × days × value-domain — quantization-bounded per day);
     * PARTITIONED windows; output types × days. */
   def q179(spark: SparkSession, sfDir: String): DataFrame =
     valueBands(events(spark, sfDir))
 
   /** q179 kernel on an arbitrary (event_type, ts, value) frame: reduce
-    * to per-(type, day, value) counts FIRST — the frame the (r14-widened)
+    * to per-(type, day, value) counts FIRST — the frame the day-widened
     * s29 store accumulates, which is what makes s48 a read of that
     * store — then the band machinery. */
   private[graft] def valueBands(ev: DataFrame): DataFrame =
@@ -1396,21 +1352,14 @@ object Stats {
   /** q179 kernel on a per-(event_type, d, value) COUNT frame — the seam
     * the s48 streaming read enters through. */
   private[graft] def bandsOfCounts(counts: DataFrame): DataFrame = {
+    // values that quantize to one cent stay separate rows: the kernel
+    // counts them as one tie
     val h = counts.select(col("event_type"), col("d"),
-        (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"),
-        col("cnt"))
-      .groupBy(col("event_type"), col("d"), col("cents"))
-      .agg(sum(col("cnt")).as("cnt"))
-    val wCum = Window.partitionBy(col("event_type"), col("d")).orderBy(col("cents"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy(col("event_type"), col("d"))
-    h.withColumn("cum", sum(col("cnt")).over(wCum))
-      .withColumn("n", sum(col("cnt")).over(wAll))
+      (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"), col("cnt"))
+    cumHist(h, Seq(col("event_type"), col("d")), col("cents"), col("cnt"))
       .groupBy(col("event_type"), col("d"))
-      .agg(max(col("n")).as("n"),
-        min(when(col("cum") * 10 >= col("n"), col("cents"))).as("p10_c"),
-        min(when(col("cum") * 2 >= col("n"), col("cents"))).as("p50_c"),
-        min(when(col("cum") * 10 >= col("n") * 9, col("cents"))).as("p90_c"))
+      .agg(max(col("n")).as("n"), disc(col("cents"), 1, 10).as("p10_c"),
+        disc(col("cents"), 1, 2).as("p50_c"), disc(col("cents"), 9, 10).as("p90_c"))
       .orderBy(col("event_type"), col("d"))
   }
 

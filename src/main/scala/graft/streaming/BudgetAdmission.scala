@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dsl.{h60, ratio4}
+import graft.ops.Dsl.ratio4
+import graft.queries.Sampling
 
 /** s31: streaming BUDGET ADMISSION — the online form of q145's mixture
   * realization: documents arrive in micro-batches and each source's
@@ -26,7 +26,8 @@ import graft.ops.Dsl.{h60, ratio4}
   *
   * Single-batch parity: with budgets = q80's `mixBudgets` panel over the
   * same corpus, one batch admits EXACTLY q145's set (the law pins this
-  * against `Sampling.admissions` — one shared definition of "the cut").
+  * against `Sampling.admissions`; both rank through `Sampling.mixRanked`,
+  * one shared definition of "the cut").
   *
   * Scale posture: per batch ONE window shuffle partitioned by source
   * (never global) over the BATCH only, budgets and the consumed panel
@@ -46,31 +47,26 @@ object BudgetAdmission {
   def processBatch(batch: DataFrame, budgets: DataFrame,
       storeDir: String, acceptDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val prior = BatchStore.read(spark, storeDir)
-      .map(_.filter(col("batch_id") < batchId)
-        .groupBy(col("source"))
-        .agg(sum(col("batch_tokens")).as("consumed")))
-      .getOrElse(spark.range(0).select(col("id").cast("string").as("source"),
-        col("id").as("consumed")))
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("hk"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val admitted = batch
-      .select(col("source"), col("doc_id"), col("n_tok"))
-      .withColumn("hk", h60(concat(lit("mix:"), col("doc_id").cast("string"))))
-      .withColumn("cum", sum(col("n_tok")).over(w))
+    val prior = BatchStore.before(spark, storeDir, batchId)(emptyStore(spark))
+      .groupBy(col("source"))
+      .agg(sum(col("batch_tokens")).as("consumed"))
+    val admitted = Sampling.mixRanked(batch.select(col("source"), col("doc_id"), col("n_tok")))
       .join(broadcast(budgets.select(col("source"), col("planned_tokens"))),
         Seq("source"))
       .join(broadcast(prior), Seq("source"), "left")
       .filter(coalesce(col("consumed"), lit(0L)) + col("cum") <= col("planned_tokens"))
       .select(col("source"), col("doc_id"), col("n_tok"))
       // feeds BOTH writes below (accept log + store partial) — pin the
-      // decision once so the two can't diverge (r9 pinning discipline)
+      // decision once so the two can't diverge
       .localCheckpoint(true)
     BatchStore.write(admitted, acceptDir, batchId)
     BatchStore.write(admitted.groupBy(col("source")).agg(sum(col("n_tok")).as("batch_tokens")),
       storeDir, batchId)
   }
+
+  /** The store's (source, batch_tokens) rows while it holds none. */
+  private def emptyStore(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").cast("string").as("source"), col("id").as("batch_tokens"))
 
   /** Everything admitted so far (the training-set manifest). */
   def admittedDocs(spark: SparkSession, acceptDir: String): DataFrame =
@@ -82,8 +78,7 @@ object BudgetAdmission {
     * and the fill rate (NULL on a zero budget) — read from the store
     * partials alone, never re-scanning the accept log. */
   def audit(spark: SparkSession, storeDir: String, budgets: DataFrame): DataFrame = {
-    val consumed = BatchStore.readOr(spark, storeDir)(spark.range(0).select(
-        col("id").cast("string").as("source"), col("id").as("batch_tokens")))
+    val consumed = BatchStore.readOr(spark, storeDir)(emptyStore(spark))
       .groupBy(col("source"))
       .agg(sum(col("batch_tokens")).as("consumed_tokens"))
     budgets.select(col("source"), col("planned_tokens"))

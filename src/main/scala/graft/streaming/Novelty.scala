@@ -40,13 +40,6 @@ import graft.queries.Text
   * contributes zero novelty. */
 object Novelty {
 
-  /** One batch's first-seer candidates: (hm, fmin, ns-contribution). */
-  private def batchFirstSeers(batch: DataFrame): DataFrame =
-    Text.shinglesOf(batch)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("hm"))
-      .distinct()
-      .groupBy(col("hm")).agg(min(col("doc_id")).as("fmin"))
-
   /** foreachBatch body: novelty against the committed store, then the
     * replay-safe partitioned writes (store first, then audit — a crash
     * between the two replays the batch, which rewrites both

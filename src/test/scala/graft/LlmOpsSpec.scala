@@ -127,6 +127,40 @@ class LlmOpsSpec extends SparkSpec {
     awaitEmpty("clearGraftCaches left storage")
   }
 
+  test("Dsl.pin reuses a plan the session already caches: a query built twice logs no CacheManager WARN") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = "org.apache.spark.sql.execution.CacheManager"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("pin-reuse-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == logger) seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      SparkEntry.clearGraftCaches(spark)
+      // q162 pins its daily frame and its deviation frame
+      val first = SparkEntry.queries("q162_mad_outliers")(spark, sf001).collect().toSeq
+      val again = SparkEntry.queries("q162_mad_outliers")(spark, sf001).collect().toSeq
+      assert(again == first)
+      LogManager.getLogger(logger).warn("pin-reuse control warning")
+      assert(!seen.toArray.exists(_.toString.contains("already cached")),
+        s"CacheManager WARNs: ${seen.toArray.mkString("; ")}")
+      assert(seen.contains("pin-reuse control warning"), "the capture missed a CacheManager WARN")
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+      SparkEntry.clearGraftCaches(spark)
+    }
+  }
+
   test("q90 batch IVF probe: exact sims, dense ranks, recall vs brute-force ground truth (and q77)") {
     import org.apache.spark.sql.expressions.Window
     import graft.ops.Dsl.{cosine, round4}

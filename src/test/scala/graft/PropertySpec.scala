@@ -516,4 +516,63 @@ class PropertySpec extends SparkSpec {
       assert(got.toSet == reference(rows), s"seed=$seed rows=$rows")
     }
   }
+
+  /** The DISC quantiles the kernel must reproduce, as (k, d). */
+  private val DiscLevels = Seq((1, 2), (1, 4), (3, 4), (1, 5), (2, 5), (3, 5), (4, 5),
+    (1, 10), (9, 10), (1, 20), (19, 20), (1, 40), (39, 40), (1, 1))
+
+  test("DISC law: Dsl.cumHist + Dsl.disc == the plain DISC quantile per group, for every k/d") {
+    import graft.ops.Dsl.{cumHist, disc}
+    // per group: the smallest non-NULL v whose count through v (NULLs
+    // first, every tied row included) reaches k/d of the group total
+    def reference(rows: Seq[(Option[String], Option[Long], Long)]) =
+      rows.groupBy(_._1).map { case (by, rs) =>
+        val n = rs.map(_._3).sum
+        val nulls = rs.filter(_._2.isEmpty).map(_._3).sum
+        val values = rs.flatMap(_._2).distinct.sorted
+        by -> DiscLevels.map { case (k, d) =>
+          values.find(v => d * (nulls + rs.filter(_._2.exists(_ <= v)).map(_._3).sum) >= k * n)
+        }
+      }
+    // a NULL group, NULL values, ties in v (a small range), and repeated
+    // (by, v) rows that are never aggregated
+    val rowGen = Gen.listOfN(40, for {
+      by <- Gen.frequency(1 -> Gen.const(Option.empty[String]),
+        6 -> Gen.oneOf("a", "b", "c").map(Some(_)))
+      v <- Gen.frequency(1 -> Gen.const(Option.empty[Long]), 8 -> Gen.choose(-3L, 6L).map(Some(_)))
+      cnt <- Gen.choose(1L, 4L)
+    } yield (by, v, cnt))
+    val outs = DiscLevels.map { case (k, d) => disc(col("v"), k, d).as(s"q${k}_$d") }
+    for (seed <- 1 to Samples) {
+      // plus a one-row group
+      val rows = draw(rowGen, 7300L + seed) :+ ((Some("solo"), Some(5L), 3L))
+      val got = cumHist(rows.toDF("by", "v", "cnt"), Seq(col("by")), col("v"), col("cnt"))
+        .groupBy(col("by")).agg(outs.head, outs.tail: _*)
+        .collect().map { r =>
+          Option(r.getString(0)) -> (1 to DiscLevels.size).map(i => Option(r.get(i)).map(_.asInstanceOf[Long]))
+        }.toMap
+      assert(got == reference(rows), s"seed=$seed rows=$rows")
+    }
+  }
+
+  test("DISC source law: no query or store writes the d·cum ≥ k·n threshold outside Dsl") {
+    // the threshold multiplies a running count or a rank column; Dsl.disc
+    // (under graft/ops) is its one statement
+    val threshold = """col\("(cum|rk)"\)\s*\*""".r
+    val found = Seq("queries", "streaming").flatMap { pkg =>
+      val dir = new java.io.File(s"src/main/scala/graft/$pkg")
+      val files = Option(dir.listFiles()).getOrElse(Array.empty).filter(_.getName.endsWith(".scala"))
+      assert(files.length > 10, s"sources not found under ${dir.getAbsolutePath}")
+      files.toSeq.flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        val lines = try src.getLines().toVector finally src.close()
+        lines.zipWithIndex.collect {
+          case (l, i) if !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
+              threshold.findFirstIn(l.split(" //", 2)(0)).nonEmpty =>
+            s"$pkg/${f.getName}:${i + 1}: ${l.trim}"
+        }
+      }
+    }
+    assert(found.isEmpty, s"DISC threshold written outside Dsl.disc:\n${found.mkString("\n")}")
+  }
 }
