@@ -64,7 +64,14 @@ object SparkEntry {
     * WindowExec: every window without `partitionBy` warns that it moves
     * its input to one partition. Such windows are allowed only above a
     * reduced frame, and only at the sites PlanSpec's "unpartitioned
-    * windows" law enumerates; that law is the gate this WARN repeats. */
+    * windows" law enumerates; that law is the gate this WARN repeats.
+    *
+    * RDD: unpersisting a locally checkpointed RDD warns that its lineage
+    * is truncated and cannot be recomputed. The cache clears unpersist
+    * only finished results that nothing recomputes, so a full-suite run
+    * would otherwise log one such WARN per pinned frame. The WARN comes
+    * from the concrete RDD class's logger, an open set, so the filter
+    * sits on the package logger, whose config those loggers share. */
   val LogNoise: Seq[(String, String)] = Seq(
     "org.apache.spark.scheduler.DAGScheduler" ->
       "Failed to cancel job group .*\\. Cannot find active jobs for it\\.",
@@ -73,7 +80,9 @@ object SparkEntry {
     "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution" ->
       "Disabling AQE since AQE is not supported in stateful workloads\\.",
     "org.apache.spark.sql.execution.window.WindowExec" ->
-      "No Partition Defined for Window operation!.*")
+      "No Partition Defined for Window operation!.*",
+    "org.apache.spark.rdd" ->
+      ".*truncated and cannot be recomputed after unpersisting.*")
 
   private var noiseOn = Map.empty[String, AnyRef]
 
@@ -158,53 +167,10 @@ object SparkEntry {
     * call this between queries; embed it the same way in any long-lived
     * session running these operators back to back. The unpersist blocks,
     * so the storage is gone when this returns and the next query's timing
-    * or memory profile starts clean. */
+    * or memory profile starts clean. Its lineage WARNs are [[LogNoise]]. */
   def clearGraftCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    // Unpersisting a locally-checkpointed RDD logs one WARN per RDD
-    // ("lineage has been truncated and cannot be recomputed"). It is
-    // expected here: the query is finished and nothing recomputes it, and
-    // a full-suite run would otherwise bury real warnings under hundreds
-    // of these. The suppression is display-only and scoped to the
-    // unpersist loop (silencingRddWarns), so every block is still freed
-    // and other rdd-package WARNs stay visible.
-    silencingRddWarns {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
-  }
-
-  /** Run `body` with the rdd-package logger lowered to ERROR, restoring
-    * the previous effective level after — the scoped form of the
-    * lineage-truncation WARN suppression clearGraftCaches documents, for
-    * any OTHER site that unpersists finished localCheckpoint RDDs
-    * (IncrementalDedup's per-batch cleanup). Package level, not
-    * per-class: the WARN is emitted under the concrete RDD subclass
-    * logger (MapPartitionsRDD, …), an open set. */
-  def silencingRddWarns[T](body: => T): T = {
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.LoggerContext
-    import org.apache.logging.log4j.core.config.Configurator
-    val pkg = "org.apache.spark.rdd"
-    val saved = LogManager.getLogger(pkg).getLevel
-    // Restore-to-INHERITED when the package had no explicit config (r12
-    // advisor): Configurator.setLevel CREATES a LoggerConfig for pkg, and
-    // restoring the captured EFFECTIVE level onto it would freeze the
-    // package — later sparkContext.setLogLevel calls on the root would no
-    // longer propagate here. Detect inheritance up front (the owning
-    // LoggerConfig's name differs from pkg) and remove the config we
-    // created instead of pinning a level.
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val hadExplicit = ctx.getConfiguration.getLoggerConfig(pkg).getName == pkg
-    try {
-      Configurator.setLevel(pkg, org.apache.logging.log4j.Level.ERROR)
-      body
-    } finally {
-      if (hadExplicit) Configurator.setLevel(pkg, saved)
-      else {
-        ctx.getConfiguration.removeLogger(pkg)
-        ctx.updateLoggers()
-      }
-    }
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

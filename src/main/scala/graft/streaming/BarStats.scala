@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.queries.Stats
 
@@ -13,34 +12,28 @@ import graft.queries.Stats
   * `Stats.mergeBars` + `Stats.finishBars` the batch query uses — one
   * definition per stage, parity by construction.
   *
-  * Additive family (s16/s21/s26/s36): every partial column merges by an
-  * associative AND commutative operation — open/close ride min/max over
-  * the (ts, event_id, value) struct (the (ts, event_id) total order is
+  * Every partial column has its own associative and commutative merge
+  * ([[BatchStore.Additive]]): open/close ride min/max over the
+  * (ts, event_id, value) struct (the (ts, event_id) total order is
   * unique, so merges can never tie on the value), high/low are min/max,
-  * n and the decimal volume are sums. Parity therefore holds under ANY
-  * batch split with no arrival-order assumption.
+  * n and the decimal volume are sums.
   *
   * Scale posture: per batch ONE map-side-combined aggregate of the batch
   * only; the store grows one calendar-bounded partition per batch
   * (types × hours rows); the read shuffles ≤ partials × batches rows.
-  * The store never folds: its batch rows carry no `covered_upto`. Every
-  * column is pointwise re-mergeable, so [[BatchStore.foldCovered]] would
-  * apply if the partition count ever demanded it.
   */
 object BarStats {
 
-  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(Stats.barPartials)
+  private val partials =
+    BatchStore.Additive(graft.tables.Tables.EventsSchema)(Stats.barPartials)(Stats.mergeBars)
 
   /** One micro-batch of (event_id, ts, event_type, value): q159 partials
     * → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
-    BatchStore.write(partial(batch), storeDir, batchId)
+    partials.write(batch, storeDir, batchId)
 
   /** The q159-shaped bar report over everything ingested so far —
-    * row-for-row equal to batch q159 on the concatenated log under ANY
-    * batch split. */
-  def bars(spark: SparkSession, storeDir: String): DataFrame = {
-    val partials = BatchStore.readOr(spark, storeDir)(partial.empty(spark)).drop("batch_id")
-    Stats.finishBars(Stats.mergeBars(partials))
-  }
+    * row-for-row equal to batch q159 on the concatenated log. */
+  def bars(spark: SparkSession, storeDir: String): DataFrame =
+    Stats.finishBars(partials.read(spark, storeDir))
 }

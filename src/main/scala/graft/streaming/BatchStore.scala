@@ -35,13 +35,27 @@ import org.apache.spark.sql.types.StructType
   *    instead of throwing.
   *
   * Every store read goes through one of these empty fallbacks; no store
-  * reads its directory raw. A store whose batch rows are a plan-only
-  * function of the batch alone states that function once, as a
-  * [[Partial]] over its input schema: each batch writes the partial of
-  * the batch, and the store's empty read is the partial of zero rows, so
-  * the written schema and the empty one cannot drift apart. A store
-  * whose rows depend on prior state or on a side input states its empty
-  * frame by hand.
+  * reads its directory raw. A store whose rows depend on prior state or
+  * on a side input states its empty frame by hand.
+  *
+  * An additive store keeps its read model as mergeable partials, and
+  * states itself once, as an [[Additive]] record: its batch kernel
+  * `partial` over its input schema, and the `merge` that combines
+  * partial rows into one row per group, with the partial's columns. The
+  * record owns the rest:
+  *
+  *  - Each batch writes the partial of the batch, and the store's read is
+  *    the merge of every stored partial. While the store holds no parquet
+  *    data it reads the merge of the partial of zero rows, so the written
+  *    schema and the empty one cannot drift apart.
+  *  - The merge is associative and commutative, so the read equals the
+  *    batch kernel's merged frame over the concatenated input under any
+  *    batch split, with no arrival-order assumption.
+  *  - Replay is a no-op: a re-run of batch b rewrites partition b with
+  *    the same partial.
+  *  - Only the covered stores fold (below); they hand the same merge to
+  *    [[foldCovered]], and each other additive store could fold the same
+  *    way if its partition count ever demanded it.
   *
   * A keyed tail store carries, per key, the state its left fold needs
   * (an open interval, a funnel tuple, a last event) as an LWW row. Each
@@ -62,11 +76,12 @@ import org.apache.spark.sql.types.StructType
   *  - A NULL key is an ordinary key: its tail is pruned, gated and
   *    advanced like any other, as the batch kernels group it.
   *
-  * An additive store, where a duplicated row would double-count, folds
-  * by a coverage watermark instead of write-then-delete. Its batches
-  * write through [[writeCovered]], its readers count only the live rows
-  * ([[readCovered]]: the base plus the batch partitions at or above the
-  * base's `covered_upto`), and it folds in two phases:
+  * A covered store is an additive store that folds. A duplicated row
+  * would double-count, so it folds by a coverage watermark instead of
+  * write-then-delete. Its batches write through
+  * [[Additive.writeCovered]], its readers count only the live rows
+  * ([[Additive.readCovered]]: the base plus the batch partitions at or
+  * above the base's `covered_upto`), and it folds in two phases:
   *
   *  - [[foldCovered]] rejects a fold point below the current watermark
   *    with an IllegalArgumentException, before anything is written: a
@@ -80,14 +95,38 @@ import org.apache.spark.sql.types.StructType
   *    cleanup: it can crash, re-run or never run without moving a read. */
 object BatchStore {
 
-  /** A store's batch kernel `partial` over the `input` columns it reads:
-    * [[apply]] is what a batch writes, [[empty]] what a store that holds
-    * no parquet data reads. */
-  final case class Partial(input: StructType)(partial: DataFrame => DataFrame) {
-    def apply(batch: DataFrame): DataFrame = partial(batch)
+  /** An additive store (the class doc): its batch kernel `partial` over
+    * the `input` columns it reads, and the `merge` of partial rows. A
+    * store writes and reads through [[write]] and [[read]], or, where it
+    * folds by the coverage watermark, through [[writeCovered]],
+    * [[readCovered]] and [[foldCovered]]. */
+  final case class Additive(input: StructType)(partial: DataFrame => DataFrame)(
+      val merge: DataFrame => DataFrame) {
+
+    /** Write the partial of `batch` as partition `batch_id=batchId`. */
+    def write(batch: DataFrame, dir: String, batchId: Long): Unit =
+      BatchStore.write(partial(batch), dir, batchId)
+
+    /** The merge of every stored partial. */
+    def read(spark: SparkSession, dir: String): DataFrame =
+      merge(readOr(spark, dir)(empty(spark)))
+
+    /** [[write]], with the NULL covered_upto that only a base sets. */
+    def writeCovered(batch: DataFrame, dir: String, batchId: Long): Unit =
+      BatchStore.write(partial(batch).withColumn("covered_upto", lit(null).cast("long")),
+        dir, batchId)
+
+    /** The merge of the partials a reader may count: the base and the
+      * batch partitions it does not cover. */
+    def readCovered(spark: SparkSession, dir: String): DataFrame =
+      merge(BatchStore.read(spark, dir).fold(empty(spark))(live(_).drop("batch_id")))
+
+    /** [[BatchStore.foldCovered]] with the merge as the base's resolve. */
+    def foldCovered(spark: SparkSession, dir: String, upToBatch: Long): Unit =
+      BatchStore.foldCovered(spark, dir, upToBatch)(merge)
 
     /** The partial of zero rows ([[emptyOf]] `input`). */
-    def empty(spark: SparkSession): DataFrame = partial(emptyOf(spark, input))
+    private def empty(spark: SparkSession): DataFrame = partial(emptyOf(spark, input))
   }
 
   /** A zero-row frame of `schema`: a local relation, so building it, or a
@@ -228,20 +267,10 @@ object BatchStore {
     partitionsBelow(spark, dir, below).foreach(p => fs.delete(p, true))
   }
 
-  /** Write `df` as batch `batchId` of an additive store: [[write]], with
-    * the NULL covered_upto that only a base sets. */
-  def writeCovered(df: DataFrame, dir: String, batchId: Long): Unit =
-    write(df.withColumn("covered_upto", lit(null).cast("long")), dir, batchId)
-
-  /** The rows of an additive store a reader may count, without batch_id
-    * and covered_upto; `empty` while the store holds no parquet data. */
-  def readCovered(spark: SparkSession, dir: String)(empty: => DataFrame): DataFrame =
-    read(spark, dir).fold(empty)(live(_).drop("batch_id"))
-
   /** Fold an additive store's live rows below `upToBatch` into a new base
     * with covered_upto = upToBatch (the class doc's first phase).
-    * `resolve` receives those rows as [[readCovered]] gives them and
-    * returns the rows the base keeps. */
+    * `resolve` receives those rows as [[Additive.readCovered]] merges
+    * them and returns the rows the base keeps. */
   def foldCovered(spark: SparkSession, dir: String, upToBatch: Long)(
       resolve: DataFrame => DataFrame): Unit =
     read(spark, dir).foreach { all =>

@@ -9,13 +9,10 @@ import graft.queries.Stats
   * re-posable as events land: the experiment dashboard every platform
   * polls while a test runs ("is it significant YET?" is intrinsically a
   * streaming question). Each batch writes per-user conversion-flag
-  * partials through q165's OWN `Stats.userConv` kernel (a 0/1 MAX —
-  * associative + commutative); the read merges per user and runs the
-  * SAME `Stats.chisqOfConv` finisher, so the test statistic exists
-  * exactly once.
-  *
-  * Additive family: MAX partials merge under ANY batch split (a user's
-  * conversion may land in any batch — the merged flag is the same).
+  * partials through q165's OWN `Stats.userConv` kernel; the read merges
+  * them per user (a 0/1 MAX, [[BatchStore.Additive]]: a user's conversion
+  * may land in any batch) and runs the SAME `Stats.chisqOfConv`
+  * finisher, so the test statistic exists exactly once.
   *
   * Scale posture: per batch ONE map-side-combined per-user aggregate of
   * the batch only; the read merges O(users) flag partials into the
@@ -24,20 +21,16 @@ import graft.queries.Stats
   */
 object ChisqMonitor {
 
-  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(Stats.userConv)
+  private val conversions = BatchStore.Additive(graft.tables.Tables.EventsSchema)(Stats.userConv)(
+    _.groupBy(col("user_id")).agg(max(col("conv")).as("conv")))
 
   /** One micro-batch of (user_id, event_type): per-user conversion-flag
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
-    BatchStore.write(partial(batch), storeDir, batchId)
+    conversions.write(batch, storeDir, batchId)
 
   /** The q165-shaped experiment readout over everything ingested so far
-    * — row-for-row equal to batch q165 on the concatenated log under ANY
-    * batch split. */
-  def readout(spark: SparkSession, storeDir: String): DataFrame = {
-    val conv = BatchStore.readOr(spark, storeDir)(partial.empty(spark))
-      .groupBy(col("user_id"))
-      .agg(max(col("conv")).as("conv"))
-    Stats.chisqOfConv(conv)
-  }
+    * — row-for-row equal to batch q165 on the concatenated log. */
+  def readout(spark: SparkSession, storeDir: String): DataFrame =
+    Stats.chisqOfConv(conversions.read(spark, storeDir))
 }

@@ -8,11 +8,10 @@ import graft.queries.Stats
 /** s29: streaming distribution-drift monitor — the online form of q135's
   * two-sample Kolmogorov–Smirnov matrix: events arrive in micro-batches
   * and the per-(event_type, value) observation counts are maintained as
-  * a store of ADDITIVE exact partials (s26's store class), so the drift
-  * read never re-scans the event log. The read merges the partials (one
-  * integer sum — exact, associative, commutative: parity holds under
-  * ANY batch split, no arrival-order assumption) and pushes the summed
-  * counts through the SAME `Stats.ksOfCounts` kernel batch q135 uses —
+  * a covered additive store ([[BatchStore.Additive]]) of exact partials,
+  * so the drift read never re-scans the event log. The read merges the
+  * partials (one integer sum) and pushes the summed counts through the
+  * SAME `Stats.ksOfCounts` kernel batch q135 uses —
   * the exact-integer ECDF supremum, DECIMAL(38,0) products and ratio4dec
   * quotient included, parity by construction.
   *
@@ -24,8 +23,7 @@ import graft.queries.Stats
   * The store grows one quantization-bounded partition per batch
   * (distinct (type, value) pairs, NOT batch rows — the 2-decimal value
   * grid bounds it regardless of volume); folding old partitions into a
-  * base is the coverage-watermark fold ([[BatchStore.foldCovered]]):
-  * counts are pointwise-summable.
+  * base is the coverage-watermark fold ([[BatchStore.foldCovered]]).
   *
   * Scale posture: per batch ONE (type, value)-keyed map-side-combined
   * aggregate of the batch only; the drift read is one shuffle over the
@@ -83,23 +81,20 @@ object DriftMonitor {
   /** Exact per-(type, day, value) counts. The day column lets the same
     * store serve the calendar-sliced band read (s48); the drift/IQR reads
     * simply merge across it. */
-  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(
+  private val counts = BatchStore.Additive(graft.tables.Tables.EventsSchema)(
     _.select(col("event_type"), to_date(date_trunc("day", col("ts"))).as("d"), col("value"))
       .groupBy(col("event_type"), col("d"), col("value"))
-      .agg(count(lit(1)).as("cnt")))
+      .agg(count(lit(1)).as("cnt")))(
+    _.groupBy(col("event_type"), col("d"), col("value")).agg(sum(col("cnt")).as("cnt")))
 
   /** One micro-batch of (event_type, ts, value): the per-(type, day,
     * value) counts → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
-    BatchStore.writeCovered(partial(batch), storeDir, batchId)
-
-  /** The store's countable rows ([[BatchStore.readCovered]]). */
-  private def storeCounts(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readCovered(spark, storeDir)(partial.empty(spark))
+    counts.writeCovered(batch, storeDir, batchId)
 
   /** The merged (event_type, value) histogram the d-merging reads share. */
   private def valueCounts(spark: SparkSession, storeDir: String): DataFrame =
-    storeCounts(spark, storeDir)
+    counts.readCovered(spark, storeDir)
       .groupBy(col("event_type"), col("value"))
       .agg(sum(col("cnt")).as("cnt"))
 
@@ -113,11 +108,10 @@ object DriftMonitor {
     BatchStore.foldCovered(spark, storeDir, upToBatch) { folded =>
       // the anchor is the newest day over ALL live rows, not just the
       // folded ones, so a partial fold never moves the horizon backwards
-      val cutoff = Option(storeCounts(spark, storeDir)
+      val cutoff = Option(counts.readCovered(spark, storeDir)
         .agg(date_sub(max(col("d")), horizonDays)).collect()(0).getDate(0))
-      cutoff.fold(folded)(c => folded.withColumn("d", when(col("d") >= lit(c), col("d"))))
-        .groupBy(col("event_type"), col("d"), col("value"))
-        .agg(sum(col("cnt")).as("cnt"))
+      counts.merge(
+        cutoff.fold(folded)(c => folded.withColumn("d", when(col("d") >= lit(c), col("d")))))
     }
 
   /** The maintainer fold: see the class doc for why this runs on the
@@ -129,8 +123,7 @@ object DriftMonitor {
   }
 
   /** The q135-shaped KS drift matrix over everything ingested so far —
-    * row-for-row equal to batch q135 on the concatenated log under ANY
-    * batch split (the count merge is associative and commutative). */
+    * row-for-row equal to batch q135 on the concatenated log. */
   def drift(spark: SparkSession, storeDir: String): DataFrame =
     Stats.ksOfCounts(valueCounts(spark, storeDir))
 
@@ -139,8 +132,7 @@ object DriftMonitor {
     * through the SAME `Stats.iqrOfValueCounts` kernel batch q168 runs.
     * One additive value-count store, two distribution reads (KS drift +
     * IQR profile) — the s36/s39 economics on the value axis. Row-for-row
-    * equal to batch q168 under ANY batch split; replay no-op inherits
-    * from the shared store. */
+    * equal to batch q168. */
   def iqr(spark: SparkSession, storeDir: String): DataFrame =
     Stats.iqrOfValueCounts(valueCounts(spark, storeDir))
 
@@ -148,20 +140,16 @@ object DriftMonitor {
     * profile (p05/p95 clip, clipped count/sum/4-dec mean) over the same
     * merged value histogram, through the SAME
     * `Stats.winsorizedOfValueCounts` kernel batch q182 runs — the read
-    * q182's scaladoc promised. Row-for-row equal to batch q182 under ANY
-    * batch split (the count merge is associative and commutative, and
-    * the kernel sees only the summed histogram); replay no-op and
-    * compaction invariance inherit from the shared store (it never looks
-    * at d). */
+    * q182's scaladoc promised. Row-for-row equal to batch q182 (the
+    * kernel sees only the summed histogram); no fold moves it (it
+    * never looks at d). */
   def winsorized(spark: SparkSession, storeDir: String): DataFrame =
     Stats.winsorizedOfValueCounts(valueCounts(spark, storeDir))
 
   /** s57: the FIFTH read of this store — q188's median + MAD robust
     * dispersion panel over the same merged value histogram, through the
     * SAME `Stats.madOfValueCounts` kernel batch q188 runs. Row-for-row
-    * equal to batch q188 under ANY batch split; replay no-op and
-    * compaction invariance inherit from the shared store (the read
-    * never looks at d). */
+    * equal to batch q188; no fold moves it (it never looks at d). */
   def mad(spark: SparkSession, storeDir: String): DataFrame =
     Stats.madOfValueCounts(valueCounts(spark, storeDir))
 
@@ -169,13 +157,9 @@ object DriftMonitor {
     * bands over the calendar-sliced histogram, through the SAME
     * `Stats.bandsOfCounts` kernel batch q179 runs (the day-widened
     * partials make this read possible; drift and IQR keep merging across
-    * the day axis). Row-for-row equal to batch q179 under ANY batch
-    * split; replay no-op inherits from the shared store. */
+    * the day axis). Row-for-row equal to batch q179. */
   def bands(spark: SparkSession, storeDir: String): DataFrame =
     // folded NULL-day rows carry no calendar slice — after a fold this
     // read serves the days inside the band horizon (class doc)
-    Stats.bandsOfCounts(storeCounts(spark, storeDir)
-      .filter(col("d").isNotNull)
-      .groupBy(col("event_type"), col("d"), col("value"))
-      .agg(sum(col("cnt")).as("cnt")))
+    Stats.bandsOfCounts(counts.readCovered(spark, storeDir).filter(col("d").isNotNull))
 }

@@ -18,9 +18,9 @@ import graft.ops.Dsl.freqSketch
   * N/(m+1) present) survives ANY merge tree shape, which is exactly what
   * licenses folding per-batch sketches written at different times.
   *
-  * The store is ADDITIVE — a duplicated row changes sums — so it folds
-  * by the coverage watermark ([[BatchStore.foldCovered]]), not by
-  * write-then-delete.
+  * A covered store ([[BatchStore.Additive]]) whose merge is the
+  * mergeable-summary fold: in the eviction regime it is not exactly
+  * associative, but every merge order keeps the bound above.
   *
   * Scale posture: per batch the shuffle is the m-counter sketch merge
   * tree (constant state per partition — the q88 argument, now paid per
@@ -45,16 +45,18 @@ object HeavyHitters {
     if (batch.isEmpty) return
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId, m)
-    BatchStore.writeCovered(partial(m)(batch), storeDir, batchId)
+    sketch(m).writeCovered(batch, storeDir, batchId)
   }
 
-  /** The batch's m-counter sketch as (token, est) rows. */
-  private def partial(m: Int) = BatchStore.Partial(StructType.fromDDL("text STRING"))(
+  /** The batch's m-counter sketch as (token, est) rows, merged by
+    * [[mergeSketch]]. */
+  private def sketch(m: Int) = BatchStore.Additive(StructType.fromDDL("text STRING"))(
     _.select(explode(split(col("text"), " ")).as("token"))
       .filter(length(col("token")) >= 1)
       .agg(freqSketch(col("token"), m).as("sk"))
       .select(explode(col("sk")).as("e"))
-      .select(col("e.token").as("token"), col("e.est").as("est")))
+      .select(col("e.token").as("token"), col("e.est").as("est")))(
+    mergeSketch(_, m))
 
   /** The PODS'12 merge over a (token, est) frame: pointwise sum, subtract
     * the (m+1)-th largest sum (a TakeOrdered single-row probe, broadcast
@@ -72,7 +74,7 @@ object HeavyHitters {
 
   /** The queryable merged sketch over everything admitted so far. */
   def merged(spark: SparkSession, storeDir: String, m: Int = Counters): DataFrame =
-    mergeSketch(BatchStore.readCovered(spark, storeDir)(partial(m).empty(spark)), m)
+    sketch(m).readCovered(spark, storeDir)
 
   /** Fold the live rows below `upToBatch` into a new base. The fold
     * applies [[mergeSketch]], which the mergeable-summary theorem says
@@ -81,7 +83,7 @@ object HeavyHitters {
     * fold is exactly the pointwise sum. */
   def foldBase(spark: SparkSession, storeDir: String, upToBatch: Long,
       m: Int = Counters): Unit =
-    BatchStore.foldCovered(spark, storeDir, upToBatch)(mergeSketch(_, m))
+    sketch(m).foldCovered(spark, storeDir, upToBatch)
 
   def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long,
       m: Int = Counters): Unit = {

@@ -89,14 +89,10 @@ object IncrementalDedup {
       BatchStore.write(bands.join(rejected, Seq("doc_id"), "left_anti"), storeDir, batchId)
     } finally {
       // free this batch's checkpoint blocks (and nothing else's); the
-      // blocks are dead — the batch is committed — so the per-RDD
-      // lineage-truncation WARN is noise, suppressed scoped (the
-      // clearGraftCaches discipline)
-      graft.SparkEntry.silencingRddWarns {
-        spark.sparkContext.getPersistentRDDs
-          .filter { case (id, _) => !rddsBefore.contains(id) }
-          .values.foreach(_.unpersist(blocking = false))
-      }
+      // blocks are dead — the batch is committed
+      spark.sparkContext.getPersistentRDDs
+        .filter { case (id, _) => !rddsBefore.contains(id) }
+        .values.foreach(_.unpersist(blocking = false))
     }
   }
 

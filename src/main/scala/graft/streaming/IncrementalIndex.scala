@@ -34,20 +34,22 @@ import graft.queries.Text
   * vocab × avg-df, the same frame q91 aggregates. */
 object IncrementalIndex {
 
-  private val partial =
-    BatchStore.Partial(StructType.fromDDL("doc_id BIGINT, text STRING"))(Text.termFrequencies)
+  /** The postings of zero documents: the store's empty read. */
+  private def noPostings(spark: SparkSession): DataFrame =
+    Text.termFrequencies(
+      BatchStore.emptyOf(spark, StructType.fromDDL("doc_id BIGINT, text STRING")))
 
   /** One micro-batch upsert. Exposed for direct testing. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)
-    BatchStore.write(partial(batch), storeDir, batchId)
+    BatchStore.write(Text.termFrequencies(batch), storeDir, batchId)
   }
 
   /** The store's current posting rows after per-doc LWW resolution —
     * (token, doc_id, tf), one version per doc. */
   private def currentPostings(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readLastVersion(spark, storeDir, "doc_id")(partial.empty(spark))
+    BatchStore.readLastVersion(spark, storeDir, "doc_id")(noPostings(spark))
 
   /** The index as q91 would report it over the streamed corpus: the q91
     * aggregation applied to the LWW-resolved store (the batch-parity law

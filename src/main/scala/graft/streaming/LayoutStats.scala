@@ -14,14 +14,8 @@ import graft.queries.ZOrder
   * (batch-local domains would shift bucket assignment batch to batch —
   * the s31-budgets argument again: online maintainers take their
   * normalization constants as config). The panel read merges partials
-  * (sum/min/min/max/max — all associative AND commutative), so the view
-  * equals batch q149 under ANY batch split — the additive-store family
-  * (s16/s21/s26), the engine's strongest replay class: no arrival-order
-  * assumption at all.
-  *
-  * The store never folds: its batch rows carry no `covered_upto`.
-  * [[BatchStore.foldCovered]] would apply if the partition count ever
-  * demanded it.
+  * (sum/min/min/max/max, [[BatchStore.Additive]]), so the view equals
+  * batch q149.
   *
   * Scale posture: per batch ONE map-side-combined aggregate of the batch
   * at 2^ZBucketBits cardinality (each task emits ≤ 64 partial rows); the
@@ -33,12 +27,16 @@ object LayoutStats {
 
   /** Per bucket of bucketed (ck, day, bucket) rows: the count and the
     * envelope of both dims. */
-  private val partial =
-    BatchStore.Partial(StructType.fromDDL("ck BIGINT, day BIGINT, bucket BIGINT"))(
+  private val envelopes =
+    BatchStore.Additive(StructType.fromDDL("ck BIGINT, day BIGINT, bucket BIGINT"))(
       _.groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"),
           min(col("ck")).as("min_ck"), max(col("ck")).as("max_ck"),
-          min(col("day")).as("min_day"), max(col("day")).as("max_day")))
+          min(col("day")).as("min_day"), max(col("day")).as("max_day")))(
+      _.groupBy(col("bucket"))
+        .agg(sum(col("n")).as("n"),
+          min(col("min_ck")).as("min_ck"), max(col("max_ck")).as("max_ck"),
+          min(col("min_day")).as("min_day"), max(col("max_day")).as("max_day")))
 
   /** One micro-batch of (ck, day) dims: envelope partials → the batch's
     * own partition. `dom` is the fixed quantization domain (offline
@@ -46,18 +44,13 @@ object LayoutStats {
     * the partial, so the store's empty read needs no domain. */
   def processBatch(batch: DataFrame, dom: DataFrame, storeDir: String,
       batchId: Long): Unit =
-    BatchStore.write(partial(ZOrder.bucketed(batch.select(col("ck"), col("day")), dom)),
-      storeDir, batchId)
+    envelopes.write(ZOrder.bucketed(batch.select(col("ck"), col("day")), dom), storeDir, batchId)
 
   /** The q149-shaped panel over everything ingested so far: merge the
     * partials, re-derive the scan verdict — row-for-row the batch q149
-    * on the concatenated input (any split). */
+    * on the concatenated input. */
   def envelopePanel(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
-      .groupBy(col("bucket"))
-      .agg(sum(col("n")).as("n"),
-        min(col("min_ck")).as("min_ck"), max(col("max_ck")).as("max_ck"),
-        min(col("min_day")).as("min_day"), max(col("max_day")).as("max_day"))
+    envelopes.read(spark, storeDir)
       .withColumn("would_scan",
         !(col("max_ck") < ZOrder.RectCkLo || col("min_ck") > ZOrder.RectCkHi ||
           col("max_day") < ZOrder.RectDayLo || col("min_day") > ZOrder.RectDayHi))

@@ -33,9 +33,6 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: per batch ONE map-side-combined sketch aggregate at
   * event-type cardinality; read = one union shuffle over KB-sized rows.
-  * The store never folds: its batch rows carry no `covered_upto`. A
-  * [[BatchStore.foldCovered]] fold that unions old partitions into a base
-  * sketch would be lossless, by the same merge law the read relies on.
   */
 object NdvMonitor {
 
@@ -46,29 +43,27 @@ object NdvMonitor {
   val LgK = 12
 
   /** Per event type: the HLL sketch of its users. */
-  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(
-    _.groupBy(col("event_type")).agg(expr(s"hll_sketch_agg(user_id, $LgK)").as("sketch")))
-
-  /** One micro-batch of (event_type, user_id): per-type HLL sketch
-    * partial → the batch's own partition. */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
-    BatchStore.write(partial(batch), storeDir, batchId)
-
-  /** Distinct-user estimate per event type over everything ingested so
-    * far — equal to the one-shot sketch estimate on the concatenated
-    * log under ANY batch split (the union-merge law). */
-  def ndv(spark: SparkSession, storeDir: String): DataFrame = {
-    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
-      .groupBy(col("event_type"))
+  private val sketches = BatchStore.Additive(graft.tables.Tables.EventsSchema)(
+    _.groupBy(col("event_type")).agg(expr(s"hll_sketch_agg(user_id, $LgK)").as("sketch")))(
+    _.groupBy(col("event_type"))
       // allowDifferentLgConfigK=false: every sketch in the store is
       // written at the one LgK above; a foreign-width sketch must fail
       // the read loudly rather than silently downsize the union and
       // break the one-shot-equality parity law.
-      .agg(expr(s"hll_union_agg(sketch, false)").as("merged"))
-      .select(col("event_type"),
-        expr("hll_sketch_estimate(merged)").as("ndv_users"))
+      .agg(expr("hll_union_agg(sketch, false)").as("sketch")))
+
+  /** One micro-batch of (event_type, user_id): per-type HLL sketch
+    * partial → the batch's own partition. */
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
+    sketches.write(batch, storeDir, batchId)
+
+  /** Distinct-user estimate per event type over everything ingested so
+    * far — equal to the one-shot sketch estimate on the concatenated
+    * log (the union-merge law). */
+  def ndv(spark: SparkSession, storeDir: String): DataFrame =
+    sketches.read(spark, storeDir)
+      .select(col("event_type"), expr("hll_sketch_estimate(sketch)").as("ndv_users"))
       .orderBy(col("event_type"))
-  }
 
   /** The one-shot reference the parity law compares against: sketch the
     * whole frame in one aggregate, same lgK. */

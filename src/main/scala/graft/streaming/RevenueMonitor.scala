@@ -9,13 +9,13 @@ import graft.queries.Stats
 /** s47: streaming revenue-inequality maintenance — q173's Gini and
   * q174's Lorenz decile table re-posable as orders land: the
   * concentration dashboard of a marketplace whose order stream never
-  * stops. Each batch writes per-customer cent-sum partials (SUM —
-  * associative + commutative); the reads merge per customer and run the
-  * SAME `Stats.revenueGini` / `Stats.revenueDeciles` kernels batch
-  * q173/q174 run (the kernels' own per-customer aggregate makes the
-  * merged partials indistinguishable from raw rows).
+  * stops. Each batch writes per-customer cent-sum partials, merged by
+  * SUM ([[BatchStore.Additive]]); the reads run the SAME
+  * `Stats.revenueGini` / `Stats.revenueDeciles` kernels batch q173/q174
+  * run (the kernels' own per-customer aggregate makes the merged
+  * partials indistinguishable from raw rows).
   *
-  * Additive family: parity under ANY batch split. The rank structure (who sits in which decile) is NOT mergeable — a
+  * The rank structure (who sits in which decile) is NOT mergeable — a
   * customer's rank moves every time anyone spends — which is exactly why
   * the store holds the mergeable cent sums and the two-phase prefix
   * ranks are derived at read (the s39/s41 boundary argument, here for
@@ -28,23 +28,23 @@ import graft.queries.Stats
   */
 object RevenueMonitor {
 
-  private val partial = BatchStore.Partial(StructType.fromDDL("o_custkey BIGINT, cents BIGINT"))(
-    _.groupBy(col("o_custkey")).agg(sum(col("cents")).as("cents")))
+  /** Per customer: the cent sum, which is also the merge of cent sums. */
+  private val centSums: DataFrame => DataFrame =
+    _.groupBy(col("o_custkey")).agg(sum(col("cents")).as("cents"))
+
+  private val revenue =
+    BatchStore.Additive(StructType.fromDDL("o_custkey BIGINT, cents BIGINT"))(centSums)(centSums)
 
   /** One micro-batch of (o_custkey, cents): per-customer sum partials →
     * the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
-    BatchStore.write(partial(batch), storeDir, batchId)
-
-  private def merged(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
-      .select(col("o_custkey"), col("cents"))
+    revenue.write(batch, storeDir, batchId)
 
   /** q173-shaped Gini over everything ingested so far. */
   def gini(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.revenueGini(merged(spark, storeDir))
+    Stats.revenueGini(revenue.read(spark, storeDir))
 
   /** q174-shaped Lorenz decile table over everything ingested so far. */
   def deciles(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.revenueDeciles(merged(spark, storeDir))
+    Stats.revenueDeciles(revenue.read(spark, storeDir))
 }

@@ -8,11 +8,8 @@ import graft.queries.Behavior
 /** s37: streaming RFM segmentation — q156's segment grid maintained as
   * events land: LIVE behavioral segmentation, the panel a marketing /
   * curation deployment reads between batches instead of re-scanning the
-  * log. The per-user metric triple is ADDITIVE (last_ts merges by MAX,
-  * frequency and cents by SUM — all associative and commutative), so the
-  * store is the s16/s21/s26/s29 additive class: per-(user, batch)
-  * partials in the batch's own partition, merged at read, parity under
-  * ANY batch split with no arrival-order assumption. The merged metric
+  * log. The per-user metric triple is additive ([[BatchStore.Additive]]:
+  * last_ts merges by MAX, frequency and cents by SUM). The merged metric
   * frame then runs the SAME `Behavior.rfmSegments` quantile finisher
   * batch q156 runs — disc-percentile boundaries, dollar grid, log-clock
   * anchor included — so batch and stream segment identically by
@@ -21,10 +18,7 @@ import graft.queries.Behavior
   * Note the quantile boundaries are DERIVED, not stored: quantiles are
   * not mergeable statistics, so the read recomputes them from the merged
   * metrics — which stay one row per (user, batch-partial), never
-  * event-scale. The store never folds: its batch rows carry no
-  * `covered_upto`. MAX/SUM partials are pointwise-mergeable, so
-  * [[BatchStore.foldCovered]] would apply if the partition count ever
-  * demanded it.
+  * event-scale.
   *
   * Scale posture: per batch ONE map-side-combined per-user aggregate of
   * the batch only (`Behavior.rfmMetrics` — the shared kernel); the read
@@ -33,23 +27,18 @@ import graft.queries.Behavior
   */
 object RfmMonitor {
 
-  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(Behavior.rfmMetrics)
+  private val rfm = BatchStore.Additive(graft.tables.Tables.EventsSchema)(Behavior.rfmMetrics)(
+    _.groupBy(col("user_id"))
+      .agg(max(col("last_ts")).as("last_ts"), sum(col("frequency")).as("frequency"),
+        sum(col("cents")).as("cents")))
 
   /** One micro-batch of (user_id, ts, value): the batch's own per-user
     * metric partials → its own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
-    BatchStore.write(partial(batch), storeDir, batchId)
-
-  /** The merged per-user metric frame over everything ingested. */
-  private[graft] def metrics(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
-      .groupBy(col("user_id"))
-      .agg(max(col("last_ts")).as("last_ts"), sum(col("frequency")).as("frequency"),
-        sum(col("cents")).as("cents"))
+    rfm.write(batch, storeDir, batchId)
 
   /** The q156-shaped segment grid over everything ingested so far —
-    * row-for-row equal to batch q156 on the concatenated log under ANY
-    * batch split. */
+    * row-for-row equal to batch q156 on the concatenated log. */
   def segments(spark: SparkSession, storeDir: String): DataFrame =
-    Behavior.rfmSegments(metrics(spark, storeDir))
+    Behavior.rfmSegments(rfm.read(spark, storeDir))
 }

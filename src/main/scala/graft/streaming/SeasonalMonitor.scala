@@ -7,11 +7,10 @@ import graft.queries.Stats
 
 /** s36: streaming seasonal-forecast panel — the online form of q151's
   * seasonal-naive baseline: events arrive in micro-batches and the
-  * per-(event_type, day) observation counts are maintained as ADDITIVE
-  * exact partials (s29's store class, one calendar-bounded partition per
-  * batch), so the forecast-error read never re-scans the event log. The
-  * read merges the partials (integer sum — associative, commutative:
-  * parity under ANY batch split, no arrival-order assumption) and pushes
+  * per-(event_type, day) observation counts are maintained as additive
+  * exact partials ([[BatchStore.Additive]], one calendar-bounded
+  * partition per batch), so the forecast-error read never re-scans the
+  * event log. The read merges the partials (integer sum) and pushes
   * the daily panel through the SAME `Stats.seasonalBaseline` kernel
   * batch q151 runs — lag join, MAE/WAPE ratio4s and gap-day semantics
   * included, parity by construction.
@@ -21,10 +20,7 @@ import graft.queries.Stats
   * monitoring query has a store-maintained face.
   *
   * The store grows one (types × days)-bounded partition per batch —
-  * calendar-bounded, never volume-bounded. The store never folds: its
-  * batch rows carry no `covered_upto`. Counts are pointwise-summable, so
-  * [[BatchStore.foldCovered]] would apply if the partition count ever
-  * demanded it.
+  * calendar-bounded, never volume-bounded.
   *
   * Scale posture: per batch ONE map-side-combined aggregate of the
   * batch only; the read is one shuffle over ≤ types × days ×
@@ -44,29 +40,26 @@ object SeasonalMonitor {
     * decimal (not double) carrier is what keeps the merge exact: the read
     * sums the per-batch decimals and casts to double ONCE, so the merged
     * panel equals batch `Stats.dailyOf` bit-for-bit under any split. */
-  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(
+  private val daily = BatchStore.Additive(graft.tables.Tables.EventsSchema)(
     _.select(col("event_type"), to_date(date_trunc("day", col("ts"))).as("d"), col("value"))
       .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,4)")).as("sum_v")))
+      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,4)")).as("sum_v")))(
+    _.groupBy(col("event_type"), col("d"))
+      .agg(sum(col("n")).as("n"), sum(col("sum_v")).as("sum_v")))
 
   /** One micro-batch of (event_type, ts, value): the per-(type, day)
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
-    BatchStore.write(partial(batch), storeDir, batchId)
+    daily.write(batch, storeDir, batchId)
 
-  private def stored(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.readOr(spark, storeDir)(partial.empty(spark))
-
-  /** The merged (event_type, d, n, sum_v) daily panel — the dailyOf
-    * equivalence every read below starts from. */
+  /** The merged (event_type, d, n, sum_v) daily panel with sum_v as a
+    * double — the dailyOf equivalence every read below but [[decayed]]
+    * starts from. */
   private def mergedDaily(spark: SparkSession, storeDir: String): DataFrame =
-    stored(spark, storeDir)
-      .groupBy(col("event_type"), col("d"))
-      .agg(sum(col("n")).as("n"), sum(col("sum_v")).cast("double").as("sum_v"))
+    daily.read(spark, storeDir).withColumn("sum_v", col("sum_v").cast("double"))
 
   /** The q151-shaped forecast-error report over everything ingested so
-    * far — row-for-row equal to batch q151 on the concatenated log under
-    * ANY batch split. */
+    * far — row-for-row equal to batch q151 on the concatenated log. */
   def baseline(spark: SparkSession, storeDir: String): DataFrame =
     Stats.seasonalBaseline(mergedDaily(spark, storeDir))
 
@@ -75,13 +68,9 @@ object SeasonalMonitor {
     * kernel. Unlike [[mergedDaily]], the sum merge here stays DECIMAL
     * end to end (no double cast): q185's integer-carrier exactness
     * starts from decimal-exact cent sums, and a decimal like x.78 cast
-    * to double is no longer exact. Row-for-row equal to batch q185
-    * under ANY batch split; replay no-op inherits from the shared
-    * store. */
+    * to double is no longer exact. Row-for-row equal to batch q185. */
   def decayed(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.decayedEngagement(stored(spark, storeDir)
-      .groupBy(col("event_type"), col("d"))
-      .agg(sum(col("sum_v")).as("sum_v")))
+    Stats.decayedEngagement(daily.read(spark, storeDir))
 
   /** s43: the THIRD read — q167's Holt level/trend smoothing over the
     * same merged panel, through the SAME `Stats.holtOf` kernel. The
@@ -109,8 +98,7 @@ object SeasonalMonitor {
     * the architecture the batch symmetry promises: quantile statistics
     * are not mergeable, so the store holds the mergeable counts and the
     * medians are derived AT READ over the calendar-bounded panel (s37's
-    * boundary argument). Row-for-row equal to batch q162 under ANY batch
-    * split; replay no-op inherits from the shared store. */
+    * boundary argument). Row-for-row equal to batch q162. */
   def outliers(spark: SparkSession, storeDir: String): DataFrame =
     Stats.madOutliers(mergedDaily(spark, storeDir))
 
@@ -120,16 +108,14 @@ object SeasonalMonitor {
     * mergeable statistic, so (like the s39 medians and the s43 fold)
     * it is derived AT READ over the calendar-bounded panel; the count
     * partials merge exactly, so the slopes — one IEEE division each of
-    * identical integers — equal batch q189's bit-for-bit under ANY
-    * batch split. Replay no-op inherits from the shared store. */
+    * identical integers — equal batch q189's bit-for-bit. */
   def theilsen(spark: SparkSession, storeDir: String): DataFrame =
     Stats.theilSenOf(mergedDaily(spark, storeDir))
 
   /** s59: the EIGHTH read — q190's Kendall tau-a rank correlation
     * between every type pair's daily-count series, through the SAME
     * `Stats.kendallOf` kernel. All-integer until the one mirrored
-    * ratio4 quotient, so any-split parity is the count-merge argument
-    * verbatim. One additive daily store now serves eight reads
+    * ratio4 quotient. One additive daily store now serves eight reads
     * (forecast, MAD flags, Holt, CUSUM, drawdown, decay, trend, rank
     * correlation) — the batch statistics family served online for one
     * store's upkeep. */
@@ -139,8 +125,7 @@ object SeasonalMonitor {
   /** s60: the NINTH read — q191's Mann–Kendall trend test over the same
     * merged daily panel, through the SAME `Stats.mannKendallOf` kernel:
     * the significance verdict next to s58's Theil–Sen slope, exact
-    * integers to the squared fence, so any-split parity is again the
-    * count-merge argument verbatim. Replay no-op inherits. */
+    * integers to the squared fence. */
   def mannKendall(spark: SparkSession, storeDir: String): DataFrame =
     Stats.mannKendallOf(mergedDaily(spark, storeDir))
 }

@@ -10,12 +10,11 @@ import graft.queries.Skyline
   * current as lineitems land (the continuous-skyline problem: the
   * frontier of a stream, re-posable at any moment without a rescan).
   * Each batch accumulates per-(qty, price) counts — the additive frame
-  * q163 itself reduces to first — and the read merges them and runs the
-  * SAME `Skyline.frontierOfCounts` finisher, so the dominance definition
-  * exists exactly once.
+  * q163 itself reduces to first, merged by SUM ([[BatchStore.Additive]])
+  * — and the read runs the SAME `Skyline.frontierOfCounts` finisher, so
+  * the dominance definition exists exactly once.
   *
-  * Additive family: counts merge by SUM under ANY batch split. The
-  * frontier itself is NOT mergeable (a point can be knocked off by a
+  * The frontier itself is NOT mergeable (a point can be knocked off by a
   * later batch's better point — which is exactly why the store holds the
   * domain-bounded candidate counts, never the frontier), but the
   * candidate frame is ≤ |qty domain| × |price grid| — domain-bounded,
@@ -28,21 +27,17 @@ import graft.queries.Skyline
   */
 object SkylineMonitor {
 
-  private val partial = BatchStore.Partial(StructType.fromDDL("qty DOUBLE, price DOUBLE"))(
-    _.groupBy(col("qty"), col("price")).agg(count(lit(1)).as("n")))
+  private val counts = BatchStore.Additive(StructType.fromDDL("qty DOUBLE, price DOUBLE"))(
+    _.groupBy(col("qty"), col("price")).agg(count(lit(1)).as("n")))(
+    _.groupBy(col("qty"), col("price")).agg(sum(col("n")).as("n")))
 
   /** One micro-batch of (qty, price): per-point counts → the batch's
     * own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
-    BatchStore.write(partial(batch), storeDir, batchId)
+    counts.write(batch, storeDir, batchId)
 
   /** The q163-shaped frontier over everything ingested so far —
-    * row-for-row equal to batch q163 on the concatenated input under ANY
-    * batch split. */
-  def frontier(spark: SparkSession, storeDir: String): DataFrame = {
-    val counts = BatchStore.readOr(spark, storeDir)(partial.empty(spark))
-      .groupBy(col("qty"), col("price"))
-      .agg(sum(col("n")).as("n"))
-    Skyline.frontierOfCounts(counts)
-  }
+    * row-for-row equal to batch q163 on the concatenated input. */
+  def frontier(spark: SparkSession, storeDir: String): DataFrame =
+    Skyline.frontierOfCounts(counts.read(spark, storeDir))
 }

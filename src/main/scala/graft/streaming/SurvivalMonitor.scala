@@ -8,13 +8,10 @@ import graft.queries.Behavior
 /** s40: streaming survival-curve maintenance — q164's Nelson–Aalen
   * conversion hazard kept current as events land. Each batch writes its
   * per-user span partials through q164's OWN `Behavior.userSpans` kernel
-  * (first event MIN, first purchase MIN, last event MAX — every column
-  * associative + commutative); the read merges the per-user partials and
+  * (first event MIN, first purchase MIN, last event MAX,
+  * [[BatchStore.Additive]]); the read merges the per-user partials and
   * runs the SAME `Behavior.hazardOfSpans` finisher batch q164 uses, so
-  * the estimator exists exactly once.
-  *
-  * Additive family (s16/s21/s26/s36/s38): parity under ANY batch split
-  * with no arrival-order assumption — a user's first-purchase time is
+  * the estimator exists exactly once. A user's first-purchase time is
   * the MIN over batches of per-batch MINs regardless of which batch saw
   * it first (MIN ignores the null partials of batches where the user
   * didn't purchase).
@@ -34,21 +31,17 @@ import graft.queries.Behavior
   */
 object SurvivalMonitor {
 
-  private val partial = BatchStore.Partial(graft.tables.Tables.EventsSchema)(Behavior.userSpans)
+  private val spans = BatchStore.Additive(graft.tables.Tables.EventsSchema)(Behavior.userSpans)(
+    _.groupBy(col("user_id"))
+      .agg(min(col("t0")).as("t0"), min(col("tp")).as("tp"), max(col("tend")).as("tend")))
 
   /** One micro-batch of (user_id, ts, event_type): per-user span
     * partials → the batch's own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit =
-    BatchStore.write(partial(batch), storeDir, batchId)
+    spans.write(batch, storeDir, batchId)
 
   /** The q164-shaped hazard table over everything ingested so far —
-    * row-for-row equal to batch q164 on the concatenated log under ANY
-    * batch split. */
-  def hazard(spark: SparkSession, storeDir: String): DataFrame = {
-    val spans = BatchStore.readOr(spark, storeDir)(partial.empty(spark))
-      .groupBy(col("user_id"))
-      .agg(min(col("t0")).as("t0"), min(col("tp")).as("tp"),
-        max(col("tend")).as("tend"))
-    Behavior.hazardOfSpans(spans)
-  }
+    * row-for-row equal to batch q164 on the concatenated log. */
+  def hazard(spark: SparkSession, storeDir: String): DataFrame =
+    Behavior.hazardOfSpans(spans.read(spark, storeDir))
 }

@@ -14,12 +14,11 @@ import graft.queries.Vectors
   * whose (i, n, n_pos, sq, mnq, mxq) rows land in the batch's own
   * batch_id partition; the queryable panel is `Vectors.statFinalize`
   * over the pointwise combine (sum/sum/sum/min/max — exact integers, so
-  * the merge has no precision question and commutes with any batch
-  * split).
+  * the merge has no precision question).
   *
-  * The store is ADDITIVE, so it folds by the coverage watermark
-  * ([[BatchStore.foldCovered]]), not by write-then-delete. The combine
-  * is exact, so a fold moves no read.
+  * A covered store ([[BatchStore.Additive]]): it folds every
+  * [[BatchStore.FoldEvery]] batches by the coverage watermark, and the
+  * combine is exact, so a fold moves no read.
   *
   * Scale posture: per batch the shuffle is dim-cardinality partials
   * (64 rows) regardless of batch size — the cheapest possible store
@@ -27,31 +26,27 @@ import graft.queries.Vectors
   * the base; the merged read is an aggregate over that bounded frame. */
 object VectorStats {
 
-  private val partial =
-    BatchStore.Partial(StructType.fromDDL("embedding ARRAY<FLOAT>"))(Vectors.statPartials)
+  private val partials =
+    BatchStore.Additive(StructType.fromDDL("embedding ARRAY<FLOAT>"))(Vectors.statPartials)(
+      _.groupBy(col("i"))
+        .agg(sum(col("n")).as("n"), sum(col("n_pos")).as("n_pos"),
+          sum(col("sq")).as("sq"), min(col("mnq")).as("mnq"), max(col("mxq")).as("mxq")))
 
   /** One micro-batch: exact partials → own partition. */
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     if (BatchStore.foldDue(batchId))
       compactStore(batch.sparkSession, storeDir, batchId)
-    BatchStore.writeCovered(partial(batch), storeDir, batchId)
+    partials.writeCovered(batch, storeDir, batchId)
   }
-
-  /** Pointwise combine of partial rows — exact, associative,
-    * batch-split-invariant. */
-  private def combine(rows: DataFrame): DataFrame =
-    rows.groupBy(col("i"))
-      .agg(sum(col("n")).as("n"), sum(col("n_pos")).as("n_pos"),
-        sum(col("sq")).as("sq"), min(col("mnq")).as("mnq"), max(col("mxq")).as("mxq"))
 
   /** The queryable panel over everything streamed so far — q102's exact
     * output shape (same finalize formula, same ordering). */
   def stats(spark: SparkSession, storeDir: String): DataFrame =
-    Vectors.statFinalize(combine(BatchStore.readCovered(spark, storeDir)(partial.empty(spark))))
+    Vectors.statFinalize(partials.readCovered(spark, storeDir))
 
   /** Fold the live rows below `upToBatch` into a new base. */
   def foldBase(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
-    BatchStore.foldCovered(spark, storeDir, upToBatch)(combine)
+    partials.foldCovered(spark, storeDir, upToBatch)
 
   def compactStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
     foldBase(spark, storeDir, upToBatch)

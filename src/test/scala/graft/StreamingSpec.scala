@@ -3,8 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.streaming.{BnplPipeline, Envelope, EventStats}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.types.DataType
 
 /** Streaming e2e — the reference's manual runbook (readme:98-151) replayed
@@ -22,6 +22,40 @@ class StreamingSpec extends SparkSpec {
   private def ev(id: String, tpe: String, ts: String, fields: (String, String)*): String = {
     val extra = fields.map { case (k, v) => s""","$k":$v""" }.mkString
     s"""{"event_id":"$id","event_type":"$tpe","ts":"$ts"$extra}"""
+  }
+
+  private def eventLog: DataFrame = graft.tables.Tables.events(spark, sf001)
+
+  private def twin(query: String): DataFrame = SparkEntry.queries(query)(spark, sf001)
+
+  private def seqOf(df: DataFrame): Iterable[Row] = df.collect().toSeq
+
+  private def setOf(df: DataFrame): Iterable[Row] = df.collect().toSet
+
+  /** A store read, as a function of the store directory, and the batch
+    * query it must equal. */
+  private case class Twin(read: String => DataFrame, batch: DataFrame)
+
+  /** The additive-store split law: ingest `input` into `dir` as three
+    * batches split by pmod(`key`, 3), which need not follow arrival
+    * order; each read then equals its batch twin, compared as `rows`
+    * gives them, and still does after batch 1 is replayed. Every twin has
+    * rows, so an empty read cannot pass. */
+  private def splitParity(dir: String, input: DataFrame, key: Column,
+      ingest: (DataFrame, String, Long) => Unit, rows: DataFrame => Iterable[Row])(
+      twins: Twin*): Unit = {
+    val pinned = input.localCheckpoint(true)
+    def batch(b: Long) = pinned.filter(pmod(key, lit(3)) === b)
+    (0L to 2L).foreach(b => ingest(batch(b), dir, b))
+    val wants = twins.map(t => rows(t.batch))
+    assert(wants.forall(_.nonEmpty), s"$dir: a batch twin has no rows")
+    def check(when: String): Unit =
+      for (((t, want), i) <- twins.zip(wants).zipWithIndex)
+        assert(rows(t.read(dir)) == want, s"$dir: read $i diverged from its batch twin $when")
+    check("after the split")
+    ingest(batch(1L), dir, 1L)
+    check("after batch 1 was replayed")
+    SparkEntry.clearGraftCaches(spark)
   }
 
   test("notify replay: a re-run of notify batch b writes its users once") {
@@ -76,6 +110,51 @@ class StreamingSpec extends SparkSpec {
       assert(cancels.isEmpty, s"${cancels.length} cancel WARNs: ${cancels.take(3).mkString("; ")}")
       assert(seen.contains("cancel-noise control warning"),
         s"the capture missed a DAGScheduler WARN: ${seen.toArray.mkString("; ")}")
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+  }
+
+  test("rdd logs: clearing caches over a locally checkpointed frame logs no lineage WARN; other RDD WARNs and the root level still reach the rdd loggers") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val rddLogger = "org.apache.spark.rdd.MapPartitionsRDD"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("rdd-noise-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.startsWith("org.apache.spark.rdd."))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      val pinned = spark.range(100).toDF("id").localCheckpoint(true)
+      assert(pinned.count() == 100L)
+      assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+      SparkEntry.clearGraftCaches(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      LogManager.getLogger(rddLogger).warn("rdd-noise control warning")
+      val lineage = seen.toArray.map(_.toString)
+        .filter(_.contains("truncated and cannot be recomputed after unpersisting"))
+      assert(lineage.isEmpty,
+        s"${lineage.length} lineage WARNs: ${lineage.take(3).mkString("; ")}")
+      assert(seen.contains("rdd-noise control warning"),
+        s"the capture missed a $rddLogger WARN: ${seen.toArray.mkString("; ")}")
+      // the filter's logger config has no level of its own
+      val level = LogManager.getRootLogger.getLevel
+      spark.sparkContext.setLogLevel("ERROR")
+      try assert(!LogManager.getLogger(rddLogger).isWarnEnabled,
+        "setLogLevel on the root no longer reaches the rdd loggers")
+      finally spark.sparkContext.setLogLevel(level.name())
+      assert(LogManager.getLogger(rddLogger).isWarnEnabled)
     } finally {
       root.removeAppender(capture.getName)
       ctx.updateLoggers()
@@ -1736,23 +1815,8 @@ class StreamingSpec extends SparkSpec {
     val empty = drift(spark, storeDir)
     assert(empty.columns.toSeq == Seq("type_a", "type_b", "n_a", "n_b", "ks"))
     assert(empty.collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001)
-      .select(col("event_id"), col("event_type"), col("ts"), col("value"))
-      .localCheckpoint(true)
-    // split by event_id mod 3 — deliberately NOT time-ordered: the store
-    // is additive exact counts, so parity holds under ANY split
-    processBatch(ev.filter(col("event_id") % 3 === 0), storeDir, 0L)
-    processBatch(ev.filter(col("event_id") % 3 === 1), storeDir, 1L)
-    processBatch(ev.filter(col("event_id") % 3 === 2), storeDir, 2L)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
-    val want = rows(graft.queries.Stats.q135(spark, sf001))
-    assert(rows(drift(spark, storeDir)) == want,
-      "streamed drift matrix diverged from batch q135")
-    // replay law: re-running batch 1 overwrites its own partition with
-    // identical content — the summed read cannot tell
-    processBatch(ev.filter(col("event_id") % 3 === 1), storeDir, 1L)
-    assert(rows(drift(spark, storeDir)) == want, "replay changed the drift matrix")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, setOf)(
+      Twin(drift(spark, _), graft.queries.Stats.q135(spark, sf001)))
   }
 
   test("crash-replay (s24/s26): a checkpointed query killed mid-batch — before AND after the store write — restarts to the uninterrupted store") {
@@ -1874,23 +1938,8 @@ class StreamingSpec extends SparkSpec {
     assert(empty.columns.toSeq ==
       Seq("user_id", "presence", "n_clicks", "n_purchases", "purchase_value"))
     assert(empty.collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001)
-      .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-      .localCheckpoint(true)
-    // split by event_id mod 3 — deliberately NOT time-ordered: the store
-    // is additive exact partials, so parity holds under ANY split (a
-    // strictly stronger law than the tail-store folds' in-order one)
-    processBatch(ev.filter(col("event_id") % 3 === 0), storeDir, 0L)
-    processBatch(ev.filter(col("event_id") % 3 === 1), storeDir, 1L)
-    processBatch(ev.filter(col("event_id") % 3 === 2), storeDir, 2L)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
-    val want = rows(graft.queries.Relational.q115(spark, sf001))
-    assert(rows(ledger(spark, storeDir)) == want,
-      "streamed ledger diverged from batch q115")
-    // replay law: re-running batch 1 overwrites its own partition with
-    // identical content — the summed read cannot tell
-    processBatch(ev.filter(col("event_id") % 3 === 1), storeDir, 1L)
-    assert(rows(ledger(spark, storeDir)) == want, "replay changed the ledger")
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, setOf)(
+      Twin(ledger(spark, _), graft.queries.Relational.q115(spark, sf001)))
     // a null user with BOTH clicks and purchases surfaces one row per
     // side (the full-outer key never matches NULL) — batch and stream
     // must agree on that via the shared reconcile assembly
@@ -1902,8 +1951,7 @@ class StreamingSpec extends SparkSpec {
     val sd2 = tmpDir("s26-null") + "/s"
     processBatch(planted.filter(col("event_type") === "click"), sd2, 0L)
     processBatch(planted.filter(col("event_type") === "purchase"), sd2, 1L)
-    assert(rows(ledger(spark, sd2)) ==
-      rows(graft.queries.Relational.ledgerOf(planted)),
+    assert(setOf(ledger(spark, sd2)) == setOf(graft.queries.Relational.ledgerOf(planted)),
       "null-user ledger diverged from batch q115 semantics")
     assert(ledger(spark, sd2).filter(col("user_id").isNull).count() == 2L,
       "the null user should surface one row per ledger side")
@@ -2039,29 +2087,16 @@ class StreamingSpec extends SparkSpec {
   test("s33: streamed layout stats == batch q149 under an ARBITRARY batch split; replay no-op") {
     import graft.queries.ZOrder
     import graft.streaming.LayoutStats.{envelopePanel, processBatch}
-    import org.apache.spark.sql.functions.{lit, pmod}
     val storeDir = tmpDir("s33-layout") + "/store"
     // guard: schema-stable empty panel before any write
     assert(envelopePanel(spark, storeDir).collect().isEmpty)
     val dims = ZOrder.ordersDims(spark, sf001).localCheckpoint(true)
     // the maintainer runs under the FIXED offline domain (here: the full
-    // corpus stats, so the batch q149 is the exact reference)
+    // corpus stats, so the batch q149 is the exact reference); the split
+    // by ck is unordered in both dims
     val dom = ZOrder.domainOf(dims).localCheckpoint(true)
-    // split by ck mod 3 — deliberately unordered in both dims: the store
-    // is additive (count/min/max partials), so parity holds under ANY
-    // split, the s26-class law
-    for (b <- 0L to 2L)
-      processBatch(dims.filter(pmod(col("ck"), lit(3)) === b), dom, storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q149_zorder_layout")(spark, sf001))
-    assert(rows(envelopePanel(spark, storeDir)) == want,
-      "streamed envelope panel diverged from batch q149")
-    // replay law: re-running batch 1 overwrites its own partition with
-    // identical partials — the merged read cannot tell
-    processBatch(dims.filter(pmod(col("ck"), lit(3)) === 1L), dom, storeDir, 1L)
-    assert(rows(envelopePanel(spark, storeDir)) == want,
-      "replay changed the envelope panel")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, dims, col("ck"), processBatch(_, dom, _, _), seqOf)(
+      Twin(envelopePanel(spark, _), twin("q149_zorder_layout")))
   }
 
   test("s34: streamed state == batch q27 under an arbitrary split; netted post-cutoff feed == batch q152 row for row; replay no-op") {
@@ -2137,131 +2172,66 @@ class StreamingSpec extends SparkSpec {
 
   test("s36: streamed seasonal panel == batch q151 under an ARBITRARY batch split; replay no-op") {
     import graft.streaming.SeasonalMonitor.{baseline, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s36-seasonal") + "/store"
     assert(baseline(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    // split by event_id mod 3 — deliberately unordered in both dims: the
-    // store is additive counts, so parity holds under ANY split
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q151_seasonal_baseline")(spark, sf001))
-    assert(rows(baseline(spark, storeDir)) == want,
-      "streamed seasonal panel diverged from batch q151")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(baseline(spark, storeDir)) == want, "replay changed the panel")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(baseline(spark, _), twin("q151_seasonal_baseline")))
   }
 
   test("s37: streamed RFM segments == batch q156 under an ARBITRARY batch split; replay no-op") {
     import graft.streaming.RfmMonitor.{processBatch, segments}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s37-rfm") + "/store"
     assert(segments(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    // split by event_id mod 3 — the metric partials (MAX/SUM/SUM) merge
-    // under ANY split, so no order assumption is needed
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q156_rfm_segments")(spark, sf001))
-    assert(rows(segments(spark, storeDir)) == want,
-      "streamed segment grid diverged from batch q156")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(segments(spark, storeDir)) == want, "replay changed the grid")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(segments(spark, _), twin("q156_rfm_segments")))
   }
 
   test("s38: streamed OHLC bars == batch q159 under an ARBITRARY batch split; replay no-op") {
     import graft.streaming.BarStats.{bars, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s38-bars") + "/store"
     assert(bars(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    // split by event_id mod 3 — deliberately unordered in both dims: the
-    // open/close structs, high/low, count and decimal volume all merge
-    // associatively+commutatively, so parity needs no order assumption
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q159_ohlc_bars")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(bars(spark, storeDir)) == want,
-      "streamed bars diverged from batch q159")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(bars(spark, storeDir)) == want, "replay changed the bars")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(bars(spark, _), twin("q159_ohlc_bars")))
   }
 
   test("s39: streamed MAD outliers == batch q162 off the SAME s36 store; replay no-op") {
     import graft.streaming.SeasonalMonitor.{outliers, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s39-mad") + "/store"
     assert(outliers(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    // one additive daily-count store, two reads (s36 forecast + s39
-    // robust outliers) — the medians are derived at read because
-    // quantiles are not mergeable statistics
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q162_mad_outliers")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(outliers(spark, storeDir)) == want,
-      "streamed outlier flags diverged from batch q162")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(outliers(spark, storeDir)) == want, "replay changed the flags")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(outliers(spark, _), twin("q162_mad_outliers")))
   }
 
   test("s40: streamed survival hazard == batch q164 under an ARBITRARY batch split; censoring reclassifies online; replay no-op") {
     import graft.streaming.SurvivalMonitor.{hazard, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s40-survival") + "/store"
     assert(hazard(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    // split by event_id mod 3 — a user's purchase may land in any batch;
-    // the span MIN/MAX partials merge under ANY split
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    val want = rows(SparkEntry.queries("q164_survival_hazard")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(hazard(spark, storeDir)) == want,
-      "streamed hazard diverged from batch q164")
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(hazard(spark, _), twin("q164_survival_hazard")))
     // online censoring: ingest ONLY non-purchase events into a fresh
     // store — every user must read as censored (no conversion rows at
     // all); then the purchases arrive and the full parity returns
+    val ev = eventLog.localCheckpoint(true)
     val store2 = tmpDir("s40-censor") + "/store"
     processBatch(ev.filter(col("event_type") =!= "purchase"), store2, 0L)
     assert(hazard(spark, store2).collect().isEmpty,
       "not-yet-purchased users must be censored, never conversions")
     processBatch(ev.filter(col("event_type") === "purchase"), store2, 1L)
-    assert(rows(hazard(spark, store2)) == want,
+    assert(seqOf(hazard(spark, store2)) == seqOf(twin("q164_survival_hazard")),
       "late-arriving purchases must reclassify censored users")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(hazard(spark, storeDir)) == want, "replay changed the hazard")
     SparkEntry.clearGraftCaches(spark)
   }
 
   test("s41: streamed skyline == batch q163 under an ARBITRARY batch split; a later batch knocks a point off the frontier; replay no-op") {
     import graft.streaming.SkylineMonitor.{frontier, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     import spark.implicits._
     val storeDir = tmpDir("s41-skyline") + "/store"
     assert(frontier(spark, storeDir).collect().isEmpty)
     val li = graft.tables.Tables.lineitem(spark, sf001)
       .select(col("l_quantity").as("qty"), col("l_extendedprice").as("price"),
         col("l_orderkey"))
-      .localCheckpoint(true)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    for (b <- 0L to 2L)
-      processBatch(li.filter(pmod(col("l_orderkey"), lit(3)) === b), storeDir, b)
-    val want = rows(SparkEntry.queries("q163_skyline")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(frontier(spark, storeDir)) == want,
-      "streamed frontier diverged from batch q163")
+    splitParity(storeDir, li, col("l_orderkey"), processBatch, seqOf)(
+      Twin(frontier(spark, _), twin("q163_skyline")))
     // non-mergeable statistic, mergeable store: a dominating point
     // arriving later must DISPLACE an earlier frontier point
     val store2 = tmpDir("s41-knock") + "/store"
@@ -2272,164 +2242,73 @@ class StreamingSpec extends SparkSpec {
     val after = frontier(spark, store2).collect().map(r => (r.getDouble(0), r.getDouble(1)))
     assert(after.toSeq == Seq((6.0, 40.0)),
       s"the dominating late arrival must displace both seeds: ${after.toSeq}")
-    processBatch(li.filter(pmod(col("l_orderkey"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(frontier(spark, storeDir)) == want, "replay changed the frontier")
     SparkEntry.clearGraftCaches(spark)
   }
 
   test("s42: streamed A/B readout == batch q165 under an ARBITRARY batch split; a late conversion flips the merged flag; replay no-op") {
     import graft.streaming.ChisqMonitor.{processBatch, readout}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s42-chisq") + "/store"
     // empty store: the one-row readout carries NULL margins (SUM over
     // nothing), matching batch q165 on an empty log
     assert(readout(spark, storeDir).collect()(0).isNullAt(0))
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    val want = rows(SparkEntry.queries("q165_ab_chisq")(spark, sf001))
-    assert(rows(readout(spark, storeDir)) == want,
-      "streamed readout diverged from batch q165")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(readout(spark, storeDir)) == want, "replay changed the readout")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(readout(spark, _), twin("q165_ab_chisq")))
   }
 
   test("s43/s44: Holt trend and CUSUM changepoint read off the SAME s36 daily store == batch q167/q166; replay no-op") {
     import graft.streaming.SeasonalMonitor.{changepoint, holt, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s43-daily") + "/store"
     assert(holt(spark, storeDir).collect().isEmpty)
     assert(changepoint(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    // one additive daily panel (counts + exact decimal value sums), FOUR
-    // reads: s36 forecast, s39 MAD, s43 Holt, s44 CUSUM — the decimal
-    // sum partials are what make the Holt fold's inputs exact under
-    // any split
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    val wantHolt = rows(SparkEntry.queries("q167_holt_trend")(spark, sf001))
-    val wantCusum = rows(SparkEntry.queries("q166_cusum_changepoint")(spark, sf001))
-    assert(wantHolt.nonEmpty && wantCusum.nonEmpty)
-    assert(rows(holt(spark, storeDir)) == wantHolt,
-      "streamed Holt panel diverged from batch q167")
-    assert(rows(changepoint(spark, storeDir)) == wantCusum,
-      "streamed changepoint diverged from batch q166")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(holt(spark, storeDir)) == wantHolt, "replay changed the Holt panel")
-    SparkEntry.clearGraftCaches(spark)
+    // the decimal sum partials are what make the Holt fold's inputs exact
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(holt(spark, _), twin("q167_holt_trend")),
+      Twin(changepoint(spark, _), twin("q166_cusum_changepoint")))
   }
 
   test("s45: streamed IQR profile == batch q168 off the SAME s29 drift store; replay no-op") {
     import graft.streaming.DriftMonitor.{iqr, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s45-iqr") + "/store"
     assert(iqr(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    // one additive value-count store, two distribution reads (s29 KS
-    // drift + s45 IQR profile)
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q168_iqr_outliers")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(iqr(spark, storeDir)) == want,
-      "streamed IQR profile diverged from batch q168")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(iqr(spark, storeDir)) == want, "replay changed the profile")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(iqr(spark, _), twin("q168_iqr_outliers")))
   }
 
   test("s48: streamed value bands == batch q179 off the SAME s29 store (day-widened partials); drift and IQR reads unchanged") {
     import graft.streaming.DriftMonitor.{bands, drift, iqr, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s48-bands") + "/store"
     assert(bands(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q179_value_bands")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(bands(spark, storeDir)) == want,
-      "streamed bands diverged from batch q179")
-    // the widened store still serves its first two reads exactly
-    assert(rows(drift(spark, storeDir)) ==
-      rows(SparkEntry.queries("q135_distribution_drift")(spark, sf001)),
-      "day widening must not move the KS read")
-    assert(rows(iqr(spark, storeDir)) ==
-      rows(SparkEntry.queries("q168_iqr_outliers")(spark, sf001)),
-      "day widening must not move the IQR read")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(bands(spark, storeDir)) == want, "replay changed the bands")
-    SparkEntry.clearGraftCaches(spark)
+    // the day-widened store still serves its first two reads exactly
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(bands(spark, _), twin("q179_value_bands")),
+      Twin(drift(spark, _), twin("q135_distribution_drift")),
+      Twin(iqr(spark, _), twin("q168_iqr_outliers")))
   }
 
   test("s55: streamed winsorized profile == batch q182 off the SAME s29 store; replay no-op") {
     import graft.streaming.DriftMonitor.{processBatch, winsorized}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s55-winsor") + "/store"
     assert(winsorized(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    // one additive value-count store, FOUR distribution reads (s29 KS
-    // drift + s45 IQR + s48 bands + s55 winsorized)
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q182_winsorized_stats")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(winsorized(spark, storeDir)) == want,
-      "streamed winsorized profile diverged from batch q182")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(winsorized(spark, storeDir)) == want, "replay changed the profile")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(winsorized(spark, _), twin("q182_winsorized_stats")))
   }
 
   test("s57: streamed median+MAD == batch q188 off the SAME s29 store; replay no-op") {
     import graft.streaming.DriftMonitor.{mad, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s57-mad") + "/store"
     assert(mad(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    // one additive value-count store, FIVE distribution reads (s29 KS
-    // drift + s45 IQR + s48 bands + s55 winsorized + s57 MAD)
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q188_median_mad")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(mad(spark, storeDir)) == want,
-      "streamed median+MAD diverged from batch q188")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(mad(spark, storeDir)) == want, "replay changed the panel")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(mad(spark, _), twin("q188_median_mad")))
   }
 
   test("s56: streamed bootstrap CI == batch q184 under an ARBITRARY batch split; replay no-op") {
     import graft.streaming.BootstrapMonitor.{ci, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s56-boot") + "/store"
     assert(ci(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001)
-      .select(col("event_type"), col("event_id"), col("value"))
-      .localCheckpoint(true)
-    // split by event_id mod 3 — deliberately NOT time-ordered: the
-    // bucket store is additive exact integers, so parity holds under
-    // ANY split
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
     // the read equals BOTH batch forms: q187 shares the kernel (by
     // construction) and q184 by the q187 factorization law
-    val want = rows(SparkEntry.queries("q184_bootstrap_ci")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(ci(spark, storeDir)) == want,
-      "streamed bootstrap CI diverged from batch q184")
-    processBatch(ev.filter(pmod(col("event_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(ci(spark, storeDir)) == want, "replay changed the CI")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(ci(spark, _), twin("q184_bootstrap_ci")))
   }
 
   test("s29 compaction: the day-axis fold moves NO d-merging read (drift/IQR/winsorized), narrows bands to the horizon, and the crash window is safe") {
@@ -2670,83 +2549,37 @@ class StreamingSpec extends SparkSpec {
 
   test("s54: time-decayed engagement read off the s36 daily store == batch q185 under an arbitrary split; replay no-op") {
     import graft.streaming.SeasonalMonitor.{decayed, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import org.apache.spark.sql.functions.xxhash64
     val storeDir = tmpDir("s54-decay") + "/store"
     assert(decayed(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001)
-      .select(col("event_type"), col("ts"), col("value"))
-      .localCheckpoint(true)
-    // arbitrary split (additive decimal sum partials); the DECIMAL merge
-    // is what keeps the integer-carrier decay exact — the double-cast
-    // panel the other five reads use would lose cent exactness
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(xxhash64(col("ts")), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q185_decayed_engagement")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(decayed(spark, storeDir)) == want,
-      "streamed decayed engagement diverged from batch q185")
-    processBatch(ev.filter(pmod(xxhash64(col("ts")), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(decayed(spark, storeDir)) == want, "replay changed the decayed read")
-    SparkEntry.clearGraftCaches(spark)
+    // the DECIMAL merge is what keeps the integer-carrier decay exact —
+    // the double-cast panel the other reads use would lose cent exactness
+    splitParity(storeDir, eventLog, xxhash64(col("ts")), processBatch, seqOf)(
+      Twin(decayed(spark, _), twin("q185_decayed_engagement")))
   }
 
   test("s58/s59/s60: Theil–Sen, Kendall tau and Mann–Kendall read off the s36 daily store == batch q189/q190/q191 under an arbitrary split; replay no-op") {
     import graft.streaming.SeasonalMonitor.{kendall, mannKendall, processBatch, theilsen}
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import org.apache.spark.sql.functions.xxhash64
     val storeDir = tmpDir("s58-trend") + "/store"
     assert(theilsen(spark, storeDir).collect().isEmpty)
     assert(kendall(spark, storeDir).collect().isEmpty)
     assert(mannKendall(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001)
-      .select(col("event_type"), col("ts"), col("value"))
-      .localCheckpoint(true)
-    // arbitrary split — the daily count partials are additive, and both
-    // kernels see only the summed panel (slopes are one IEEE division of
-    // identical integers; tau is all-integer to the mirrored quotient)
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(xxhash64(col("ts")), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val wantTs = rows(SparkEntry.queries("q189_theilsen_trend")(spark, sf001))
-    val wantKt = rows(SparkEntry.queries("q190_kendall_tau")(spark, sf001))
-    val wantMk = rows(SparkEntry.queries("q191_mann_kendall")(spark, sf001))
-    assert(wantTs.nonEmpty && wantKt.nonEmpty && wantMk.nonEmpty)
-    assert(rows(theilsen(spark, storeDir)) == wantTs,
-      "streamed Theil–Sen diverged from batch q189")
-    assert(rows(kendall(spark, storeDir)) == wantKt,
-      "streamed Kendall tau diverged from batch q190")
-    assert(rows(mannKendall(spark, storeDir)) == wantMk,
-      "streamed Mann–Kendall diverged from batch q191")
-    // replay no-op: a re-run overwrites its own partition byte-identically
-    processBatch(ev.filter(pmod(xxhash64(col("ts")), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(theilsen(spark, storeDir)) == wantTs, "replay moved the s58 read")
-    assert(rows(kendall(spark, storeDir)) == wantKt, "replay moved the s59 read")
-    assert(rows(mannKendall(spark, storeDir)) == wantMk, "replay moved the s60 read")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, xxhash64(col("ts")), processBatch, seqOf)(
+      Twin(theilsen(spark, _), twin("q189_theilsen_trend")),
+      Twin(kendall(spark, _), twin("q190_kendall_tau")),
+      Twin(mannKendall(spark, _), twin("q191_mann_kendall")))
   }
 
   test("s52: streamed NDV sketches == one-shot sketch under an arbitrary split; small cardinalities exact; replay no-op") {
     import graft.streaming.NdvMonitor.{ndv, oneShot, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     import spark.implicits._
     val storeDir = tmpDir("s52-ndv") + "/store"
     assert(ndv(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001)
-      .select(col("event_type"), col("user_id"))
-      .localCheckpoint(true)
-    // arbitrary split: the sketch union is associative/commutative
-    // (register-wise max), so ANY split is legal — the s26 store class
-    // with a sketch instead of a counter
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("user_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(oneShot(ev))
-    assert(want.nonEmpty)
-    assert(rows(ndv(spark, storeDir)) == want,
-      "streamed sketch union diverged from the one-shot sketch")
-    // replay no-op: identical sketch bytes overwrite their own partition
-    processBatch(ev.filter(pmod(col("user_id"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(ndv(spark, storeDir)) == want, "replay changed the NDV read")
+    // the sketch union is register-wise max — the s26 store class with a
+    // sketch instead of a counter
+    splitParity(storeDir, eventLog, col("user_id"), processBatch, seqOf)(
+      Twin(ndv(spark, _), oneShot(eventLog)))
     // small-cardinality exactness: below the sparse threshold the HLL
     // coupon list IS the distinct set — the estimate reads exact
     val small = tmpDir("s52-small") + "/store"
@@ -2817,22 +2650,15 @@ class StreamingSpec extends SparkSpec {
 
   test("s50: streamed equi-depth column stats == batch q180 under an ARBITRARY batch split; a hot batch moves the boundaries; replay no-op") {
     import graft.streaming.ColumnStats.{processBatch, stats}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     import spark.implicits._
     val storeDir = tmpDir("s50-colstats") + "/store"
     assert(stats(spark, storeDir).collect().isEmpty)
     val v = graft.tables.Tables.orders(spark, sf001)
       .select((col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").as("v"),
         col("o_orderkey"))
-      .localCheckpoint(true)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    for (b <- 0L to 2L)
-      processBatch(v.filter(pmod(col("o_orderkey"), lit(3)) === b).select(col("v")),
-        storeDir, b)
-    val want = rows(SparkEntry.queries("q180_equidepth_stats")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(stats(spark, storeDir)) == want,
-      "streamed column stats diverged from batch q180")
+    splitParity(storeDir, v, col("o_orderkey"), (b, d, i) => processBatch(b.select(col("v")), d, i),
+        seqOf)(
+      Twin(stats(spark, _), twin("q180_equidepth_stats")))
     // boundary mobility: equal counts read one tied bucket; a hot batch
     // of a new value re-derives the whole boundary structure at read
     val store2 = tmpDir("s50-mobility") + "/store"
@@ -2843,31 +2669,19 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     assert(after.toSeq == Seq((1, 5L, 8L), (2, 9L, 8L)),
       s"a hot batch must re-derive the boundary structure: ${after.toSeq}")
-    processBatch(v.filter(pmod(col("o_orderkey"), lit(3)) === 1L).select(col("v")),
-      storeDir, 1L)
-    assert(rows(stats(spark, storeDir)) == want, "replay changed the stats")
     SparkEntry.clearGraftCaches(spark)
   }
 
   test("s46: streamed traffic drawdown == batch q172 off the SAME s36 daily store") {
     import graft.streaming.SeasonalMonitor.{drawdown, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val storeDir = tmpDir("s46-drawdown") + "/store"
     assert(drawdown(spark, storeDir).collect().isEmpty)
-    val ev = graft.tables.Tables.events(spark, sf001).localCheckpoint(true)
-    for (b <- 0L to 2L)
-      processBatch(ev.filter(pmod(col("event_id"), lit(3)) === b), storeDir, b)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val want = rows(SparkEntry.queries("q172_traffic_drawdown")(spark, sf001))
-    assert(want.nonEmpty)
-    assert(rows(drawdown(spark, storeDir)) == want,
-      "streamed drawdown diverged from batch q172")
-    SparkEntry.clearGraftCaches(spark)
+    splitParity(storeDir, eventLog, col("event_id"), processBatch, seqOf)(
+      Twin(drawdown(spark, _), twin("q172_traffic_drawdown")))
   }
 
   test("s47: streamed Gini + deciles == batch q173/q174 under an ARBITRARY batch split; ranks re-derive as revenue moves; replay no-op") {
     import graft.streaming.RevenueMonitor.{deciles, gini, processBatch}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     import spark.implicits._
     val storeDir = tmpDir("s47-revenue") + "/store"
     assert(gini(spark, storeDir).collect()(0).isNullAt(2))
@@ -2875,18 +2689,11 @@ class StreamingSpec extends SparkSpec {
       .select(col("o_custkey"),
         (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").as("cents"),
         col("o_orderkey"))
-      .localCheckpoint(true)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    // a customer's orders may land in any batch: the cent-sum partials
-    // merge under ANY split, the rank structure re-derives at read
-    for (b <- 0L to 2L)
-      processBatch(ord.filter(pmod(col("o_orderkey"), lit(3)) === b), storeDir, b)
-    val wantG = rows(SparkEntry.queries("q173_revenue_gini")(spark, sf001))
-    val wantD = rows(SparkEntry.queries("q174_revenue_deciles")(spark, sf001))
-    assert(rows(gini(spark, storeDir)) == wantG,
-      "streamed Gini diverged from batch q173")
-    assert(rows(deciles(spark, storeDir)) == wantD,
-      "streamed deciles diverged from batch q174")
+    // a customer's orders may land in any batch; the rank structure
+    // re-derives at read
+    splitParity(storeDir, ord, col("o_orderkey"), processBatch, seqOf)(
+      Twin(gini(spark, _), twin("q173_revenue_gini")),
+      Twin(deciles(spark, _), twin("q174_revenue_deciles")))
     // rank mobility: a fresh store where one later batch reorders the
     // whole structure — two equal customers, then one pulls ahead
     val store2 = tmpDir("s47-mobility") + "/store"
@@ -2896,8 +2703,6 @@ class StreamingSpec extends SparkSpec {
     // totals now {400, 100}: sorted 100,400 -> 2*(100+800)=1800,
     // (n+1)S=1500 -> G = 300/1000 = 0.3
     assert(gini(spark, store2).collect()(0).getDouble(2) == 0.3)
-    processBatch(ord.filter(pmod(col("o_orderkey"), lit(3)) === 1L), storeDir, 1L)
-    assert(rows(gini(spark, storeDir)) == wantG, "replay changed the Gini")
     SparkEntry.clearGraftCaches(spark)
   }
 
@@ -2940,7 +2745,13 @@ class StreamingSpec extends SparkSpec {
       StoreLaw("seasonal", Seq("s"), ev, (b, d, i) => SeasonalMonitor.processBatch(b, d("s"), i),
         Seq("baseline" -> (d => SeasonalMonitor.baseline(spark, d("s"))),
           "decayed" -> (d => SeasonalMonitor.decayed(spark, d("s"))),
-          "holt" -> (d => SeasonalMonitor.holt(spark, d("s")))))(SeasonalMonitor),
+          "holt" -> (d => SeasonalMonitor.holt(spark, d("s"))),
+          "changepoint" -> (d => SeasonalMonitor.changepoint(spark, d("s"))),
+          "drawdown" -> (d => SeasonalMonitor.drawdown(spark, d("s"))),
+          "outliers" -> (d => SeasonalMonitor.outliers(spark, d("s"))),
+          "theilsen" -> (d => SeasonalMonitor.theilsen(spark, d("s"))),
+          "kendall" -> (d => SeasonalMonitor.kendall(spark, d("s"))),
+          "mannKendall" -> (d => SeasonalMonitor.mannKendall(spark, d("s")))))(SeasonalMonitor),
       StoreLaw("chisq", Seq("s"), ev, (b, d, i) => ChisqMonitor.processBatch(b, d("s"), i),
         Seq("readout" -> (d => ChisqMonitor.readout(spark, d("s")))))(ChisqMonitor),
       StoreLaw("bars", Seq("s"), ev, (b, d, i) => BarStats.processBatch(b, d("s"), i),
@@ -2949,7 +2760,10 @@ class StreamingSpec extends SparkSpec {
         Seq("hazard" -> (d => SurvivalMonitor.hazard(spark, d("s")))))(SurvivalMonitor),
       StoreLaw("drift", Seq("s"), ev, (b, d, i) => DriftMonitor.processBatch(b, d("s"), i),
         Seq("drift" -> (d => DriftMonitor.drift(spark, d("s"))),
-          "bands" -> (d => DriftMonitor.bands(spark, d("s")))))(DriftMonitor),
+          "bands" -> (d => DriftMonitor.bands(spark, d("s"))),
+          "iqr" -> (d => DriftMonitor.iqr(spark, d("s"))),
+          "winsorized" -> (d => DriftMonitor.winsorized(spark, d("s"))),
+          "mad" -> (d => DriftMonitor.mad(spark, d("s")))))(DriftMonitor),
       StoreLaw("colstats", Seq("s"), orders.select(cents.as("v")),
         (b, d, i) => ColumnStats.processBatch(b, d("s"), i),
         Seq("stats" -> (d => ColumnStats.stats(spark, d("s")))))(ColumnStats),
@@ -3257,5 +3071,21 @@ class StreamingSpec extends SparkSpec {
     val unstated = guards.collect { case (name, lines, i)
         if !lines.slice(i - 3, i).exists(_.trim.startsWith("// kept:")) => name }
     assert(unstated.isEmpty, s"empty-batch guard without a `// kept:` reason: ${unstated.mkString(", ")}")
+    // an additive store states its kernel and merge once, as a
+    // BatchStore.Additive, and writes and reads its store only through it
+    val additive = Set("LedgerStore", "NdvMonitor", "BootstrapMonitor", "RfmMonitor",
+      "SeasonalMonitor", "ChisqMonitor", "BarStats", "SurvivalMonitor", "ColumnStats",
+      "SkylineMonitor", "RevenueMonitor", "LayoutStats", "VectorStats", "HeavyHitters",
+      "DriftMonitor").map(_ + ".scala")
+    val declaring = sources.collect {
+      case (name, lines) if lines.exists(l => code(l).contains("BatchStore.Additive(")) => name
+    }.toSet
+    assert(declaring == additive, s"Additive declared in ${declaring.toSeq.sorted.mkString(", ")}")
+    val bypasses = for {
+      (name, lines) <- sources if additive(name)
+      tok <- Seq("BatchStore.write", "BatchStore.read", "BatchStore.before", "BatchStore.latest")
+      if lines.exists(l => code(l).contains(tok))
+    } yield s"$name: $tok"
+    assert(bypasses.isEmpty, s"additive store I/O outside its record: ${bypasses.mkString(", ")}")
   }
 }
